@@ -150,13 +150,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def refine_test_anti_join(spark, sf):
         # ≙ refine_test_set (dataset.py:13-106): test-split mention surfaces
         # (word bigrams) minus those seen in the train split
-        docs = _docs(spark, sf)
         toks = C.tokens_col("text")
-        idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - 2, F.lit(0)))
-        bg = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2)))
-        mentions = docs.select(
-            "doc_id", F.explode(bg).alias("mention")
-        ).filter(F.size(F.split("mention", " ")) == 2)
+        mentions = (
+            _docs(spark, sf)
+            .filter(F.size(toks) >= 2)
+            .select("doc_id", F.explode(C._zip_grams(toks, 2)).alias("mention"))
+        )
         train = mentions.filter(F.col("doc_id") % 20 < 14).select("mention").distinct()
         test = mentions.filter(F.col("doc_id") % 20 >= 17).select("mention").distinct()
         return test.join(train, "mention", "left_anti")

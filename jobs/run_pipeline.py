@@ -21,10 +21,14 @@ import argparse
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="webtext parquet dir (url, warc_ts, html, text, lang)")
-    ap.add_argument("--checkpoint", required=True, help="stage checkpoint/lineage dir")
+    ap.add_argument("--checkpoint", required=True, help="stage checkpoint dir (tables + snapshot logs)")
     ap.add_argument("--output", required=True, help="resolved-mentions output parquet dir")
     ap.add_argument("--tau", type=float, default=None, help="edge threshold override")
-    ap.add_argument("--stop-after", default=None, help="stop after this stage (resume test hook)")
+    from nilinker_spark.pipeline import STAGES
+
+    ap.add_argument(
+        "--stop-after", default=None, choices=STAGES, help="stop after this stage (resume test hook)"
+    )
     ap.add_argument(
         "--incremental",
         action="store_true",

@@ -49,9 +49,6 @@ class KBFixture:
 
         return hashlib.md5("\x00".join(sorted(self.word2id)).encode()).hexdigest()
 
-    def concept_int(self, kb_id: str) -> int:
-        return int(kb_id.split(":")[1])
-
 
 def _make_words(rng: np.random.Generator, n: int) -> list[str]:
     words: list[str] = []

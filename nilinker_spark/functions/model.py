@@ -127,15 +127,3 @@ def phrase_vectors(
     concat = np.concatenate([wl + wr, agg_l + agg_r], axis=1).astype(F32)  # [B, 2D]
     phrase = np.tanh(concat @ w.W_c + w.b_c).astype(F32)  # [B, D]
     return l2_normalize(phrase)
-
-
-def pair_score(pv_a: np.ndarray, pv_b: np.ndarray, lev_ratio: np.ndarray, alpha: float = 0.6) -> np.ndarray:
-    """Blend of embedding cosine and string feature, in [roughly -1, 1].
-
-    score = alpha * cos(pv_a, pv_b) + (1-alpha) * lev_ratio.  The cosine is
-    a plain dot product because phrase vectors are L2-normalized.  The Spark
-    pipeline computes this blend **natively** (zip_with/aggregate on the
-    vector columns + F.levenshtein) — this numpy twin is the oracle's.
-    """
-    cos = (pv_a * pv_b).sum(axis=1).astype(F32)
-    return (F32(alpha) * cos + F32(1.0 - alpha) * lev_ratio.astype(F32)).astype(F32)

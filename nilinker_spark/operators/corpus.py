@@ -134,15 +134,23 @@ def _zip_grams(toks: F.Column, k: int) -> F.Column:
     Callers MUST pre-filter/guard ``size(toks) >= k``; every produced
     gram is then a full k-gram by construction (the old per-gram
     ``size(split(g)) == k`` re-split check is gone too)."""
+    return F.transform(
+        _zip_gram_structs(toks, k),
+        lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(k)]),
+    )
+
+
+def _zip_gram_structs(toks: F.Column, k: int) -> F.Column:
+    """Word k-grams as structs (w0 … w{k-1}): ``arrays_zip`` of k shifted
+    slices, cut to the n-k+1 full grams — the shared core of
+    :func:`_zip_grams` and ``gazetteer_from_documents`` (which groups the
+    structs and builds strings only for distinct grams).  Same caller
+    guard: ``size(toks) >= k``."""
     n = F.size(toks)
     cols = [toks.alias("w0")] + [
         F.slice(toks, i + 1, n).alias(f"w{i}") for i in range(1, k)
     ]
-    z = F.arrays_zip(*cols)
-    return F.transform(
-        F.slice(z, 1, n - (k - 1)),
-        lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(k)]),
-    )
+    return F.slice(F.arrays_zip(*cols), 1, n - (k - 1))
 
 
 def _gram_array(k: int) -> F.Column:

@@ -53,8 +53,8 @@ def candidate_pairs(
     key (~10-30% duplicate rows) — scoring is deterministic per pair and
     the edge set dedups one stage later in CC (see the no-pair-dedup note
     below).  Consumers that COUNT pairs (including the Pipeline's
-    checkpointed ``pairs``/``scored`` stage tables) must aggregate over
-    distinct (norm_a, norm_b) themselves."""
+    checkpointed ``pairs`` stage table) must aggregate over distinct
+    (norm_a, norm_b) themselves."""
     # block sizes via an unbounded window, not groupBy+self-join: one
     # exchange on block_key instead of two plus a join — this sits on the
     # flagship's fixed-latency path (vocabulary-sized, every run).

@@ -188,9 +188,9 @@ def fused_similarity_edges(
     scores are computed by the SAME expression tree (same add order,
     same rounding) as score_pairs, so edges are bit-identical.
 
-    The checkpointed Pipeline keeps the unfused score_pairs stage — its
-    ``scored`` table is a user-facing contract (every pair's score);
-    this fused path is resolve()'s, where only the edges are observable.
+    This is the S4+S5 stage of both resolve() and the checkpointed
+    Pipeline; score_pairs + similarity_edges stay only as the unfused
+    parity reference the tests compare it against.
     """
     if dim is None:
         from nilinker_spark.fixtures.kb import EMB_DIM

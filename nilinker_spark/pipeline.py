@@ -1,38 +1,52 @@
-"""End-to-end resolution pipeline with checkpointed stages + lineage.
+"""End-to-end resolution pipeline: one stage graph, run two ways.
 
-Stage graph (SURVEY.md §7.1):
+Stage graph (SURVEY.md §7.1), defined once in ``_STAGE_GRAPH``:
 
-    webtext --S1--> mentions --S2--> forms+pv / blocks --S3--> pairs
-            --S4--> scored --S5--> edges --S6--> clusters --S7--> resolved
+    webtext --S1--> mentions (+ mention_metrics) --S2--> phrase_vecs
+            --S3--> pairs (+ block_salt_metrics) --S4/S5--> edges
+            --S6--> clusters --S7--> resolved
 
-Every stage writes ``<ckpt_dir>/<stage>`` (parquet — the sandbox stand-in
-for an Iceberg table) and appends one row to ``<ckpt_dir>/lineage_log``
-(stage, rows, checksum, wall_ms).  A relaunch skips any stage whose
-checkpoint has a parquet _SUCCESS marker *and* a lineage row — the
-scaled-up version of the reference's read-modify-write candidate cache
-(/root/reference/src/REEL/pre_process.py:250-307) and the substrate of
-the north rule's mid-pipeline resume.
+:func:`resolve` composes the stages into one lazy plan.  :class:`Pipeline`
+writes each stage to ``<ckpt_dir>/<stage>`` and publishes it through that
+table's :class:`SnapshotLog`, its only commit mechanism:
+
+- a stage write lands as new part files beside the committed ones, then
+  publishes a manifest listing its files — an overwrite lists only the
+  new files (the superseded ones are deleted after the commit), an
+  append lists the head's files plus the new ones;
+- every manifest carries the batch id (an order-free checksum of the
+  batch's urls) and the stage's lineage: rows, checksum, wall_ms;
+- a stage is done for a batch when its head manifest carries that batch
+  id and is readable, so a relaunch skips it;
+- a batch is committed when its ``resolved`` manifest is published;
+- on entry, an append table whose head comes from an uncommitted other
+  batch is rolled back to its last committed file list, and data files
+  no head manifest references are deleted — a crashed batch never leaks
+  into the next one.
+
+The checkpointed runs are the scaled-up version of the reference's
+read-modify-write candidate cache (≙ src/REEL/pre_process.py:250-307)
+and the substrate of the north rule's mid-pipeline resume.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nilinker_spark.fixtures.kb import KBFixture
 from nilinker_spark.functions.normalize import norm_form
-from nilinker_spark.operators.blocking import block_keys_df, phrase_vectors_df
+from nilinker_spark.operators import blocking, scoring
 from nilinker_spark.operators.clustering import assign_clusters, connected_components
 from nilinker_spark.operators.extract import extract_mentions_df
 from nilinker_spark.operators.pairs import candidate_pairs
-from nilinker_spark.operators.scoring import score_pairs, similarity_edges
+from nilinker_spark.operators.skew import salted_count
 from nilinker_spark.oracle import ALPHA, MAX_BLOCK_FORMS, TAU
-from nilinker_spark.snapshots import SnapshotLog
-
-STAGES = ["mentions", "phrase_vecs", "pairs", "scored", "edges", "clusters", "resolved"]
+from nilinker_spark.snapshots import SnapshotLog, list_data_files
 
 # Adaptive small-vocabulary execution for resolve()'s middle section
 # (S2-S6: phrase vectors -> pairs -> scoring -> CC -> clusters).  Those
@@ -45,6 +59,133 @@ STAGES = ["mentions", "phrase_vecs", "pairs", "scored", "edges", "clusters", "re
 # the distributed path runs unchanged.  Same decision rule as a
 # broadcast-join threshold: execute the provably-tiny side locally.
 DRIVER_VOCAB_MAX = int(os.environ.get("NILINKER_DRIVER_VOCAB_MAX", "2000"))
+
+RESOLVED_COLS = ("url", "mention_id", "surface", "pos", "norm", "cluster_id")
+
+
+class _Batch:
+    """One batch's inputs and the stage outputs built so far — what the
+    stage build functions read.  ``forms``/``n_forms`` size the middle;
+    ``walls`` receives resolve()'s stage walls."""
+
+    def __init__(self, spark, kb, webtext, gazetteer, alpha, tau, max_block, walls=None):
+        self.spark, self.kb, self.webtext, self.gazetteer = spark, kb, webtext, gazetteer
+        self.alpha, self.tau, self.max_block, self.walls = alpha, tau, max_block, walls
+        self.forms = self.n_forms = self.candidates = None
+        for name in STAGES:
+            setattr(self, name, None)
+
+
+def _phrase_vecs(b: _Batch) -> DataFrame:
+    # resolve() sets the form table; a checkpointed batch vectorizes the
+    # forms of its mentions that no committed vector covers yet (during an
+    # append ``b.phrase_vecs`` is the committed table).  Tiny, so it is
+    # checkpointed: prefuzz and the vectors read it, and the read-append
+    # cycle on phrase_vecs breaks.
+    forms = b.forms
+    if forms is None:
+        forms = b.mentions.select("norm").distinct()
+        if b.phrase_vecs is not None:
+            forms = forms.join(b.phrase_vecs.select("norm"), "norm", "left_anti")
+        forms = forms.localCheckpoint(eager=True)
+    # distinct OOV tokens fuzzy-resolve once cluster-wide: the per-worker
+    # memo cannot de-duplicate across workers (at 10^5 forms the
+    # duplicated fuzzy scans made pvs wall flat from 2 to 8 cores)
+    t0 = time.monotonic()
+    fmap = blocking.prefuzz_map(b.spark, forms, b.kb)
+    if b.walls is not None:
+        b.walls["prefuzz_s"] = time.monotonic() - t0
+    return blocking.phrase_vectors_df(b.spark, forms, b.kb, fuzzy_map=fmap)
+
+
+def _candidates(b: _Batch) -> tuple[DataFrame, DataFrame]:
+    """S3 (pairs, block_salt_metrics), built once for both tables."""
+    if b.candidates is None:
+        blocked = blocking.block_keys_df(b.phrase_vecs.select("norm"))
+        b.candidates = candidate_pairs(blocked, b.max_block)
+    return b.candidates
+
+
+def _edges(b: _Batch) -> DataFrame:
+    # S4+S5 fused with the exact embedding-score prefilter: only the
+    # plausible pair fraction pays string features / the Arrow JW
+    # crossing; edges are bit-identical to the unfused reference
+    return scoring.fused_similarity_edges(b.pairs, b.phrase_vecs, b.alpha, b.tau, n_forms=b.n_forms)
+
+
+def _clusters(b: _Batch) -> DataFrame:
+    labels = connected_components(b.edges, walls_out=b.walls)
+    return assign_clusters(b.phrase_vecs.select("norm"), labels, n_forms=b.n_forms)
+
+
+def _resolved(b: _Batch) -> DataFrame:
+    clusters = scoring._maybe_broadcast(b.clusters, b.n_forms)
+    return b.mentions.join(clusters, "norm").select(*RESOLVED_COLS)
+
+
+# (name, build, mode): the S1-S7 stage graph, in order.  ``mode`` is how a
+# checkpointed incremental batch commits the stage; a first run() writes
+# every stage as an overwrite.
+_STAGE_GRAPH = [
+    ("mentions", lambda b: extract_mentions_df(b.spark, b.webtext, b.gazetteer), "append"),
+    # per-form mention frequencies (≙ the IC term counts,
+    # information_content.py:17-27), aggregated with deterministic
+    # salting so the Zipf-head form never funnels into a single reducer
+    ("mention_metrics", lambda b: salted_count(b.mentions, "norm"), "overwrite"),
+    ("phrase_vecs", _phrase_vecs, "append"),
+    ("block_salt_metrics", lambda b: _candidates(b)[1], "overwrite"),
+    ("pairs", lambda b: _candidates(b)[0], "overwrite"),
+    ("edges", _edges, "overwrite"),
+    ("clusters", _clusters, "overwrite"),
+    ("resolved", _resolved, "overwrite"),
+]
+STAGES = [name for name, _build, _mode in _STAGE_GRAPH]
+
+# How resolve() keeps a stage (the others stay lazy).  Mentions persist
+# columnar — NOT localCheckpoint, whose deserialized java rows cost ~2x
+# the extraction itself at 10^7 rows — and serve both the distinct forms
+# and the final join.  Edges checkpoint lazily so connected_components'
+# driver-size probe and the star-contraction loop share ONE
+# materialization of the scoring subtree (VERDICT r3 #1).
+_RESOLVE_KEEP = {
+    "mentions": lambda df: df.persist(),
+    "phrase_vecs": lambda df: df.localCheckpoint(eager=True),
+    "edges": lambda df: df.localCheckpoint(eager=False),
+    "clusters": lambda df: df.localCheckpoint(eager=True),
+}
+
+
+def _build_lazy(b: _Batch, names: set[str]) -> None:
+    for name, build, _mode in _STAGE_GRAPH:
+        if name in names:
+            setattr(b, name, _RESOLVE_KEEP.get(name, lambda df: df)(build(b)))
+
+
+@contextmanager
+def _form_scope(spark: SparkSession, n_forms: int):
+    """Session confs for the vocabulary-sized middle, restored on exit.
+
+    Form-level shuffles are sized by the DATA with a COMPUTE-aware floor:
+    ~2k forms per partition.  The old 50k-per-partition rule treated the
+    middle as shuffle-bound, but its rows are compute-heavy (attention
+    math, fuzzy resolution, pair scoring) — at 20k forms it serialized
+    S3-S6 into ONE task (measured 2->8 efficiency 0.27; ~0.9 after).  At
+    10^6+ forms the cap is the session's shuffle.partitions.  AQE
+    re-plans every shuffle stage; on these often-1-partition stages that
+    is pure per-stage latency, so it is off below 10^6 forms (the
+    corpus-level stages keep AQE for skew/coalescing)."""
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(max(1, min(int(old_parts), n_forms // 2_000 + 1)))
+    )
+    if n_forms < 1_000_000:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 
 def resolve(
@@ -60,7 +201,7 @@ def resolve(
     stage_walls_out: dict | None = None,
     stage_hook=None,
 ) -> DataFrame:
-    """Checkpoint-free functional composition of S1-S7 (entry/bench path).
+    """Checkpoint-free run of the stage graph (entry/bench path).
 
     ``stage_walls_out``: pass a dict to receive wall-clock seconds of the
     sections this function ALREADY materializes eagerly — "extract_s"
@@ -83,8 +224,9 @@ def resolve(
     (host noise then cancels in the middle-wall ratio).  Time spent
     inside the hook is excluded from every stage wall.
 
-    Same operators as :class:`Pipeline`, no materialization between
-    stages — Catalyst sees the whole plan and AQE sizes the shuffles.
+    Same stages as :class:`Pipeline`, no materialization between them
+    beyond the small checkpoints of ``_RESOLVE_KEEP`` — Catalyst sees the
+    whole plan and AQE sizes the shuffles.
 
     ``metrics_out``: pass a dict to receive the no-silent-truncation
     metrics frames ({"mention_metrics", "block_salt_metrics"}, lazy) —
@@ -109,134 +251,75 @@ def resolve(
     """
     if gazetteer is None:
         gazetteer = {norm_form(s) for s, _, _ in kb.surface_forms}
-    # corpus-level stages run at full parallelism; mentions materializes
-    # once (columnar compressed cache — NOT localCheckpoint, whose
-    # deserialized java rows cost ~2x the extraction itself at 10^7 rows)
-    # and serves both the distinct and the final join.
+    walls = stage_walls_out
+    b = _Batch(spark, kb, webtext, gazetteer, alpha, tau, max_block, walls)
     # NOTE: extract_mentions_relational (zero Python stages) exists and is
     # parity-tested, but measured SLOWER here: the per-position explode
     # evaluates 4 regexes + 2 string builds per token JVM-side (~200M
     # regex execs at 1M docs) vs ~60 memoized dict probes per doc in the
     # Arrow scan.  The vectorized Python path is the measured fast path.
     t0 = time.monotonic()
-    mentions = extract_mentions_df(spark, webtext, gazetteer).persist()
+    _build_lazy(b, {"mentions"})
     if cache_out is not None:
-        cache_out.append(mentions)
+        cache_out.append(b.mentions)
     # lazy checkpoint + count in ONE job (the count is the materializing
-    # action — same trick as connected_components._sig); an eager
-    # checkpoint followed by count would schedule two jobs
-    forms = mentions.select("norm").distinct().localCheckpoint(eager=False)
-
-    # the distinct-form table is vocabulary-bounded (tiny vs the corpus, even
-    # at 10^12 docs it is millions of rows): size the form-level shuffles by
-    # the DATA, not the cluster, or per-task overhead dwarfs the work
-    n_forms = forms.count()
-    if stage_walls_out is not None:
-        stage_walls_out["extract_s"] = time.monotonic() - t0
-        stage_walls_out["n_forms"] = n_forms
-        stage_walls_out["middle_path"] = (
-            "driver" if n_forms <= DRIVER_VOCAB_MAX else "distributed"
-        )
+    # action — same trick as connected_components._sig); the distinct-form
+    # table is vocabulary-bounded, so the middle is sized by its count
+    b.forms = b.mentions.select("norm").distinct().localCheckpoint(eager=False)
+    b.n_forms = b.forms.count()
+    on_driver = b.n_forms <= DRIVER_VOCAB_MAX
+    if walls is not None:
+        walls["extract_s"] = time.monotonic() - t0
+        walls["n_forms"] = b.n_forms
+        walls["middle_path"] = "driver" if on_driver else "distributed"
     if stage_hook is not None:
         stage_hook("extract_done")
     t1 = time.monotonic()
-
-    if n_forms <= DRIVER_VOCAB_MAX:
+    if on_driver:
         # tiny-vocabulary fast path: the whole middle on the driver (see
         # DRIVER_VOCAB_MAX).  cluster_forms is the shared-function twin the
         # e2e parity tests gate the distributed path against.
         from nilinker_spark.oracle import cluster_forms
 
-        forms_list = [r["norm"] for r in forms.collect()]
         m_out: dict = {}
         cmap = cluster_forms(
-            forms_list, kb, alpha=alpha, tau=tau, max_block=max_block, metrics_out=m_out
+            [r["norm"] for r in b.forms.collect()],
+            kb,
+            alpha=alpha,
+            tau=tau,
+            max_block=max_block,
+            metrics_out=m_out,
         )
-        clusters = spark.createDataFrame(
-            sorted(cmap.items()), "norm string, cluster_id string"
+        b.clusters = spark.createDataFrame(sorted(cmap.items()), "norm string, cluster_id string")
+        b.block_salt_metrics = spark.createDataFrame(
+            m_out["block_salt_rows"], "block_key string, members bigint, n_salts int"
         )
-        if stage_walls_out is not None:
-            stage_walls_out["middle_s"] = time.monotonic() - t1
-        if metrics_out is not None:
-            from nilinker_spark.operators.skew import salted_count
-
-            metrics_out["mention_metrics"] = salted_count(mentions, "norm")
-            metrics_out["block_salt_metrics"] = spark.createDataFrame(
-                m_out["block_salt_rows"], "block_key string, members bigint, n_salts int"
-            )
-        return mentions.join(F.broadcast(clusters), "norm").select(
-            "url", "mention_id", "surface", "pos", "norm", "cluster_id"
-        )
-
-    # size the form-level shuffles by the DATA with a COMPUTE-aware floor:
-    # ~2k forms per partition.  The old 50k-per-partition rule treated the
-    # middle as shuffle-bound, but its rows are compute-heavy (attention
-    # math, fuzzy resolution, pair scoring) — at 20k forms it serialized
-    # the whole S3-S6 into ONE task and the middle stopped scaling
-    # entirely (measured 2->8 efficiency 0.27; ~0.9 after this change).
-    # At 10^6+ forms the cap is the session's shuffle.partitions, i.e.
-    # cluster-sized, exactly as before.
-    form_parts = max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions")), n_forms // 2_000 + 1))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # AQE re-plans every shuffle stage; on the vocabulary-sized form stages
-    # (often 1 partition) that re-planning is pure per-stage latency with
-    # nothing to adapt — turn it off for this section only.  The corpus-level
-    # stages (extraction, final join) keep AQE for skew/coalescing.
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(form_parts))
-    if n_forms < 1_000_000:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        # resolve distinct OOV tokens once across the cluster (the
-        # per-worker fuzzy memo cannot de-duplicate ACROSS workers; at
-        # 10^5 forms the duplicated fuzzy scans made pvs wall flat from
-        # 2 to 8 cores — see blocking.prefuzz_map)
-        from nilinker_spark.operators.blocking import prefuzz_map
-
-        t_pf = time.monotonic()
-        fmap = prefuzz_map(spark, forms, kb)
-        # the middle's scale-invariant FLOOR, broken out for the bench
-        # artifact (VERDICT r4 #3/#4): prefuzz job latency + the CC
-        # driver-path probe/union-find below — fixed cost at any core
-        # count, subtracted to report the middle's compute-only scaling
-        if stage_walls_out is not None:
-            stage_walls_out["prefuzz_s"] = time.monotonic() - t_pf
-        pvs = phrase_vectors_df(spark, forms, kb, fuzzy_map=fmap).localCheckpoint(eager=True)
-        blocked = block_keys_df(pvs.select("norm"))
-        pairs, salt_metrics = candidate_pairs(blocked, max_block)
-        # fused S4+S5 with the exact embedding-score prefilter: only the
-        # plausible pair fraction pays string features / the Arrow JW
-        # crossing; edges are bit-identical to the unfused path (see
-        # fused_similarity_edges).  Lazy checkpoint so connected_
-        # components' driver-size probe and the star-contraction loop
-        # share ONE materialization of the scoring subtree (the probe's
-        # count() is the first computation and every partition lands in
-        # the cache).  Without this, an above-threshold edge table pays
-        # the pairs->scoring chain twice (VERDICT r3 #1).
-        from nilinker_spark.operators.scoring import fused_similarity_edges
-
-        edges = fused_similarity_edges(
-            pairs, pvs, alpha, tau, n_forms=n_forms
-        ).localCheckpoint(eager=False)
-        labels = connected_components(edges, walls_out=stage_walls_out)
-        clusters = assign_clusters(pvs.select("norm"), labels, n_forms=n_forms).localCheckpoint(
-            eager=True
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-    if stage_walls_out is not None:
-        stage_walls_out["middle_s"] = time.monotonic() - t1
+    else:
+        with _form_scope(spark, b.n_forms):
+            _build_lazy(b, {"phrase_vecs", "block_salt_metrics", "pairs", "edges", "clusters"})
+    if walls is not None:
+        walls["middle_s"] = time.monotonic() - t1
+    _build_lazy(b, {"mention_metrics", "resolved"})
     if metrics_out is not None:
-        from nilinker_spark.operators.skew import salted_count
+        metrics_out["mention_metrics"] = b.mention_metrics
+        metrics_out["block_salt_metrics"] = b.block_salt_metrics
+    return b.resolved
 
-        metrics_out["mention_metrics"] = salted_count(mentions, "norm")
-        metrics_out["block_salt_metrics"] = salt_metrics
-    from nilinker_spark.operators.scoring import _maybe_broadcast
 
-    return mentions.join(_maybe_broadcast(clusters, n_forms), "norm").select(
-        "url", "mention_id", "surface", "pos", "norm", "cluster_id"
-    )
+def _head(log: SnapshotLog) -> dict | None:
+    """The log's latest manifest, or None before its first commit."""
+    v = log.latest_version()
+    return None if v is None else log.snapshot(v)
+
+
+def _delete(table_dir: str, files: list[str]) -> None:
+    """Remove data files and the checksum files Spark writes beside them."""
+    for rel in files:
+        path = os.path.join(table_dir, rel)
+        crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+        for p in (path, crc):
+            if os.path.exists(p):
+                os.remove(p)
 
 
 class Pipeline:
@@ -265,147 +348,213 @@ class Pipeline:
             return self.gazetteer
         return {norm_form(s) for s, _, _ in self.kb.surface_forms}
 
-    # --- checkpoint + lineage plumbing -------------------------------------
     def _path(self, stage: str) -> str:
         return os.path.join(self.ckpt_dir, stage)
 
-    def _done(self, stage: str) -> bool:
-        return os.path.exists(os.path.join(self._path(stage), "_SUCCESS")) and (
-            self._lineage_rows(stage) > 0
+    def _log(self, stage: str) -> SnapshotLog:
+        return SnapshotLog(self._path(stage))
+
+    # --- batches -------------------------------------------------------------
+    def run(self, webtext: DataFrame, stop_after: str | None = None) -> DataFrame | None:
+        """Run (or resume) the pipeline; returns the resolved mentions frame.
+
+        ``stop_after`` (a name in :data:`STAGES`) returns None once that
+        stage is committed — the resume tests kill the job there.  On a
+        checkpoint that already holds a committed batch, run() returns the
+        committed ``resolved`` table; new documents go through
+        :meth:`run_incremental`.
+        """
+        return self._run_batch(webtext, append=False, stop_after=stop_after)
+
+    def run_incremental(self, new_webtext: DataFrame) -> DataFrame:
+        """Append new documents to a COMPLETED run; only never-seen
+        normalized forms pay the model math.
+
+        The batch twin of the streaming first-seen dedup
+        (streaming/stateful.py) and the reference's read-modify-write
+        candidate cache (≙ src/REEL/pre_process.py:250-307) — the same
+        stage graph as :meth:`run`, with the append stages appending:
+
+        - ``mentions`` grows by exactly the new documents' mentions;
+        - ``phrase_vecs`` grows by exactly the forms absent from the
+          committed table (left_anti) — only new forms cross the Arrow
+          scoring UDF;
+        - the vocabulary-sized tail (pairs → … → resolved) is recomputed
+          over the full form set — corpus-free work — so the final
+          clusters are IDENTICAL to a from-scratch run on the full corpus
+          (new edges may legitimately re-cluster old forms; tested).
+
+        Caller contract: ``new_webtext`` urls are disjoint from all prior
+        runs (same as any append-only ingest); one writer at a time
+        (single-flight, like run()).  A batch that crashed resumes from
+        its committed stages when retried, and is rolled back when any
+        other batch (or run()/compact()) comes first; re-running a
+        committed batch returns ``resolved`` unchanged.
+        """
+        return self._run_batch(new_webtext, append=True)
+
+    def _run_batch(
+        self, webtext: DataFrame, append: bool, stop_after: str | None = None
+    ) -> DataFrame | None:
+        if stop_after is not None and stop_after not in STAGES:
+            raise ValueError(f"stop_after={stop_after!r} is not a stage: {STAGES}")
+        sig = webtext.agg(
+            F.count("*").alias("n"),
+            F.coalesce(F.bit_xor(F.xxhash64("url")), F.lit(0)).alias("sig"),
+        ).first()
+        batch = f"b{int(sig['n'])}_{int(sig['sig']) & 0xFFFFFFFFFFFFFFFF:016x}"
+        committed = self._recover(batch)
+        if append and not committed:
+            raise RuntimeError("run() must complete before run_incremental()")
+        if committed and (batch in committed or not append):
+            return self.read_stage("resolved")
+        b = _Batch(
+            self.spark, self.kb, webtext, self._gazetteer(), self.alpha, self.tau, self.max_block
+        )
+        for name, build, mode in _STAGE_GRAPH:
+            log = self._log(name)
+            head = _head(log)
+            done = (
+                head is not None
+                and head.get("batch") == batch
+                and all(os.path.exists(os.path.join(log.table_dir, f)) for f in head["files"])
+            )
+            if not done:
+                mode = mode if append else "overwrite"
+                if mode == "append":
+                    setattr(b, name, log.read(self.spark))  # the table appended to
+                head = self._commit(log, build(b), mode, batch, head)
+            setattr(b, name, log.read(self.spark))
+            if name == "phrase_vecs":
+                # from the manifest: powers the conditional broadcast hints
+                b.n_forms = head["lineage"]["rows"]
+            if name == stop_after:
+                return None
+        return b.resolved
+
+    def _commit(
+        self,
+        log: SnapshotLog,
+        df: DataFrame,
+        mode: str,
+        batch: str,
+        head: dict | None,
+        operation: str | None = None,
+        expect: tuple[int, int] | None = None,
+    ) -> dict:
+        """Write ``df`` as new part files beside the committed ones and
+        publish them; returns the new head manifest.
+
+        An append lists the head's files plus the new ones, an overwrite
+        only the new ones (the files it supersedes are deleted once the
+        commit is published).  The manifest's lineage (rows, order-free
+        checksum, wall_ms) covers the whole table: an append combines the
+        head's with its new files' (bit_xor is associative), so only the
+        new files are re-read.  With ``expect`` the new files must hold
+        exactly that (rows, checksum), or they are deleted unpublished.
+        """
+        t0 = time.monotonic()
+        before = set(list_data_files(log.table_dir))
+        df.write.mode("append").parquet(log.table_dir)
+        new = [f for f in list_data_files(log.table_dir) if f not in before]
+        out = self.spark.read.parquet(*[os.path.join(log.table_dir, f) for f in new])
+        stats = out.agg(F.count("*"), F.coalesce(F.bit_xor(F.xxhash64(*out.columns)), F.lit(0)))
+        rows, checksum = map(int, stats.first())
+        if expect is not None and (rows, checksum) != expect:
+            _delete(log.table_dir, new)
+            raise RuntimeError(f"{operation} of {log.table_dir} changed content; aborted")
+        old = head["files"] if head is not None else []
+        if mode == "append" and head is not None:
+            rows += head["lineage"]["rows"]
+            checksum ^= head["lineage"]["checksum"]
+        version = log.commit(
+            operation or mode,
+            files=old + new if mode == "append" else new,
+            expect_latest=None if head is None else head["version"],
+            _extra={
+                "batch": batch,
+                "lineage": {
+                    "rows": rows,
+                    "checksum": checksum,
+                    "wall_ms": int((time.monotonic() - t0) * 1000),
+                },
+            },
+        )
+        if mode == "overwrite":
+            _delete(log.table_dir, sorted(set(old) - set(new)))
+        return log.snapshot(version)
+
+    def _recover(self, batch: str | None = None) -> set[str]:
+        """Undo what crashed batches left behind; returns the committed
+        batch ids (those with a published ``resolved`` manifest).
+
+        An append table whose head comes from an uncommitted batch other
+        than ``batch`` gets a ``rollback`` commit to its last committed
+        file list — otherwise the partial append would be baked into the
+        next batch (mention rows whose forms never reached phrase_vecs,
+        silently dropped by the resolved join).  Overwrite tables need no
+        rollback: a head from another batch is not done, so it is
+        recomputed.  Then every data file no head manifest references (a
+        write whose commit never happened, files a commit superseded or
+        rolled back) is deleted."""
+        res = self._log("resolved")
+        committed = {res.snapshot(v).get("batch") for v in res.versions()}
+        for name, _build, mode in _STAGE_GRAPH:
+            log = self._log(name)
+            head = _head(log)
+            if (
+                mode == "append"
+                and committed
+                and head is not None
+                and head.get("batch") not in committed | {batch}
+            ):
+                last = next(
+                    m
+                    for m in map(log.snapshot, reversed(log.versions()))
+                    if m.get("batch") in committed
+                )
+                log.commit(
+                    "rollback",
+                    files=last["files"],
+                    expect_latest=head["version"],
+                    _extra={"batch": last["batch"], "lineage": last["lineage"]},
+                )
+                head = last
+            keep = set(head["files"]) if head is not None else set()
+            _delete(log.table_dir, [f for f in list_data_files(log.table_dir) if f not in keep])
+        return committed
+
+    # --- snapshot surface (lineage / time travel / history) ---------------
+    def lineage(self) -> DataFrame:
+        """(stage, rows, checksum, wall_ms): one row per stage commit,
+        oldest first — a view over the manifests.  Compactions show as
+        ``compact:<stage>``; rollbacks restore a committed state and add
+        no row."""
+        rows = []
+        for name in STAGES:
+            log = self._log(name)
+            for m in map(log.snapshot, log.versions()):
+                if "lineage" in m and m["operation"] != "rollback":
+                    stage = f"compact:{name}" if m["operation"] == "compact" else name
+                    lin = m["lineage"]
+                    rows.append((m["ts"], stage, lin["rows"], lin["checksum"], lin["wall_ms"]))
+        return self.spark.createDataFrame(
+            [r[1:] for r in sorted(rows)], "stage string, rows long, checksum long, wall_ms long"
         )
 
-    def _lineage_rows(self, stage: str) -> int:
-        lpath = os.path.join(self.ckpt_dir, "lineage_log")
-        if not os.path.exists(lpath):
-            return 0
-        lin = self.spark.read.parquet(lpath)
-        return lin.filter(F.col("stage") == stage).count()
-
-    def _checkpoint(self, stage: str, df: DataFrame) -> DataFrame:
-        """Write stage output + one lineage row; return the re-read frame
-        (re-reading truncates lineage like an Iceberg snapshot would)."""
-        t0 = time.monotonic()
-        df.write.mode("overwrite").parquet(self._path(stage))
-        # overwrite physically replaced the part files, so prior versions
-        # of this stage are expired history (snapshots.py module docs)
-        SnapshotLog(self._path(stage)).commit("overwrite")
-        out = self.spark.read.parquet(self._path(stage))
-        stats = out.agg(
-            F.count("*").alias("rows"),
-            F.coalesce(F.bit_xor(F.xxhash64(*out.columns)), F.lit(0)).alias("checksum"),
-        ).collect()[0]
-        lineage_row = [
-            (stage, int(stats["rows"]), int(stats["checksum"]), int((time.monotonic() - t0) * 1000))
-        ]
-        self.spark.createDataFrame(
-            lineage_row, "stage string, rows long, checksum long, wall_ms long"
-        ).write.mode("append").parquet(os.path.join(self.ckpt_dir, "lineage_log"))
-        return out
-
-    def _checkpoint_append(self, stage: str, df: DataFrame) -> None:
-        """Parquet-APPEND an increment to a stage table + one lineage row
-        recording the post-append stats (the lineage log is an append-only
-        audit; _done() only needs >= 1 row)."""
-        t0 = time.monotonic()
-        df.write.mode("append").parquet(self._path(stage))
-        # append preserves prior files: every earlier version of this
-        # stage stays readable (time travel) until vacuum_stage()
-        SnapshotLog(self._path(stage)).commit("append")
-        out = self.spark.read.parquet(self._path(stage))
-        stats = out.agg(
-            F.count("*").alias("rows"),
-            F.coalesce(F.bit_xor(F.xxhash64(*out.columns)), F.lit(0)).alias("checksum"),
-        ).collect()[0]
-        lineage_row = [
-            (stage, int(stats["rows"]), int(stats["checksum"]), int((time.monotonic() - t0) * 1000))
-        ]
-        self.spark.createDataFrame(
-            lineage_row, "stage string, rows long, checksum long, wall_ms long"
-        ).write.mode("append").parquet(os.path.join(self.ckpt_dir, "lineage_log"))
-
-    def _load(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(stage))
-
-    def _recover_wal(self) -> None:
-        """Roll back ANY uncommitted incremental batch (ADVICE r3, medium).
-
-        An intent marker without its commit means that batch's appends may
-        be partial.  The r2 WAL only recovered when the SAME batch was
-        retried; if the next call is a different batch (or run()/compact()),
-        the partial append would be silently baked in — e.g. mention rows
-        whose forms never reached phrase_vecs, which the resolved join then
-        drops.  So every entry point scans the WAL first: for each orphan
-        intent, delete every part file not in its pre-append snapshot and
-        drop the intent — restoring the exact pre-batch table state.
-
-        Overwrite-mode TAIL stages (pairs…resolved) the crashed batch may
-        have rewritten are invalidated too (ADVICE r4, medium): the intent
-        carries a ``__tail__`` list and recovery strips those stages'
-        ``_SUCCESS`` markers, so a subsequent run() can never serve a
-        `resolved` (or any tail table) containing batch content whose
-        mention/phrase_vecs appends were just rolled back — _done() turns
-        false and the tail recomputes from the recovered append tables.
-        (Lineage rows from the crashed attempt remain: append-only audit.)
-        """
-        import json
-
-        wal_dir = os.path.join(self.ckpt_dir, "incremental_wal")
-        if not os.path.isdir(wal_dir):
-            return
-        for name in sorted(os.listdir(wal_dir)):
-            if not name.endswith(".intent.json"):
-                continue
-            batch_id = name[: -len(".intent.json")]
-            if os.path.exists(os.path.join(wal_dir, f"{batch_id}.commit")):
-                continue
-            with open(os.path.join(wal_dir, name)) as fh:
-                snap = json.load(fh)
-            for stage, keep_names in snap.items():
-                if stage == "__tail__":
-                    # overwrite-mode stages the batch may have rewritten:
-                    # drop their _SUCCESS so _done() forces a recompute
-                    for tail_stage in keep_names:
-                        marker = os.path.join(self._path(tail_stage), "_SUCCESS")
-                        if os.path.exists(marker):
-                            os.remove(marker)
-                    continue
-                keep = set(keep_names)
-                d = self._path(stage)
-                if not os.path.isdir(d):
-                    continue
-                removed = False
-                for fn in os.listdir(d):
-                    p = os.path.join(d, fn)
-                    if fn not in keep and os.path.isfile(p):
-                        os.remove(p)
-                        removed = True
-                # the crashed batch may have PUBLISHED append snapshots
-                # whose files were just deleted; publish the recovered
-                # listing so the latest version is the pre-batch state
-                # again (the batch's versions stay as expired history)
-                log = SnapshotLog(d)
-                if removed and log.latest_version() is not None:
-                    log.commit("rollback")
-            os.remove(os.path.join(wal_dir, name))
-
-    def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.ckpt_dir, "lineage_log"))
-
-    # --- snapshot surface (time travel / history / storage reclaim) --------
     def read_stage(self, stage: str, version: int | None = None) -> DataFrame:
         """Snapshot-isolated read of a stage table.
 
-        ``version=None`` reads the LATEST COMMITTED version — unlike
-        :meth:`_load`, a concurrent append can never tear the read.  An
-        explicit ``version`` time-travels an append table (``mentions``,
-        ``phrase_vecs``) to any state before later appends; versions an
-        overwrite/compact replaced raise ``SnapshotExpired``
-        (snapshots.py module docs)."""
-        return SnapshotLog(self._path(stage)).read(self.spark, version)
+        ``version=None`` reads the LATEST COMMITTED version — a concurrent
+        append can never tear the read.  An explicit ``version``
+        time-travels an append table (``mentions``, ``phrase_vecs``) to
+        any state before later appends; versions an overwrite/compact
+        replaced raise ``SnapshotExpired`` (snapshots.py module docs)."""
+        return self._log(stage).read(self.spark, version)
 
     def stage_history(self, stage: str) -> list[dict]:
         """Committed versions of a stage table, oldest first."""
-        return SnapshotLog(self._path(stage)).history()
+        return self._log(stage).history()
 
     def read_stage_changes(
         self, stage: str, from_version: int, to_version: int | None = None
@@ -415,98 +564,7 @@ class Pipeline:
         what a downstream index/serving updater reads per batch instead
         of rescanning the table (raises if the range is not
         append-only; snapshots.read_changes)."""
-        return SnapshotLog(self._path(stage)).read_changes(
-            self.spark, from_version, to_version
-        )
-
-    def vacuum_stage(self, stage: str, retain_last: int = 1) -> list[str]:
-        """Reclaim data files only pre-``retain_last`` versions reference."""
-        return SnapshotLog(self._path(stage)).vacuum(retain_last)
-
-    # --- stages -------------------------------------------------------------
-    def run(self, webtext: DataFrame, stop_after: str | None = None) -> DataFrame | None:
-        """Run (or resume) the pipeline; returns the resolved mentions frame.
-
-        ``stop_after`` lets the resume test kill the job mid-pipeline.
-        """
-        self._recover_wal()  # a crashed incremental batch must not leak in
-        gazetteer = self._gazetteer()
-
-        def stage(name: str, build) -> DataFrame:
-            if self._done(name):
-                return self._load(name)
-            return self._checkpoint(name, build())
-
-        mentions = stage(
-            "mentions", lambda: extract_mentions_df(self.spark, webtext, gazetteer)
-        )
-        if stop_after == "mentions":
-            return None
-
-        # per-form mention frequencies — the pipeline's metrics table
-        # (≙ the IC term counts, information_content.py:17-27), aggregated
-        # with deterministic salting so the Zipf-head form never funnels
-        # into a single reducer
-        from nilinker_spark.operators.skew import salted_count
-
-        stage("mention_metrics", lambda: salted_count(mentions, "norm"))
-
-        forms = mentions.select("norm").distinct()
-
-        def build_pvs() -> DataFrame:
-            # distinct OOV tokens fuzzy-resolve once cluster-wide (same
-            # rationale as resolve()'s distributed branch: the per-worker
-            # memo cannot de-duplicate across workers — blocking.prefuzz_map)
-            from nilinker_spark.operators.blocking import prefuzz_map
-
-            fmap = prefuzz_map(self.spark, forms, self.kb)
-            return phrase_vectors_df(self.spark, forms, self.kb, fuzzy_map=fmap)
-
-        pvs = stage("phrase_vecs", build_pvs)
-        if stop_after == "phrase_vecs":
-            return None
-        # parquet-metadata count — powers the conditional broadcast hints
-        n_forms = pvs.count()
-
-        def build_pairs() -> DataFrame:
-            blocked = block_keys_df(pvs.select("norm"))
-            pairs, salt_metrics = candidate_pairs(blocked, self.max_block)
-            # guard like any stage: a crash between this write and the
-            # enclosing pairs commit must not append a second metrics
-            # lineage row on resume (one-lineage-row-per-stage invariant)
-            if not self._done("block_salt_metrics"):
-                self._checkpoint("block_salt_metrics", salt_metrics)
-            return pairs
-
-        pairs = stage("pairs", build_pairs)
-        if stop_after == "pairs":
-            return None
-
-        scored = stage("scored", lambda: score_pairs(pairs, pvs, self.alpha, n_forms=n_forms))
-        if stop_after == "scored":
-            return None
-
-        edges = stage("edges", lambda: similarity_edges(scored, self.tau))
-        if stop_after == "edges":
-            return None
-
-        def build_clusters() -> DataFrame:
-            labels = connected_components(edges)
-            return assign_clusters(pvs.select("norm"), labels, n_forms=n_forms)
-
-        clusters = stage("clusters", build_clusters)
-        if stop_after == "clusters":
-            return None
-
-        from nilinker_spark.operators.scoring import _maybe_broadcast
-
-        resolved = stage(
-            "resolved",
-            lambda: mentions.join(_maybe_broadcast(clusters, n_forms), "norm").select(
-                "url", "mention_id", "surface", "pos", "norm", "cluster_id"
-            ),
-        )
-        return resolved
+        return self._log(stage).read_changes(self.spark, from_version, to_version)
 
     # --- table maintenance ---------------------------------------------------
     def compact(self, stage: str, target_rows_per_file: int = 1_000_000) -> int:
@@ -516,208 +574,30 @@ class Pipeline:
         appends (run_incremental) accrete one part-file set per batch; at
         100 TB that read-amplifies every downstream scan.  Semantics:
 
-        - content-preserving: rows and order-free checksum must match
-          before the swap, else the compaction aborts and the original
-          table stays (verified, not assumed);
-        - atomic-ish: the rewrite lands in ``<stage>__compacting``, then
-          one ``os.replace`` of the directory names swaps it in (the
-          parquet stand-in for an Iceberg snapshot commit; a crash before
-          the swap leaves the original untouched, a crash between the
-          two renames is recovered by the leftover-dir check below);
-        - audited: one lineage row (stage = ``compact:<stage>``).
+        - content-preserving: the rewrite's rows and order-free checksum
+          must equal the head's lineage before it is published, else the
+          compaction aborts and the original table stays (verified, not
+          assumed);
+        - atomic: the same overwrite commit as a stage write — a crash
+          before the commit leaves the original head, and the unpublished
+          files are deleted on the next entry;
+        - audited: the manifest keeps the head's batch id (the stage stays
+          done) and shows in :meth:`lineage` as ``compact:<stage>``.
 
         Returns the number of part files after compaction.
         """
-        self._recover_wal()  # never compact a partial append into the table
-        src = self._path(stage)
-        tmp = src + "__compacting"
-        old = src + "__precompact"
-        # recover a crashed previous compaction:
-        # - leftover tmp: the rewrite never committed — drop it;
-        # - leftover old WITH src present: both swaps completed, cleanup
-        #   didn't — drop old;
-        # - leftover old WITHOUT src: crashed BETWEEN the two renames —
-        #   the original lives only in old: ROLL BACK (never delete it).
-        import shutil
-
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        if os.path.exists(old):
-            if os.path.exists(src):
-                shutil.rmtree(old)
-                # the crashed compaction swapped the files in but died
-                # before its snapshot commit: publish the current state
-                # so the latest version is readable again (pre-compact
-                # versions stay as expired history either way; the log
-                # is a SIBLING dir, untouched by the directory swap)
-                log = SnapshotLog(src)
-                if log.latest_version() is not None:
-                    log.commit("compact-recovered")
-            else:
-                os.replace(old, src)
-
-        cur = self.spark.read.parquet(src)
-        stats = cur.agg(
-            F.count("*").alias("rows"),
-            F.coalesce(F.bit_xor(F.xxhash64(*cur.columns)), F.lit(0)).alias("checksum"),
-        ).collect()[0]
-        n_files = max(1, int(stats["rows"]) // target_rows_per_file + 1)
-        t0 = time.monotonic()
-        cur.repartition(n_files).write.mode("overwrite").parquet(tmp)
-        new = self.spark.read.parquet(tmp)
-        new_stats = new.agg(
-            F.count("*").alias("rows"),
-            F.coalesce(F.bit_xor(F.xxhash64(*new.columns)), F.lit(0)).alias("checksum"),
-        ).collect()[0]
-        if (int(new_stats["rows"]), int(new_stats["checksum"])) != (
-            int(stats["rows"]),
-            int(stats["checksum"]),
-        ):
-            shutil.rmtree(tmp)
-            raise RuntimeError(f"compaction of {stage} changed content; aborted")
-        os.replace(src, old)
-        os.replace(tmp, src)
-        shutil.rmtree(old)
-        # the old part files are gone: prior versions expire, the compact
-        # commit is the new latest (the log is a sibling directory, so
-        # the swap never touches it — snapshots.py module docs)
-        SnapshotLog(src).commit("compact")
-        lineage_row = [
-            (
-                f"compact:{stage}",
-                int(new_stats["rows"]),
-                int(new_stats["checksum"]),
-                int((time.monotonic() - t0) * 1000),
-            )
-        ]
-        self.spark.createDataFrame(
-            lineage_row, "stage string, rows long, checksum long, wall_ms long"
-        ).write.mode("append").parquet(os.path.join(self.ckpt_dir, "lineage_log"))
-        return len(
-            [f for f in os.listdir(src) if f.endswith(".parquet") or f.startswith("part-")]
+        self._recover()  # never compact a partial append into the table
+        log = self._log(stage)
+        head = _head(log)
+        lin = head["lineage"]
+        n_files = max(1, lin["rows"] // target_rows_per_file + 1)
+        head = self._commit(
+            log,
+            log.read(self.spark).repartition(n_files),
+            "overwrite",
+            head["batch"],
+            head,
+            operation="compact",
+            expect=(lin["rows"], lin["checksum"]),
         )
-
-    # --- cross-run incremental batch resume ---------------------------------
-    def run_incremental(self, new_webtext: DataFrame) -> DataFrame:
-        """Append new documents to a COMPLETED run; only never-seen
-        normalized forms pay the model math.
-
-        The batch twin of the streaming first-seen dedup
-        (streaming/stateful.py) and the reference's read-modify-write
-        candidate cache (/root/reference/src/REEL/pre_process.py:250-307):
-
-        - ``mentions`` grows by parquet APPEND — only the new documents
-          are scanned;
-        - ``phrase_vecs`` grows by APPEND of exactly the forms absent
-          from the checkpointed table (left_anti) — only new forms cross
-          the Arrow scoring UDF;
-        - the vocabulary-sized tail (pairs → … → resolved) is recomputed
-          over the full form set — corpus-free work — so the final
-          clusters are IDENTICAL to a from-scratch run on the full corpus
-          (new edges may legitimately re-cluster old forms; tested).
-
-        Caller contract: ``new_webtext`` urls are disjoint from all prior
-        runs (same as any append-only ingest); one incremental writer at a
-        time (single-flight, like run()).
-
-        RETRY SAFETY (write-ahead marker): the batch id is an order-free
-        checksum of the batch's urls.  Before the first append, the
-        pre-append part-file listing of every append-target table is
-        written to ``<ckpt>/incremental_wal/<batch_id>.intent.json``; a
-        commit marker lands after the final table is written.  On entry
-        EVERY orphan intent (any batch's, not just this one's — see
-        :meth:`_recover_wal`) is rolled back: part files not in its
-        snapshot are removed and the intent dropped, restoring the
-        pre-batch state before this batch snapshots the listing.  A
-        re-run of a committed batch is an idempotent no-op returning the
-        existing result.  (Lineage rows from a crashed attempt remain —
-        the lineage log is an append-only audit, not the source of
-        truth.)  This is the poor-man's Iceberg snapshot the checkpoint
-        layer stands in for.
-        """
-        import json
-
-        if not self._done("resolved"):
-            raise RuntimeError("run() must complete before run_incremental()")
-        gazetteer = self._gazetteer()
-
-        sig = new_webtext.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("url")), F.lit(0)).alias("sig"),
-        ).first()
-        batch_id = f"b{int(sig['n'])}_{int(sig['sig']) & 0xFFFFFFFFFFFFFFFF:016x}"
-        wal_dir = os.path.join(self.ckpt_dir, "incremental_wal")
-        os.makedirs(wal_dir, exist_ok=True)
-        intent_path = os.path.join(wal_dir, f"{batch_id}.intent.json")
-        commit_path = os.path.join(wal_dir, f"{batch_id}.commit")
-        append_tables = ("mentions", "phrase_vecs")
-        if os.path.exists(commit_path):
-            return self._load("resolved")
-        # roll back ANY crashed batch (this one's retry included), then
-        # snapshot the recovered listing as this batch's rollback point
-        self._recover_wal()
-        snap = {s: sorted(os.listdir(self._path(s))) for s in append_tables}
-        # overwrite-mode stages this batch will rewrite (ADVICE r4): if
-        # the batch dies uncommitted, recovery strips their _SUCCESS so
-        # no later run() serves tail content derived from rolled-back
-        # appends (see _recover_wal)
-        snap["__tail__"] = [
-            "mention_metrics",
-            "block_salt_metrics",
-            "pairs",
-            "scored",
-            "edges",
-            "clusters",
-            "resolved",
-        ]
-        with open(intent_path + ".tmp", "w") as fh:
-            json.dump(snap, fh)
-        os.replace(intent_path + ".tmp", intent_path)
-
-        new_m = extract_mentions_df(self.spark, new_webtext, gazetteer).persist()
-        self._checkpoint_append("mentions", new_m)
-
-        new_forms = (
-            new_m.select("norm")
-            .distinct()
-            .join(self._load("phrase_vecs").select("norm"), "norm", "left_anti")
-            .localCheckpoint(eager=True)  # tiny; breaks the read-append cycle
-        )
-        from nilinker_spark.operators.blocking import prefuzz_map
-
-        self._checkpoint_append(
-            "phrase_vecs",
-            phrase_vectors_df(
-                self.spark, new_forms, self.kb, fuzzy_map=prefuzz_map(self.spark, new_forms, self.kb)
-            ),
-        )
-        new_m.unpersist()
-
-        from nilinker_spark.operators.skew import salted_count
-
-        mentions = self._load("mentions")
-        self._checkpoint("mention_metrics", salted_count(mentions, "norm"))
-        pvs = self._load("phrase_vecs")
-        n_forms = pvs.count()
-        blocked = block_keys_df(pvs.select("norm"))
-        pairs, salt_metrics = candidate_pairs(blocked, self.max_block)
-        self._checkpoint("block_salt_metrics", salt_metrics)
-        pairs = self._checkpoint("pairs", pairs)
-        scored = self._checkpoint("scored", score_pairs(pairs, pvs, self.alpha, n_forms=n_forms))
-        edges = self._checkpoint("edges", similarity_edges(scored, self.tau))
-        labels = connected_components(edges)
-        clusters = self._checkpoint(
-            "clusters", assign_clusters(pvs.select("norm"), labels, n_forms=n_forms)
-        )
-        from nilinker_spark.operators.scoring import _maybe_broadcast
-
-        resolved = self._checkpoint(
-            "resolved",
-            mentions.join(_maybe_broadcast(clusters, n_forms), "norm").select(
-                "url", "mention_id", "surface", "pos", "norm", "cluster_id"
-            ),
-        )
-        with open(commit_path + ".tmp", "w") as fh:
-            fh.write(batch_id)
-        os.replace(commit_path + ".tmp", commit_path)
-        return resolved
+        return len(head["files"])

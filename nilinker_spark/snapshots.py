@@ -5,11 +5,10 @@ table): every committed state of a stage table is a numbered manifest
 under the SIBLING directory ``<table>__snaplog/`` listing the exact
 part files (and the schema) that make up that version.  (The log must
 live OUTSIDE the table directory: Spark's ``mode("overwrite")`` deletes
-the table directory's whole content, and compaction swaps the directory
-itself — a sibling survives both untouched.)  Readers resolve a manifest — never
-the live directory — so a concurrent append can NEVER tear a read, and
-append tables keep their full history readable (time travel) until an
-explicit :meth:`SnapshotLog.vacuum`.
+the table directory's whole content — a sibling survives it untouched.)
+Readers resolve a manifest — never the live directory — so a concurrent
+append can NEVER tear a read, and append tables keep their full history
+readable (time travel) until an explicit :meth:`SnapshotLog.vacuum`.
 
 Commit protocol (single-filesystem atomic, the local stand-in for an
 object-store conditional PUT):
@@ -27,9 +26,10 @@ Semantics by operation (stored in the manifest, enforced by physics):
 - ``append``  — prior versions stay readable (their files are still in
   the directory); this is the time-travel path for the pipeline's
   append tables (``mentions``, ``phrase_vecs``).
-- ``overwrite`` / ``compact`` — Spark's overwrite (and the compaction
-  directory swap, pipeline.py:464) physically replaces the old part
-  files, so prior versions EXPIRE: their manifests remain as history
+- ``overwrite`` / ``compact`` — the writer deletes the replaced part
+  files (Spark's overwrite does so itself; the pipeline's stage writes
+  and compaction do so after publishing), so prior versions EXPIRE:
+  their manifests remain as history
   (audit), but reading one raises :class:`SnapshotExpired` naming the
   missing files.  This is honest Iceberg ``expire_snapshots`` behavior,
   not silent corruption — an expired read never returns wrong rows.
@@ -71,15 +71,16 @@ contract rows) and covered in tests/test_snapshots.py:
 - an exactly-once Structured Streaming sink (:meth:`streaming_sink`) —
   foreachBatch with idempotent batch-id commits, partition-spec-aware.
 
-Relation to the WAL (pipeline.py:322): the WAL makes crashed *writers*
-recoverable (orphan part files are deleted on the next entry); this log
-makes concurrent *readers* consistent (a manifest is only published
-AFTER its files are fully written).  A multi-table batch that crashes
-between its per-table appends and its WAL commit marker may have
-published per-table snapshots; WAL recovery deletes those orphan files
-and publishes a ``rollback`` version with the restored listing, so the
-latest version always reads as the last WAL-committed state and the
-crashed batch's versions become expired history.
+Relation to the pipeline: this log is ``Pipeline``'s only commit
+mechanism.  Each stage write publishes a manifest with an explicit file
+list that carries the batch id and the stage's lineage in its extra
+fields, and a batch is committed once its ``resolved`` manifest is
+published.  A multi-table batch that crashes after some per-table
+commits leaves those versions published; the next entry publishes a
+``rollback`` version of each append table with its last committed file
+list and deletes the files no head references, so the latest version
+reads as the last committed state and the crashed batch's versions
+become expired history (pipeline.py module docs).
 
 Reference parity: the reference has no table format at all (it rewrites
 whole pickle/npy files in place, e.g. ≙ src/REEL/pre_process.py:250-307
@@ -236,8 +237,8 @@ class SnapshotExpired(RuntimeError):
 
 
 def _is_data_file(name: str) -> bool:
-    # the same predicate the WAL rollback and compact() use: parquet
-    # part files only — never markers (_SUCCESS) or the snapshot dir
+    # parquet part files only — never markers (_SUCCESS), checksum
+    # files or the snapshot dir
     return (name.startswith("part-") or name.endswith(".parquet")) and not name.startswith(
         "."
     )

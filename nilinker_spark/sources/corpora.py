@@ -596,7 +596,7 @@ def write_pubtator(ann: DataFrame, docs: DataFrame, path: str) -> None:
         # PARITY-EXPORT ONLY (VERDICT r4 #8): the reference format is ONE
         # globally-ordered text file, so this write is a single task by
         # design.  Never copy this into a pipeline sink — bulk exports go
-        # through partitionBy/parquet (see Pipeline._checkpoint).
+        # through partitionBy/parquet (like the Pipeline's stage tables).
         .coalesce(1)
         .write.mode("overwrite")
         .text(path)

@@ -38,3 +38,39 @@ def webtext_df(spark, kb, webtext_rows):
         ]
     )
     return spark.createDataFrame(webtext_rows, schema).cache()
+
+
+@pytest.fixture
+def crash_commit():
+    """Crash injection at the one commit mechanism: ``with
+    crash_commit(n=k):`` makes the k-th ``SnapshotLog.commit`` (counting
+    only commits to the stage table ``table``, if given) raise
+    RuntimeError("simulated crash ...") — right after the manifest is
+    published, or with ``publish=False`` in its place, so the stage's
+    files are written but never committed."""
+    import os
+    from contextlib import contextmanager
+
+    from nilinker_spark.snapshots import SnapshotLog
+
+    @contextmanager
+    def crash(n: int = 1, table: str | None = None, publish: bool = True):
+        real = SnapshotLog.commit
+        seen = {"n": 0}
+
+        def commit(log, *args, **kwargs):
+            if table is None or os.path.basename(log.table_dir) == table:
+                seen["n"] += 1
+                if seen["n"] == n:
+                    if publish:
+                        real(log, *args, **kwargs)
+                    raise RuntimeError(f"simulated crash at commit {n} of {log.table_dir}")
+            return real(log, *args, **kwargs)
+
+        SnapshotLog.commit = commit
+        try:
+            yield
+        finally:
+            SnapshotLog.commit = real
+
+    return crash

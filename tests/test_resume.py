@@ -1,20 +1,64 @@
 """Resume semantics: kill after stage k, relaunch, identical output,
-no duplicated lineage (SURVEY.md §5 'Resume test'; north-rule gate)."""
+no duplicated lineage (SURVEY.md §5 'Resume test'; north-rule gate).
+Crashes are injected at the one commit mechanism, SnapshotLog.commit
+(the ``crash_commit`` fixture)."""
 
 from __future__ import annotations
+
+import os
+import shutil
 
 import pytest
 
 from nilinker_spark.pipeline import STAGES, Pipeline
+from nilinker_spark.snapshots import SnapshotLog, list_data_files
+
+KEY = ["url", "mention_id", "pos"]
 
 
-@pytest.mark.parametrize("kill_after", ["mentions", "scored", "clusters"])
-def test_resume_after_kill(spark, kb, webtext_df, tmp_path_factory, kill_after):
+def _df(spark, rows):
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType(), False),
+            T.StructField("warc_ts", T.TimestampType(), False),
+            T.StructField("html", T.BinaryType(), False),
+            T.StructField("text", T.StringType(), False),
+            T.StructField("lang", T.StringType(), False),
+        ]
+    )
+    return spark.createDataFrame(list(rows), schema)
+
+
+def _sorted(pdf):
+    return pdf.sort_values(KEY).reset_index(drop=True)
+
+
+def _assert_same_clusters(got, want):
+    a, b = _sorted(got), _sorted(want)
+    assert len(a) == len(b)
+    assert (a["cluster_id"].values == b["cluster_id"].values).all()
+
+
+@pytest.fixture(scope="module")
+def scratch_full(spark, kb, webtext_rows, tmp_path_factory):
+    """From-scratch checkpointed run over the whole corpus — the output
+    every incremental path must converge to."""
+    ck = str(tmp_path_factory.mktemp("ck_scratch_full"))
+    return Pipeline(spark, kb, ck).run(_df(spark, webtext_rows)).toPandas()
+
+
+@pytest.fixture(scope="module")
+def straight_run(spark, kb, webtext_df, tmp_path_factory):
+    """Straight-through run of the fixture corpus (fresh dir)."""
+    ck = str(tmp_path_factory.mktemp("ckpt_ref"))
+    return Pipeline(spark, kb, ck).run(webtext_df).toPandas()
+
+
+@pytest.mark.parametrize("kill_after", ["mentions", "edges", "clusters"])
+def test_resume_after_kill(spark, kb, webtext_df, straight_run, tmp_path_factory, kill_after):
     ckpt = str(tmp_path_factory.mktemp(f"ckpt_resume_{kill_after}"))
-
-    # reference run (fresh dir, straight through)
-    ref_ckpt = str(tmp_path_factory.mktemp(f"ckpt_ref_{kill_after}"))
-    ref = Pipeline(spark, kb, ref_ckpt).run(webtext_df).toPandas()
 
     # killed run + relaunch
     pipe = Pipeline(spark, kb, ckpt)
@@ -22,7 +66,7 @@ def test_resume_after_kill(spark, kb, webtext_df, tmp_path_factory, kill_after):
     resumed = Pipeline(spark, kb, ckpt).run(webtext_df).toPandas()
 
     key = ["url", "mention_id"]
-    a = ref.sort_values(key).reset_index(drop=True)
+    a = straight_run.sort_values(key).reset_index(drop=True)
     b = resumed.sort_values(key).reset_index(drop=True)
     assert a.equals(b), "resumed output differs from straight-through run"
 
@@ -31,6 +75,13 @@ def test_resume_after_kill(spark, kb, webtext_df, tmp_path_factory, kill_after):
     per_stage = lin.groupby("stage").size()
     assert (per_stage == 1).all(), per_stage.to_dict()
     assert set(per_stage.index) >= set(STAGES)
+
+
+def test_stop_after_rejects_unknown_stage(spark, kb, webtext_df, tmp_path):
+    """A typo in stop_after must not silently run to completion."""
+    with pytest.raises(ValueError, match="not a stage"):
+        Pipeline(spark, kb, str(tmp_path)).run(webtext_df, stop_after="scored")
+    assert not os.listdir(tmp_path), "a rejected call wrote checkpoints"
 
 
 def test_rerun_is_noop(spark, kb, webtext_df, tmp_path_factory):
@@ -46,114 +97,61 @@ def test_rerun_is_noop(spark, kb, webtext_df, tmp_path_factory):
     )
 
 
-def test_incremental_append_scores_only_new_forms(spark, kb, webtext_rows, tmp_path_factory):
+def test_incremental_append_scores_only_new_forms(
+    spark, kb, webtext_rows, scratch_full, tmp_path_factory
+):
     """Cross-run incremental resume (≙ the reference's kb_cache,
     REEL/pre_process.py:250-307): append docs, rerun — phrase_vecs grows
     by exactly the never-seen forms, and the final clusters are identical
     to a from-scratch run over the full corpus."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
-    )
-    rows1, rows2 = webtext_rows[: len(webtext_rows) // 2], webtext_rows[len(webtext_rows) // 2 :]
-    df1 = spark.createDataFrame(rows1, schema)
-    df2 = spark.createDataFrame(rows2, schema)
-    df_full = spark.createDataFrame(webtext_rows, schema)
-
+    half = len(webtext_rows) // 2
     ck_inc = str(tmp_path_factory.mktemp("ck_inc"))
     pipe = Pipeline(spark, kb, ck_inc)
-    pipe.run(df1).count()
-    pv_before = spark.read.parquet(f"{ck_inc}/phrase_vecs")
-    forms_before = {r["norm"] for r in pv_before.select("norm").collect()}
+    pipe.run(_df(spark, webtext_rows[:half])).count()
+    forms_before = {r["norm"] for r in pipe.read_stage("phrase_vecs").select("norm").collect()}
 
-    inc = pipe.run_incremental(df2).toPandas()
+    inc = pipe.run_incremental(_df(spark, webtext_rows[half:])).toPandas()
 
-    pv_after = spark.read.parquet(f"{ck_inc}/phrase_vecs")
+    pv_after = pipe.read_stage("phrase_vecs")
     forms_after = {r["norm"] for r in pv_after.select("norm").collect()}
     # appended rows == truly-new forms (recomputing old forms would
     # duplicate them in the appended table)
     assert pv_after.count() == len(forms_after)
     assert forms_before <= forms_after
 
-    ck_scr = str(tmp_path_factory.mktemp("ck_scr"))
-    scratch = Pipeline(spark, kb, ck_scr).run(df_full).toPandas()
-
-    assert len(inc) == len(scratch)
-    key = ["url", "mention_id", "pos"]
-    a = inc.sort_values(key).reset_index(drop=True)
-    b = scratch.sort_values(key).reset_index(drop=True)
-    assert (a["cluster_id"].values == b["cluster_id"].values).all()
-    assert (a["norm"].values == b["norm"].values).all()
+    _assert_same_clusters(inc, scratch_full)
+    assert (_sorted(inc)["norm"].values == _sorted(scratch_full)["norm"].values).all()
     # the incremental run really saw new forms (the test is non-vacuous)
     assert len(forms_after) > len(forms_before)
 
 
-def test_incremental_retry_after_midcall_crash(spark, kb, webtext_rows, tmp_path_factory):
-    """A crash between the mentions append and the phrase_vecs append,
-    followed by a re-run of the SAME batch, must not duplicate rows: the
-    WAL intent marker rolls the partial append back, and the final output
-    equals a from-scratch run (ADVICE r2: run_incremental retry safety)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
-    )
+def test_incremental_retry_after_midcall_crash(
+    spark, kb, webtext_rows, scratch_full, tmp_path_factory, crash_commit
+):
+    """A crash right after the mentions append commits, before
+    phrase_vecs, followed by a re-run of the SAME batch, must not
+    duplicate rows: the retry keeps the committed append and resumes
+    from phrase_vecs, and the final output equals a from-scratch run
+    (ADVICE r2: run_incremental retry safety)."""
     half = len(webtext_rows) // 2
-    df1 = spark.createDataFrame(webtext_rows[:half], schema)
-    df2 = spark.createDataFrame(webtext_rows[half:], schema)
-    df_full = spark.createDataFrame(webtext_rows, schema)
-
+    df2 = _df(spark, webtext_rows[half:])
     ck = str(tmp_path_factory.mktemp("ck_inc_retry"))
     pipe = Pipeline(spark, kb, ck)
-    pipe.run(df1).count()
+    pipe.run(_df(spark, webtext_rows[:half])).count()
     mentions_rows_before = spark.read.parquet(f"{ck}/mentions").count()
 
-    # crash exactly after the first append (mentions), before phrase_vecs
-    real_append = Pipeline._checkpoint_append
-    calls = {"n": 0}
-
-    def crashing(self, stage, df):
-        real_append(self, stage, df)
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("simulated mid-call crash")
-
-    Pipeline._checkpoint_append = crashing
-    try:
-        with pytest.raises(RuntimeError, match="simulated"):
-            pipe.run_incremental(df2)
-    finally:
-        Pipeline._checkpoint_append = real_append
+    with crash_commit(table="mentions"), pytest.raises(RuntimeError, match="simulated"):
+        pipe.run_incremental(df2)
 
     # partial append happened (the crash was after a real write)
     assert spark.read.parquet(f"{ck}/mentions").count() > mentions_rows_before
 
-    # retry the same batch: WAL rollback + clean re-apply
+    # retry the same batch: resume + clean completion
     inc = pipe.run_incremental(df2).toPandas()
-
-    ck_scr = str(tmp_path_factory.mktemp("ck_inc_retry_scratch"))
-    scratch = Pipeline(spark, kb, ck_scr).run(df_full).toPandas()
-    assert len(inc) == len(scratch)
-    key = ["url", "mention_id", "pos"]
-    a = inc.sort_values(key).reset_index(drop=True)
-    b = scratch.sort_values(key).reset_index(drop=True)
-    assert (a["cluster_id"].values == b["cluster_id"].values).all()
+    _assert_same_clusters(inc, scratch_full)
     # no duplicated mention rows in the appended table
     m = spark.read.parquet(f"{ck}/mentions")
-    assert m.count() == m.dropDuplicates(["url", "mention_id"]).count() == len(scratch)
+    assert m.count() == m.dropDuplicates(["url", "mention_id"]).count() == len(scratch_full)
 
     # re-running a COMMITTED batch is an idempotent no-op
     again = pipe.run_incremental(df2).toPandas()
@@ -163,135 +161,90 @@ def test_incremental_retry_after_midcall_crash(spark, kb, webtext_rows, tmp_path
 
 def test_compact_preserves_content_and_resume(spark, kb, webtext_rows, tmp_path_factory):
     """compact(): many part files -> few, identical rows + checksum, table
-    still counts as done (resume no-op) and a lineage audit row lands."""
-    import os
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
-    )
+    still counts as done (its head keeps the batch id) and a lineage
+    audit row lands."""
     half = len(webtext_rows) // 2
-    df1 = spark.createDataFrame(webtext_rows[:half], schema)
-    df2 = spark.createDataFrame(webtext_rows[half:], schema)
-
     ck = str(tmp_path_factory.mktemp("ck_compact"))
     pipe = Pipeline(spark, kb, ck)
-    pipe.run(df1).count()
-    pipe.run_incremental(df2).count()  # appends a second part-file set
+    pipe.run(_df(spark, webtext_rows[:half])).count()
+    pipe.run_incremental(_df(spark, webtext_rows[half:])).count()  # a second part-file set
 
     src = os.path.join(ck, "mentions")
     files_before = [f for f in os.listdir(src) if f.startswith("part-")]
-    before = pipe._load("mentions").toPandas().sort_values(["url", "mention_id"])
+    before = pipe.read_stage("mentions").toPandas().sort_values(["url", "mention_id"])
+    batch_before = SnapshotLog(src).snapshot()["batch"]
 
     n_after = pipe.compact("mentions")
     files_after = [f for f in os.listdir(src) if f.startswith("part-")]
     assert len(files_after) < len(files_before)
     assert n_after == len(files_after) == 1  # tiny table -> one file
 
-    after = pipe._load("mentions").toPandas().sort_values(["url", "mention_id"])
+    after = pipe.read_stage("mentions").toPandas().sort_values(["url", "mention_id"])
     assert before.reset_index(drop=True).equals(after.reset_index(drop=True))
-    assert pipe._done("mentions")
+    head = SnapshotLog(src).snapshot()
+    assert head["batch"] == batch_before
     lin = pipe.lineage().toPandas()
     assert (lin["stage"] == "compact:mentions").sum() == 1
-    # no leftover working directories
-    assert not os.path.exists(src + "__compacting")
-    assert not os.path.exists(src + "__precompact")
+    # no leftover files: the directory holds exactly the published head
+    assert list_data_files(src) == head["files"]
 
 
-def test_compact_recovers_midswap_crash(spark, kb, webtext_df, tmp_path_factory):
-    """A crash BETWEEN compact()'s two directory renames leaves the
-    original table only in <stage>__precompact; the next compact() must
-    roll it back, never delete it (data-destroying failure mode)."""
-    import os
-    import shutil
-
+def test_compact_recovers_midswap_crash(spark, kb, webtext_df, tmp_path_factory, crash_commit):
+    """A crash between compact()'s rewrite and its commit leaves the
+    rewritten files unpublished: the table still reads the original
+    content, and the next compact() deletes the orphans and completes
+    (never deletes the original)."""
     ck = str(tmp_path_factory.mktemp("ck_compact_crash"))
     pipe = Pipeline(spark, kb, ck)
     pipe.run(webtext_df).count()
     src = os.path.join(ck, "mentions")
-    before = pipe._load("mentions").toPandas().sort_values(["url", "mention_id"])
+    before = pipe.read_stage("mentions").toPandas().sort_values(["url", "mention_id"])
+    head_files = SnapshotLog(src).snapshot()["files"]
 
-    # simulate the mid-swap crash state: src renamed away, tmp half-done
-    os.replace(src, src + "__precompact")
-    os.makedirs(src + "__compacting")
-    with open(os.path.join(src + "__compacting", "junk"), "w") as fh:
-        fh.write("partial")
+    with crash_commit(table="mentions", publish=False), pytest.raises(
+        RuntimeError, match="simulated"
+    ):
+        pipe.compact("mentions")
+    assert set(list_data_files(src)) > set(head_files), "crash did not land after the rewrite"
+    mid = pipe.read_stage("mentions").toPandas().sort_values(["url", "mention_id"])
+    assert before.reset_index(drop=True).equals(mid.reset_index(drop=True))
 
     n_files = pipe.compact("mentions")
     assert n_files >= 1
-    after = pipe._load("mentions").toPandas().sort_values(["url", "mention_id"])
+    after = pipe.read_stage("mentions").toPandas().sort_values(["url", "mention_id"])
     assert before.reset_index(drop=True).equals(after.reset_index(drop=True))
-    assert not os.path.exists(src + "__precompact")
-    assert not os.path.exists(src + "__compacting")
+    assert list_data_files(src) == SnapshotLog(src).snapshot()["files"]
     shutil.rmtree(ck)
 
 
-def test_incremental_crash_then_different_batch(spark, kb, webtext_rows, tmp_path_factory):
+def test_incremental_crash_then_different_batch(
+    spark, kb, webtext_rows, scratch_full, tmp_path_factory, crash_commit
+):
     """ADVICE r3 (medium): batch A crashes mid-call (after the mentions
     append, before phrase_vecs); the NEXT call is a DIFFERENT batch B.
-    B's entry scan must roll A's partial append back — otherwise A's
-    mention rows are baked in while their forms never reach phrase_vecs,
-    and the inner join silently drops those mentions.  Afterwards
-    re-applying A converges to the full-corpus scratch run."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
-    )
+    B's entry must roll A's partial append back — otherwise A's mention
+    rows are baked in while their forms never reach phrase_vecs, and the
+    inner join silently drops those mentions.  Afterwards re-applying A
+    converges to the full-corpus scratch run."""
     third = len(webtext_rows) // 3
     rows_base = webtext_rows[:third]
     rows_a = webtext_rows[third : 2 * third]
     rows_b = webtext_rows[2 * third :]
-    df_base = spark.createDataFrame(rows_base, schema)
-    df_a = spark.createDataFrame(rows_a, schema)
-    df_b = spark.createDataFrame(rows_b, schema)
+    df_a = _df(spark, rows_a)
 
     ck = str(tmp_path_factory.mktemp("ck_inc_cross"))
     pipe = Pipeline(spark, kb, ck)
-    pipe.run(df_base).count()
+    pipe.run(_df(spark, rows_base)).count()
 
-    real_append = Pipeline._checkpoint_append
-    calls = {"n": 0}
-
-    def crashing(self, stage, df):
-        real_append(self, stage, df)
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("simulated mid-call crash")
-
-    Pipeline._checkpoint_append = crashing
-    try:
-        with pytest.raises(RuntimeError, match="simulated"):
-            pipe.run_incremental(df_a)
-    finally:
-        Pipeline._checkpoint_append = real_append
+    with crash_commit(table="mentions"), pytest.raises(RuntimeError, match="simulated"):
+        pipe.run_incremental(df_a)
 
     # batch B (different batch id) must first roll A's partial append back
-    inc_b = pipe.run_incremental(df_b).toPandas()
+    inc_b = pipe.run_incremental(_df(spark, rows_b)).toPandas()
     ck_scr = str(tmp_path_factory.mktemp("ck_scr_base_b"))
-    scratch_b = (
-        Pipeline(spark, kb, ck_scr)
-        .run(spark.createDataFrame(rows_base + rows_b, schema))
-        .toPandas()
-    )
-    key = ["url", "mention_id", "pos"]
-    a = inc_b.sort_values(key).reset_index(drop=True)
-    b = scratch_b.sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b), "batch A's partial append leaked into batch B"
-    assert (a["cluster_id"].values == b["cluster_id"].values).all()
+    scratch_b = Pipeline(spark, kb, ck_scr).run(_df(spark, rows_base + rows_b)).toPandas()
+    assert len(inc_b) == len(scratch_b), "batch A's partial append leaked into batch B"
+    _assert_same_clusters(inc_b, scratch_b)
     # A's urls are fully gone from the mentions table
     a_urls = {r[0] for r in rows_a}
     m_urls = {
@@ -301,63 +254,32 @@ def test_incremental_crash_then_different_batch(spark, kb, webtext_rows, tmp_pat
     assert not (a_urls & m_urls), "rolled-back batch left mention rows behind"
 
     # re-applying A afterwards converges to the full-corpus scratch run
-    inc_a = pipe.run_incremental(df_a).toPandas()
-    ck_all = str(tmp_path_factory.mktemp("ck_scr_all"))
-    scratch_all = (
-        Pipeline(spark, kb, ck_all)
-        .run(spark.createDataFrame(list(webtext_rows), schema))
-        .toPandas()
-    )
-    x = inc_a.sort_values(key).reset_index(drop=True)
-    y = scratch_all.sort_values(key).reset_index(drop=True)
-    assert len(x) == len(y)
-    assert (x["cluster_id"].values == y["cluster_id"].values).all()
+    _assert_same_clusters(pipe.run_incremental(df_a).toPandas(), scratch_full)
 
 
-def test_wal_tail_stage_recovery(spark, kb, webtext_rows, tmp_path_factory):
-    """ADVICE r4 (medium): a crash AFTER the final `resolved` overwrite but
-    BEFORE the commit marker leaves the tail tables holding batch content
-    while recovery rolls the mention/phrase_vecs appends back.  The intent's
-    __tail__ list must invalidate those stages' _SUCCESS markers so a later
-    run() RECOMPUTES the tail from the recovered append tables instead of
-    serving resolved rows whose mentions no longer exist."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
-    )
+def test_wal_tail_stage_recovery(
+    spark, kb, webtext_rows, scratch_full, tmp_path_factory, crash_commit
+):
+    """ADVICE r4 (medium): a crash AFTER the final `resolved` write but
+    BEFORE its commit leaves the tail tables holding batch content while
+    the batch never committed.  A later run() must roll the
+    mention/phrase_vecs appends back and serve the committed `resolved`,
+    never resolved rows whose mentions no longer exist."""
     half = len(webtext_rows) // 2
-    rows_base, rows_a = webtext_rows[:half], webtext_rows[half:]
-    df_base = spark.createDataFrame(rows_base, schema)
-    df_a = spark.createDataFrame(rows_a, schema)
+    rows_a = webtext_rows[half:]
+    df_base = _df(spark, webtext_rows[:half])
+    df_a = _df(spark, rows_a)
 
     ck = str(tmp_path_factory.mktemp("ck_wal_tail"))
     pipe = Pipeline(spark, kb, ck)
     base = pipe.run(df_base).toPandas()  # materialize BEFORE the overwrite
 
-    # crash after the resolved overwrite, before the commit marker
-    real_ckpt = Pipeline._checkpoint
+    with crash_commit(table="resolved", publish=False), pytest.raises(
+        RuntimeError, match="simulated"
+    ):
+        pipe.run_incremental(df_a)
 
-    def crashing(self, stage, df):
-        out = real_ckpt(self, stage, df)
-        if stage == "resolved":
-            raise RuntimeError("simulated post-tail crash")
-        return out
-
-    Pipeline._checkpoint = crashing
-    try:
-        with pytest.raises(RuntimeError, match="simulated"):
-            pipe.run_incremental(df_a)
-    finally:
-        Pipeline._checkpoint = real_ckpt
-
-    # non-vacuous: the stale resolved table really contains batch urls
+    # non-vacuous: the unpublished resolved files really contain batch urls
     a_urls = {r[0] for r in rows_a}
     stale_urls = {
         r["url"]
@@ -369,21 +291,56 @@ def test_wal_tail_stage_recovery(spark, kb, webtext_rows, tmp_path_factory):
     pipe2 = Pipeline(spark, kb, ck)
     out = pipe2.run(df_base).toPandas()
     assert not (a_urls & set(out["url"])), "stale resolved served after rollback"
-    key = ["url", "mention_id", "pos"]
-    x = out.sort_values(key).reset_index(drop=True)
-    y = base.sort_values(key).reset_index(drop=True)
-    assert len(x) == len(y)
-    assert (x["cluster_id"].values == y["cluster_id"].values).all()
+    _assert_same_clusters(out, base)
+    m_urls = {r["url"] for r in pipe2.read_stage("mentions").select("url").distinct().collect()}
+    assert not (a_urls & m_urls), "the crashed batch's mentions were not rolled back"
 
     # re-applying the batch afterwards converges to the full-corpus run
-    inc = pipe2.run_incremental(df_a).toPandas()
-    ck_scr = str(tmp_path_factory.mktemp("ck_wal_tail_scratch"))
-    scratch = (
-        Pipeline(spark, kb, ck_scr)
-        .run(spark.createDataFrame(list(webtext_rows), schema))
-        .toPandas()
-    )
-    a = inc.sort_values(key).reset_index(drop=True)
-    b = scratch.sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b)
-    assert (a["cluster_id"].values == b["cluster_id"].values).all()
+    _assert_same_clusters(pipe2.run_incremental(df_a).toPandas(), scratch_full)
+
+
+def test_crash_at_every_commit_point(spark, kb, webtext_rows, tmp_path_factory, crash_commit):
+    """SnapshotLog.commit raises at each commit point of run() and of
+    run_incremental() in turn, right after publishing; plus once for an
+    overwrite stage and once for an append stage whose files are written
+    but never committed.  Every relaunch gives output identical to an
+    uninterrupted run, with one lineage row per stage of each batch and
+    no unreferenced data file left behind."""
+    df_base = _df(spark, webtext_rows[:48])
+    df_delta = _df(spark, webtext_rows[48:72])
+    key = ["url", "mention_id"]
+
+    def out(res):
+        return res.toPandas().sort_values(key).reset_index(drop=True)
+
+    def check_clean(ck):
+        for stage in STAGES:
+            d = os.path.join(ck, stage)
+            assert list_data_files(d) == SnapshotLog(d).snapshot()["files"], stage
+
+    root = tmp_path_factory.mktemp("ck_crash")
+    base_ck = str(root / "base")
+    ref_run = out(Pipeline(spark, kb, base_ck).run(df_base))
+    shutil.copytree(base_ck, str(root / "inc_ref"))
+    ref_inc = out(Pipeline(spark, kb, str(root / "inc_ref")).run_incremental(df_delta))
+    assert len(ref_inc) > len(ref_run)
+
+    points = [("run", k, None, True) for k in range(1, len(STAGES) + 1)]
+    points += [("inc", k, None, True) for k in range(1, len(STAGES) + 1)]
+    points += [("run", 1, "pairs", False), ("inc", 1, "phrase_vecs", False)]
+    for i, (call, n, table, publish) in enumerate(points):
+        ck = str(root / f"p{i}")
+        if call == "inc":
+            shutil.copytree(base_ck, ck)
+        with crash_commit(n=n, table=table, publish=publish), pytest.raises(
+            RuntimeError, match="simulated"
+        ):
+            pipe = Pipeline(spark, kb, ck)
+            pipe.run(df_base) if call == "run" else pipe.run_incremental(df_delta)
+        pipe = Pipeline(spark, kb, ck)
+        got = out(pipe.run(df_base) if call == "run" else pipe.run_incremental(df_delta))
+        assert got.equals(ref_run if call == "run" else ref_inc), (call, n, table, publish)
+        per_stage = pipe.lineage().toPandas().groupby("stage").size()
+        assert (per_stage == (1 if call == "run" else 2)).all(), (call, n, per_stage.to_dict())
+        check_clean(ck)
+        shutil.rmtree(ck)

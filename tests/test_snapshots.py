@@ -1,5 +1,5 @@
 """Snapshot log: isolation, time travel, CAS commits, expiry, vacuum,
-and its composition with the pipeline's WAL and compaction.
+and its composition with the pipeline's batch recovery and compaction.
 
 The transaction-log half of the Iceberg stand-in (snapshots.py module
 docs; README swap table).  The reference has no table format at all —
@@ -196,12 +196,13 @@ def test_pipeline_time_travel_across_incremental(spark, kb, webtext_rows, tmp_pa
     assert merged.empty  # nothing from the pre-batch table leaks in
 
 
-def test_wal_rollback_publishes_recovered_version(spark, kb, webtext_rows, tmp_path_factory):
-    """A batch that crashed between its appends and its WAL commit leaves
-    published snapshots pointing at rolled-back files; recovery publishes
-    a 'rollback' version whose read equals the pre-batch state exactly."""
-    import json
-
+def test_wal_rollback_publishes_recovered_version(
+    spark, kb, webtext_rows, tmp_path_factory, crash_commit
+):
+    """A batch that crashed between its appends and its batch commit
+    leaves published snapshots pointing at its files; the next entry
+    publishes a 'rollback' version whose read equals the pre-batch state
+    exactly."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -214,31 +215,19 @@ def test_wal_rollback_publishes_recovered_version(spark, kb, webtext_rows, tmp_p
         ]
     )
     base = spark.createDataFrame(webtext_rows[:300], schema)
+    inc = spark.createDataFrame(webtext_rows[300:], schema)
     ckpt = str(tmp_path_factory.mktemp("ckpt_snap_wal"))
     pipe = Pipeline(spark, kb, ckpt)
     pipe.run(base)
     pre = pipe.read_stage("mentions").toPandas()
 
-    # forge a crashed batch: an orphan intent whose snapshot is the
-    # current listing, then an append that DID publish its snapshot
-    wal_dir = os.path.join(ckpt, "incremental_wal")
-    os.makedirs(wal_dir, exist_ok=True)
-    snap = {
-        "mentions": sorted(os.listdir(pipe._path("mentions"))),
-        "phrase_vecs": sorted(os.listdir(pipe._path("phrase_vecs"))),
-        "__tail__": [],
-    }
-    with open(os.path.join(wal_dir, "bdead.intent.json"), "w") as fh:
-        json.dump(snap, fh)
-    extra = spark.createDataFrame(
-        [("https://forged.test/x", "9" * 16, "zz zz", 0, "zz zz")],
-        "url string, mention_id string, surface string, pos int, norm string",
-    )
-    pipe._checkpoint_append("mentions", extra)  # publishes an append version
+    # crash the batch once its mentions append has published a version
+    with crash_commit(table="mentions"), pytest.raises(RuntimeError, match="simulated"):
+        pipe.run_incremental(inc)
     dirty = pipe.read_stage("mentions").count()
-    assert dirty == len(pre) + 1
+    assert dirty > len(pre)
 
-    pipe._recover_wal()
+    pipe.run(base)  # any entry recovers; base is committed, so nothing reruns
 
     recovered = pipe.read_stage("mentions").toPandas()
     key = ["url", "mention_id"]
@@ -254,9 +243,9 @@ def test_wal_rollback_publishes_recovered_version(spark, kb, webtext_rows, tmp_p
 
 
 def test_compact_preserves_log_and_expires_priors(spark, kb, webtext_rows, tmp_path_factory):
-    """compact() swaps the table directory; the snapshot log must survive
-    the swap, the compact commit becomes latest, and pre-compact append
-    versions expire loudly."""
+    """compact() publishes an overwrite commit: the snapshot log keeps
+    its history, the compact commit becomes latest, and pre-compact
+    append versions expire loudly."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -280,7 +269,7 @@ def test_compact_preserves_log_and_expires_priors(spark, kb, webtext_rows, tmp_p
     pipe.compact("mentions")
 
     hist = pipe.stage_history("mentions")
-    assert len(hist) == len(hist_before) + 1, "log lost across the dir swap"
+    assert len(hist) == len(hist_before) + 1, "log lost history across the compaction"
     assert hist[-1]["operation"] == "compact"
     after = pipe.read_stage("mentions").toPandas()
     key = ["url", "mention_id"]

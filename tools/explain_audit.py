@@ -33,6 +33,7 @@ HEADLINE = [
     "decontaminate",
     "importance_resample",
     "pack_sequences",
+    "lm_bigram_score",
     "source_stats",
     "tpch_q3",
     "text_quality",
@@ -84,9 +85,11 @@ def main() -> None:
     # --- the distributed vocabulary middle, audited as ONE fused plan -----
     # (at contract scale the middle takes the driver fast path, so the
     # headline er_resolve plan above never shows it; this section builds
-    # the S2-S5 chain the distributed path executes — prefuzz'd phrase
-    # vectors, block window, salted pair joins, broadcast pv joins, the
-    # single Jaro-Winkler Arrow stage — and records its properties)
+    # the S2-S5 chain the distributed path and the checkpointed Pipeline
+    # execute — prefuzz'd phrase vectors, block window, salted pair joins,
+    # broadcast pv joins, the dot-bound prefilter, the single
+    # Jaro-Winkler Arrow stage over its survivors — and records its
+    # properties)
     from pyspark.sql import functions as F
 
     from nilinker_spark.fixtures.kb import make_kb
@@ -97,7 +100,7 @@ def main() -> None:
     )
     from nilinker_spark.operators.extract import extract_mentions_df
     from nilinker_spark.operators.pairs import candidate_pairs
-    from nilinker_spark.operators.scoring import score_pairs, similarity_edges
+    from nilinker_spark.operators.scoring import fused_similarity_edges
     from nilinker_spark.oracle import ALPHA, MAX_BLOCK_FORMS, TAU
     from nilinker_spark.sources.webtext import (
         gazetteer_from_documents,
@@ -115,7 +118,7 @@ def main() -> None:
     pvs = phrase_vectors_df(spark, forms, kb, fuzzy_map=fmap).localCheckpoint(eager=True)
     n_forms = pvs.count()
     pairs, _ = candidate_pairs(block_keys_df(pvs.select("norm")), MAX_BLOCK_FORMS)
-    edges = similarity_edges(score_pairs(pairs, pvs, ALPHA, n_forms=n_forms), TAU)
+    edges = fused_similarity_edges(pairs, pvs, ALPHA, TAU, n_forms=n_forms)
     import re as _re
 
     plan = explain_str(edges, "formatted")
@@ -128,7 +131,8 @@ def main() -> None:
     out.append("")
     out.append(
         f"- python (Arrow) stages in the fused S3-S5 plan: "
-        f"{n('ArrowEvalPython')} (the Jaro-Winkler batch — the only crossing)"
+        f"{n('ArrowEvalPython')} (the Jaro-Winkler batch over the prefilter's "
+        "survivors — the only crossing)"
     )
     out.append(
         f"- exchanges: {n('Exchange')}, windows: {n('Window')} (the blocked+members "
