@@ -20,6 +20,12 @@ Everything is float32 and batch-vectorized: one call handles B mentions
 with ragged candidate blocks (padded + masked), which is exactly the
 shape an Arrow record batch hands the pandas UDF.  The same function runs
 in the single-process oracle — parity is exact, not approximate.
+
+Each row's vector is a function of that row alone, bit for bit: the
+projections go through :func:`_rows_matmul`, not BLAS, whose float32
+sgemm rounds a row differently with its position in the batch and the
+batch's size.  So a form gets the same vector in any Arrow batch, on
+any partitioning, and on the driver.
 """
 
 from __future__ import annotations
@@ -75,6 +81,16 @@ def l2_normalize(mat: np.ndarray) -> np.ndarray:
     return (mat / norms).astype(F32)
 
 
+def _rows_matmul(x: np.ndarray, m: np.ndarray) -> np.ndarray:
+    """``x @ m`` for x [B, D], m [D, E], summed over D in a fixed order
+    with elementwise ops only — every output row is independent of the
+    other rows (see the module docstring)."""
+    out = x[:, 0:1] * m[0]
+    for d in range(1, m.shape[0]):
+        out = out + x[:, d : d + 1] * m[d]
+    return out.astype(F32)
+
+
 def _masked_softmax(scores: np.ndarray, mask: np.ndarray) -> np.ndarray:
     """Softmax over axis 1 with a 0/1 mask; all-masked rows → zeros."""
     scores = np.where(mask, scores, F32(-1e9))
@@ -92,7 +108,7 @@ def _attend(
     w: "ModelWeights",
 ) -> np.ndarray:
     """Batched cross-attention aggregate (≙ determine_attention, nilinker.py:80-110)."""
-    h = np.tanh(word_vecs @ w.W_a + w.b_a).astype(F32)  # [B, D]
+    h = np.tanh(_rows_matmul(word_vecs, w.W_a) + w.b_a).astype(F32)  # [B, D]
     scores = np.einsum("bkd,bd->bk", cand_mat, h).astype(F32)  # [B, K]
     att = _masked_softmax(scores, cand_mask)  # [B, K]
     return np.einsum("bk,bkd->bd", att, cand_mat).astype(F32)  # [B, D]
@@ -125,5 +141,5 @@ def phrase_vectors(
     agg_r = _attend(wr, cl, mask_l, w)
 
     concat = np.concatenate([wl + wr, agg_l + agg_r], axis=1).astype(F32)  # [B, 2D]
-    phrase = np.tanh(concat @ w.W_c + w.b_c).astype(F32)  # [B, D]
+    phrase = np.tanh(_rows_matmul(concat, w.W_c) + w.b_c).astype(F32)  # [B, D]
     return l2_normalize(phrase)

@@ -22,7 +22,6 @@ join formulation remains in ``resolve_tokens`` for tests/debugging.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,7 +29,7 @@ from pyspark.sql import types as T
 
 from nilinker_spark.fixtures.kb import KBFixture
 from nilinker_spark.functions.similarity import fuzzy_best_match
-from nilinker_spark.oracle import PAD_CANDS
+from nilinker_spark.oracle import form_vectors, wc_by_id
 
 # per-worker-process fuzzy-resolution memo, keyed by KB vocab fingerprint:
 # {kb_fingerprint: {token: word_id}}.  fuzzy_best_match is a pure function
@@ -153,7 +152,8 @@ def phrase_vectors_df(
 ) -> DataFrame:
     """distinct (norm) -> (norm, pv array<float>) in ONE Arrow UDF pass.
 
-    Inside the UDF (per Arrow batch, all vectorized):
+    Inside the UDF, per Arrow batch, :func:`oracle.form_vectors` (the
+    same pure function the driver paths call — vectors are bit-identical):
     1. tokenize to (tl, tr) with the [t, t] rule (utils.py:362-377),
     2. resolve word ids: exact dict hit, else the pre-resolved
        ``fuzzy_map`` (see :func:`prefuzz_map`) or the deterministic fuzzy
@@ -165,27 +165,25 @@ def phrase_vectors_df(
        instead of the reference's batch-size-1 eager loop at :196).
 
     The KB dicts + weight matrices ride one sc.broadcast; the UDF touches
-    no Spark state, so the same numpy path runs in the oracle.
+    no Spark state.
     """
     fuzzy_b = spark.sparkContext.broadcast(fuzzy_map or {})
     kb_b = spark.sparkContext.broadcast(
         {
             "vocab_sorted": sorted(kb.word2id),
             "word2id": dict(kb.word2id),
-            "wc_by_id": {kb.word2id[w]: cands[:PAD_CANDS] for w, cands in kb.wc.items()},
+            "wc_by_id": wc_by_id(kb),
             "weights": kb.weights.to_npz_dict(),
             "fingerprint": kb.fingerprint,
         }
     )
 
     def run(batches):
-        from nilinker_spark.functions.model import ModelWeights, phrase_vectors
-        from nilinker_spark.functions.normalize import tokenize_entity
+        from nilinker_spark.functions.model import ModelWeights
 
         kbv = kb_b.value
         w2i = kbv["word2id"]
         vocab = kbv["vocab_sorted"]
-        wc = kbv["wc_by_id"]
         z = kbv["weights"]
         w = ModelWeights(z["W_a"], z["b_a"], z["W_c"], z["b_c"], z["word_embeds"], z["cand_embeds"])
 
@@ -207,20 +205,7 @@ def phrase_vectors_df(
 
         for pdf in batches:
             norms = pdf["norm"]
-            n = len(norms)
-            wl_ids = np.empty(n, dtype=np.int64)
-            wr_ids = np.empty(n, dtype=np.int64)
-            cl = np.full((n, PAD_CANDS), -1, dtype=np.int64)
-            cr = np.full((n, PAD_CANDS), -1, dtype=np.int64)
-            for i, nf in enumerate(norms):
-                tl, tr = tokenize_entity(nf)
-                wl_ids[i] = wid(tl)
-                wr_ids[i] = wid(tr)
-                a = wc.get(int(wl_ids[i]), [])
-                b = wc.get(int(wr_ids[i]), [])
-                cl[i, : len(a)] = a
-                cr[i, : len(b)] = b
-            pv = phrase_vectors(wl_ids, wr_ids, cl, cr, w)
+            pv = form_vectors(norms, wid, kbv["wc_by_id"], w)
             yield pd.DataFrame({"norm": norms, "pv": list(pv)})
 
     schema = T.StructType(

@@ -54,7 +54,9 @@ def candidate_pairs(
     the edge set dedups one stage later in CC (see the no-pair-dedup note
     below).  Consumers that COUNT pairs (including the Pipeline's
     checkpointed ``pairs`` stage table) must aggregate over distinct
-    (norm_a, norm_b) themselves."""
+    (norm_a, norm_b) themselves.  The driver middle's ``pairs`` table
+    (oracle.block_pairs, below pipeline.DRIVER_VOCAB_MAX) is
+    pair-distinct: the same pair set, without the duplicates."""
     # block sizes via an unbounded window, not groupBy+self-join: one
     # exchange on block_key instead of two plus a join — this sits on the
     # flagship's fixed-latency path (vocabulary-sized, every run).

@@ -20,11 +20,12 @@ so parity is exact by construction, not tuned.
 from __future__ import annotations
 
 import hashlib
+from typing import Callable
 
 import numpy as np
 
 from nilinker_spark.fixtures.kb import KBFixture
-from nilinker_spark.functions.model import phrase_vectors
+from nilinker_spark.functions.model import ModelWeights, phrase_vectors
 from nilinker_spark.functions.normalize import norm_form, singularize, tokenize_entity
 from nilinker_spark.functions.similarity import fuzzy_best_match, jaro_winkler, levenshtein
 
@@ -162,24 +163,43 @@ def resolve_word_id(token: str, kb: KBFixture, _cache: dict | None = None) -> in
     return wid
 
 
-def form_phrase_vector(nf: str, kb: KBFixture, _cache: dict | None = None) -> np.ndarray:
-    """Phrase vector for one normalized surface form (oracle path)."""
-    tl, tr = tokenize_entity(nf)
-    wl = resolve_word_id(tl, kb, _cache)
-    wr = resolve_word_id(tr, kb, _cache)
-    vocab = kb.vocab_sorted
-    cl = kb.wc.get(vocab[wl], [])[:PAD_CANDS]
-    cr = kb.wc.get(vocab[wr], [])[:PAD_CANDS]
+def wc_by_id(kb: KBFixture) -> dict[int, list[int]]:
+    """word id -> its first PAD_CANDS WC candidate ids."""
+    return {kb.word2id[w]: cands[:PAD_CANDS] for w, cands in kb.wc.items()}
 
-    def pad(ids: list[int]) -> np.ndarray:
-        arr = np.full((1, PAD_CANDS), -1, dtype=np.int64)
-        arr[0, : len(ids)] = ids
-        return arr
 
-    pv = phrase_vectors(
-        np.array([wl]), np.array([wr]), pad(cl), pad(cr), kb.weights
-    )
-    return pv[0]
+def form_vectors(
+    norms, word_id: Callable[[str], int], wc: dict[int, list[int]], weights: ModelWeights
+) -> np.ndarray:
+    """[len(norms), D] phrase vectors of normalized surface forms.
+
+    The one implementation behind the Spark UDF
+    (blocking.phrase_vectors_df, per Arrow batch) and every driver path:
+    ``word_id`` maps a token to its vocab id (exact hit, else the fuzzy
+    OOV fallback, :func:`resolve_word_id`), ``wc`` is :func:`wc_by_id`.
+    phrase_vectors is row-independent, so a form's vector does not
+    depend on which batch it is computed in."""
+    n = len(norms)
+    wl_ids = np.empty(n, dtype=np.int64)
+    wr_ids = np.empty(n, dtype=np.int64)
+    cl = np.full((n, PAD_CANDS), -1, dtype=np.int64)
+    cr = np.full((n, PAD_CANDS), -1, dtype=np.int64)
+    for i, nf in enumerate(norms):
+        tl, tr = tokenize_entity(nf)
+        wl_ids[i] = word_id(tl)
+        wr_ids[i] = word_id(tr)
+        a = wc.get(int(wl_ids[i]), [])
+        b = wc.get(int(wr_ids[i]), [])
+        cl[i, : len(a)] = a
+        cr[i, : len(b)] = b
+    return phrase_vectors(wl_ids, wr_ids, cl, cr, weights)
+
+
+def kb_form_vectors(norms: list[str], kb: KBFixture) -> dict[str, np.ndarray]:
+    """{form: phrase vector} computed in-process, straight from the KB."""
+    cache: dict[str, int] = {}
+    pv = form_vectors(norms, lambda t: resolve_word_id(t, kb, cache), wc_by_id(kb), kb.weights)
+    return dict(zip(norms, pv))
 
 
 def blended_score(
@@ -225,6 +245,65 @@ class UnionFind:
             self.parent[hi] = lo
 
 
+def block_pairs(
+    forms, max_block: int = MAX_BLOCK_FORMS
+) -> tuple[list[tuple[str, str]], list[tuple[str, int, int]]]:
+    """(candidate pairs, salt rows) of distinct forms, both sorted.
+
+    Pairs (a, b) with a < b are pair-distinct.  A block over
+    ``max_block`` members is salted into sub-blocks plus replicated
+    anchors (mirrors pairs.candidate_pairs) and reported as a salt row
+    (block_key, members, n_salts) — the twin of its salt_metrics."""
+    blocks: dict[str, list[str]] = {}
+    for f in sorted(set(forms)):
+        for k in block_keys(f):
+            blocks.setdefault(k, []).append(f)
+
+    pairs: set[tuple[str, str]] = set()
+    salt_rows: list[tuple[str, int, int]] = []
+    for key, members in sorted(blocks.items()):
+        n = len(members)
+        if n <= max_block:
+            for i in range(n):
+                for j in range(i + 1, n):
+                    pairs.add((members[i], members[j]))
+        else:
+            n_salts = -(-n // max_block)
+            salt_rows.append((key, n, n_salts))
+            subs: dict[int, list[str]] = {}
+            for m in members:
+                subs.setdefault(salt_of(m, n_salts), []).append(m)
+            for grp in subs.values():
+                for i in range(len(grp)):
+                    for j in range(i + 1, len(grp)):
+                        pairs.add((grp[i], grp[j]))
+            for anchor in members[:N_ANCHORS]:
+                for m in members:
+                    if m != anchor:
+                        pairs.add((min(anchor, m), max(anchor, m)))
+    return sorted(pairs), salt_rows
+
+
+def score_edges(
+    pairs: list[tuple[str, str]],
+    pvs: dict[str, np.ndarray],
+    alpha: float = ALPHA,
+    tau: float = TAU,
+) -> list[tuple[str, str]]:
+    """The pairs whose blended score over the vectors ``pvs`` reaches tau."""
+    return [(a, b) for a, b in pairs if blended_score(pvs[a], pvs[b], a, b, alpha=alpha) >= tau]
+
+
+def components(forms, edges: list[tuple[str, str]]) -> dict[str, str]:
+    """form -> cluster id (min form of its connected component)."""
+    uf = UnionFind()
+    for f in forms:
+        uf.find(f)
+    for a, b in edges:
+        uf.union(a, b)
+    return {f: uf.find(f) for f in sorted(uf.parent)}
+
+
 def similarity_edge_list(
     forms: list[str],
     kb: KBFixture,
@@ -240,46 +319,10 @@ def similarity_edge_list(
     INDEPENDENT engine (DuckDB's recursive CTE in the er_resolve contract
     query, or :class:`UnionFind` below) derives the components."""
     forms = sorted(set(forms))
-    fcache: dict[str, int] = {}
-    pvs = {f: form_phrase_vector(f, kb, fcache) for f in forms}
-
-    blocks: dict[str, list[str]] = {}
-    for f in forms:
-        for k in block_keys(f):
-            blocks.setdefault(k, []).append(f)
-
-    pairs: set[tuple[str, str]] = set()
-    salt_rows: list[tuple[str, int, int]] = []
-    for key, members in sorted(blocks.items()):
-        members = sorted(set(members))
-        n = len(members)
-        if n <= max_block:
-            for i in range(n):
-                for j in range(i + 1, n):
-                    pairs.add((members[i], members[j]))
-        else:
-            # salted sub-blocks + replicated anchors (mirrors pairs.py)
-            n_salts = -(-n // max_block)
-            salt_rows.append((key, n, n_salts))
-            subs: dict[int, list[str]] = {}
-            for m in members:
-                subs.setdefault(salt_of(m, n_salts), []).append(m)
-            for grp in subs.values():
-                for i in range(len(grp)):
-                    for j in range(i + 1, len(grp)):
-                        pairs.add((grp[i], grp[j]))
-            for anchor in members[:N_ANCHORS]:
-                for m in members:
-                    if m != anchor:
-                        pairs.add((min(anchor, m), max(anchor, m)))
+    pairs, salt_rows = block_pairs(forms, max_block)
     if metrics_out is not None:
-        # twin of pairs.py's salt_metrics (block_key, members, n_salts)
         metrics_out["block_salt_rows"] = salt_rows
-    return [
-        (a, b)
-        for a, b in sorted(pairs)
-        if blended_score(pvs[a], pvs[b], a, b, alpha=alpha) >= tau
-    ]
+    return score_edges(pairs, kb_form_vectors(forms, kb), alpha, tau)
 
 
 def cluster_forms(
@@ -296,15 +339,10 @@ def cluster_forms(
     the same distinct-surface memoization the pipeline uses (≙ the
     reference's kb_cache, REEL/pre_process.py:250-307, done relationally).
     """
-    forms = sorted(set(forms))
-    uf = UnionFind()
-    for f in forms:
-        uf.find(f)
-    for a, b in similarity_edge_list(
+    edges = similarity_edge_list(
         forms, kb, alpha=alpha, tau=tau, max_block=max_block, metrics_out=metrics_out
-    ):
-        uf.union(a, b)
-    return {f: uf.find(f) for f in forms}
+    )
+    return components(forms, edges)
 
 
 def run_oracle(

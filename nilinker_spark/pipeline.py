@@ -8,12 +8,21 @@ Stage graph (SURVEY.md §7.1), defined once in ``_STAGE_GRAPH``:
 
 :func:`resolve` composes the stages into one lazy plan.  :class:`Pipeline`
 writes each stage to ``<ckpt_dir>/<stage>`` and publishes it through that
-table's :class:`SnapshotLog`, its only commit mechanism:
+table's :class:`SnapshotLog`, its only commit mechanism.
+
+Both take the same middle (S2-S6).  While the batch's form count is
+within ``DRIVER_VOCAB_MAX`` it runs on the driver: phrase vectors,
+candidate pairs with salt rows, scored edges and union-find clusters come
+from the oracle's shared helpers, once per batch, and reach Spark as
+Arrow-backed local frames — no Python-worker task between extraction and
+the final join.  Above it the distributed operators run.  Either way
+Pipeline commits the same tables:
 
 - a stage write lands as new part files beside the committed ones, then
   publishes a manifest listing its files — an overwrite lists only the
   new files (the superseded ones are deleted after the commit), an
-  append lists the head's files plus the new ones;
+  append lists the head's files plus the new ones (an append of no rows
+  keeps no file);
 - every manifest carries the batch id (an order-free checksum of the
   batch's urls) and the stage's lineage: rows, checksum, wall_ms;
 - a stage is done for a batch when its head manifest carries that batch
@@ -34,30 +43,36 @@ from __future__ import annotations
 import os
 import time
 from contextlib import contextmanager
+from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nilinker_spark import oracle
 from nilinker_spark.fixtures.kb import KBFixture
 from nilinker_spark.functions.normalize import norm_form
-from nilinker_spark.operators import blocking, scoring
-from nilinker_spark.operators.clustering import assign_clusters, connected_components
+from nilinker_spark.operators import blocking, clustering, scoring
 from nilinker_spark.operators.extract import extract_mentions_df
 from nilinker_spark.operators.pairs import candidate_pairs
 from nilinker_spark.operators.skew import salted_count
 from nilinker_spark.oracle import ALPHA, MAX_BLOCK_FORMS, TAU
 from nilinker_spark.snapshots import SnapshotLog, list_data_files
 
-# Adaptive small-vocabulary execution for resolve()'s middle section
-# (S2-S6: phrase vectors -> pairs -> scoring -> CC -> clusters).  Those
-# stages are vocabulary-bounded; below this form count they are pure
-# scheduler latency as distributed jobs (~3.6 s at 2 cores, measured) and
-# run instead on the driver through the SAME shared pure functions the
-# oracle uses (functions/model + functions/similarity + oracle blocking/
-# salting) — results identical by construction and by forced-path parity
-# test.  Above the threshold (real corpora: 10^6-10^7 forms at 100 TB)
-# the distributed path runs unchanged.  Same decision rule as a
-# broadcast-join threshold: execute the provably-tiny side locally.
+# Adaptive small-vocabulary execution of the middle (S2-S6: phrase
+# vectors -> pairs -> scoring -> CC -> clusters), in resolve() and in
+# both Pipeline runs.  Those stages are vocabulary-bounded; below this
+# form count they are pure scheduler latency as distributed jobs (~3.6 s
+# at 2 cores, measured), and every Python-worker task among them reads
+# ~2.5 MB before its UDF gets control.  So they run on the driver through
+# the SAME shared pure functions the oracle uses (oracle.form_vectors,
+# block_pairs, score_edges, components) and reach Spark as Arrow-backed
+# local frames — results identical by construction and by forced-path
+# parity tests.  The form count is the committed phrase_vecs rows plus
+# the batch's new forms (a bounded collect finds them).  Above the
+# threshold (real corpora: 10^6-10^7 forms at 100 TB) the distributed
+# path runs unchanged.  Same decision rule as a broadcast-join
+# threshold: execute the provably-tiny side locally.
 DRIVER_VOCAB_MAX = int(os.environ.get("NILINKER_DRIVER_VOCAB_MAX", "2000"))
 
 RESOLVED_COLS = ("url", "mention_id", "surface", "pos", "norm", "cluster_id")
@@ -66,27 +81,87 @@ RESOLVED_COLS = ("url", "mention_id", "surface", "pos", "norm", "cluster_id")
 class _Batch:
     """One batch's inputs and the stage outputs built so far — what the
     stage build functions read.  ``forms``/``n_forms`` size the middle;
-    ``walls`` receives resolve()'s stage walls."""
+    ``middle`` holds the driver middle's results; ``walls`` receives
+    resolve()'s stage walls."""
 
     def __init__(self, spark, kb, webtext, gazetteer, alpha, tau, max_block, walls=None):
         self.spark, self.kb, self.webtext, self.gazetteer = spark, kb, webtext, gazetteer
         self.alpha, self.tau, self.max_block, self.walls = alpha, tau, max_block, walls
-        self.forms = self.n_forms = self.candidates = None
+        self.forms = self.n_forms = self.candidates = self.middle = None
         for name in STAGES:
             setattr(self, name, None)
+
+
+# Arrow schemas of the stage tables the driver middle builds: those of
+# the distributed builds (nullability aside, which parquet drops anyway)
+_LOCAL_SCHEMAS = {
+    "phrase_vecs": pa.schema([("norm", pa.string()), ("pv", pa.list_(pa.float32()))]),
+    "block_salt_metrics": pa.schema(
+        [("block_key", pa.string()), ("members", pa.int64()), ("n_salts", pa.int32())]
+    ),
+    "pairs": pa.schema([("norm_a", pa.string()), ("norm_b", pa.string())]),
+    "edges": pa.schema([("src", pa.string()), ("dst", pa.string())]),
+    "clusters": pa.schema([("norm", pa.string()), ("cluster_id", pa.string())]),
+}
+
+
+def _local_frame(spark: SparkSession, stage: str, rows) -> DataFrame:
+    """Stage table ``stage`` from driver rows, as an Arrow-backed local
+    frame: the Arrow table goes to the JVM directly (no rows at all make
+    a zero-partition frame).  createDataFrame(list) would instead
+    parallelize the rows through Python-worker tasks."""
+    schema = _LOCAL_SCHEMAS[stage]
+    cols = list(zip(*rows)) or [()] * len(schema)
+    arrays = [pa.array(col, f.type) for col, f in zip(cols, schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=schema))
+
+
+def _on_driver(b: _Batch) -> bool:
+    return b.n_forms <= DRIVER_VOCAB_MAX
+
+
+class _Middle(NamedTuple):
+    pairs: list[tuple[str, str]]
+    salt_rows: list[tuple[str, int, int]]
+    edges: list[tuple[str, str]]
+    clusters: dict[str, str]
+
+
+def _driver_middle(b: _Batch) -> _Middle:
+    """S3-S6 on the driver, once per batch, from the oracle's helpers.
+    The vectors are the phrase_vecs table's, or resolve()'s forms
+    vectorized here."""
+    if b.middle is None:
+        if b.phrase_vecs is None:
+            pvs = oracle.kb_form_vectors(sorted(b.forms.toPandas()["norm"]), b.kb)
+        else:
+            pdf = b.phrase_vecs.toPandas()
+            pvs = dict(zip(pdf["norm"], pdf["pv"]))
+        pairs, salt_rows = oracle.block_pairs(pvs, b.max_block)
+        edges = oracle.score_edges(pairs, pvs, b.alpha, b.tau)
+        b.middle = _Middle(pairs, salt_rows, edges, oracle.components(pvs, edges))
+    return b.middle
 
 
 def _phrase_vecs(b: _Batch) -> DataFrame:
     # resolve() sets the form table; a checkpointed batch vectorizes the
     # forms of its mentions that no committed vector covers yet (during an
-    # append ``b.phrase_vecs`` is the committed table).  Tiny, so it is
-    # checkpointed: prefuzz and the vectors read it, and the read-append
-    # cycle on phrase_vecs breaks.
+    # append ``b.phrase_vecs`` is the committed table, ``b.n_forms`` its
+    # rows).  If they keep the form count within DRIVER_VOCAB_MAX they
+    # are vectorized on the driver; a bounded collect finds them.
+    # Otherwise they are checkpointed: prefuzz and the vectors read them,
+    # and the read-append cycle on phrase_vecs breaks.
     forms = b.forms
     if forms is None:
         forms = b.mentions.select("norm").distinct()
         if b.phrase_vecs is not None:
             forms = forms.join(b.phrase_vecs.select("norm"), "norm", "left_anti")
+        room = DRIVER_VOCAB_MAX - (b.n_forms or 0)
+        if room >= 0:
+            new = forms.limit(room + 1).toPandas()["norm"]
+            if len(new) <= room:
+                pvs = oracle.kb_form_vectors(sorted(new), b.kb)
+                return _local_frame(b.spark, "phrase_vecs", pvs.items())
         forms = forms.localCheckpoint(eager=True)
     # distinct OOV tokens fuzzy-resolve once cluster-wide: the per-worker
     # memo cannot de-duplicate across workers (at 10^5 forms the
@@ -101,12 +176,21 @@ def _phrase_vecs(b: _Batch) -> DataFrame:
 def _candidates(b: _Batch) -> tuple[DataFrame, DataFrame]:
     """S3 (pairs, block_salt_metrics), built once for both tables."""
     if b.candidates is None:
-        blocked = blocking.block_keys_df(b.phrase_vecs.select("norm"))
-        b.candidates = candidate_pairs(blocked, b.max_block)
+        if _on_driver(b):
+            m = _driver_middle(b)
+            b.candidates = (
+                _local_frame(b.spark, "pairs", m.pairs),
+                _local_frame(b.spark, "block_salt_metrics", m.salt_rows),
+            )
+        else:
+            blocked = blocking.block_keys_df(b.phrase_vecs.select("norm"))
+            b.candidates = candidate_pairs(blocked, b.max_block)
     return b.candidates
 
 
 def _edges(b: _Batch) -> DataFrame:
+    if _on_driver(b):
+        return _local_frame(b.spark, "edges", _driver_middle(b).edges)
     # S4+S5 fused with the exact embedding-score prefilter: only the
     # plausible pair fraction pays string features / the Arrow JW
     # crossing; edges are bit-identical to the unfused reference
@@ -114,8 +198,10 @@ def _edges(b: _Batch) -> DataFrame:
 
 
 def _clusters(b: _Batch) -> DataFrame:
-    labels = connected_components(b.edges, walls_out=b.walls)
-    return assign_clusters(b.phrase_vecs.select("norm"), labels, n_forms=b.n_forms)
+    if _on_driver(b):
+        return _local_frame(b.spark, "clusters", _driver_middle(b).clusters.items())
+    labels = clustering.connected_components(b.edges, walls_out=b.walls)
+    return clustering.assign_clusters(b.phrase_vecs.select("norm"), labels, n_forms=b.n_forms)
 
 
 def _resolved(b: _Batch) -> DataFrame:
@@ -277,23 +363,9 @@ def resolve(
     t1 = time.monotonic()
     if on_driver:
         # tiny-vocabulary fast path: the whole middle on the driver (see
-        # DRIVER_VOCAB_MAX).  cluster_forms is the shared-function twin the
-        # e2e parity tests gate the distributed path against.
-        from nilinker_spark.oracle import cluster_forms
-
-        m_out: dict = {}
-        cmap = cluster_forms(
-            [r["norm"] for r in b.forms.collect()],
-            kb,
-            alpha=alpha,
-            tau=tau,
-            max_block=max_block,
-            metrics_out=m_out,
-        )
-        b.clusters = spark.createDataFrame(sorted(cmap.items()), "norm string, cluster_id string")
-        b.block_salt_metrics = spark.createDataFrame(
-            m_out["block_salt_rows"], "block_key string, members bigint, n_salts int"
-        )
+        # DRIVER_VOCAB_MAX); its local frames need no checkpoint
+        b.block_salt_metrics = _candidates(b)[1]
+        b.clusters = _clusters(b)
     else:
         with _form_scope(spark, b.n_forms):
             _build_lazy(b, {"phrase_vecs", "block_salt_metrics", "pairs", "edges", "clusters"})
@@ -422,15 +494,19 @@ class Pipeline:
             if not done:
                 mode = mode if append else "overwrite"
                 if mode == "append":
-                    setattr(b, name, log.read(self.spark))  # the table appended to
+                    self._load(b, name, log, head)  # the table appended to
                 head = self._commit(log, build(b), mode, batch, head)
-            setattr(b, name, log.read(self.spark))
-            if name == "phrase_vecs":
-                # from the manifest: powers the conditional broadcast hints
-                b.n_forms = head["lineage"]["rows"]
+            self._load(b, name, log, head)
             if name == stop_after:
                 return None
         return b.resolved
+
+    def _load(self, b: _Batch, name: str, log: SnapshotLog, head: dict) -> None:
+        setattr(b, name, log.read(self.spark))
+        if name == "phrase_vecs":
+            # from the manifest: sizes the middle (driver or distributed)
+            # and powers the conditional broadcast hints
+            b.n_forms = head["lineage"]["rows"]
 
     def _commit(
         self,
@@ -447,8 +523,10 @@ class Pipeline:
 
         An append lists the head's files plus the new ones, an overwrite
         only the new ones (the files it supersedes are deleted once the
-        commit is published).  The manifest's lineage (rows, order-free
-        checksum, wall_ms) covers the whole table: an append combines the
+        commit is published); an append of no rows deletes its new files
+        and commits the head's file list.  The manifest's lineage (rows,
+        order-free checksum, wall_ms) covers the whole table: an append
+        combines the
         head's with its new files' (bit_xor is associative), so only the
         new files are re-read.  With ``expect`` the new files must hold
         exactly that (rows, checksum), or they are deleted unpublished.
@@ -465,6 +543,11 @@ class Pipeline:
             raise RuntimeError(f"{operation} of {log.table_dir} changed content; aborted")
         old = head["files"] if head is not None else []
         if mode == "append" and head is not None:
+            if rows == 0:
+                # Spark writes a schema-only part file for an empty frame;
+                # kept, every batch without new rows would add one
+                _delete(log.table_dir, new)
+                new = []
             rows += head["lineage"]["rows"]
             checksum ^= head["lineage"]["checksum"]
         version = log.commit(

@@ -25,7 +25,8 @@ def webtext_rows(kb):
 
 
 @pytest.fixture(scope="session")
-def webtext_df(spark, kb, webtext_rows):
+def webtext_frame(spark):
+    """rows -> webtext DataFrame (url, warc_ts, html, text, lang)."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -37,7 +38,12 @@ def webtext_df(spark, kb, webtext_rows):
             T.StructField("lang", T.StringType(), False),
         ]
     )
-    return spark.createDataFrame(webtext_rows, schema).cache()
+    return lambda rows: spark.createDataFrame(list(rows), schema)
+
+
+@pytest.fixture(scope="session")
+def webtext_df(webtext_frame, webtext_rows):
+    return webtext_frame(webtext_rows).cache()
 
 
 @pytest.fixture

@@ -433,3 +433,127 @@ def test_fused_edges_boundary_pairs(spark):
     assert fused == full
     assert full, "no kept edge in the boundary set — widen the eps range"
     assert len(full) < len(rows_pairs), "no rejected pair — boundary not exercised"
+
+
+STAGES_CHECKED = ["resolved", "clusters", "block_salt_metrics", "phrase_vecs", "pairs", "edges"]
+
+
+def _pipeline_tables(spark, kb, base, delta, ckpt, max_block=None):
+    """run(base) then run_incremental(delta); every stage table read back."""
+    kw = {} if max_block is None else {"max_block": max_block}
+    pipe = Pipeline(spark, kb, ckpt, **kw)
+    pipe.run(base).count()
+    pipe.run_incremental(delta).count()
+    return {st: pipe.read_stage(st) for st in STAGES_CHECKED}
+
+
+def _sorted_by(pdf, cols):
+    return pdf.sort_values(cols).reset_index(drop=True)
+
+
+@pytest.mark.parametrize("max_block", [None, 2])
+def test_pipeline_driver_vs_distributed_middle(
+    spark, kb, webtext_rows, webtext_frame, monkeypatch, tmp_path, max_block
+):
+    """Forced-path parity for the checkpointed Pipeline: run() then
+    run_incremental() with the middle forced onto the driver and forced
+    distributed give the same stage tables.  ``max_block=2`` makes
+    salting fire."""
+    from nilinker_spark import pipeline as P
+
+    half = len(webtext_rows) // 2
+    base, delta = webtext_frame(webtext_rows[:half]), webtext_frame(webtext_rows[half:])
+    got = {}
+    for name, vocab_max in (("driver", 10**9), ("dist", 0)):
+        monkeypatch.setattr(P, "DRIVER_VOCAB_MAX", vocab_max)
+        got[name] = _pipeline_tables(spark, kb, base, delta, str(tmp_path / name), max_block)
+    for st in STAGES_CHECKED:
+        assert got["driver"][st].schema == got["dist"][st].schema, st
+    drv, dist = ({st: df.toPandas() for st, df in got[k].items()} for k in ("driver", "dist"))
+
+    assert _sorted_by(drv["resolved"], ["url", "mention_id", "pos"]).equals(
+        _sorted_by(dist["resolved"], ["url", "mention_id", "pos"])
+    )
+    assert _sorted_by(drv["clusters"], ["norm"]).equals(_sorted_by(dist["clusters"], ["norm"]))
+    salt_d = _sorted_by(drv["block_salt_metrics"], ["block_key"])
+    assert salt_d.equals(_sorted_by(dist["block_salt_metrics"], ["block_key"]))
+    assert (len(salt_d) > 0) == (max_block == 2), "salting must fire exactly when max_block=2"
+
+    pv_d, pv_s = _sorted_by(drv["phrase_vecs"], ["norm"]), _sorted_by(dist["phrase_vecs"], ["norm"])
+    assert list(pv_d["norm"]) == list(pv_s["norm"])
+    for a, b in zip(pv_d["pv"], pv_s["pv"]):
+        assert a.dtype == b.dtype and a.tobytes() == b.tobytes(), "phrase vectors differ in bits"
+
+    for stage, cols in (("pairs", ["norm_a", "norm_b"]), ("edges", ["src", "dst"])):
+        assert set(map(tuple, drv[stage][cols].values)) == set(map(tuple, dist[stage][cols].values))
+    assert len(drv["edges"]) > 0
+
+
+def test_pipeline_middle_crosses_threshold(
+    spark, kb, webtext_rows, webtext_frame, monkeypatch, tmp_path
+):
+    """The base batch runs its middle on the driver; the delta's new forms
+    push the form count over DRIVER_VOCAB_MAX, so the delta runs the
+    distributed middle over a phrase_vecs table the driver wrote.  The
+    result equals resolve() over base plus delta."""
+    from nilinker_spark import pipeline as P
+    from nilinker_spark.operators import scoring
+
+    half = len(webtext_rows) // 2
+    base, delta = webtext_frame(webtext_rows[:half]), webtext_frame(webtext_rows[half:])
+    calls = []
+    real = scoring.fused_similarity_edges
+    monkeypatch.setattr(
+        scoring, "fused_similarity_edges", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    pipe = Pipeline(spark, kb, str(tmp_path / "ck"))
+    monkeypatch.setattr(P, "DRIVER_VOCAB_MAX", 10**9)
+    pipe.run(base).count()
+    n_base = pipe.read_stage("phrase_vecs").count()
+    assert not calls, "the base batch must run the driver middle"
+
+    monkeypatch.setattr(P, "DRIVER_VOCAB_MAX", n_base)
+    got = pipe.run_incremental(delta).toPandas()
+    pipe_forms = pipe.read_stage("phrase_vecs").count()
+    assert pipe_forms > n_base and calls, "the delta must cross onto the distributed middle"
+
+    want = P.resolve(spark, base.unionByName(delta), kb).toPandas()
+    spark.catalog.clearCache()
+    key = ["url", "mention_id", "pos"]
+    assert _sorted_by(got, key).equals(_sorted_by(want, key))
+
+
+def test_pipeline_driver_middle_runs_no_python_udf(
+    spark, kb, webtext_rows, webtext_frame, monkeypatch, tmp_path
+):
+    """Below DRIVER_VOCAB_MAX neither run() nor run_incremental() (nor
+    resolve()) may reach the distributed middle's Python stages, nor
+    parallelize driver rows (what a createDataFrame(list), or an Arrow
+    conversion falling back to it, does)."""
+    import pyspark
+
+    from nilinker_spark.operators import blocking, clustering, scoring
+    from nilinker_spark.pipeline import resolve
+
+    half = len(webtext_rows) // 2
+    base = webtext_frame(webtext_rows[:half]).localCheckpoint(eager=True)
+    delta = webtext_frame(webtext_rows[half:]).localCheckpoint(eager=True)
+
+    def forbidden(*_a, **_k):
+        raise AssertionError("the driver middle reached a distributed Python stage")
+
+    for mod, name in (
+        (blocking, "prefuzz_map"),
+        (blocking, "phrase_vectors_df"),
+        (scoring, "fused_similarity_edges"),
+        (clustering, "connected_components"),
+        (pyspark.SparkContext, "parallelize"),
+    ):
+        monkeypatch.setattr(mod, name, forbidden)
+    pipe = Pipeline(spark, kb, str(tmp_path / "ck"))
+    n_base = pipe.run(base).count()
+    assert pipe.run_incremental(delta).count() > n_base
+    metrics: dict = {}
+    assert resolve(spark, base, kb, metrics_out=metrics).count() == n_base
+    metrics["block_salt_metrics"].count()
+    spark.catalog.clearCache()

@@ -344,3 +344,29 @@ def test_crash_at_every_commit_point(spark, kb, webtext_rows, tmp_path_factory, 
         assert (per_stage == (1 if call == "run" else 2)).all(), (call, n, per_stage.to_dict())
         check_clean(ck)
         shutil.rmtree(ck)
+
+
+def test_empty_append_writes_no_file(spark, kb, webtext_rows, tmp_path):
+    """A delta whose forms are all committed already appends no row to
+    phrase_vecs, and one with no English page appends no mention: each
+    such append commits the head's file list under the new batch id, with
+    the same rows and checksum, and leaves no schema-only part file."""
+    rows = webtext_rows[:40]
+    pipe = Pipeline(spark, kb, str(tmp_path))
+    n_base = pipe.run(_df(spark, rows)).count()
+    # the same pages under new urls: new mentions, no new form
+    same_forms = [(url + "?copy", *rest) for url, *rest in rows]
+    # one non-English page: no mention at all
+    no_mentions = [(rows[0][0] + "?de", *rows[0][1:4], "de")]
+    for delta, empty in ((same_forms, ["phrase_vecs"]), (no_mentions, ["mentions", "phrase_vecs"])):
+        heads = {st: SnapshotLog(str(tmp_path / st)).snapshot() for st in empty}
+        pipe.run_incremental(_df(spark, delta)).count()
+        for st in empty:
+            d = str(tmp_path / st)
+            new = SnapshotLog(d).snapshot()
+            assert new["version"] == heads[st]["version"] + 1 and new["batch"] != heads[st]["batch"]
+            assert new["files"] == heads[st]["files"] == list_data_files(d), st
+            assert {k: new["lineage"][k] for k in ("rows", "checksum")} == {
+                k: heads[st]["lineage"][k] for k in ("rows", "checksum")
+            }, st
+    assert pipe.read_stage("mentions").count() == pipe.read_stage("resolved").count() == 2 * n_base

@@ -1,0 +1,172 @@
+"""Bytes each stage of a checkpointed delta batch reads and writes, by process kind.
+
+    python tools/io_by_stage.py [--deltas 3] [--seed 1] [--cores N]
+
+Builds the ``er_incremental`` benchmark input (perfbench/gen.py: a base
+corpus of 500 English documents per core and deltas of 1/8 of it), runs
+``Pipeline.run`` on the base, then ``run_incremental`` on each delta.
+During the deltas every ``SnapshotLog.commit`` takes a reading of
+``rchar`` + ``wchar`` (``/proc/<pid>/io``) for the three kinds of process
+a local-mode job runs in: this Python driver, the JVM, and the Python
+daemon and workers the JVM forks (reaped workers count in the daemon).
+The bytes between two consecutive commits are charged to the stage table
+the second one commits.  It prints one table per delta, MB per stage and
+kind, and their median over the deltas.
+
+The driver's own ``/proc`` walk for a reading is measured before the
+deltas and subtracted from each driver figure.
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import shutil
+import statistics
+import sys
+import tempfile
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [os.path.join(ROOT, "perfbench"), ROOT]
+
+import gen  # noqa: E402
+import procstat  # noqa: E402
+from harness import start_spark  # noqa: E402
+
+from nilinker_spark.fixtures.kb import make_kb  # noqa: E402
+from nilinker_spark.pipeline import Pipeline  # noqa: E402
+from nilinker_spark.snapshots import SnapshotLog  # noqa: E402
+from nilinker_spark.sources.webtext import (  # noqa: E402
+    gazetteer_from_documents,
+    load_table,
+    webtext_from_documents,
+)
+
+KINDS = ("driver", "jvm", "python_workers")
+MB = 1024 * 1024
+
+
+def _io(pid: int) -> int:
+    try:
+        with open(f"/proc/{pid}/io") as fh:
+            fields = dict(line.split(":", 1) for line in fh)
+    except OSError:  # the process exited between listing and reading
+        return 0
+    return int(fields["rchar"]) + int(fields["wchar"])
+
+
+def reading() -> dict[str, int]:
+    """rchar + wchar per process kind.  The driver is read first, so the
+    walk over /proc below lands in its next reading."""
+    out = {"driver": _io(os.getpid()), "jvm": 0, "python_workers": 0}
+    for pid in procstat.tree_pids()[1:]:
+        try:
+            with open(f"/proc/{pid}/comm") as fh:
+                name = fh.read().strip()
+        except OSError:
+            continue
+        out["jvm" if name == "java" else "python_workers"] += _io(pid)
+    return out
+
+
+def probe_cost() -> int:
+    """Driver bytes of one reading's own /proc walk (median of 5)."""
+    costs = []
+    for _ in range(5):
+        a = reading()["driver"]
+        costs.append(reading()["driver"] - a)
+    return int(statistics.median(costs))
+
+
+class CommitReadings:
+    """While active, each SnapshotLog.commit appends (table, reading)."""
+
+    def __init__(self):
+        self.marks: list[tuple[str, dict[str, int]]] = []
+
+    def __enter__(self):
+        self.real = real = SnapshotLog.commit
+        marks = self.marks
+
+        def commit(log, *args, **kwargs):
+            try:
+                return real(log, *args, **kwargs)
+            finally:
+                marks.append((os.path.basename(log.table_dir), reading()))
+
+        SnapshotLog.commit = commit
+        self.marks.append(("start", reading()))
+        return self
+
+    def __exit__(self, *exc):
+        SnapshotLog.commit = self.real
+        self.marks.append(("(after the last commit)", reading()))
+        return False
+
+
+def per_stage(marks, probe: int) -> list[tuple[str, dict[str, float]]]:
+    rows = []
+    for (_, a), (table, b) in zip(marks, marks[1:]):
+        d = {k: b[k] - a[k] for k in KINDS}
+        d["driver"] = max(0, d["driver"] - probe)
+        rows.append((table, {k: v / MB for k, v in d.items()}))
+    return rows
+
+
+def show(title: str, rows) -> None:
+    print(f"\n{title}")
+    print(f"{'stage':<26}" + "".join(f"{k:>16}" for k in KINDS) + f"{'total':>10}")
+    sums = dict.fromkeys(KINDS, 0.0)
+    for table, mb in rows:
+        for k in KINDS:
+            sums[k] += mb[k]
+        print(f"{table:<26}" + "".join(f"{mb[k]:>16.2f}" for k in KINDS) + f"{sum(mb.values()):>10.2f}")
+    print(f"{'all':<26}" + "".join(f"{sums[k]:>16.2f}" for k in KINDS) + f"{sum(sums.values()):>10.2f}")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--deltas", type=int, default=3)
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--cores", type=int, default=os.cpu_count() or 4)
+    args = ap.parse_args()
+
+    work = tempfile.mkdtemp(prefix="io_by_stage_")
+    try:
+        spark = start_spark(args.cores, work)
+        n_base = 500 * args.cores
+        n_delta = n_base // 8
+
+        def webtext(name: str, n: int, first: int):
+            path = os.path.join(work, name, "documents.parquet")
+            gen.write(gen.documents(args.seed, n, first_id=first, langs=False), path)
+            docs = load_table(spark, os.path.join(work, name), "documents")
+            return docs, webtext_from_documents(docs).select("url", "html", "lang")
+
+        docs, base = webtext("base", n_base, 0)
+        pipe = Pipeline(
+            spark, make_kb(seed=42), os.path.join(work, "ckpt"), gazetteer=gazetteer_from_documents(docs)
+        )
+        pipe.run(base.localCheckpoint(eager=True))
+        probe = probe_cost()
+        print(f"cores={args.cores} base={n_base} docs delta={n_delta} docs; probe={probe} B/reading")
+        tables = []
+        for i in range(args.deltas):
+            wt = webtext(f"delta{i}", n_delta, n_base + i * n_delta)[1].localCheckpoint(eager=True)
+            spark.catalog.clearCache()
+            with CommitReadings() as cr:
+                pipe.run_incremental(wt)
+            tables.append(per_stage(cr.marks, probe))
+            show(f"delta {i + 1}: MB read + written", tables[-1])
+        med = [
+            (table, {k: statistics.median(t[j][1][k] for t in tables) for k in KINDS})
+            for j, (table, _) in enumerate(tables[0])
+        ]
+        show(f"median of {args.deltas} deltas: MB read + written", med)
+        spark.stop()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+if __name__ == "__main__":
+    main()
