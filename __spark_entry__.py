@@ -2216,9 +2216,9 @@ def oracle_sql() -> dict[str, str]:
     # here is exactly two words — only length-2 probes can match (word-
     # count gate) — and (b) the corpus tokens are normalization-invariant,
     # so greedy longest-match consumption reduces to "even offset within
-    # each maximal run of consecutive matching positions" (the same
-    # reduction extract_mentions_relational uses, parity-tested in
-    # tests/test_extract_fastpath.py).
+    # each maximal run of consecutive matching positions" (the reduction
+    # is checked against oracle.extract_mentions, precondition included,
+    # in tests/test_properties.py).
     _norm_sql = (
         "trim(regexp_replace(regexp_replace("
         "replace(replace(replace(lower({t}), ':', '_'), ',', ''), '''', ''),"

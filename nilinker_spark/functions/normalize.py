@@ -73,11 +73,3 @@ def tokenize_entity(entity: str) -> tuple[str, str]:
     if len(toks) == 1:
         return (toks[0], toks[0])
     return (toks[0], toks[1])
-
-
-def ngrams(text: str, n: int = 3) -> list[str]:
-    """Character n-grams of the normalized string (dedup/similarity ops)."""
-    s = text
-    if len(s) < n:
-        return [s] if s else []
-    return [s[i : i + n] for i in range(len(s) - n + 1)]

@@ -19,8 +19,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,7 +33,7 @@ from pyspark.sql import functions as F
 # took 1.2 s (round-5 V=250 measurement, BASELINE.md).  Above the
 # threshold (10^7-form vocabularies at 100 TB, where the edge table
 # genuinely exceeds driver memory) the distributed loop runs unchanged.
-CC_DRIVER_MAX_EDGES = int(os.environ.get("NILINKER_CC_DRIVER_MAX_EDGES", "2000000"))
+CC_DRIVER_MAX_EDGES = 2_000_000
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -111,9 +109,10 @@ def connected_components(
     graphs):
 
     - ``distinct edges <= driver_max_edges``: collect the DISTINCT edge
-      list via Arrow and run min-representative union-find on the driver —
-      one Spark job instead of O(rounds) shuffles, which on
-      vocabulary-sized graphs is pure scheduler latency.  The probe is
+      list via Arrow and run the oracle's min-representative union-find
+      (``oracle.components``) on the driver — one Spark job instead of
+      O(rounds) shuffles, which on vocabulary-sized graphs is pure
+      scheduler latency.  The probe is
       TIERED so a 10^9-edge graph never pays a throwaway distinct
       shuffle: first a plain count() (no shuffle; it also materializes
       the caller's lazy checkpoint, which every path needs) — raw count
@@ -148,15 +147,13 @@ def connected_components(
         if head is not None and len(head) <= driver_max_edges:
             import pandas as pd
 
-            from nilinker_spark.oracle import UnionFind
+            from nilinker_spark.oracle import components
 
             t1 = time.monotonic()
-            uf = UnionFind()
-            for s, d in zip(head["src"].values, head["dst"].values):
-                if s != d:
-                    uf.union(s, d)
-            labels = sorted((n, uf.find(n)) for n in uf.parent)
-            pdf = pd.DataFrame(labels, columns=["node", "label"], dtype=object)
+            labels = components(
+                (), [(s, d) for s, d in zip(head["src"].values, head["dst"].values) if s != d]
+            )
+            pdf = pd.DataFrame(list(labels.items()), columns=["node", "label"], dtype=object)
             # Arrow-path createDataFrame (config.get_spark enables it):
             # the java-row conversion of a 500k-label list was the other
             # half of the driver-CC floor

@@ -21,7 +21,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nilinker_spark.functions.normalize import extract_text, norm_form
@@ -100,126 +100,3 @@ def extract_text_df(spark: SparkSession, webtext: DataFrame) -> DataFrame:
             )
 
     return webtext.select("url", "html").mapInPandas(ex, "url string, extracted_text string")
-
-
-# ---------------------------------------------------------------------------
-# relational fast path (pure Catalyst, no Python workers)
-# ---------------------------------------------------------------------------
-
-
-def _norm_tok(col):
-    """Relational twin of functions.normalize.norm_form for a single token
-    (no inner spaces): lowercase, ':'->'_', strip ,' then non-[a-z0-9- ]
-    runs -> space, collapse, trim.  The char fixups ride ONE translate
-    (':' maps, ','/'\\'' delete) instead of two regexps — this runs per
-    corpus token."""
-    s = F.translate(F.lower(col), ":,'", "_")
-    s = F.regexp_replace(s, "[^a-z0-9\\- ]+", " ")
-    s = F.regexp_replace(s, "\\s+", " ")
-    return F.trim(s)
-
-
-def extract_text_col(html_col):
-    """Relational twin of extract_text (valid utf-8 payloads): strip tags,
-    collapse whitespace."""
-    txt = F.decode(html_col, "UTF-8")
-    txt = F.regexp_replace(txt, "<[^>]*>", " ")
-    return F.trim(F.regexp_replace(txt, "\\s+", " "))
-
-
-def extract_mentions_relational(
-    spark: SparkSession, webtext: DataFrame, gazetteer: set[str]
-) -> DataFrame:
-    """Gazetteer extraction with zero Python stages — usable when every
-    gazetteer entry is exactly TWO normalized tokens (asserted).
-
-    Same semantics as the greedy scan for 2-token-only gazetteers: a
-    bigram match at position i is taken iff position i is not consumed by
-    a taken match at i-1; within each maximal run of consecutive matching
-    positions that reduces to 'even offset from the run start' — a
-    window expression.  Identity verified against the Python path in
-    tests/test_extract_fastpath.py.
-
-    PRECONDITION (enforced in-plan, not silently assumed): no raw token
-    may normalize to MORE than one word (e.g. 'foo.bar' -> 'foo bar').
-    The Python greedy scan would match such a token as a length-1 probe;
-    the bigram join cannot, so equivalence would break.  Rows violating
-    this raise a job-killing error naming the fallback
-    (extract_mentions_df) — loud wrongness, never quiet divergence.
-
-    Plan shape: scan(url, html) -> posexplode(tokens) -> broadcast
-    semi-join on the bigram -> one window per doc — all whole-stage
-    codegen except the window; no Arrow crossing at all.
-    """
-    assert all(len(s.split(" ")) == 2 for s in gazetteer), "2-token gazetteer only"
-    gz_df = F.broadcast(
-        spark.createDataFrame([(g,) for g in sorted(gazetteer)], "bigram string")
-    )
-
-    raw_ntoks = F.transform(F.col("toks"), _norm_tok)
-    multiword = F.exists(raw_ntoks, lambda t: t.contains(" "))
-    # branches MUST differ: Catalyst simplifies when(c, x).otherwise(x) to
-    # x, silently deleting the assert (a test proves the guard fires) —
-    # the otherwise branch is unreachable because assert_true raises first
-    guarded_ntoks = F.when(
-        F.assert_true(
-            ~multiword,
-            F.lit(
-                "extract_mentions_relational: a token normalized to multiple "
-                "words — use extract_mentions_df (Arrow path) for this corpus"
-            ),
-        ).isNull(),
-        raw_ntoks,
-    ).otherwise(F.array(F.lit("")))
-    base = (
-        webtext.filter(F.col("lang") == "en")
-        .select("url", extract_text_col(F.col("html")).alias("text"))
-        .select("url", F.split("text", " ").alias("toks"))
-        .withColumn("ntoks", guarded_ntoks)
-    )
-    # build (pos, nbigram, surface) structs BEFORE exploding — exploding a
-    # row that still carries the whole token array would duplicate it per
-    # position (quadratic bytes per doc)
-    idx = F.sequence(F.lit(0), F.greatest(F.size("toks") - 1, F.lit(0)))
-    entries = F.transform(
-        idx,
-        lambda i: F.struct(
-            i.alias("pos"),
-            F.concat_ws(
-                " ",
-                F.try_element_at("ntoks", i + 1),
-                F.coalesce(F.try_element_at("ntoks", i + 2), F.lit("")),
-            ).alias("nbigram"),
-            F.concat_ws(
-                " ",
-                F.try_element_at("toks", i + 1),
-                F.try_element_at("toks", i + 2),
-            ).alias("surface"),
-        ),
-    )
-    exploded = base.select("url", F.explode(entries).alias("e")).select(
-        "url", F.col("e.pos").alias("pos"), F.col("e.nbigram").alias("nbigram"),
-        F.col("e.surface").alias("surface"),
-    )
-    matches = exploded.join(gz_df, exploded.nbigram == gz_df.bigram, "inner")
-
-    # greedy overlap resolution: within each run of consecutive match
-    # positions keep even offsets from the run start
-    w = Window.partitionBy("url").orderBy("pos")
-    resolved = (
-        matches.withColumn("run_key", F.col("pos") - F.row_number().over(w))
-        .withColumn(
-            "run_start",
-            F.min("pos").over(Window.partitionBy("url", "run_key")),
-        )
-        .filter((F.col("pos") - F.col("run_start")) % 2 == 0)
-    )
-    return resolved.select(
-        "url",
-        F.substring(
-            F.md5(F.concat_ws("|", F.col("url"), F.col("pos"), F.col("surface"))), 1, 16
-        ).alias("mention_id"),
-        "surface",
-        F.col("pos").cast("int").alias("pos"),
-        F.col("nbigram").alias("norm"),
-    )

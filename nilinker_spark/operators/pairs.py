@@ -121,18 +121,3 @@ def candidate_pairs(
         "n_salts", F.ceil(F.col("members") / F.lit(max_block)).cast("int")
     )
     return pairs, metrics
-
-
-def capped_blocks(blocked: DataFrame, max_block: int = MAX_BLOCK_FORMS) -> tuple[DataFrame, DataFrame]:
-    """Deterministic hard cap (kept for comparison/tests): keep the
-    lexicographically-first max_block members per block; report drops."""
-    w = Window.partitionBy("block_key").orderBy("norm")
-    ranked = blocked.withColumn("rn", F.row_number().over(w))
-    kept = ranked.filter(F.col("rn") <= max_block).drop("rn")
-    metrics = (
-        ranked.groupBy("block_key")
-        .agg(F.count("*").alias("members"))
-        .filter(F.col("members") > max_block)
-        .withColumn("dropped", F.col("members") - F.lit(max_block))
-    )
-    return kept, metrics

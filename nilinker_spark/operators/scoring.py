@@ -15,8 +15,6 @@ dot-product + Jaro-Winkler/Levenshtein string features).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -28,9 +26,8 @@ from nilinker_spark.oracle import ALPHA, TAU
 # a comfortable per-executor broadcast.  Above this the hint would be a
 # driver/executor OOM at scale (10^7 forms x 200 dims = ~8 GB), so the
 # join falls through to AQE's choice (SMJ, or its own broadcast if the
-# runtime stats allow).  Env-tunable like the other size thresholds
-# (CC_DRIVER_MAX_EDGES, DRIVER_VOCAB_MAX).
-BROADCAST_MAX_FORMS = int(os.environ.get("NILINKER_BROADCAST_MAX_FORMS", "250000"))
+# runtime stats allow).
+BROADCAST_MAX_FORMS = 250_000
 
 
 def _maybe_broadcast(df: DataFrame, n_forms: int | None) -> DataFrame:
@@ -92,56 +89,6 @@ def jaro_winkler_udf(a, b):
     return pd.Series(jaro_winkler_batch(a.tolist(), b.tolist()), dtype="float64")
 
 
-def score_pairs(
-    pairs: DataFrame,
-    pvs: DataFrame,
-    alpha: float = ALPHA,
-    n_forms: int | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """(norm_a, norm_b) x (norm, pv) -> (norm_a, norm_b, score).
-
-    The phrase-vector table is distinct-form-sized; while it provably fits
-    (n_forms <= BROADCAST_MAX_FORMS) both joins broadcast and the pair
-    table never shuffles.  Above the ceiling the hint is dropped and AQE
-    picks the strategy — a forced 8 GB broadcast at 10^7 forms would be a
-    scale-killer, not an optimization.
-
-    ``dim``: phrase-vector width, used to UNROLL the dot product into a
-    flat codegen expression (see dot_f64) — defaults to the engine's
-    EMB_DIM, which is what phrase_vectors_df emits by construction.
-    """
-    if dim is None:
-        from nilinker_spark.fixtures.kb import EMB_DIM
-
-        dim = EMB_DIM
-    pv_a = pvs.select(F.col("norm").alias("norm_a"), F.col("pv").alias("pv_a"))
-    pv_b = pvs.select(F.col("norm").alias("norm_b"), F.col("pv").alias("pv_b"))
-    scored = (
-        pairs.join(_maybe_broadcast(pv_a, n_forms), "norm_a")
-        .join(_maybe_broadcast(pv_b, n_forms), "norm_b")
-        .withColumn(
-            "score",
-            # float-op order mirrors oracle.blended_score term for term
-            F.lit(alpha) * dot_f64("pv_a", "pv_b", dim=dim)
-            + F.lit(1.0 - alpha)
-            * (
-                F.lit(0.5) * lev_ratio_col("norm_a", "norm_b")
-                + F.lit(0.5) * jaro_winkler_udf("norm_a", "norm_b")
-            ),
-        )
-        .select("norm_a", "norm_b", "score")
-    )
-    return scored
-
-
-def similarity_edges(scored: DataFrame, tau: float = TAU) -> DataFrame:
-    """S5 — threshold to the edge DataFrame feeding connected components."""
-    return scored.filter(F.col("score") >= tau).select(
-        F.col("norm_a").alias("src"), F.col("norm_b").alias("dst")
-    )
-
-
 # Conservative float margin for the embedding-score prefilter below: the
 # string-feature term is bounded by (1-alpha)*1.0 exactly (lev and jw are
 # each <= 1.0 and 0.5*x is exact), so the only slack needed is for the
@@ -152,14 +99,15 @@ PRUNE_MARGIN = 1e-7
 # The fused path's JW handle, flagged non-deterministic.  The function IS
 # deterministic — the flag exists purely to stop Catalyst pushing the
 # final score>=tau filter through the UDF projection into the pv_b join
-# condition.  Without it the optimizer rewrites fused into EXACTLY the
-# unfused plan shape (ArrowEvalPython below the join, full score as the
-# join condition) — JW runs on every pair and the prefilter buys nothing;
-# worse, the duplicated dot pushes the join condition past the codegen
-# budget and the whole condition evaluates INTERPRETED (measured 25 s vs
-# 7 s unfused at 4.76M pairs).  Flagged, the plan is: pv joins with the
-# dot-bound as the ONLY join condition -> ArrowEvalPython over survivors
-# -> score filter.  Same rows either way; only plan placement changes.
+# condition.  Without it the optimizer rewrites the plan into a plain
+# score-then-filter shape (ArrowEvalPython below the join, full score as
+# the join condition) — JW runs on every pair and the prefilter buys
+# nothing; worse, the duplicated dot pushes the join condition past the
+# codegen budget and the whole condition evaluates INTERPRETED (measured
+# 25 s vs 7 s for score-then-filter at 4.76M pairs).  Flagged, the plan
+# is: pv joins with the dot-bound as the ONLY join condition ->
+# ArrowEvalPython over survivors -> score filter.  Same rows either way;
+# only plan placement changes.
 _jw_prune_barrier = jaro_winkler_udf.asNondeterministic()
 
 
@@ -171,10 +119,17 @@ def fused_similarity_edges(
     n_forms: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """S4+S5 fused with an EXACT embedding-score prefilter: identical
-    output to ``similarity_edges(score_pairs(pairs, pvs, alpha), tau)``
-    (parity-tested, and gated end-to-end by the er_resolve oracle), but
-    pairs whose maximum achievable blended score cannot reach tau —
+    """S4+S5 fused: pairs(norm_a, norm_b) x (norm, pv) -> edges(src, dst)
+    whose blended score reaches tau.
+
+    The reference is the oracle: the edges equal
+    ``oracle.score_edges(pairs, pvs, alpha, tau)`` over the same vectors
+    (parity-tested, and gated end-to-end by the er_resolve oracle).  The
+    float-op order of the score mirrors ``oracle.blended_score`` term for
+    term, so a pair landing exactly on tau is kept on both sides.
+
+    An EXACT embedding-score prefilter runs first: pairs whose maximum
+    achievable blended score cannot reach tau —
     ``alpha*dot + (1-alpha) + PRUNE_MARGIN < tau``, string features at
     their upper bound — are rejected BEFORE the string features run.
 
@@ -184,13 +139,16 @@ def fused_similarity_edges(
     but levenshtein is O(len^2) JVM work and Jaro-Winkler crosses to
     Python over Arrow carrying both strings — per-pair the string
     features cost ~10x the dot.  Pruning on the dot first means only the
-    plausible fraction pays strings or crosses Arrow, and the survivors'
-    scores are computed by the SAME expression tree (same add order,
-    same rounding) as score_pairs, so edges are bit-identical.
+    plausible fraction pays strings or crosses Arrow.
+
+    The phrase-vector table is distinct-form-sized; while it provably
+    fits (n_forms <= BROADCAST_MAX_FORMS) both joins broadcast and the
+    pair table never shuffles.  ``dim``: phrase-vector width, used to
+    UNROLL the dot product (see dot_f64); defaults to EMB_DIM, which is
+    what phrase_vectors_df emits.
 
     This is the S4+S5 stage of both resolve() and the checkpointed
-    Pipeline; score_pairs + similarity_edges stay only as the unfused
-    parity reference the tests compare it against.
+    Pipeline.
     """
     if dim is None:
         from nilinker_spark.fixtures.kb import EMB_DIM

@@ -9,9 +9,8 @@ a double-digit percentage of a web corpus):
   hash aggregate already map-side-combines; the explicit salt matters when
   the per-key state is large or the agg is not combinable, and it
   documents the pattern the pipeline uses for mention-frequency metrics.)
-- ``with_salt`` / ``replicate_dim``: the salted-join pair — fact rows get
-  a random-but-deterministic salt from a row hash, the (small) dim side is
-  replicated across all salt values, and the join key becomes (key, salt).
+- ``with_salt``: a random-but-deterministic salt from a row hash, the
+  salt column ``salted_count`` groups by.
 """
 
 from __future__ import annotations
@@ -26,24 +25,9 @@ def with_salt(df: DataFrame, cols: list[str], n_salt: int = 16, salt_col: str = 
     return df.withColumn(salt_col, F.pmod(F.xxhash64(*cols), F.lit(n_salt)).cast("int"))
 
 
-def replicate_dim(dim: DataFrame, n_salt: int = 16, salt_col: str = "salt") -> DataFrame:
-    """Cross the dim side with all salt values so the salted equi-join sees
-    every (key, salt) combination."""
-    salts = dim.sparkSession.range(n_salt).select(F.col("id").cast("int").alias(salt_col))
-    return dim.crossJoin(F.broadcast(salts))
-
-
 def salted_count(df: DataFrame, key: str, n_salt: int = 16) -> DataFrame:
     """groupBy(key).count() that never funnels a hot key into one task:
     partial counts per (key, salt), then a tiny final combine per key."""
     salted = with_salt(df, [key], n_salt=n_salt)
     partial = salted.groupBy(key, "salt").agg(F.count("*").alias("c"))
     return partial.groupBy(key).agg(F.sum("c").alias("count"))
-
-
-def salted_join(fact: DataFrame, dim: DataFrame, key: str, n_salt: int = 16) -> DataFrame:
-    """Equi-join where ``fact`` is skewed on ``key`` and ``dim`` is small:
-    salt the fact rows, replicate the dim, join on (key, salt)."""
-    f = with_salt(fact, [key] + [c for c in fact.columns if c != key], n_salt=n_salt)
-    d = replicate_dim(dim, n_salt=n_salt)
-    return f.join(d, [key, "salt"]).drop("salt")

@@ -232,10 +232,18 @@ class UnionFind:
         self.parent: dict[str, str] = {}
 
     def find(self, x: str) -> str:
-        p = self.parent.setdefault(x, x)
-        if p != x:
-            self.parent[x] = p = self.find(p)
-        return p
+        """Root of ``x`` (registering it as a singleton if new).
+
+        Iterative with path halving: each visited node is re-pointed at
+        its grandparent, so a long chain shortens on every walk and no
+        component depth can exhaust the Python stack."""
+        parent = self.parent
+        p = parent.setdefault(x, x)
+        while p != x:
+            g = parent[p]
+            parent[x] = g
+            x, p = g, parent[g]
+        return x
 
     def union(self, a: str, b: str) -> None:
         ra, rb = self.find(a), self.find(b)
@@ -310,7 +318,6 @@ def similarity_edge_list(
     alpha: float = ALPHA,
     tau: float = TAU,
     max_block: int = MAX_BLOCK_FORMS,
-    metrics_out: dict | None = None,
 ) -> list[tuple[str, str]]:
     """Thresholded similarity edges over distinct forms, sorted.
 
@@ -319,9 +326,7 @@ def similarity_edge_list(
     INDEPENDENT engine (DuckDB's recursive CTE in the er_resolve contract
     query, or :class:`UnionFind` below) derives the components."""
     forms = sorted(set(forms))
-    pairs, salt_rows = block_pairs(forms, max_block)
-    if metrics_out is not None:
-        metrics_out["block_salt_rows"] = salt_rows
+    pairs, _salt_rows = block_pairs(forms, max_block)
     return score_edges(pairs, kb_form_vectors(forms, kb), alpha, tau)
 
 
@@ -331,7 +336,6 @@ def cluster_forms(
     alpha: float = ALPHA,
     tau: float = TAU,
     max_block: int = MAX_BLOCK_FORMS,
-    metrics_out: dict | None = None,
 ) -> dict[str, str]:
     """Distinct normalized forms -> cluster id (min form in component).
 
@@ -339,9 +343,7 @@ def cluster_forms(
     the same distinct-surface memoization the pipeline uses (≙ the
     reference's kb_cache, REEL/pre_process.py:250-307, done relationally).
     """
-    edges = similarity_edge_list(
-        forms, kb, alpha=alpha, tau=tau, max_block=max_block, metrics_out=metrics_out
-    )
+    edges = similarity_edge_list(forms, kb, alpha=alpha, tau=tau, max_block=max_block)
     return components(forms, edges)
 
 

@@ -73,7 +73,7 @@ from nilinker_spark.snapshots import SnapshotLog, list_data_files
 # threshold (real corpora: 10^6-10^7 forms at 100 TB) the distributed
 # path runs unchanged.  Same decision rule as a broadcast-join
 # threshold: execute the provably-tiny side locally.
-DRIVER_VOCAB_MAX = int(os.environ.get("NILINKER_DRIVER_VOCAB_MAX", "2000"))
+DRIVER_VOCAB_MAX = 2000
 
 RESOLVED_COLS = ("url", "mention_id", "surface", "pos", "norm", "cluster_id")
 
@@ -193,7 +193,7 @@ def _edges(b: _Batch) -> DataFrame:
         return _local_frame(b.spark, "edges", _driver_middle(b).edges)
     # S4+S5 fused with the exact embedding-score prefilter: only the
     # plausible pair fraction pays string features / the Arrow JW
-    # crossing; edges are bit-identical to the unfused reference
+    # crossing; edges equal oracle.score_edges over the same vectors
     return scoring.fused_similarity_edges(b.pairs, b.phrase_vecs, b.alpha, b.tau, n_forms=b.n_forms)
 
 
@@ -339,11 +339,6 @@ def resolve(
         gazetteer = {norm_form(s) for s, _, _ in kb.surface_forms}
     walls = stage_walls_out
     b = _Batch(spark, kb, webtext, gazetteer, alpha, tau, max_block, walls)
-    # NOTE: extract_mentions_relational (zero Python stages) exists and is
-    # parity-tested, but measured SLOWER here: the per-position explode
-    # evaluates 4 regexes + 2 string builds per token JVM-side (~200M
-    # regex execs at 1M docs) vs ~60 memoized dict probes per doc in the
-    # Arrow scan.  The vectorized Python path is the measured fast path.
     t0 = time.monotonic()
     _build_lazy(b, {"mentions"})
     if cache_out is not None:

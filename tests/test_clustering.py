@@ -103,3 +103,62 @@ def test_cc_probe_overflow_falls_through(spark):
     df = spark.createDataFrame(edges, "src string, dst string")
     lab = {r["node"]: r["label"] for r in connected_components(df, driver_max_edges=5).collect()}
     assert set(lab.values()) == {"n00"} and len(lab) == 31
+
+
+def _chain(n):
+    """n zero-padded nodes (string order == numeric order) and the n-1
+    edges of their path, ascending."""
+    nodes = [f"n{i:06d}" for i in range(n)]
+    return nodes, [(nodes[i], nodes[i + 1]) for i in range(n - 1)]
+
+
+def test_union_find_deep_chains_no_recursion():
+    """A chain component deeper than the Python stack resolves in every
+    edge order, with the min-form representative: ascending, descending
+    (each union hangs the old root under the new min, so the tree is one
+    long path), and descending plus one edge at the deep end (the first
+    find from the far leaf walks the whole path)."""
+    from nilinker_spark.oracle import UnionFind, components
+
+    n = 100_000
+    nodes, asc = _chain(n)
+    desc = asc[::-1]
+    want = dict.fromkeys(nodes, nodes[0])
+    for edges in (asc, desc, desc + [(nodes[-1], nodes[-2])]):
+        assert components(nodes, edges) == want
+        assert components((), edges) == want
+
+    # the driver CC order: unions first, then find in insertion order
+    uf = UnionFind()
+    for a, b in desc:
+        uf.union(a, b)
+    assert {x: uf.find(x) for x in list(uf.parent)} == want
+
+
+def test_cc_driver_path_deep_chain(spark):
+    """The driver fast path labels a 5,000-node chain collected in
+    descending edge order as one component, min node as the label.  One
+    input partition, one shuffle partition and the single-level
+    aggregation hash map (whose iteration is insertion order) carry the
+    descending order through the probe's distinct() to the driver."""
+    from pyspark.sql import functions as F
+
+    n = 5_000
+    nodes, _ = _chain(n)
+    node = lambda c: F.format_string("n%06d", c)  # noqa: E731
+    df = spark.range(n - 2, -1, -1, numPartitions=1).select(
+        node(F.col("id")).alias("src"), node(F.col("id") + 1).alias("dst")
+    )
+    confs = {
+        "spark.sql.shuffle.partitions": "1",
+        "spark.sql.codegen.aggregate.map.twolevel.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        out = connected_components(df, driver_max_edges=10**6).collect()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert {r["node"]: r["label"] for r in out} == dict.fromkeys(nodes, nodes[0])

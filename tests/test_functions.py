@@ -7,7 +7,6 @@ import numpy as np
 from nilinker_spark.functions.model import l2_normalize, phrase_vectors
 from nilinker_spark.functions.normalize import (
     extract_text,
-    ngrams,
     norm_form,
     singularize,
     tokenize_entity,
@@ -63,12 +62,6 @@ def test_token_sort_ratio_order_free():
 def test_fuzzy_best_match_deterministic_tiebreak():
     # two equally-distant words -> lexicographically smaller wins
     assert fuzzy_best_match("ab", ["aa", "bb"]) == "aa"
-
-
-def test_ngrams():
-    assert ngrams("abcd", 3) == ["abc", "bcd"]
-    assert ngrams("ab", 3) == ["ab"]
-    assert ngrams("", 3) == []
 
 
 def test_phrase_vectors_hand_oracle():

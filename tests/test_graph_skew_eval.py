@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from nilinker_spark.operators.evaluate import micro_prf, pairwise_f1, per_class_prf
 from nilinker_spark.operators.graph import bfs_depths, degrees, single_parent
-from nilinker_spark.operators.skew import salted_count, salted_join
+from nilinker_spark.operators.skew import salted_count
 
 
 @pytest.fixture(scope="module")
@@ -44,14 +44,6 @@ def test_salted_count_matches_plain(spark):
     plain = {r["k"]: r["count"] for r in df.groupBy("k").count().collect()}
     salted = {r["k"]: r["count"] for r in salted_count(df, "k", n_salt=8).collect()}
     assert plain == salted
-
-
-def test_salted_join_matches_plain(spark):
-    fact = spark.createDataFrame([(i % 2, i) for i in range(200)], "k int, v int")
-    dim = spark.createDataFrame([(0, "x"), (1, "y")], "k int, name string")
-    plain = fact.join(dim, "k").select("k", "v", "name")
-    salted = salted_join(fact, dim, "k", n_salt=4).select("k", "v", "name")
-    assert plain.exceptAll(salted).isEmpty() and salted.exceptAll(plain).isEmpty()
 
 
 def test_micro_and_per_class_prf(spark):

@@ -227,8 +227,9 @@ def test_distributed_scoring_evaluates_once(spark, kb, webtext_df, monkeypatch, 
     driver-size probe must NOT recompute the pairs->scoring subtree.
     resolve() lazily localCheckpoints the edge table, so the probe's job
     is the one materialization and the star loop reads the cache.  A tap
-    stage appended to score_pairs' output counts every scored row that is
-    actually evaluated: the total must equal the pair count EXACTLY once."""
+    stage appended to fused_similarity_edges' output counts every edge row
+    that is actually evaluated: the total must equal the edge count of
+    the unpatched operator EXACTLY once."""
     import os as _os
 
     from nilinker_spark import pipeline as P
@@ -237,7 +238,6 @@ def test_distributed_scoring_evaluates_once(spark, kb, webtext_df, monkeypatch, 
     from nilinker_spark.operators.blocking import block_keys_df, phrase_vectors_df
     from nilinker_spark.operators.extract import extract_mentions_df
     from nilinker_spark.operators.pairs import candidate_pairs
-    from nilinker_spark.operators.scoring import score_pairs as real_score
     from nilinker_spark.oracle import MAX_BLOCK_FORMS
 
     cnt_dir = tmp_path / "score_taps"
@@ -287,9 +287,7 @@ def test_distributed_scoring_evaluates_once(spark, kb, webtext_df, monkeypatch, 
     pvs = phrase_vectors_df(spark, forms, kb)
     pairs, _ = candidate_pairs(block_keys_df(pvs.select("norm")), MAX_BLOCK_FORMS)
     # non-vacuous: the loop really had > threshold edges to chew on
-    from nilinker_spark.operators.scoring import similarity_edges
-
-    expected = similarity_edges(real_score(pairs, pvs, P.ALPHA), P.TAU).count()
+    expected = real_fused(pairs, pvs, P.ALPHA, P.TAU).count()
     spark.catalog.clearCache()
     assert pairs.count() > 0 and expected > 1
     assert total == expected, (
@@ -332,8 +330,9 @@ def test_prefuzz_map_matches_scalar_fuzzy(spark, kb):
 
 def test_fused_edges_equal_unfused(spark, kb, webtext_df):
     """The fused S4+S5 prefilter path (resolve()'s) must emit EXACTLY the
-    edges of the unfused score-then-threshold parity reference, and
-    the prefilter must actually prune (non-vacuous)."""
+    edges of the oracle's unfused score-then-threshold reference
+    (oracle.similarity_edge_list over the same forms), and the prefilter
+    must actually prune (non-vacuous)."""
     from nilinker_spark.operators.blocking import (
         block_keys_df,
         phrase_vectors_df,
@@ -345,10 +344,8 @@ def test_fused_edges_equal_unfused(spark, kb, webtext_df):
         PRUNE_MARGIN,
         dot_f64,
         fused_similarity_edges,
-        score_pairs,
-        similarity_edges,
     )
-    from nilinker_spark.oracle import ALPHA, TAU
+    from nilinker_spark.oracle import ALPHA, TAU, similarity_edge_list
 
     gaz = {norm_form(s) for s, _, _ in kb.surface_forms}
     mentions = extract_mentions_df(spark, webtext_df, gaz)
@@ -358,10 +355,7 @@ def test_fused_edges_equal_unfused(spark, kb, webtext_df):
     ).localCheckpoint(eager=True)
     pairs, _m = candidate_pairs(block_keys_df(pvs.select("norm")))
 
-    full = {
-        (r["src"], r["dst"])
-        for r in similarity_edges(score_pairs(pairs, pvs, ALPHA), TAU).collect()
-    }
+    full = set(similarity_edge_list([r["norm"] for r in forms.collect()], kb))
     fused = {
         (r["src"], r["dst"])
         for r in fused_similarity_edges(pairs, pvs, ALPHA, TAU).collect()
@@ -385,17 +379,13 @@ def test_fused_edges_boundary_pairs(spark):
     """Synthetic pairs engineered AT the prune bound: alpha*dot sits
     within ~1e-9 of tau-(1-alpha) on both sides.  The conservative
     PRUNE_MARGIN must keep every pair whose full score could still reach
-    tau, so fused == unfused even on the knife edge."""
+    tau, so fused == the oracle's unfused scoring even on the knife
+    edge."""
     import numpy as np
-    import pyspark.sql.functions as F
     from pyspark.sql import types as T
 
-    from nilinker_spark.operators.scoring import (
-        fused_similarity_edges,
-        score_pairs,
-        similarity_edges,
-    )
-    from nilinker_spark.oracle import ALPHA, TAU
+    from nilinker_spark.operators.scoring import fused_similarity_edges
+    from nilinker_spark.oracle import ALPHA, TAU, score_edges
 
     dim = 16
     bound_dot = (TAU - (1.0 - ALPHA)) / ALPHA
@@ -422,10 +412,8 @@ def test_fused_edges_boundary_pairs(spark):
     )
     pvs = spark.createDataFrame(rows_pv, schema)
     pairs = spark.createDataFrame(rows_pairs, "norm_a string, norm_b string")
-    full = {
-        (r["src"], r["dst"])
-        for r in similarity_edges(score_pairs(pairs, pvs, ALPHA, dim=dim), TAU).collect()
-    }
+    pv_of = {f: np.asarray(v, dtype=np.float32) for f, v in rows_pv}
+    full = set(score_edges(rows_pairs, pv_of, ALPHA, TAU))
     fused = {
         (r["src"], r["dst"])
         for r in fused_similarity_edges(pairs, pvs, ALPHA, TAU, dim=dim).collect()

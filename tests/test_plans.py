@@ -53,11 +53,11 @@ def test_extraction_scan_reads_only_url_html(spark, kb, webtext_parquet):
 def test_scoring_joins_broadcast(spark):
     """The phrase-vector side of pair scoring must broadcast (never a
     sort-merge shuffle of the pair table against a tiny dim)."""
-    from nilinker_spark.operators.scoring import score_pairs
+    from nilinker_spark.operators.scoring import fused_similarity_edges
 
     pairs = spark.createDataFrame([("a", "b")], "norm_a string, norm_b string")
     pvs = spark.createDataFrame([("a", [1.0, 0.0]), ("b", [0.0, 1.0])], "norm string, pv array<float>")
-    scored = score_pairs(pairs, pvs)
+    scored = fused_similarity_edges(pairs, pvs, dim=2)
     assert has_broadcast_join(scored)
     # cosine + levenshtein stay JVM-side (zip_with/aggregate are
     # interpreted, not codegen'd — still no serde crossing); the one
@@ -131,19 +131,19 @@ def test_scoring_broadcast_dropped_above_form_ceiling(spark):
     """Above BROADCAST_MAX_FORMS the forced broadcast hint must disappear
     (a 10^7-form x 200-dim pv broadcast would be ~8 GB per executor — a
     scale-killer hiding behind a hint); below it, it must stay."""
-    from nilinker_spark.operators.scoring import BROADCAST_MAX_FORMS, score_pairs
+    from nilinker_spark.operators.scoring import BROADCAST_MAX_FORMS, fused_similarity_edges
     from nilinker_spark.plans import explain_str
 
     pairs = spark.createDataFrame([("a", "b")], "norm_a string, norm_b string")
     pvs = spark.createDataFrame(
         [("a", [1.0, 0.0]), ("b", [0.0, 1.0])], "norm string, pv array<float>"
     )
-    small = score_pairs(pairs, pvs, n_forms=100)
+    small = fused_similarity_edges(pairs, pvs, n_forms=100, dim=2)
     assert has_broadcast_join(small)
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        big = score_pairs(pairs, pvs, n_forms=BROADCAST_MAX_FORMS + 1)
+        big = fused_similarity_edges(pairs, pvs, n_forms=BROADCAST_MAX_FORMS + 1, dim=2)
         # with the hint gone AND auto-broadcast off, the plan must fall
         # through to a non-broadcast join (AQE would still be free to
         # broadcast from runtime stats in production — that's the point:

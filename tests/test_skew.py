@@ -4,10 +4,8 @@ preserved), and output is invariant to input partitioning."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from nilinker_spark.operators.blocking import block_keys_df
-from nilinker_spark.operators.pairs import candidate_pairs, capped_blocks
+from nilinker_spark.operators.pairs import candidate_pairs
 from nilinker_spark.oracle import UnionFind
 from nilinker_spark.pipeline import resolve
 
@@ -49,15 +47,6 @@ def test_salting_deterministic_across_partitionings(spark):
     p1, _ = candidate_pairs(blocked1, max_block=8, n_anchors=4)
     p2, _ = candidate_pairs(blocked2, max_block=8, n_anchors=4)
     assert p1.exceptAll(p2).isEmpty() and p2.exceptAll(p1).isEmpty()
-
-
-def test_capped_blocks_reports_drops(spark):
-    blocked = block_keys_df(_hot_forms(spark, 100))
-    kept, metrics = capped_blocks(blocked, max_block=10)
-    sizes = {r["block_key"]: r["n"] for r in kept.groupBy("block_key").agg(F.count("*").alias("n")).collect()}
-    assert sizes["hotword"] == 10
-    m = {r["block_key"]: (r["members"], r["dropped"]) for r in metrics.collect()}
-    assert m["hotword"] == (100, 90)
 
 
 def test_resolve_invariant_to_partitioning(spark, kb, webtext_df):

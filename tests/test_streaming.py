@@ -204,7 +204,7 @@ def test_stream_sessionize_matches_batch_session_windows(spark, tmp_path_factory
 def test_streaming_scan_shares_zipf_head_eviction():
     """VERDICT r4 #7: the streaming scan evicts through the SHARED
     Zipf-head-preserving helper (operators.extract._evict_norm_cache,
-    behavior proven in test_extract_fastpath), never clear() — a clear()
+    behavior proven in test_properties), never clear() — a clear()
     re-paid the normalization regex for every head token in long-lived
     streaming workers."""
     import inspect
