@@ -57,33 +57,60 @@ def _evict_norm_cache() -> None:
 
 def extract_mentions_df(spark: SparkSession, webtext: DataFrame, gazetteer: set[str]) -> DataFrame:
     """webtext(url, warc_ts, html, text, lang) -> mentions, English pages only."""
+    return _scan_mentions(spark, webtext, gazetteer)
+
+
+def _scan_mentions(
+    spark: SparkSession, webtext: DataFrame, gazetteer: set[str], carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """The S1 scan, batch or streaming: mentions of English pages, plus
+    the page columns named in ``carry`` on every mention row.
+
+    The loop records each mention's page index; url and the carried
+    columns are gathered by that index once per Arrow batch, so carrying
+    a column adds no work per mention and the batch path projects only
+    (url, html) into the Python worker."""
     gz = spark.sparkContext.broadcast(sorted(gazetteer))
+    page_cols = ["url", *carry]
+    carried = "".join(f", {c} {webtext.schema[c].dataType.simpleString()}" for c in carry)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # the worker module's memo: a closure's globals are pickled by
+        # value, so naming _NORM_CACHE directly would give every task a
+        # fresh copy that _evict_norm_cache never shrinks
+        from nilinker_spark.operators.extract import _NORM_CACHE as memo
         from nilinker_spark.oracle import gazetteer_index
 
         gset = set(gz.value)
         gidx = gazetteer_index(gset)
         for pdf in batches:
-            urls, mids, surfaces, poss, norms = [], [], [], [], []
-            if len(_NORM_CACHE) > _NORM_CACHE_MAX:
+            pages, mids, surfaces, poss, norms = [], [], [], [], []
+            if len(memo) > _NORM_CACHE_MAX:
                 _evict_norm_cache()
-            for url, html in zip(pdf["url"], pdf["html"]):
+            for i, (url, html) in enumerate(zip(pdf["url"], pdf["html"])):
                 text = extract_text(bytes(html))
-                for mid, surface, pos in extract_mentions(url, text, gset, _NORM_CACHE, gidx):
-                    urls.append(url)
+                for mid, surface, pos in extract_mentions(url, text, gset, memo, gidx):
+                    pages.append(i)
                     mids.append(mid)
                     surfaces.append(surface)
                     poss.append(pos)
                     norms.append(norm_form(surface))
+            page = {c: pdf[c].to_numpy()[pages] for c in page_cols}
             yield pd.DataFrame(
-                {"url": urls, "mention_id": mids, "surface": surfaces, "pos": poss, "norm": norms}
+                {
+                    "url": page.pop("url"),
+                    "mention_id": mids,
+                    "surface": surfaces,
+                    "pos": poss,
+                    "norm": norms,
+                    **page,
+                }
             )
 
     return (
         webtext.filter(F.col("lang") == "en")
-        .select("url", "html")
-        .mapInPandas(scan, MENTIONS_SCHEMA)
+        .select(*page_cols, "html")
+        .mapInPandas(scan, MENTIONS_SCHEMA + carried)
     )
 
 

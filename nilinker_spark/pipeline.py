@@ -662,11 +662,14 @@ class Pipeline:
         - audited: the manifest keeps the head's batch id (the stage stays
           done) and shows in :meth:`lineage` as ``compact:<stage>``.
 
-        Returns the number of part files after compaction.
+        Returns the number of part files after compaction.  An unknown
+        stage raises ValueError, a stage with no commit FileNotFoundError.
         """
+        if stage not in STAGES:
+            raise ValueError(f"compact({stage!r}): not a stage: {STAGES}")
         self._recover()  # never compact a partial append into the table
         log = self._log(stage)
-        head = _head(log)
+        head = log.snapshot()
         lin = head["lineage"]
         n_files = max(1, lin["rows"] // target_rows_per_file + 1)
         head = self._commit(

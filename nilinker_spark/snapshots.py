@@ -8,7 +8,7 @@ live OUTSIDE the table directory: Spark's ``mode("overwrite")`` deletes
 the table directory's whole content — a sibling survives it untouched.)
 Readers resolve a manifest — never the live directory — so a concurrent
 append can NEVER tear a read, and append tables keep their full history
-readable (time travel) until an explicit :meth:`SnapshotLog.vacuum`.
+readable (time travel).
 
 Commit protocol (single-filesystem atomic, the local stand-in for an
 object-store conditional PUT):
@@ -63,8 +63,8 @@ contract rows) and covered in tests/test_snapshots.py:
   over source columns, per-file tuples in the PATHS, self-describing
   across spec changes;
 - BRANCH refs as write-audit-publish (:meth:`commit` ``branch=`` /
-  :meth:`publish` / :meth:`drop_branch`) — staged commits invisible to
-  trunk readers, fast-forward publish with lost-update guards;
+  :meth:`publish`) — staged commits invisible to trunk readers,
+  fast-forward publish with lost-update guards;
 - copy-on-write MERGE (:meth:`merge`) — upsert rewriting only the
   files whose manifest key-bounds contain a source key, prior versions
   keep time travelling;
@@ -81,6 +81,13 @@ commits leaves those versions published; the next entry publishes a
 list and deletes the files no head references, so the latest version
 reads as the last committed state and the crashed batch's versions
 become expired history (pipeline.py module docs).
+
+Storage is reclaimed by the writer, not by a separate garbage collector:
+``Pipeline`` deletes the files an overwrite supersedes once the commit
+is published, and its recovery deletes every file no head references.
+The log itself never deletes a data file, so a standalone table that is
+merged many times (:meth:`merge` stops referencing, never deletes, the
+files it replaces) keeps those files on disk; no engine path merges.
 
 Reference parity: the reference has no table format at all (it rewrites
 whole pickle/npy files in place, e.g. ≙ src/REEL/pre_process.py:250-307
@@ -104,7 +111,7 @@ from pyspark.sql.types import StructType
 
 _SNAP_SUFFIX = "__snaplog"
 _V_WIDTH = 12  # v000000000001.json — lexicographic == numeric order
-_TAG_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9._-]*")
+_REF_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9._-]*")
 
 # --- hidden partitioning (Iceberg partition transforms) ---------------------
 #
@@ -308,7 +315,7 @@ class SnapshotLog:
         self.log_dir = self.table_dir + _SNAP_SUFFIX
         # Published manifests are immutable (os.link CAS), so parsed
         # manifests cache per instance keyed by version.  Without this,
-        # latest_version/branches/vacuum and every commit's parent read
+        # latest_version and every commit's parent read
         # re-opened and re-parsed manifest JSON — a long-lived streaming
         # table committing one version per batch degraded quadratically
         # in log length (ADVICE r5).  Consumers treat manifests as
@@ -340,11 +347,7 @@ class SnapshotLog:
                 return v
         return None
 
-    def snapshot(self, version: int | None = None, tag: str | None = None) -> dict:
-        if tag is not None:
-            if version is not None:
-                raise ValueError("pass version or tag, not both")
-            version = self.resolve_tag(tag)
+    def snapshot(self, version: int | None = None) -> dict:
         if version is None:
             version = self.latest_version()
             if version is None:
@@ -357,95 +360,7 @@ class SnapshotLog:
         self._manifest_cache[version] = manifest
         return manifest
 
-    # --- tags (named immutable refs) ---------------------------------------
-    def _tag_path(self, name: str) -> str:
-        if not _TAG_RE.fullmatch(name):
-            raise ValueError(f"tag name must match {_TAG_RE.pattern!r}: {name!r}")
-        return os.path.join(self.log_dir, "tags", f"{name}.json")
-
-    def tag(self, name: str, version: int | None = None) -> int:
-        """Pin ``version`` (default: latest) under an immutable name.
-
-        Published with the same ``os.link`` CAS as version manifests, so
-        two writers racing to create the same tag get exactly one winner
-        and a loud ValueError for the loser — a tag never silently moves
-        (Iceberg tag semantics; re-pointing means delete + re-create,
-        which this API deliberately does not offer).  Tagged versions'
-        files are retained by :meth:`vacuum` regardless of
-        ``retain_last``."""
-        if version is None:
-            version = self.latest_version()
-        if version is None or version not in self.versions():
-            raise FileNotFoundError(f"no version {version} to tag at {self.log_dir}")
-        path = self._tag_path(name)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = os.path.join(self.log_dir, f".tmp-tag-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump({"name": name, "version": version, "ts": time.time()}, fh)
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            raise ValueError(
-                f"tag {name!r} already exists at version {self.resolve_tag(name)}; "
-                "tags are immutable"
-            ) from None
-        finally:
-            os.remove(tmp)
-        return version
-
-    def tags(self) -> dict[str, int]:
-        tag_dir = os.path.join(self.log_dir, "tags")
-        if not os.path.isdir(tag_dir):
-            return {}
-        out: dict[str, int] = {}
-        for n in sorted(os.listdir(tag_dir)):
-            if n.endswith(".json") and not n.startswith("."):
-                with open(os.path.join(tag_dir, n)) as fh:
-                    m = json.load(fh)
-                out[m["name"]] = m["version"]
-        return out
-
-    def resolve_tag(self, name: str) -> int:
-        path = self._tag_path(name)
-        if not os.path.exists(path):
-            raise FileNotFoundError(f"no tag {name!r} at {self.log_dir}")
-        with open(path) as fh:
-            return json.load(fh)["version"]
-
     # --- branches (named writable refs: write-audit-publish) ----------------
-    def branches(self) -> dict[str, int]:
-        """{branch name: head version} over every branch that has at
-        least one commit."""
-        out: dict[str, int] = {}
-        for v in self.versions():
-            b = self.snapshot(v).get("branch")
-            if b is not None:
-                out[b] = v
-        return out
-
-    def _dropped_branches(self) -> set[str]:
-        d = os.path.join(self.log_dir, "branch_drops")
-        if not os.path.isdir(d):
-            return set()
-        return {n[: -len(".json")] for n in os.listdir(d) if n.endswith(".json")}
-
-    def drop_branch(self, name: str) -> None:
-        """Retire a branch ref: its head no longer pins files from
-        :meth:`vacuum` (published heads are auto-unpinned — the trunk
-        carries their state — so this is for ABANDONED audits).  History
-        stays readable until a vacuum actually reclaims the staged
-        files, after which reads of those versions raise
-        :class:`SnapshotExpired` like any other expiry — never a silent
-        misread.  Idempotent."""
-        if self.latest_version(branch=name) is None:
-            raise FileNotFoundError(f"no branch {name!r} at {self.log_dir}")
-        d = os.path.join(self.log_dir, "branch_drops")
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(self.log_dir, f".tmp-drop-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump({"name": name, "ts": time.time()}, fh)
-        os.replace(tmp, os.path.join(d, f"{name}.json"))
-
     def publish(self, branch: str) -> int:
         """Fast-forward the TRUNK to a branch's head — the publish step
         of write-audit-publish (Iceberg's ``spark.wap.branch`` /
@@ -558,17 +473,8 @@ class SnapshotLog:
         """
         if files is None:
             files = list_data_files(self.table_dir)
-        if branch is not None and not _TAG_RE.fullmatch(branch):
-            raise ValueError(f"branch name must match {_TAG_RE.pattern!r}: {branch!r}")
-        # a dropped branch name stays retired (ADVICE r5): its permanent
-        # drop marker excludes the name from vacuum's live heads, so a
-        # new commit staged under it would be unpinned — vacuum could
-        # reclaim the freshly staged files out from under the writer
-        if branch is not None and branch in self._dropped_branches():
-            raise ValueError(
-                f"branch {branch!r} was dropped; dropped names stay retired "
-                "(stage under a fresh branch name instead)"
-            )
+        if branch is not None and not _REF_RE.fullmatch(branch):
+            raise ValueError(f"branch name must match {_REF_RE.pattern!r}: {branch!r}")
         os.makedirs(self.log_dir, exist_ok=True)
         vs = self.versions()
         # the guard compares against THIS REF's head (trunk by default);
@@ -1078,23 +984,22 @@ class SnapshotLog:
         self,
         spark: SparkSession,
         version: int | None = None,
-        tag: str | None = None,
         branch: str | None = None,
     ) -> DataFrame:
-        """DataFrame of exactly the version's (or tag's, or branch
-        head's) files, with its schema.
+        """DataFrame of exactly the version's (or branch head's) files,
+        with its schema.
 
         Missing files (replaced by a later overwrite/compact) raise
         :class:`SnapshotExpired` — an expired version never silently
         reads the wrong rows.
         """
         if branch is not None:
-            if version is not None or tag is not None:
-                raise ValueError("pass exactly one of version/tag/branch")
+            if version is not None:
+                raise ValueError("pass exactly one of version/branch")
             version = self.latest_version(branch=branch)
             if version is None:
                 raise FileNotFoundError(f"no branch {branch!r} at {self.log_dir}")
-        m = self.snapshot(version, tag=tag)
+        m = self.snapshot(version)
         return self._read_files(spark, m, m["files"])
 
     def _read_files(self, spark: SparkSession, manifest: dict, files: list[str]) -> DataFrame:
@@ -1274,9 +1179,10 @@ class SnapshotLog:
         query; this sink assumes the single-writer caller contract the
         rest of the log uses).  A crash between the parquet write and
         the commit leaves orphan part files that no manifest references
-        — readers never see them (reads are manifest-resolved) and
-        :meth:`vacuum` leaves them alone as in-flight, exactly like any
-        other crashed writer.
+        — readers never see them (reads are manifest-resolved), exactly
+        like any other crashed writer; ``Pipeline``'s recovery deletes
+        such files in its own tables, and a standalone log leaves them
+        on disk.
 
         Usage::
 
@@ -1324,13 +1230,7 @@ class SnapshotLog:
     # to [min, max] range overlap (still correct, coarser skipping)
     MERGE_PLAN_KEYS_MAX = 100_000
 
-    def merge(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        on: str,
-        branch: str | None = None,
-    ) -> int:
+    def merge(self, spark: SparkSession, source: DataFrame, on: str) -> int:
         """Copy-on-write MERGE (upsert): rows of ``source`` REPLACE the
         table's rows with the same ``on`` key; unmatched source rows are
         INSERTED.  The rewrite is planned from manifest stats: only
@@ -1341,24 +1241,20 @@ class SnapshotLog:
         Unlike ``mode("overwrite")``, the replaced files are NOT
         deleted: the merge commit simply stops referencing them, so
         every prior version keeps time-travelling (the Iceberg CoW
-        property our directory-overwrite path cannot give) and
-        :meth:`vacuum` reclaims them once their versions leave the
-        retention window.  Source keys must be unique (raises
-        ValueError otherwise — a multi-row key would make the update
+        property our directory-overwrite path cannot give).  Nothing
+        reclaims them: a table merged many times keeps every replaced
+        file (no engine path merges; ``Pipeline`` tables reclaim storage
+        at commit).  Source keys must be unique (raises ValueError
+        otherwise — a multi-row key would make the update
         non-deterministic), and the source schema must carry exactly
-        the table's columns.  Stage on a ``branch`` to audit the merge
-        before :meth:`publish`."""
+        the table's columns."""
         from pyspark.sql import functions as F
 
-        # the commit below passes the heads read HERE as its derived-from
-        # guards (expect_latest / _fork_expect): a concurrent commit to
-        # the same ref between this plan and the commit must surface as
-        # SnapshotConflict, never a silently regressive manifest
-        ref_head = self.latest_version(branch=branch)
-        head_v, fork = ref_head, "__any__"
-        if head_v is None and branch is not None:
-            head_v = self.latest_version()
-            fork = head_v
+        # the commit below passes the head read HERE as its derived-from
+        # guard (expect_latest): a concurrent commit between this plan and
+        # the commit must surface as SnapshotConflict, never a silently
+        # regressive manifest
+        head_v = self.latest_version()
         if head_v is None:
             raise FileNotFoundError(f"no snapshots to merge into at {self.log_dir}")
         m = self.snapshot(head_v)
@@ -1398,7 +1294,7 @@ class SnapshotLog:
         # a sparse key set spanning the table would range-overlap every
         # file; below the cap, plan with the ACTUAL keys (Iceberg's CoW
         # planning joins source keys against file bounds) — a bounded
-        # driver-side collect, same class as the tag/vocab probes
+        # driver-side collect, same class as the vocab probes
         keys: list | None = None
         if row["n"] <= self.MERGE_PLAN_KEYS_MAX:
             import bisect
@@ -1439,76 +1335,8 @@ class SnapshotLog:
         return self.commit(
             "merge",
             files=sorted(kept) + new_files,
-            expect_latest=ref_head if branch is not None else head_v,
-            branch=branch,
+            expect_latest=head_v,
             _schema=m.get("schema"),
             _aliases=dict(m.get("aliases") or {}),
             _tombstones=list(m.get("tombstones") or []),
-            _fork_expect=fork,
         )
-
-    def total_rows(self, version: int | None = None) -> int | None:
-        """Metadata-only row count of a version (Iceberg's
-        ``total-records`` summary) — no file is opened.  None when any
-        member file has no recorded stats (pre-stats manifests)."""
-        m = self.snapshot(version)
-        stats = m.get("file_stats", {})
-        total = 0
-        for f in m["files"]:
-            st = stats.get(f)
-            if st is None:
-                return None
-            total += st["rows"]
-        return total
-
-    # --- maintenance -------------------------------------------------------
-    def vacuum(self, retain_last: int = 1) -> list[str]:
-        """Delete data files referenced ONLY by versions older than the
-        last ``retain_last`` — the storage-reclaim half of expiry.
-
-        Never touches files the retained versions reference — and a
-        TAGGED version is always retained regardless of ``retain_last``
-        (tags pin snapshots from expiry; Iceberg semantics) — and never
-        touches the manifests (history stays auditable).  Returns the
-        deleted file names.
-        """
-        if retain_last < 1:
-            raise ValueError("vacuum must retain at least the latest version")
-        vs = self.versions()
-        if not vs:
-            return []
-        # the retain window counts TRUNK versions — branch commits share
-        # the global counter, and counting them would let a staged branch
-        # rewrite push the live trunk head out of the window and vacuum
-        # its files.  Branch heads are live refs: their staged files
-        # survive a trunk vacuum (tags likewise pin their versions) —
-        # EXCEPT heads already published to the trunk (their state is the
-        # trunk's now) and heads explicitly dropped via drop_branch().
-        trunk_vs = [v for v in vs if self.snapshot(v).get("branch") is None]
-        published = {
-            (p["branch"], p["version"])
-            for v in vs
-            for p in [self.snapshot(v).get("published_from")]
-            if p is not None
-        }
-        dropped = self._dropped_branches()
-        live_heads = {
-            head
-            for b, head in self.branches().items()
-            if b not in dropped and (b, head) not in published
-        }
-        retained = set(trunk_vs[-retain_last:]) | set(self.tags().values()) | live_heads
-        keep: set[str] = set()
-        for v in retained:
-            keep.update(self.snapshot(v)["files"])
-        # also keep anything in the live dir not referenced by ANY
-        # manifest (an in-flight writer's files, pre-commit)
-        referenced: set[str] = set()
-        for v in vs:
-            referenced.update(self.snapshot(v)["files"])
-        deleted = []
-        for name in list_data_files(self.table_dir):
-            if name in referenced and name not in keep:
-                os.remove(os.path.join(self.table_dir, name))
-                deleted.append(name)
-        return deleted

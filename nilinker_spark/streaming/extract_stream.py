@@ -39,60 +39,12 @@ def read_webtext_stream(spark: SparkSession, path: str, max_files: int = 4) -> D
 def stream_mentions(
     spark: SparkSession, webtext_stream: DataFrame, gazetteer: set[str]
 ) -> DataFrame:
-    """Streaming extraction: identical operator to the batch S1 — the
-    mapInPandas UDF is stateless, so it lifts to streaming unchanged."""
-    from nilinker_spark.operators.extract import MENTIONS_SCHEMA
+    """Streaming extraction: the batch S1 scan itself, carrying
+    ``warc_ts`` — its mapInPandas body is stateless, so it lifts to an
+    incremental plan with identical semantics."""
+    from nilinker_spark.operators.extract import _scan_mentions
 
-    # same shape as the batch S1: mapInPandas on a streaming DF produces an
-    # incremental plan with identical semantics (stateless pure function)
-    gz = spark.sparkContext.broadcast(sorted(gazetteer))
-
-    def scan(batches):
-        import pandas as pd
-
-        from nilinker_spark.functions.normalize import extract_text, norm_form
-        from nilinker_spark.operators.extract import (
-            _NORM_CACHE,
-            _NORM_CACHE_MAX,
-            _evict_norm_cache,
-        )
-        from nilinker_spark.oracle import extract_mentions, gazetteer_index
-
-        gset = set(gz.value)
-        gidx = gazetteer_index(gset)
-        for pdf in batches:
-            urls, mids, surfaces, poss, norms, tss = [], [], [], [], [], []
-            if len(_NORM_CACHE) > _NORM_CACHE_MAX:
-                # shared Zipf-head-preserving eviction (VERDICT r4 #7):
-                # long-lived streaming workers keep the frequency head
-                # warm across evictions exactly like batch workers
-                # (a clear() re-paid the regex for every head token)
-                _evict_norm_cache()
-            for url, ts, html in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                text = extract_text(bytes(html))
-                for mid, surface, pos in extract_mentions(url, text, gset, _NORM_CACHE, gidx):
-                    urls.append(url)
-                    mids.append(mid)
-                    surfaces.append(surface)
-                    poss.append(pos)
-                    norms.append(norm_form(surface))
-                    tss.append(ts)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "mention_id": mids,
-                    "surface": surfaces,
-                    "pos": poss,
-                    "norm": norms,
-                    "warc_ts": tss,
-                }
-            )
-
-    return (
-        webtext_stream.filter(F.col("lang") == "en")
-        .select("url", "warc_ts", "html")
-        .mapInPandas(scan, MENTIONS_SCHEMA + ", warc_ts timestamp")
-    )
+    return _scan_mentions(spark, webtext_stream, gazetteer, carry=("warc_ts",))
 
 
 def windowed_mention_counts(

@@ -84,6 +84,19 @@ def test_stop_after_rejects_unknown_stage(spark, kb, webtext_df, tmp_path):
     assert not os.listdir(tmp_path), "a rejected call wrote checkpoints"
 
 
+def test_compact_rejects_unknown_and_uncommitted_stage(tmp_path):
+    """compact() names the problem: an unknown stage is a ValueError like
+    stop_after's, and a stage with no commit is a FileNotFoundError —
+    neither needs a Spark session."""
+    pipe = Pipeline(None, None, str(tmp_path))
+    with pytest.raises(ValueError, match="not a stage"):
+        pipe.compact("bogus")
+    for stage in STAGES:
+        with pytest.raises(FileNotFoundError, match="no snapshots"):
+            pipe.compact(stage)
+    assert not os.listdir(tmp_path), "a rejected compact wrote checkpoints"
+
+
 def test_rerun_is_noop(spark, kb, webtext_df, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("ckpt_noop"))
     pipe = Pipeline(spark, kb, ckpt)

@@ -1,5 +1,5 @@
-"""Snapshot log: isolation, time travel, CAS commits, expiry, vacuum,
-and its composition with the pipeline's batch recovery and compaction.
+"""Snapshot log: isolation, time travel, CAS commits, expiry, and its
+composition with the pipeline's batch recovery and compaction.
 
 The transaction-log half of the Iceberg stand-in (snapshots.py module
 docs; README swap table).  The reference has no table format at all —
@@ -121,36 +121,6 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert list(new.columns) == ["id", "val", "score"]
     assert new[new.id == 1]["score"].isna().all()
     assert new[new.id == 2]["score"].iloc[0] == 7.5
-
-
-def test_vacuum_reclaims_only_unreferenced(spark, tmp_path):
-    d = str(tmp_path / "t")
-    _write(spark, d, [(1, "a")])
-    log = SnapshotLog(d)
-    log.commit("overwrite")
-    _write(spark, d, [(2, "b")], mode="append")
-    log.commit("append")
-    n_before = len(list_data_files(d))
-
-    # retaining both versions reclaims nothing
-    assert log.vacuum(retain_last=2) == []
-    assert len(list_data_files(d)) == n_before
-
-    # retaining only the latest still reclaims nothing for an append
-    # chain (v1 references v0's files too)
-    assert log.vacuum(retain_last=1) == []
-
-    # after an overwrite, the pre-overwrite files are referenced only by
-    # expired versions -> vacuum reclaims exactly those
-    pinned_files = set(SnapshotLog(d).snapshot()["files"])
-    _write(spark, d, [(3, "c")])
-    log.commit("overwrite")
-    # overwrite already deleted the old files physically; vacuum must
-    # not fail on already-gone files and must not touch the live set
-    deleted = log.vacuum(retain_last=1)
-    assert set(deleted).isdisjoint(set(SnapshotLog(d).snapshot()["files"]))
-    assert sorted(r.id for r in log.read(spark).collect()) == [3]
-    assert pinned_files  # (sanity: the pre-overwrite version had files)
 
 
 def test_pipeline_time_travel_across_incremental(spark, kb, webtext_rows, tmp_path_factory):
@@ -281,10 +251,10 @@ def test_compact_preserves_log_and_expires_priors(spark, kb, webtext_rows, tmp_p
 
 
 def test_file_stats_and_metadata_row_count(spark, tmp_path):
-    """Manifests carry Iceberg-style per-file stats (rows/bytes/bounds);
-    total_rows() answers COUNT(*) from metadata alone, and an append
-    commit inherits the parent's stats for unchanged files (no footer
-    re-read of the whole table per append)."""
+    """Manifests carry Iceberg-style per-file stats (rows/bytes/bounds)
+    whose row counts sum to COUNT(*), and an append commit inherits the
+    parent's stats for unchanged files (no footer re-read of the whole
+    table per append)."""
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a"), (2, "b")])
     log = SnapshotLog(d)
@@ -295,15 +265,17 @@ def test_file_stats_and_metadata_row_count(spark, tmp_path):
     assert st["rows"] == 2 and st["bytes"] > 0
     assert st["mins"]["id"] == 1 and st["maxs"]["id"] == 2
     assert st["mins"]["val"] == "a" and st["maxs"]["val"] == "b"
-    assert log.total_rows(0) == 2
+    assert sum(s["rows"] for s in m0["file_stats"].values()) == 2
 
     _write(spark, d, [(3, "c")], mode="append")
     log.commit("append")
     m1 = log.snapshot(1)
     for f in m0["files"]:
         assert m1["file_stats"][f] == m0["file_stats"][f], "parent stats not inherited"
-    assert log.total_rows() == 3
-    assert log.total_rows() == log.read(spark).count()
+    assert set(m1["file_stats"]) == set(m1["files"])
+    n_rows = sum(m1["file_stats"][f]["rows"] for f in m1["files"])
+    assert n_rows == 3
+    assert n_rows == log.read(spark).count()
 
 
 def test_prune_skips_files_and_matches_full_filter(spark, tmp_path):
@@ -395,43 +367,6 @@ def test_commit_append_threaded_race(spark, tmp_path):
     final = set(SnapshotLog(d).snapshot()["files"])
     assert base | set(batch1) | set(batch2) <= final
     assert sorted(r.id for r in log.read(spark).collect()) == [1, 2, 3]
-
-
-def test_tags_pin_versions_from_vacuum(spark, tmp_path):
-    d = str(tmp_path / "t")
-    _write(spark, d, [(1, "a")])
-    log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
-    assert log.tag("gold") == v0
-    files_v0 = set(log.snapshot(v0)["files"])
-
-    # logical overwrite: v1 references only the new file, old file stays
-    # on disk (external-writer usage) so vacuum is what reclaims it
-    _write(spark, d, [(9, "z")], mode="append")
-    new_only = [f for f in list_data_files(d) if f not in files_v0]
-    log.commit("overwrite", files=new_only)
-
-    assert log.tags() == {"gold": v0}
-    assert [r.id for r in log.read(spark, tag="gold").collect()] == [1]
-    # tags are immutable and validated
-    with pytest.raises(ValueError):
-        log.tag("gold", 0)
-    with pytest.raises(ValueError):
-        log.tag("bad name!")
-
-    # the tag pins v0's files from reclamation...
-    assert log.vacuum(retain_last=1) == []
-    assert [r.id for r in log.read(spark, tag="gold").collect()] == [1]
-
-    # ...and an identical untagged table reclaims exactly those files
-    d2 = str(tmp_path / "u")
-    _write(spark, d2, [(1, "a")])
-    log2 = SnapshotLog(d2)
-    log2.commit("overwrite")
-    old2 = set(list_data_files(d2))
-    _write(spark, d2, [(9, "z")], mode="append")
-    log2.commit("overwrite", files=[f for f in list_data_files(d2) if f not in old2])
-    assert set(log2.vacuum(retain_last=1)) == old2
 
 
 def test_read_changes_incremental_scan(spark, tmp_path):
@@ -797,8 +732,8 @@ def test_partition_spec_validation(spark, tmp_path):
 
 def test_partitioned_vacuum_and_time_travel(spark, tmp_path):
     """Partitioned layouts compose with the rest of the log: appends
-    keep history readable, vacuum removes only unreferenced files in
-    their subdirectories."""
+    keep history readable, and an overwrite leaves exactly the head's
+    files in the partition subdirectories."""
     d = str(tmp_path / "t")
     log = SnapshotLog(d)
     log.set_partition_spec([{"column": "lang", "transform": "identity"}])
@@ -808,11 +743,10 @@ def test_partitioned_vacuum_and_time_travel(spark, tmp_path):
     v2 = log.commit("append")
     assert {r.id for r in log.read(spark, v1).collect()} == {1}
     assert {r.id for r in log.read(spark, v2).collect()} == {1, 2}
-    # overwrite drops the old files; vacuum reclaims them from subdirs
+    # overwrite drops the old files from their subdirectories
     log.write_partitioned(_pdf(spark, [(3, "fr", 3)]), mode="overwrite")
     log.commit("overwrite")
-    deleted = log.vacuum(retain_last=1)
-    assert deleted == []  # overwrite already removed them physically
+    assert list_data_files(d) == log.snapshot()["files"]
     assert {r.id for r in log.read(spark).collect()} == {3}
 
 
@@ -839,7 +773,7 @@ def test_wap_stage_audit_publish(spark, tmp_path):
     assert log.latest_version() == v0
     # audit: the branch head sees base + staged
     assert sorted(r.id for r in log.read(spark, branch="audit").collect()) == [1, 2]
-    assert log.branches() == {"audit": v_stage}
+    assert log.latest_version(branch="audit") == v_stage
 
     v_pub = log.publish("audit")
     assert sorted(r.id for r in log.read(spark).collect()) == [1, 2]
@@ -877,8 +811,7 @@ def test_wap_publish_refuses_non_fast_forward(spark, tmp_path):
 
 def test_wap_multi_commit_branch_and_vacuum_retention(spark, tmp_path):
     """A branch accumulates commits (each building on the branch head,
-    not the trunk), vacuum never reclaims a branch head's staged files,
-    and publish carries the whole chain."""
+    not the trunk), and publish carries the whole chain."""
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
@@ -888,9 +821,6 @@ def test_wap_multi_commit_branch_and_vacuum_retention(spark, tmp_path):
         base = set(list_data_files(d))
         _write(spark, d, [(new_id, "x")], mode="append")
         log.commit_append([f for f in list_data_files(d) if f not in base], branch="wap")
-    assert sorted(r.id for r in log.read(spark, branch="wap").collect()) == [1, 2, 3]
-
-    assert log.vacuum(retain_last=1) == []  # staged files pinned by the branch head
     assert sorted(r.id for r in log.read(spark, branch="wap").collect()) == [1, 2, 3]
 
     log.publish("wap")
@@ -948,11 +878,10 @@ def test_merge_upsert_rewrites_only_touched_files(spark, tmp_path):
     # time travel: v0 still reads the pre-merge table exactly
     pre = {r.id: r.val for r in log.read(spark, v0).collect()}
     assert pre[3] == "a" and 999 not in pre and len(pre) == 10
-    # vacuum reclaims the replaced files once v0 leaves retention
-    deleted = log.vacuum(retain_last=1)
-    assert set(deleted) == set(files_v0) - kept
-    with pytest.raises(SnapshotExpired):
-        log.read(spark, v0).collect()
+    # copy-on-write: the replaced files stay on disk, unreferenced by v1
+    replaced = set(files_v0) - kept
+    assert replaced and replaced <= set(list_data_files(d))
+    assert replaced.isdisjoint(m1["files"])
 
 
 def test_merge_validation(spark, tmp_path):
@@ -973,18 +902,21 @@ def test_merge_validation(spark, tmp_path):
 
 
 def test_merge_on_branch_then_publish(spark, tmp_path):
-    """A merge staged on a branch composes with WAP: trunk unaffected
-    until publish; publish records the merge (non-append) operation."""
+    """A rewrite staged on a branch composes with WAP: trunk unaffected
+    until publish; publish records a non-append operation."""
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a"), (2, "b")])
     log = SnapshotLog(d)
     log.commit("overwrite")
-    log.merge(spark, spark.createDataFrame([(2, "UP")], "id long, val string"), on="id", branch="wap")
+    base = set(list_data_files(d))
+    _write(spark, d, [(1, "a"), (2, "UP")], mode="append")
+    staged = [f for f in list_data_files(d) if f not in base]
+    log.commit("overwrite", files=staged, branch="wap")
     assert {r.id: r.val for r in log.read(spark).collect()} == {1: "a", 2: "b"}
     assert {r.id: r.val for r in log.read(spark, branch="wap").collect()} == {1: "a", 2: "UP"}
     v = log.publish("wap")
     assert {r.id: r.val for r in log.read(spark).collect()} == {1: "a", 2: "UP"}
-    assert log.snapshot(v)["operation"] == "publish"  # merge chain is not appends-only
+    assert log.snapshot(v)["operation"] == "publish"  # overwrite chain is not appends-only
 
 
 # --- exactly-once streaming sink ---------------------------------------------
@@ -1048,21 +980,6 @@ def test_streaming_sink_replay_is_idempotent(spark, tmp_path):
 
 
 # --- review-fix regressions ---------------------------------------------------
-
-
-def test_vacuum_branch_commits_do_not_shrink_trunk_window(spark, tmp_path):
-    """Branch commits share the global version counter but must NOT
-    count against vacuum's trunk retain window: a staged branch merge
-    (which rewrites files) followed by vacuum(retain_last=1) must leave
-    the live trunk head fully readable."""
-    d = str(tmp_path / "t")
-    _write(spark, d, [(1, "a"), (2, "b")])
-    log = SnapshotLog(d)
-    log.commit("overwrite")
-    log.merge(spark, spark.createDataFrame([(2, "UP")], "id long, val string"), on="id", branch="audit")
-    assert log.vacuum(retain_last=1) == []  # trunk head + live branch head both pinned
-    assert {r.id: r.val for r in log.read(spark).collect()} == {1: "a", 2: "b"}
-    assert {r.id: r.val for r in log.read(spark, branch="audit").collect()} == {1: "a", 2: "UP"}
 
 
 def test_listing_excludes_spark_temporary_staging(spark, tmp_path):
@@ -1141,28 +1058,6 @@ def test_merge_keeps_partition_tuples_and_date_keys(spark, tmp_path):
     assert all("_p_identity__lang=" in f for f in log.snapshot()["files"])
     pruned = log.prune_partition(spark, {"lang": "en"})
     assert all("_p_identity__lang=en" in f for f in pruned.inputFiles())
-
-
-def test_drop_branch_and_published_heads_unpin(spark, tmp_path):
-    """vacuum keeps staged files only for LIVE branch heads: a published
-    head's state is the trunk's, and drop_branch retires an abandoned
-    audit — both stop pinning."""
-    d = str(tmp_path / "t")
-    _write(spark, d, [(1, "a")])
-    log = SnapshotLog(d)
-    log.commit("overwrite")
-    log.merge(spark, spark.createDataFrame([(1, "UP")], "id long, val string"), on="id", branch="audit")
-    assert log.vacuum(retain_last=1) == []  # live head pins its rewrite
-    log.publish("audit")
-    deleted = log.vacuum(retain_last=1)
-    assert deleted  # the replaced pre-merge file is now reclaimable
-    assert {r.val for r in log.read(spark).collect()} == {"UP"}
-
-    log.merge(spark, spark.createDataFrame([(1, "ABANDONED")], "id long, val string"), on="id", branch="dead")
-    assert log.vacuum(retain_last=1) == []
-    log.drop_branch("dead")
-    assert log.vacuum(retain_last=1)  # the abandoned staging is reclaimed
-    assert {r.val for r in log.read(spark).collect()} == {"UP"}
 
 
 def test_streaming_sink_into_partitioned_table(spark, tmp_path):
@@ -1267,26 +1162,6 @@ def test_merge_rejects_null_keys(spark, tmp_path):
     src = spark.createDataFrame([(None, "x"), (2, "y")], "id long, val string")
     with pytest.raises(ValueError, match="must be non-null"):
         log.merge(spark, src, on="id")
-
-
-def test_commit_refuses_dropped_branch_name(spark, tmp_path):
-    """Re-staging on a previously dropped branch name would leave the new
-    head unpinned (vacuum excludes dropped names from live heads) — the
-    freshly staged files could be reclaimed out from under the writer.
-    Dropped names stay retired (ADVICE r5)."""
-    d = str(tmp_path / "t")
-    _write(spark, d, [(1, "a")])
-    log = SnapshotLog(d)
-    log.commit("overwrite")
-    log.merge(
-        spark,
-        spark.createDataFrame([(1, "X")], "id long, val string"),
-        on="id",
-        branch="dead",
-    )
-    log.drop_branch("dead")
-    with pytest.raises(ValueError, match="dropped"):
-        log.commit("append", branch="dead")
 
 
 def test_manifest_cache_serves_immutable_manifests(spark, tmp_path):
