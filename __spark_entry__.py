@@ -14,6 +14,7 @@ exact, not approximate.
 from __future__ import annotations
 
 import os
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -63,6 +64,13 @@ def _materialize(spark: SparkSession, df: DataFrame) -> DataFrame:
             "this collect is sized for contract-scale data only"
         )
     return spark.createDataFrame(rows, df.schema)
+
+
+def _scratch(prefix: str) -> tempfile.TemporaryDirectory:
+    """Scratch directory for a row whose result lives on disk (stream
+    sinks, checkpoints, snapshot tables), removed when the ``with`` block
+    exits — materialize the result inside it."""
+    return tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -636,10 +644,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the top-scored candidate, but when the gap to the runner-up is
         # small, fall back to a secondary criterion (here: min vec_id)
         emb = load_table(spark, sf, "embeddings")
-        qdf = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-        )
-        top = C.ann_topk_bruteforce(emb, qdf, k=2, dim=64)
+        top = C.ann_topk_bruteforce(emb, _queries_df(spark, sf), k=2, dim=64)
         w = Window.partitionBy("query_id").orderBy("rank")
         gapped = (
             top.withColumn("next_cos", F.lead("cos").over(w))
@@ -700,10 +705,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from nilinker_spark.operators.candidates import filter_top_pred
 
         emb = load_table(spark, sf, "embeddings")
-        qdf = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
-        )
-        top = C.ann_topk_bruteforce(emb, qdf, k=5, dim=64)
+        top = C.ann_topk_bruteforce(emb, _queries_df(spark, sf), k=5, dim=64)
         preds = top.groupBy("query_id").agg(
             F.transform(
                 F.sort_array(F.collect_list(F.struct("rank", "vec_id"))),
@@ -746,24 +748,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         result is IDENTICAL to a from-scratch run over the full corpus, so
         the DuckDB twin is er_resolve's — resume correctness becomes a
         hash-exact contract row, not just a pytest."""
-        import shutil
-        import tempfile
-
         from nilinker_spark.pipeline import Pipeline
 
         docs = _docs(spark, sf)
         gazetteer = gazetteer_from_documents(docs)  # full-corpus gazetteer
         base_w = webtext_from_documents(docs.filter(F.col("doc_id") % 2 == 0))
         inc_w = webtext_from_documents(docs.filter(F.col("doc_id") % 2 == 1))
-        tmp = tempfile.mkdtemp(prefix="er_inc_")
-        try:
+        with _scratch("er_inc_") as tmp:
             pipe = Pipeline(spark, make_kb(seed=42), tmp, gazetteer=gazetteer)
             pipe.run(base_w).count()
             res = pipe.run_incremental(inc_w)
             # the checkpoint dir is temporary: materialize before cleanup
             return _materialize(spark, res)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     q["er_resolve_incremental"] = er_resolve_incremental
 
@@ -831,15 +827,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["er_pairwise_f1"] = er_pairwise_f1
 
     # --- multimodal: feature extraction over binary media ---------------------
-    def media_features(spark, sf):
-        """Media feature plumbing as a first-class contract row: documents'
-        bytes as the payload, md5-lattice features (multimodal._fake_features
-        — pure md5+affine math, so the DuckDB twin recomputes it exactly),
-        one row per (media, dim) to keep array columns out of the oracle."""
-        from nilinker_spark.operators import multimodal as M
-
-        docs = _docs(spark, sf)
-        media = docs.select(
+    def _media_df(spark, sf):
+        """documents as a media table: doc_id -> media_id, a kind cycling
+        image/audio/video, and the text's bytes as payload."""
+        return _docs(spark, sf).select(
             F.col("doc_id").alias("media_id"),
             F.try_element_at(
                 F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
@@ -847,7 +838,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).alias("kind"),
             F.encode("text", "utf-8").alias("payload"),
         )
-        feats = M.extract_media_features(media)
+
+    def media_features(spark, sf):
+        """Media feature plumbing as a first-class contract row: documents'
+        bytes as the payload, md5-lattice features (multimodal._fake_features
+        — pure md5+affine math, so the DuckDB twin recomputes it exactly),
+        one row per (media, dim) to keep array columns out of the oracle."""
+        from nilinker_spark.operators import multimodal as M
+
+        feats = M.extract_media_features(_media_df(spark, sf))
         return feats.select(
             "media_id",
             "kind",
@@ -858,18 +857,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "kind",
             "n_bytes",
             "dim",
-            # sign-preserving round: Spark's ROUND (BigDecimal HALF_UP)
-            # normalizes -0.0 to 0.0, DuckDB's keeps the IEEE sign — a
-            # tiny negative component that rounds to zero at 4 dp hashed
-            # differently (3 rows at sf0.1; sf0.01 has none, which is why
-            # every earlier gate passed).  -round(-v) is bit-identical to
-            # round(v) for every nonzero result (HALF_UP is symmetric)
-            # and yields -0.0 exactly where DuckDB does.
-            F.when(
-                F.col("v") < 0, -F.round(-F.col("v").cast("double"), 4)
-            )
-            .otherwise(F.round(F.col("v").cast("double"), 4))
-            .alias("val"),
+            # a tiny negative component that rounds to zero at 4 dp must
+            # keep its sign, as DuckDB's round does (3 rows at sf0.1)
+            C.signed_round("v", 4).alias("val"),
         )
 
     q["media_features"] = media_features
@@ -880,10 +870,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         table) drained with an availableNow trigger into parquet and
         re-read — proves through the driver gate that the streaming path
         reproduces the batch er_resolve output (same oracle twin)."""
-        import shutil
-        import tempfile
-
         from nilinker_spark.streaming.extract_stream import (
+            drain,
             read_webtext_stream,
             stream_resolve,
         )
@@ -901,28 +889,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         for df in handle:
             df.unpersist(blocking=True)
 
-        base = tempfile.mkdtemp(prefix="stream_resolve_")
-        try:
+        with _scratch("stream_resolve_") as base:
             in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
             webtext.write.mode("overwrite").parquet(in_dir)
             stream = read_webtext_stream(spark, in_dir)
-            out = stream_resolve(spark, stream, gazetteer, clusters)
-            (
-                out.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ck_dir)
-                .trigger(availableNow=True)
-                .outputMode("append")
-                .start()
-                .awaitTermination()
-            )
+            drain(stream_resolve(spark, stream, gazetteer, clusters), out_dir, ck_dir)
             result = spark.read.parquet(out_dir).select(
                 "url", "mention_id", "surface", "pos", "norm", "cluster_id"
             )
             # the stream sink dir is temporary: materialize before cleanup
             return _materialize(spark, result)
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
 
     q["stream_resolve"] = stream_resolve_batch
 
@@ -935,41 +911,29 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         end), then aggregate closed sessions to (user_id, n_sessions).
         The DuckDB twin recomputes the same >= gap split batch-side."""
         import datetime as dt
-        import shutil
-        import tempfile
 
-        from nilinker_spark.streaming.extract_stream import stream_sessionize
+        from nilinker_spark.streaming.extract_stream import drain, stream_sessionize
 
         ev = (
             load_table(spark, sf, "events")
             .select("event_id", "user_id", F.col("ts").cast("timestamp_ltz").alias("ts"))
         )
-        base = tempfile.mkdtemp(prefix="stream_sess_")
-        try:
+        with _scratch("stream_sess_") as base:
             in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
             ev.write.mode("overwrite").parquet(in_dir)
 
-            def drain():
-                stream = spark.readStream.schema(ev.schema).parquet(in_dir)
-                (
-                    stream_sessionize(stream)
-                    .writeStream.format("parquet")
-                    .option("path", out_dir)
-                    .option("checkpointLocation", ck_dir)
-                    .trigger(availableNow=True)
-                    .outputMode("append")
-                    .start()
-                    .awaitTermination()
-                )
+            def sessions():
+                return stream_sessionize(spark.readStream.schema(ev.schema).parquet(in_dir))
 
-            drain()
+            drain(sessions(), out_dir, ck_dir)
             mx = ev.agg(F.max("ts").alias("m")).first()["m"]
             # sentinel user_id -1: the events table's ids are non-negative
             sentinel = spark.createDataFrame(
                 [(-1, -1, mx + dt.timedelta(days=2))], ev.schema
             )
             sentinel.write.mode("append").parquet(in_dir)
-            drain()  # checkpoint resume: watermark passes every real session
+            # checkpoint resume: watermark passes every real session
+            drain(sessions(), out_dir, ck_dir)
             out = (
                 spark.read.parquet(out_dir)
                 .filter(F.col("user_id") != -1)
@@ -978,8 +942,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             # the stream sink dir is temporary: materialize before cleanup
             return _materialize(spark, out)
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
 
     q["stream_sessionize"] = stream_sessionize_counts
 
@@ -992,16 +954,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         features natively and re-derives the closure with a recursive CTE."""
         from nilinker_spark.operators import multimodal as M
 
-        docs = _docs(spark, sf)
-        media = docs.select(
-            F.col("doc_id").alias("media_id"),
-            F.try_element_at(
-                F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-                (F.col("doc_id") % 3 + 1).cast("int"),
-            ).alias("kind"),
-            F.encode("text", "utf-8").alias("payload"),
-        )
-        feats = M.extract_media_features(media)
+        feats = M.extract_media_features(_media_df(spark, sf))
         emb = feats.select(
             F.col("media_id").alias("vec_id"), F.col("features").alias("embedding")
         )
@@ -1019,16 +972,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         and the DuckDB twin recomputes them with substr/md5 natively."""
         from nilinker_spark.operators import multimodal as M
 
-        docs = _docs(spark, sf)
-        media = docs.select(
-            F.col("doc_id").alias("media_id"),
-            F.try_element_at(
-                F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-                (F.col("doc_id") % 3 + 1).cast("int"),
-            ).alias("kind"),
-            F.encode("text", "utf-8").alias("payload"),
-        )
-        fr = M.frame_sample(media, frame_bytes=64, every_n=4)
+        fr = M.frame_sample(_media_df(spark, sf), frame_bytes=64, every_n=4)
         return fr.select(
             "media_id",
             "frame_idx",
@@ -1046,20 +990,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         stepped range)."""
         from nilinker_spark.operators import multimodal as M
 
-        docs = _docs(spark, sf)
-        media = docs.select(
-            F.col("doc_id").alias("media_id"),
-            F.try_element_at(
-                F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-                (F.col("doc_id") % 3 + 1).cast("int"),
-            ).alias("kind"),
-            F.encode("text", "utf-8").alias("payload"),
+        media = _media_df(spark, sf).withColumn(
+            "meta",
             F.struct(
                 F.lit("text/plain").alias("mime"),
-                (F.col("doc_id") % 13 + 4).cast("int").alias("width"),
-                (F.col("doc_id") % 7 + 4).cast("int").alias("height"),
+                (F.col("media_id") % 13 + 4).cast("int").alias("width"),
+                (F.col("media_id") % 7 + 4).cast("int").alias("height"),
                 F.lit(0).cast("int").alias("duration_ms"),
-            ).alias("meta"),
+            ),
         )
         rz = M.resize_media(media, target_w=4, target_h=4)
         return rz.select(
@@ -1082,10 +1020,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the same counts batch-side from the er_extract_mentions twin —
         the streaming maintenance of the term-frequency/IC aggregation."""
         import datetime as dt
-        import shutil
-        import tempfile
 
         from nilinker_spark.streaming.extract_stream import (
+            drain,
             read_webtext_stream,
             stream_mentions,
             windowed_mention_counts,
@@ -1094,27 +1031,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = _docs(spark, sf)
         webtext = webtext_from_documents(docs)
         gazetteer = gazetteer_from_documents(docs)
-        base = tempfile.mkdtemp(prefix="stream_wc_")
-        try:
+        with _scratch("stream_wc_") as base:
             in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
             webtext.write.mode("overwrite").parquet(in_dir)
 
-            def drain():
+            def counts():
                 stream = read_webtext_stream(spark, in_dir)
-                counts = windowed_mention_counts(
-                    stream_mentions(spark, stream, gazetteer)
-                )
-                (
-                    counts.writeStream.format("parquet")
-                    .option("path", out_dir)
-                    .option("checkpointLocation", ck_dir)
-                    .trigger(availableNow=True)
-                    .outputMode("append")
-                    .start()
-                    .awaitTermination()
-                )
+                return windowed_mention_counts(stream_mentions(spark, stream, gazetteer))
 
-            drain()
+            drain(counts(), out_dir, ck_dir)
             mx = webtext.agg(F.max("warc_ts").alias("m")).first()["m"]
             # the watermark tracks event time of the MENTION stream, so
             # the sentinel page must extract >= 1 mention: its text is a
@@ -1134,7 +1059,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 webtext.schema,
             )
             sentinel.write.mode("append").parquet(in_dir)
-            drain()  # checkpoint resume: watermark passes every real window
+            # checkpoint resume: watermark passes every real window
+            drain(counts(), out_dir, ck_dir)
             out = (
                 spark.read.parquet(out_dir)
                 .filter(F.col("window_start") <= F.lit(mx))
@@ -1146,8 +1072,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             # the stream sink dir is temporary: materialize before cleanup
             return _materialize(spark, out)
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
 
     q["stream_windowed_counts"] = stream_windowed_counts
 
@@ -1162,26 +1086,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         result is exactly ``SELECT … WHERE doc_id BETWEEN 100 AND 349``
         — the DuckDB twin — and the row raises loudly if the plan did
         NOT skip at least one file (the property being evidenced)."""
-        import shutil
-        import tempfile
-
         from nilinker_spark.snapshots import SnapshotLog
 
         docs = _docs(spark, sf).select("doc_id", "lang", "n_chars")
-        tmp = tempfile.mkdtemp(prefix="snap_prune_")
-        try:
-            d = os.path.join(tmp, "docs")
-            log = SnapshotLog(d)
+        with _scratch("snap_prune_") as tmp:
+            log = SnapshotLog(os.path.join(tmp, "docs"))
             # ranged part files (the sorted-write layout a real ingest
             # produces) make the footer bounds selective
-            docs.filter(F.col("doc_id") % 2 == 0).repartitionByRange(
-                4, "doc_id"
-            ).write.mode("overwrite").parquet(d)
-            log.commit("overwrite")
-            docs.filter(F.col("doc_id") % 2 == 1).repartitionByRange(
-                4, "doc_id"
-            ).write.mode("append").parquet(d)
-            log.commit("append")
+            even = docs.filter(F.col("doc_id") % 2 == 0).repartitionByRange(4, "doc_id")
+            log.commit("overwrite", files=log.write(even, mode="overwrite"))
+            odd = docs.filter(F.col("doc_id") % 2 == 1).repartitionByRange(4, "doc_id")
+            log.commit_append(log.write(odd))
             pruned = log.prune(spark, "doc_id", lo=100, hi=349)
             n_total = len(log.snapshot()["files"])
             n_scanned = len(pruned.inputFiles())
@@ -1191,8 +1106,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 )
             # the table dir is temporary: materialize before cleanup
             return _materialize(spark, pruned)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     q["snapshot_prune"] = snapshot_prune
 
@@ -1213,20 +1126,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         mapped+promoted read loses, duplicates, and mislabels nothing
         across vintages, and time travel to v0 still sees the old
         schema."""
-        import shutil
-        import tempfile
-
         from nilinker_spark.snapshots import SnapshotLog
 
         docs = _docs(spark, sf).select(
             "doc_id", "lang", F.col("n_chars").cast("int").alias("n_chars")
         )
-        tmp = tempfile.mkdtemp(prefix="snap_evolve_")
-        try:
-            d = os.path.join(tmp, "docs")
-            log = SnapshotLog(d)
-            docs.filter(F.col("doc_id") % 2 == 0).write.mode("overwrite").parquet(d)
-            v0 = log.commit("overwrite")
+        with _scratch("snap_evolve_") as tmp:
+            log = SnapshotLog(os.path.join(tmp, "docs"))
+            even = docs.filter(F.col("doc_id") % 2 == 0)
+            v0 = log.commit("overwrite", files=log.write(even, mode="overwrite"))
             files_v0 = log.snapshot(v0)["files"]
             v1 = log.evolve(
                 renames={"n_chars": "len_chars"},
@@ -1235,18 +1143,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             if log.snapshot(v1)["files"] != files_v0:
                 raise RuntimeError("snapshot_evolve: evolve touched data files")
-            docs.filter(F.col("doc_id") % 2 == 1).select(
+            odd = docs.filter(F.col("doc_id") % 2 == 1).select(
                 "doc_id", F.col("n_chars").cast("long").alias("len_chars")
-            ).write.mode("append").parquet(d)
-            log.commit("append")
+            )
+            log.commit_append(log.write(odd))
             if log.read(spark, v0).columns != ["doc_id", "lang", "n_chars"]:
                 raise RuntimeError("snapshot_evolve: time travel lost the v0 schema")
             if dict(log.read(spark).dtypes)["len_chars"] != "bigint":
                 raise RuntimeError("snapshot_evolve: promotion lost the long type")
             # the table dir is temporary: materialize before cleanup
             return _materialize(spark, log.read(spark))
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     q["snapshot_evolve"] = snapshot_evolve
 
@@ -1266,19 +1172,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         raises loudly if no file was skipped, if the bucket-equality
         probe opened more than one new-vintage bucket, or if the layout
         columns leaked into the schema."""
-        import shutil
-        import tempfile
-
         from nilinker_spark.snapshots import SnapshotLog
 
         docs = _docs(spark, sf).select("doc_id", "lang", "n_chars")
-        tmp = tempfile.mkdtemp(prefix="snap_part_")
-        try:
-            d = os.path.join(tmp, "docs")
-            log = SnapshotLog(d)
+        with _scratch("snap_part_") as tmp:
+            log = SnapshotLog(os.path.join(tmp, "docs"))
             log.set_partition_spec([{"column": "lang", "transform": "identity"}])
-            log.write_partitioned(docs.filter(F.col("doc_id") % 2 == 0), mode="overwrite")
-            log.commit("overwrite")
+            even = docs.filter(F.col("doc_id") % 2 == 0)
+            log.commit("overwrite", files=log.write(even, mode="overwrite"))
             v_files = log.snapshot()["files"]
             v2 = log.set_partition_spec(
                 [
@@ -1288,8 +1189,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             if log.snapshot(v2)["files"] != v_files:
                 raise RuntimeError("snapshot_partition_prune: spec evolution touched data")
-            log.write_partitioned(docs.filter(F.col("doc_id") % 2 == 1), mode="append")
-            log.commit("append")
+            log.commit_append(log.write(docs.filter(F.col("doc_id") % 2 == 1)))
             pruned = log.prune_partition(spark, {"lang": "en"})
             if sorted(pruned.columns) != ["doc_id", "lang", "n_chars"]:
                 raise RuntimeError("snapshot_partition_prune: layout columns leaked")
@@ -1313,8 +1213,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 )
             # the table dir is temporary: materialize before cleanup
             return _materialize(spark, pruned)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     q["snapshot_partition_prune"] = snapshot_partition_prune
 
@@ -1330,22 +1228,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         so the hash gate proves publish loses, duplicates, and reorders
         nothing, and the row raises loudly if trunk isolation broke or
         the publish did not record its audit lineage."""
-        import shutil
-        import tempfile
-
-        from nilinker_spark.snapshots import SnapshotLog, list_data_files
+        from nilinker_spark.snapshots import SnapshotLog
 
         docs = _docs(spark, sf).select("doc_id", "lang", "n_chars")
-        tmp = tempfile.mkdtemp(prefix="snap_wap_")
-        try:
-            d = os.path.join(tmp, "docs")
-            log = SnapshotLog(d)
-            docs.filter(F.col("doc_id") % 2 == 0).write.mode("overwrite").parquet(d)
-            log.commit("overwrite")
+        with _scratch("snap_wap_") as tmp:
+            log = SnapshotLog(os.path.join(tmp, "docs"))
+            even = docs.filter(F.col("doc_id") % 2 == 0)
+            log.commit("overwrite", files=log.write(even, mode="overwrite"))
             n_even = log.read(spark).count()
-            base = set(list_data_files(d))
-            docs.filter(F.col("doc_id") % 2 == 1).write.mode("append").parquet(d)
-            staged = [f for f in list_data_files(d) if f not in base]
+            staged = log.write(docs.filter(F.col("doc_id") % 2 == 1))
             v_stage = log.commit_append(staged, branch="audit")
             if log.read(spark).count() != n_even:
                 raise RuntimeError("snapshot_wap: staged commit leaked into the trunk")
@@ -1355,8 +1246,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 raise RuntimeError("snapshot_wap: publish lost its audit lineage")
             # the table dir is temporary: materialize before cleanup
             return _materialize(spark, log.read(spark))
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     q["snapshot_wap"] = snapshot_wap
 
@@ -1373,18 +1262,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pre-merge row count).  The result is exactly the UPDATE+INSERT
         in SQL — the DuckDB twin — so the hash gate proves the merge
         loses, duplicates, and corrupts nothing."""
-        import shutil
-        import tempfile
-
         from nilinker_spark.snapshots import SnapshotLog
 
         docs = _docs(spark, sf).select("doc_id", "lang", "n_chars")
-        tmp = tempfile.mkdtemp(prefix="snap_merge_")
-        try:
-            d = os.path.join(tmp, "docs")
-            log = SnapshotLog(d)
-            docs.repartitionByRange(8, "doc_id").write.mode("overwrite").parquet(d)
-            v0 = log.commit("overwrite")
+        with _scratch("snap_merge_") as tmp:
+            log = SnapshotLog(os.path.join(tmp, "docs"))
+            ranged = docs.repartitionByRange(8, "doc_id")
+            v0 = log.commit("overwrite", files=log.write(ranged, mode="overwrite"))
             files_v0 = set(log.snapshot(v0)["files"])
             n0 = log.read(spark).count()
             updates = docs.filter(F.col("doc_id") < 50).withColumn(
@@ -1405,8 +1289,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 raise RuntimeError("snapshot_merge: merge broke time travel")
             # the table dir is temporary: materialize before cleanup
             return _materialize(spark, log.read(spark))
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     q["snapshot_merge"] = snapshot_merge
 
@@ -1424,14 +1306,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         odd half to incremental consumers.  The final table read is all
         documents — the DuckDB twin — so the hash gate proves the sink
         neither lost nor duplicated a row across drains and restarts."""
-        import shutil
-        import tempfile
-
         from nilinker_spark.snapshots import SnapshotLog
 
         docs = _docs(spark, sf).select("doc_id", "lang", "n_chars")
-        base = tempfile.mkdtemp(prefix="snap_sink_")
-        try:
+        with _scratch("snap_sink_") as base:
             src, tbl, ck = f"{base}/src", f"{base}/tbl", f"{base}/ck"
             log = SnapshotLog(tbl)
 
@@ -1468,8 +1346,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 )
             # the table dir is temporary: materialize before cleanup
             return _materialize(spark, log.read(spark))
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
 
     q["stream_snapshot_sink"] = stream_snapshot_sink
 

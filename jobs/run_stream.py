@@ -31,6 +31,7 @@ def main() -> None:
     from nilinker_spark.fixtures.kb import make_kb
     from nilinker_spark.functions.normalize import norm_form
     from nilinker_spark.streaming.extract_stream import (
+        drain,
         read_webtext_stream,
         stream_mentions,
     )
@@ -39,30 +40,11 @@ def main() -> None:
     gazetteer = {norm_form(s) for s, _, _ in kb.surface_forms}
     stream = read_webtext_stream(spark, args.input)
     mentions = stream_mentions(spark, stream, gazetteer)
-
-    queries = []
-    queries.append(
-        mentions.writeStream.format("parquet")
-        .option("path", args.output)
-        .option("checkpointLocation", args.checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    drain(mentions, args.output, args.checkpoint)
     if args.first_seen:
         from nilinker_spark.streaming.stateful import first_seen_forms
 
-        queries.append(
-            first_seen_forms(mentions)
-            .writeStream.format("parquet")
-            .option("path", args.first_seen)
-            .option("checkpointLocation", args.checkpoint + "_firstseen")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    for q in queries:
-        q.awaitTermination()
+        drain(first_seen_forms(mentions), args.first_seen, args.checkpoint + "_firstseen")
     print(f"stream drained to {args.output}")
     spark.stop()
 

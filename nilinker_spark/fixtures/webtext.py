@@ -57,21 +57,9 @@ def make_webtext(
     return rows
 
 
-WEBTEXT_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
-
-
 def write_webtext_parquet(spark, kb: KBFixture, path: str, seed: int = 42, n_rows: int = 2000) -> None:
     """Materialize the fixture as parquet (Iceberg stand-in in this sandbox)."""
-    from pyspark.sql import types as T
+    from nilinker_spark.sources.webtext import WEBTEXT_SCHEMA
 
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
-    )
     rows = make_webtext(kb, seed=seed, n_rows=n_rows)
-    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(path)
+    spark.createDataFrame(rows, WEBTEXT_SCHEMA).write.mode("overwrite").parquet(path)

@@ -82,6 +82,21 @@ def h60(col, width: int = 15) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, width), 16, 10).cast("long")
 
 
+def signed_round(col: str, scale: int) -> F.Column:
+    """ROUND that keeps the IEEE sign of zero, as DuckDB's does.
+
+    Spark's ROUND (BigDecimal HALF_UP) turns -0.0 into 0.0, so a tiny
+    negative value that rounds to zero hashes differently across the
+    engines.  ``-round(-v)`` equals ``round(v)`` for every nonzero result
+    (HALF_UP is symmetric) and yields -0.0 where DuckDB does.  The branch
+    tests the sign BIT — Spark renders it as a leading '-' — because
+    ``v < 0`` is false for an exact -0.0."""
+    v = F.col(col).cast("double")
+    return F.when(v.cast("string").startswith("-"), -F.round(-v, scale)).otherwise(
+        F.round(v, scale)
+    )
+
+
 def tokens_col(text_col: str = "text", min_len: int = 1) -> F.Column:
     t = F.split(F.col(text_col), " ")
     if min_len > 1:

@@ -527,9 +527,7 @@ class Pipeline:
         exactly that (rows, checksum), or they are deleted unpublished.
         """
         t0 = time.monotonic()
-        before = set(list_data_files(log.table_dir))
-        df.write.mode("append").parquet(log.table_dir)
-        new = [f for f in list_data_files(log.table_dir) if f not in before]
+        new = log.write(df)
         out = self.spark.read.parquet(*[os.path.join(log.table_dir, f) for f in new])
         stats = out.agg(F.count("*"), F.coalesce(F.bit_xor(F.xxhash64(*out.columns)), F.lit(0)))
         rows, checksum = map(int, stats.first())

@@ -59,9 +59,9 @@ against a DuckDB twin (``snapshot_*`` / ``stream_snapshot_sink``
 contract rows) and covered in tests/test_snapshots.py:
 
 - HIDDEN PARTITIONING + partition evolution (:meth:`set_partition_spec`
-  / :meth:`write_partitioned` / :meth:`prune_partition`) — transforms
-  over source columns, per-file tuples in the PATHS, self-describing
-  across spec changes;
+  / :meth:`write` / :meth:`prune_partition`) — transforms over source
+  columns, per-file tuples in the PATHS, self-describing across spec
+  changes;
 - BRANCH refs as write-audit-publish (:meth:`commit` ``branch=`` /
   :meth:`publish`) — staged commits invisible to trunk readers,
   fast-forward publish with lost-update guards;
@@ -70,6 +70,12 @@ contract rows) and covered in tests/test_snapshots.py:
   keep time travelling;
 - an exactly-once Structured Streaming sink (:meth:`streaming_sink`) —
   foreachBatch with idempotent batch-id commits, partition-spec-aware.
+
+Writes: :meth:`write` is the one way rows become part files of a
+table — beside the committed files, clustered by the partition spec in
+force, returning the new files' relative paths without publishing them.
+``Pipeline``'s stage commits, :meth:`merge`, :meth:`streaming_sink` and
+the contract rows all write through it and commit the returned list.
 
 Relation to the pipeline: this log is ``Pipeline``'s only commit
 mechanism.  Each stage write publishes a manifest with an explicit file
@@ -406,10 +412,7 @@ class SnapshotLog:
             op,
             files=head["files"],
             expect_latest=trunk,
-            _schema=head.get("schema"),
-            _aliases=dict(head.get("aliases") or {}),
-            _tombstones=list(head.get("tombstones") or []),
-            _partition_spec=list(head.get("partition_spec") or []),
+            _meta=head,
             # audit lineage, atomic with the CAS — manifests stay immutable
             _extra={"published_from": {"branch": branch, "version": head_v}},
         )
@@ -438,10 +441,7 @@ class SnapshotLog:
         expect_latest: int | None | str = "__any__",
         *,
         branch: str | None = None,
-        _schema: str | None = None,
-        _aliases: dict[str, list[str]] | None = None,
-        _tombstones: list[str] | None = None,
-        _partition_spec: list[dict] | None = None,
+        _meta: dict | None = None,
         _extra: dict | None = None,
         _fork_expect: int | None | str = "__any__",
     ) -> int:
@@ -470,6 +470,12 @@ class SnapshotLog:
         regressive manifest.  The remaining check-to-link window is
         covered by the ``os.link`` CAS itself, because the interloper
         must take this commit's version number to get ahead of it.
+
+        ``_meta`` is for the metadata-only commits (publish, evolve,
+        set_partition_spec, merge): a manifest-shaped dict whose
+        ``schema``, ``aliases``, ``tombstones`` and ``partition_spec``
+        this version takes as they are, in place of deriving them from
+        the files and the parent.
         """
         if files is None:
             files = list_data_files(self.table_dir)
@@ -503,28 +509,26 @@ class SnapshotLog:
                     f"{_fork_expect} but trunk is now {latest}; re-derive "
                     "and retry"
                 )
-        schema_json = (
-            _schema if _schema is not None else self._schema_json(operation, files, parent=latest)
-        )
-        # name-mapping metadata (evolve()): append/rollback carry the
-        # parent's mapping forward (metadata describes the table, not a
-        # batch); overwrite/compact physically rewrite every file under
-        # the CURRENT logical names, so the mapping resets to identity.
-        pm_parent = self.snapshot(latest) if latest is not None else {}
-        if _aliases is not None or _tombstones is not None:
-            aliases = dict(_aliases or {})
-            tombstones = list(_tombstones or [])
-        elif operation in ("append", "rollback") and latest is not None:
-            aliases = dict(pm_parent.get("aliases") or {})
-            tombstones = list(pm_parent.get("tombstones") or [])
-        else:
-            aliases, tombstones = {}, []
-        # the partition spec is table-level layout intent: it survives
-        # EVERY operation (an overwrite is rewritten under it, not freed
-        # from it) until set_partition_spec commits a new one
-        pspec = _partition_spec if _partition_spec is not None else (
-            pm_parent.get("partition_spec") or []
-        )
+        if _meta is None:
+            # name-mapping metadata (evolve()): append/rollback carry the
+            # parent's mapping forward (metadata describes the table, not
+            # a batch); overwrite/compact physically rewrite every file
+            # under the CURRENT logical names, so the mapping resets to
+            # identity.  The partition spec is table-level layout intent:
+            # it survives EVERY operation (an overwrite is rewritten under
+            # it, not freed from it) until set_partition_spec commits a
+            # new one.
+            parent = self.snapshot(latest) if latest is not None else {}
+            keep = ["partition_spec"]
+            if operation in ("append", "rollback"):
+                keep += ["aliases", "tombstones"]
+            _meta = {k: parent[k] for k in keep if k in parent}
+        schema_json = _meta.get("schema")
+        if schema_json is None:
+            schema_json = self._schema_json(operation, files, parent=latest)
+        aliases = dict(_meta.get("aliases") or {})
+        tombstones = list(_meta.get("tombstones") or [])
+        pspec = list(_meta.get("partition_spec") or [])
         schema_json = self._check_mapping(operation, schema_json, aliases, tombstones)
         manifest = {
             "version": version,
@@ -751,17 +755,22 @@ class SnapshotLog:
             "evolve",
             files=pm["files"],
             expect_latest=parent,
-            _schema=StructType(fields).json(),
-            _aliases=aliases,
-            _tombstones=tombstones,
+            _meta={
+                **pm,
+                "schema": StructType(fields).json(),
+                "aliases": aliases,
+                "tombstones": tombstones,
+            },
         )
 
     # --- hidden partitioning -------------------------------------------------
     def partition_spec(self, version: int | None = None) -> list[dict]:
         """The partition spec in force at ``version`` (default latest);
         ``[]`` for an unpartitioned table or an empty log."""
-        if version is None and self.latest_version() is None:
-            return []
+        if version is None:
+            version = self.latest_version()
+            if version is None:
+                return []
         return list(self.snapshot(version).get("partition_spec") or [])
 
     def set_partition_spec(self, spec: list[dict]) -> int:
@@ -775,60 +784,47 @@ class SnapshotLog:
         an empty log (declare layout before the first write)."""
         spec = _validate_spec(spec)
         parent = self.latest_version()
-        if parent is None:
-            return self.commit("evolve", files=[], _partition_spec=spec)
-        pm = self.snapshot(parent)
+        pm = {"files": []} if parent is None else self.snapshot(parent)
         return self.commit(
             "evolve",
             files=pm["files"],
             expect_latest=parent,
-            _schema=pm.get("schema"),
-            _aliases=dict(pm.get("aliases") or {}),
-            _tombstones=list(pm.get("tombstones") or []),
-            _partition_spec=spec,
+            _meta={**pm, "partition_spec": spec},
         )
 
-    def write_partitioned(self, df: DataFrame, mode: str = "append") -> None:
-        """Write ``df`` clustered by the current spec's derived partition
-        values.  The derived columns are layout-only: ``partitionBy``
-        encodes them in the file PATHS (the per-file partition tuple),
-        the data files carry the untouched source columns, and reads
-        resolve leaf files directly so the layout columns never appear
-        in any schema — hidden partitioning.  The ``repartition`` on the
-        derived tuple gives one file per tuple per write (the clustered
-        write real table formats ask of engines; production writers
-        would use a range/hash distribution mode to also bound file
-        size).  Commit separately (``commit``/``commit_append``) — a
-        crashed write publishes nothing."""
-        spec = self.partition_spec()
-        if not spec:
-            raise ValueError(
-                f"{self.table_dir}: no partition spec in force — "
-                "set_partition_spec first (or write plain parquet)"
-            )
-        self._write_clustered(df, spec, mode)
+    def write(self, df: DataFrame, mode: str = "append") -> list[str]:
+        """Write ``df`` as new part files beside the committed ones and
+        return their relative paths, sorted; nothing is published —
+        commit them with ``commit`` / ``commit_append`` (a crashed write
+        leaves files no manifest references, which no read sees).
+        ``mode="overwrite"`` is Spark's: the directory's files are
+        replaced.
 
-    def _write_clustered(self, df: DataFrame, spec: list[dict], mode: str) -> None:
-        """Derive the spec's partition tuple, cluster on it, and write
-        with the tuple in the file paths — shared by write_partitioned
-        and merge's rewrite so a merged file never loses its tuple."""
-        dtypes = dict(df.dtypes)
-        missing = [f["column"] for f in spec if f["column"] not in dtypes]
-        if missing:
-            raise ValueError(f"partition spec column(s) {missing} not in {sorted(dtypes)}")
+        Under a partition spec the write is clustered by the spec's
+        derived tuple: ``partitionBy`` encodes it in the file PATHS (the
+        per-file partition tuple), the data files carry the untouched
+        source columns, and reads resolve leaf files directly, so the
+        layout columns never appear in any schema — hidden partitioning.
+        The ``repartition`` on the tuple gives one file per tuple per
+        write (the clustered write real table formats ask of engines;
+        production writers would use a range/hash distribution mode to
+        also bound file size).  Without a spec the files are flat."""
         from pyspark.sql import functions as F
 
-        pcols = []
-        for f in spec:
-            name = _part_col_name(f)
-            df = df.withColumn(name, _transform_expr(f, dtypes[f["column"]]))
-            pcols.append(name)
-        (
-            df.repartition(*[F.col(c) for c in pcols])
-            .write.partitionBy(*pcols)
-            .mode(mode)
-            .parquet(self.table_dir)
-        )
+        before = set(list_data_files(self.table_dir))
+        spec = self.partition_spec()
+        writer = df.write
+        if spec:
+            dtypes = dict(df.dtypes)
+            missing = [f["column"] for f in spec if f["column"] not in dtypes]
+            if missing:
+                raise ValueError(f"partition spec column(s) {missing} not in {sorted(dtypes)}")
+            pcols = [_part_col_name(f) for f in spec]
+            for f, name in zip(spec, pcols):
+                df = df.withColumn(name, _transform_expr(f, dtypes[f["column"]]))
+            writer = df.repartition(*[F.col(c) for c in pcols]).write.partitionBy(*pcols)
+        writer.mode(mode).parquet(self.table_dir)
+        return [f for f in list_data_files(self.table_dir) if f not in before]
 
     def prune_partition(
         self,
@@ -1209,20 +1205,13 @@ class SnapshotLog:
                 return  # replayed batch: already committed exactly once
             if df.isEmpty():
                 return  # an empty batch commits nothing (no version bump)
-            before = set(list_data_files(self.table_dir))
-            spec = self.partition_spec()
-            if spec:
-                # a partitioned table ingests clustered: each batch's
-                # files carry their tuple (e.g. days(warc_ts) — one
-                # day's files prune for one day's queries)
-                self._write_clustered(df, spec, "append")
-            else:
-                df.write.mode("append").parquet(self.table_dir)
-            new = [f for f in list_data_files(self.table_dir) if f not in before]
             extra: dict = {"stream_batch_id": int(batch_id)}
             if txn_id is not None:
                 extra["stream_txn_id"] = txn_id
-            self.commit_append(new, _extra=extra)
+            # a partitioned table ingests clustered: each batch's files
+            # carry their tuple (e.g. days(warc_ts) — one day's files
+            # prune for one day's queries)
+            self.commit_append(self.write(df), _extra=extra)
 
         return _sink
 
@@ -1317,26 +1306,17 @@ class SnapshotLog:
             else:
                 overlap = not (bounds[1] < lo or bounds[0] > hi)
             (touched if overlap else kept).append(f)
-        before = set(list_data_files(self.table_dir))
         survivors = self._read_files(spark, m, sorted(touched)).join(
             source.select(on), on=on, how="left_anti"
         )
         # align column order so the union is positional-safe
         cols = [f.name for f in schema.fields]
         merged_rows = survivors.select(*cols).unionByName(source.select(*cols))
-        # a hidden-partitioned table's rewrite must stay clustered, or
-        # every merged file loses its tuple and prune_partition degrades
-        spec = list(m.get("partition_spec") or [])
-        if spec:
-            self._write_clustered(merged_rows, spec, "append")
-        else:
-            merged_rows.write.mode("append").parquet(self.table_dir)
-        new_files = [f for f in list_data_files(self.table_dir) if f not in before]
+        # write() keeps a hidden-partitioned table's rewrite clustered, so
+        # no merged file loses its tuple and prune_partition stays exact
         return self.commit(
             "merge",
-            files=sorted(kept) + new_files,
+            files=sorted(kept) + self.write(merged_rows),
             expect_latest=head_v,
-            _schema=m.get("schema"),
-            _aliases=dict(m.get("aliases") or {}),
-            _tombstones=list(m.get("tombstones") or []),
+            _meta=m,
         )

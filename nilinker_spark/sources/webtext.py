@@ -13,8 +13,21 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nilinker_spark.operators.corpus import _zip_gram_structs
+
+# The webtext input table (BASELINE.json input_hint), declared once: the
+# fixture writer, the streaming source and the tests all use it.
+WEBTEXT_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("warc_ts", T.TimestampType(), False),
+        T.StructField("html", T.BinaryType(), False),
+        T.StructField("text", T.StringType(), False),
+        T.StructField("lang", T.StringType(), False),
+    ]
+)
 
 
 def load_table(

@@ -13,17 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-WEBTEXT_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("html", T.BinaryType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("lang", T.StringType(), False),
-    ]
-)
+from nilinker_spark.sources.webtext import WEBTEXT_SCHEMA
 
 
 def read_webtext_stream(spark: SparkSession, path: str, max_files: int = 4) -> DataFrame:
@@ -86,27 +77,21 @@ def stream_resolve(
     )
 
 
-def run_stream_to_parquet(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    gazetteer: set[str],
-) -> None:
-    """Drain everything currently in ``input_path`` (availableNow) into a
-    parquet mentions table; restartable from the streaming checkpoint —
+def drain(stream_df: DataFrame, path: str, checkpoint: str) -> None:
+    """Drain everything the stream's source holds now (availableNow) into
+    a parquet table at ``path``, in append mode, and wait for it.  The
+    file sink is exactly-once: a rerun on the same ``checkpoint`` resumes
+    after the last committed micro-batch, so it adds only new input —
     the streaming analog of the batch pipeline's resume."""
-    stream = read_webtext_stream(spark, input_path)
-    mentions = stream_mentions(spark, stream, gazetteer)
-    q = (
-        mentions.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
+    (
+        stream_df.writeStream.format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .outputMode("append")
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
 
 
 def stream_sessionize(

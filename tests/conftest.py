@@ -27,18 +27,9 @@ def webtext_rows(kb):
 @pytest.fixture(scope="session")
 def webtext_frame(spark):
     """rows -> webtext DataFrame (url, warc_ts, html, text, lang)."""
-    from pyspark.sql import types as T
+    from nilinker_spark.sources.webtext import WEBTEXT_SCHEMA
 
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
-    )
-    return lambda rows: spark.createDataFrame(list(rows), schema)
+    return lambda rows: spark.createDataFrame(list(rows), WEBTEXT_SCHEMA)
 
 
 @pytest.fixture(scope="session")

@@ -155,30 +155,18 @@ def test_minhash_band_keys_match_longform(spark, gram_docs):
 
 def test_signed_round_matches_duckdb_negative_zero(spark):
     """r6: Spark ROUND drops the sign of negative zero; the
-    media_features val expression must keep it (DuckDB parity) while
-    matching plain round everywhere else."""
+    media_features val expression (corpus.signed_round) must keep it
+    (DuckDB parity) while matching plain round everywhere else — an exact
+    -0.0 input included, which a `v < 0` branch test would miss."""
     import duckdb
 
     vals = [-0.00004, -0.0, 0.0, 0.00004, -2.00005, 2.00005, -0.5, 0.12344999]
     df = spark.createDataFrame([(v,) for v in vals], "v double")
-    signed = (
-        F.when(F.col("v") < 0, -F.round(-F.col("v"), 4))
-        .otherwise(F.round(F.col("v"), 4))
-        .alias("val")
-    )
-    got = [str(r["val"]) for r in df.select(signed).collect()]
-    want = [
-        str(duckdb.sql(f"select round(cast({v!r} as double), 4)").fetchone()[0])
-        for v in vals
-    ]
-    # -0.0 input: Spark's `< 0` is false for negative zero, and the md5
-    # lattice cannot produce an exact -0.0 component, so that row is
-    # excluded from strict parity (both engines round the OTHER rows
-    # identically, including the tiny-negative -> '-0.0' case)
-    for v, g, w in zip(vals, got, want):
-        if v == 0.0 and str(v)[0] == "-":
-            continue
-        assert g == w, (v, g, w)
+    got = [str(r["val"]) for r in df.select(C.signed_round("v", 4).alias("val")).collect()]
+    # bound as a parameter: a '-0.0' SQL literal parses as a decimal zero
+    # and reaches round() without its sign
+    want = [str(duckdb.execute("select round(?::double, 4)", [v]).fetchone()[0]) for v in vals]
+    assert got == want
 
 
 def test_extraction_partitions_follow_parallelism(spark):

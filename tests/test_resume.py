@@ -12,23 +12,13 @@ import pytest
 
 from nilinker_spark.pipeline import STAGES, Pipeline
 from nilinker_spark.snapshots import SnapshotLog, list_data_files
+from nilinker_spark.sources.webtext import WEBTEXT_SCHEMA
 
 KEY = ["url", "mention_id", "pos"]
 
 
 def _df(spark, rows):
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
-    )
-    return spark.createDataFrame(list(rows), schema)
+    return spark.createDataFrame(list(rows), WEBTEXT_SCHEMA)
 
 
 def _sorted(pdf):

@@ -24,6 +24,11 @@ def _write(spark, path, rows, mode="overwrite", schema="id long, val string"):
     spark.createDataFrame(rows, schema).coalesce(1).write.mode(mode).parquet(path)
 
 
+def _stage(spark, log, rows, schema="id long, val string"):
+    """Write rows as one new uncommitted part file; returns its path."""
+    return log.write(spark.createDataFrame(rows, schema).coalesce(1))
+
+
 def test_commit_read_roundtrip_and_history(spark, tmp_path):
     d = str(tmp_path / "t")
     log = SnapshotLog(d)
@@ -123,23 +128,14 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert new[new.id == 2]["score"].iloc[0] == 7.5
 
 
-def test_pipeline_time_travel_across_incremental(spark, kb, webtext_rows, tmp_path_factory):
+def test_pipeline_time_travel_across_incremental(
+    spark, kb, webtext_rows, webtext_frame, tmp_path_factory
+):
     """run() then run_incremental(): the pre-batch mentions version stays
     readable and equals the pre-batch table exactly (time travel), while
     the latest version contains the appended batch."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
-    )
-    base = spark.createDataFrame(webtext_rows[:300], schema)
-    inc = spark.createDataFrame(webtext_rows[300:], schema)
+    base = webtext_frame(webtext_rows[:300])
+    inc = webtext_frame(webtext_rows[300:])
     ckpt = str(tmp_path_factory.mktemp("ckpt_snap_tt"))
     pipe = Pipeline(spark, kb, ckpt)
     pipe.run(base)
@@ -167,25 +163,14 @@ def test_pipeline_time_travel_across_incremental(spark, kb, webtext_rows, tmp_pa
 
 
 def test_wal_rollback_publishes_recovered_version(
-    spark, kb, webtext_rows, tmp_path_factory, crash_commit
+    spark, kb, webtext_rows, webtext_frame, tmp_path_factory, crash_commit
 ):
     """A batch that crashed between its appends and its batch commit
     leaves published snapshots pointing at its files; the next entry
     publishes a 'rollback' version whose read equals the pre-batch state
     exactly."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
-    )
-    base = spark.createDataFrame(webtext_rows[:300], schema)
-    inc = spark.createDataFrame(webtext_rows[300:], schema)
+    base = webtext_frame(webtext_rows[:300])
+    inc = webtext_frame(webtext_rows[300:])
     ckpt = str(tmp_path_factory.mktemp("ckpt_snap_wal"))
     pipe = Pipeline(spark, kb, ckpt)
     pipe.run(base)
@@ -212,23 +197,14 @@ def test_wal_rollback_publishes_recovered_version(
         pipe.read_stage("mentions", version=crashed_version)
 
 
-def test_compact_preserves_log_and_expires_priors(spark, kb, webtext_rows, tmp_path_factory):
+def test_compact_preserves_log_and_expires_priors(
+    spark, kb, webtext_rows, webtext_frame, tmp_path_factory
+):
     """compact() publishes an overwrite commit: the snapshot log keeps
     its history, the compact commit becomes latest, and pre-compact
     append versions expire loudly."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
-    )
-    base = spark.createDataFrame(webtext_rows[:300], schema)
-    inc = spark.createDataFrame(webtext_rows[300:], schema)
+    base = webtext_frame(webtext_rows[:300])
+    inc = webtext_frame(webtext_rows[300:])
     ckpt = str(tmp_path_factory.mktemp("ckpt_snap_compact"))
     pipe = Pipeline(spark, kb, ckpt)
     pipe.run(base)
@@ -323,8 +299,7 @@ def test_commit_append_resolves_conflicts(spark, tmp_path):
         log.commit("append", files_v0, expect_latest=v0)
 
     # commit_append re-reads the winner and lands the union
-    _write(spark, d, [(3, "c")], mode="append")
-    mine = [f for f in list_data_files(d) if f not in all_files]
+    mine = _stage(spark, log, [(3, "c")])
     v2 = log.commit_append(mine)
     final = set(log.snapshot(v2)["files"])
     assert set(all_files) <= final and set(mine) <= final
@@ -340,11 +315,9 @@ def test_commit_append_threaded_race(spark, tmp_path):
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
     log.commit("overwrite")
-    base = set(list_data_files(d))
-    _write(spark, d, [(2, "b")], mode="append")
-    batch1 = [f for f in list_data_files(d) if f not in base]
-    _write(spark, d, [(3, "c")], mode="append")
-    batch2 = [f for f in list_data_files(d) if f not in base and f not in batch1]
+    base = set(log.snapshot()["files"])
+    batch1 = _stage(spark, log, [(2, "b")])
+    batch2 = _stage(spark, log, [(3, "c")])
 
     barrier = threading.Barrier(2)
     results: list[int] = []
@@ -609,8 +582,9 @@ def test_partitioned_write_hides_layout_and_prunes(spark, tmp_path):
         ]
     )
     rows = [(i, "en" if i % 3 else "de", i * 10) for i in range(40)]
-    log.write_partitioned(_pdf(spark, rows), mode="overwrite")
+    new = log.write(_pdf(spark, rows), mode="overwrite")
     log.commit("overwrite")
+    assert log.snapshot()["files"] == new  # write returns exactly the files it wrote
 
     # hidden: the table schema carries ONLY source columns
     assert sorted(log.read(spark).columns) == ["id", "lang", "n"]
@@ -670,7 +644,7 @@ def test_partition_evolution_mixed_vintages(spark, tmp_path):
     d = str(tmp_path / "t")
     log = SnapshotLog(d)
     log.set_partition_spec([{"column": "lang", "transform": "identity"}])
-    log.write_partitioned(_pdf(spark, [(i, "en" if i % 2 else "de", i) for i in range(10)]))
+    log.write(_pdf(spark, [(i, "en" if i % 2 else "de", i) for i in range(10)]))
     v1 = log.commit("append")
     files_v1 = set(log.snapshot(v1)["files"])
 
@@ -681,7 +655,7 @@ def test_partition_evolution_mixed_vintages(spark, tmp_path):
         ]
     )
     assert set(log.snapshot(v2)["files"]) == files_v1  # zero data files touched
-    log.write_partitioned(_pdf(spark, [(i, "en" if i % 2 else "de", i) for i in range(10, 20)]))
+    log.write(_pdf(spark, [(i, "en" if i % 2 else "de", i) for i in range(10, 20)]))
     log.commit("append")
 
     got = log.prune_partition(spark, {"lang": "en", "id": 15})
@@ -698,8 +672,11 @@ def test_partition_evolution_mixed_vintages(spark, tmp_path):
     v4 = log.set_partition_spec([])
     assert log.partition_spec(v4) == []
     assert log.partition_spec(v2) != []
-    with pytest.raises(ValueError, match="no partition spec"):
-        log.write_partitioned(_pdf(spark, [(99, "en", 0)]))
+    # a write with no spec in force lands flat files and reads back exactly
+    flat = log.write(_pdf(spark, [(99, "en", 0)]))
+    assert flat and all("_p_" not in f and "/" not in f for f in flat)
+    log.commit_append(flat)
+    assert [(r.id, r.lang, r.n) for r in log.read_changes(spark, v4).collect()] == [(99, "en", 0)]
 
 
 def test_partition_null_values_skip_equality(spark, tmp_path):
@@ -709,7 +686,7 @@ def test_partition_null_values_skip_equality(spark, tmp_path):
     d = str(tmp_path / "t")
     log = SnapshotLog(d)
     log.set_partition_spec([{"column": "lang", "transform": "identity"}])
-    log.write_partitioned(
+    log.write(
         spark.createDataFrame([(1, "en", 1), (2, None, 2), (3, "de", 3)], "id long, lang string, n long")
     )
     log.commit("append")
@@ -727,7 +704,7 @@ def test_partition_spec_validation(spark, tmp_path):
         log.set_partition_spec([{"column": "id", "transform": "bucket"}])
     log.set_partition_spec([{"column": "nope", "transform": "identity"}])
     with pytest.raises(ValueError, match="not in"):
-        log.write_partitioned(_pdf(spark, [(1, "en", 1)]))
+        log.write(_pdf(spark, [(1, "en", 1)]))
 
 
 def test_partitioned_vacuum_and_time_travel(spark, tmp_path):
@@ -737,14 +714,14 @@ def test_partitioned_vacuum_and_time_travel(spark, tmp_path):
     d = str(tmp_path / "t")
     log = SnapshotLog(d)
     log.set_partition_spec([{"column": "lang", "transform": "identity"}])
-    log.write_partitioned(_pdf(spark, [(1, "en", 1)]))
+    log.write(_pdf(spark, [(1, "en", 1)]))
     v1 = log.commit("append")
-    log.write_partitioned(_pdf(spark, [(2, "de", 2)]))
+    log.write(_pdf(spark, [(2, "de", 2)]))
     v2 = log.commit("append")
     assert {r.id for r in log.read(spark, v1).collect()} == {1}
     assert {r.id for r in log.read(spark, v2).collect()} == {1, 2}
     # overwrite drops the old files from their subdirectories
-    log.write_partitioned(_pdf(spark, [(3, "fr", 3)]), mode="overwrite")
+    log.write(_pdf(spark, [(3, "fr", 3)]), mode="overwrite")
     log.commit("overwrite")
     assert list_data_files(d) == log.snapshot()["files"]
     assert {r.id for r in log.read(spark).collect()} == {3}
@@ -763,9 +740,7 @@ def test_wap_stage_audit_publish(spark, tmp_path):
     log = SnapshotLog(d)
     v0 = log.commit("overwrite")
 
-    base = set(list_data_files(d))
-    _write(spark, d, [(2, "b")], mode="append")
-    staged = [f for f in list_data_files(d) if f not in base]
+    staged = _stage(spark, log, [(2, "b")])
     v_stage = log.commit_append(staged, branch="audit")
 
     # trunk isolation: latest trunk read sees none of the staged rows
@@ -793,15 +768,10 @@ def test_wap_publish_refuses_non_fast_forward(spark, tmp_path):
     log = SnapshotLog(d)
     log.commit("overwrite")
 
-    base = set(list_data_files(d))
-    _write(spark, d, [(2, "b")], mode="append")
-    staged = [f for f in list_data_files(d) if f not in base]
-    log.commit_append(staged, branch="audit")
+    log.commit_append(_stage(spark, log, [(2, "b")]), branch="audit")
 
     # an interloping trunk append lands between stage and publish
-    base2 = set(list_data_files(d))
-    _write(spark, d, [(3, "c")], mode="append")
-    log.commit_append([f for f in list_data_files(d) if f not in base2])
+    log.commit_append(_stage(spark, log, [(3, "c")]))
 
     with pytest.raises(SnapshotConflict, match="not a fast-forward"):
         log.publish("audit")
@@ -818,9 +788,7 @@ def test_wap_multi_commit_branch_and_vacuum_retention(spark, tmp_path):
     v0 = log.commit("overwrite")
 
     for new_id in (2, 3):
-        base = set(list_data_files(d))
-        _write(spark, d, [(new_id, "x")], mode="append")
-        log.commit_append([f for f in list_data_files(d) if f not in base], branch="wap")
+        log.commit_append(_stage(spark, log, [(new_id, "x")]), branch="wap")
     assert sorted(r.id for r in log.read(spark, branch="wap").collect()) == [1, 2, 3]
 
     log.publish("wap")
@@ -908,9 +876,7 @@ def test_merge_on_branch_then_publish(spark, tmp_path):
     _write(spark, d, [(1, "a"), (2, "b")])
     log = SnapshotLog(d)
     log.commit("overwrite")
-    base = set(list_data_files(d))
-    _write(spark, d, [(1, "a"), (2, "UP")], mode="append")
-    staged = [f for f in list_data_files(d) if f not in base]
+    staged = _stage(spark, log, [(1, "a"), (2, "UP")])
     log.commit("overwrite", files=staged, branch="wap")
     assert {r.id: r.val for r in log.read(spark).collect()} == {1: "a", 2: "b"}
     assert {r.id: r.val for r in log.read(spark, branch="wap").collect()} == {1: "a", 2: "UP"}
@@ -1013,10 +979,7 @@ def test_branch_fork_race_raises(spark, tmp_path):
     with pytest.raises(SnapshotConflict, match="staged from trunk"):
         log.commit("append", branch="audit", expect_latest=None, _fork_expect=v0)
     # commit_append's retry loop resolves the same race transparently
-    base = set(SnapshotLog(d).snapshot()["files"])
-    _write(spark, d, [(3, "c")], mode="append")
-    staged = [f for f in list_data_files(d) if f not in base]
-    log.commit_append(staged, branch="audit")
+    log.commit_append(_stage(spark, log, [(3, "c")]), branch="audit")
     assert sorted(r.id for r in log.read(spark, branch="audit").collect()) == [1, 2, 3]
     log.publish("audit")
     assert sorted(r.id for r in log.read(spark).collect()) == [1, 2, 3]
@@ -1035,7 +998,7 @@ def test_merge_keeps_partition_tuples_and_date_keys(spark, tmp_path):
         [(1, "en", "2026-01-01"), (2, "de", "2026-01-02"), (3, "en", "2026-01-03")],
         "id long, lang string, day string",
     ).withColumn("day", F.col("day").cast("date"))
-    log.write_partitioned(df)
+    log.write(df)
     log.commit("append")
 
     import datetime
@@ -1108,7 +1071,7 @@ def test_prune_partition_conservative_on_unprovable_value_types(spark, tmp_path)
     log = SnapshotLog(d)
     log.set_partition_spec([{"column": "val", "transform": "identity"}])
     df = spark.createDataFrame([(1, 1e-07), (2, 0.5)], "id long, val double")
-    log.write_partitioned(df, mode="overwrite")
+    log.write(df, mode="overwrite")
     log.commit("overwrite")
     out = log.prune_partition(spark, {"val": 1e-07})
     assert [r.id for r in out.collect()] == [1]
@@ -1116,7 +1079,7 @@ def test_prune_partition_conservative_on_unprovable_value_types(spark, tmp_path)
     d2 = str(tmp_path / "t2")
     log2 = SnapshotLog(d2)
     log2.set_partition_spec([{"column": "flag", "transform": "identity"}])
-    log2.write_partitioned(
+    log2.write(
         spark.createDataFrame([(1, True), (2, False)], "id long, flag boolean"),
         mode="overwrite",
     )

@@ -6,23 +6,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nilinker_spark.functions.normalize import norm_form
-from nilinker_spark.streaming.extract_stream import read_webtext_stream, stream_mentions
+from nilinker_spark.streaming.extract_stream import drain, read_webtext_stream, stream_mentions
 from nilinker_spark.streaming.stateful import first_seen_forms
 
 
 def _drain(spark, in_path, out_path, ckpt, gazetteer):
     stream = read_webtext_stream(spark, in_path, max_files=2)
-    mentions = stream_mentions(spark, stream, gazetteer)
-    firsts = first_seen_forms(mentions)
-    q = (
-        firsts.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(first_seen_forms(stream_mentions(spark, stream, gazetteer)), out_path, ckpt)
     return spark.read.parquet(out_path)
 
 

@@ -3,17 +3,24 @@ respects event time; restart from the streaming checkpoint is a no-op."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
 from nilinker_spark.functions.normalize import norm_form
 from nilinker_spark.operators.extract import extract_mentions_df
 from nilinker_spark.streaming.extract_stream import (
+    drain,
     read_webtext_stream,
-    run_stream_to_parquet,
     stream_mentions,
     windowed_mention_counts,
 )
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MENTION_COLS = ["url", "mention_id", "surface", "pos", "norm"]
 
 
 @pytest.fixture(scope="module")
@@ -32,9 +39,9 @@ def webtext_path(spark, webtext_df, tmp_path_factory):
 def test_stream_equals_batch(spark, kb, gazetteer, webtext_path, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("stream_out"))
     ckpt = str(tmp_path_factory.mktemp("stream_ckpt"))
-    run_stream_to_parquet(spark, webtext_path, out, ckpt, gazetteer)
+    drain(stream_mentions(spark, read_webtext_stream(spark, webtext_path), gazetteer), out, ckpt)
 
-    streamed = spark.read.parquet(out).select("url", "mention_id", "surface", "pos", "norm")
+    streamed = spark.read.parquet(out).select(*MENTION_COLS)
     batch = extract_mentions_df(spark, spark.read.parquet(webtext_path), gazetteer)
     assert streamed.count() == batch.count()
     assert streamed.exceptAll(batch).isEmpty()
@@ -48,8 +55,47 @@ def test_stream_equals_batch(spark, kb, gazetteer, webtext_path, tmp_path_factor
 
     # restart with the same checkpoint: no new input -> no new rows
     n = streamed.count()
-    run_stream_to_parquet(spark, webtext_path, out, ckpt, gazetteer)
+    drain(stream_mentions(spark, read_webtext_stream(spark, webtext_path), gazetteer), out, ckpt)
     assert spark.read.parquet(out).count() == n
+
+
+def test_run_stream_job_first_seen(spark, kb, gazetteer, tmp_path_factory):
+    """jobs/run_stream.py end to end in its own process: the mentions it
+    drains equal the batch extraction of the same input, the first-seen
+    table holds one row per distinct norm, and a rerun on the same
+    checkpoint adds no row to either output."""
+    from nilinker_spark.fixtures.webtext import write_webtext_parquet
+
+    base = tmp_path_factory.mktemp("run_stream_job")
+    src, out, ckpt, first = (str(base / n) for n in ("in", "out", "ckpt", "first"))
+    write_webtext_parquet(spark, kb, src, n_rows=200)
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join([ROOT, os.environ.get("PYTHONPATH", "")]),
+        PYSPARK_SUBMIT_ARGS="--master local[2] --driver-memory 1g "
+        "--conf spark.ui.enabled=false pyspark-shell",
+    )
+    cmd = [sys.executable, os.path.join(ROOT, "jobs", "run_stream.py"), "--input", src,
+           "--output", out, "--checkpoint", ckpt, "--first-seen", first]
+
+    def run_job():
+        proc = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=600)
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        return spark.read.parquet(out), spark.read.parquet(first)
+
+    mentions, forms = run_job()
+    batch = extract_mentions_df(spark, spark.read.parquet(src), gazetteer)
+    streamed = mentions.select(*MENTION_COLS)
+    n_mentions = streamed.count()
+    assert n_mentions == batch.count() > 0
+    assert streamed.exceptAll(batch).isEmpty() and batch.exceptAll(streamed).isEmpty()
+    n_forms = forms.count()
+    assert n_forms == forms.select("norm").distinct().count()
+    assert n_forms == batch.select("norm").distinct().count()
+
+    mentions, forms = run_job()
+    assert mentions.count() == n_mentions
+    assert forms.count() == n_forms
 
 
 def test_windowed_counts_event_time(spark, gazetteer, webtext_path, tmp_path_factory):
@@ -88,16 +134,7 @@ def test_stream_resolve_matches_batch_pipeline(
     out_dir = str(tmp_path_factory.mktemp("sr_out"))
     ck = str(tmp_path_factory.mktemp("sr_ck"))
     stream = read_webtext_stream(spark, webtext_path)
-    resolved = stream_resolve(spark, stream, gazetteer, clusters)
-    q = (
-        resolved.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .outputMode("append")
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream_resolve(spark, stream, gazetteer, clusters), out_dir, ck)
 
     got = spark.read.parquet(out_dir).drop("warc_ts").toPandas()
     key = ["url", "mention_id", "pos"]
@@ -133,33 +170,24 @@ def test_stream_sessionize_matches_batch_session_windows(spark, tmp_path_factory
     out_base = tmp_path_factory.mktemp("sess_out")
     events.write.mode("overwrite").parquet(in_dir)
 
-    def drain():
+    def drain_sessions():
         stream = (
             spark.readStream.schema("event_id long, user_id string, ts timestamp")
             .parquet(in_dir)
         )
-        (
-            stream_sessionize(stream)
-            .writeStream.format("parquet")
-            .option("path", str(out_base / "data"))
-            .option("checkpointLocation", str(out_base / "ck"))
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-            .awaitTermination()
-        )
+        drain(stream_sessionize(stream), str(out_base / "data"), str(out_base / "ck"))
 
     # first drain: only sessions already past the watermark emit (append
     # mode holds open state in the checkpoint) — then a sentinel event far
     # beyond the horizon arrives, the RESTARTED query resumes from the
     # checkpoint, the watermark advances, and the held sessions flush
-    drain()
+    drain_sessions()
     sentinel = spark.createDataFrame(
         [(999, "uF", base + dt.timedelta(hours=20))],
         "event_id long, user_id string, ts timestamp",
     )
     sentinel.write.mode("append").parquet(in_dir)
-    drain()
+    drain_sessions()
 
     got = (
         spark.read.parquet(str(out_base / "data"))
