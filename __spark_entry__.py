@@ -73,15 +73,18 @@ def _scratch(prefix: str) -> tempfile.TemporaryDirectory:
     return tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True)
 
 
+def _er_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, set[str]]:
+    """(webtext, gazetteer) of the ER rows: webtext pages and the
+    extraction gazetteer, both derived from the sf documents table."""
+    docs = _docs(spark, sf_dir)
+    return webtext_from_documents(docs), gazetteer_from_documents(docs)
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full ER pipeline (extract -> block -> score -> cluster)
     over webtext derived from sf0.001 documents."""
-    sf_dir = "/root/testdata/sf0.001"
-    docs = _docs(spark, sf_dir)
-    webtext = webtext_from_documents(docs)
-    gazetteer = gazetteer_from_documents(docs)
-    kb = make_kb(seed=42)
-    return resolve(spark, webtext, kb, gazetteer=gazetteer)
+    webtext, gazetteer = _er_inputs(spark, "/root/testdata/sf0.001")
+    return resolve(spark, webtext, make_kb(seed=42), gazetteer=gazetteer)
 
 
 # ---------------------------------------------------------------------------
@@ -175,8 +178,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         tf = term_frequency(spark, sf)
         dim = tf.orderBy(F.desc("freq"), F.asc("token")).limit(50).select("token")
         members = C.doc_tokens(_docs(spark, sf), 3).join(F.broadcast(dim), "token")
-        w = Window.partitionBy("token").orderBy("doc_id")
-        capped = members.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 8)
+        capped = C.top_k(members, "token", [F.col("doc_id")], 8)
         a = capped.select(F.col("token"), F.col("doc_id").alias("doc_a"))
         b = capped.select(F.col("token"), F.col("doc_id").alias("doc_b"))
         return (
@@ -209,11 +211,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         scored = probes.crossJoin(F.broadcast(vocab)).withColumn(
             "lev", F.levenshtein("probe", "word")
         )
-        w = Window.partitionBy("probe").orderBy(F.asc("lev"), F.asc("word"))
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("probe", "word", "lev")
+        return C.top_k(scored, "probe", [F.asc("lev"), F.asc("word")], 1).select(
+            "probe", "word", "lev"
         )
 
     q["fuzzy_topk"] = fuzzy_topk
@@ -224,11 +223,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = _docs(spark, sf)
         toks = docs.select("lang", F.explode(C.tokens_col("text", 3)).alias("token"))
         counts = toks.groupBy("lang", "token").agg(F.count("*").alias("freq"))
-        w = Window.partitionBy("lang").orderBy(F.desc("freq"), F.asc("token"))
-        return (
-            counts.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 3)
-            .select("lang", "token", "freq", "rank")
+        return C.top_k(counts, "lang", [F.desc("freq"), F.asc("token")], 3).select(
+            "lang", "token", "freq", "rank"
         )
 
     q["window_topk"] = window_topk
@@ -609,10 +605,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 )
             )
         )
-        w = Window.orderBy(F.desc("revenue"), F.asc("l_orderkey"))
         return (
-            rev.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 10)
+            C.top_k(rev, [], [F.desc("revenue"), F.asc("l_orderkey")], 10)
             .select(
                 "l_orderkey",
                 "revenue",
@@ -634,8 +628,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .groupBy("n_name")
             .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"))
         )
-        w = Window.orderBy(F.desc("revenue"), F.asc("n_name"))
-        return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 5)
+        return C.top_k(joined, [], [F.desc("revenue"), F.asc("n_name")], 5)
 
     q["top_revenue_nations"] = top_revenue_nations
 
@@ -723,9 +716,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- ER pipeline stages over driver data (non-SQL-expressible: rows-only) ---
     def er_resolve(spark, sf):
-        docs = _docs(spark, sf)
-        webtext = webtext_from_documents(docs)
-        gazetteer = gazetteer_from_documents(docs)
+        webtext, gazetteer = _er_inputs(spark, sf)
         return resolve(spark, webtext, make_kb(seed=42), gazetteer=gazetteer)
 
     q["er_resolve"] = er_resolve
@@ -733,10 +724,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def er_extract_mentions(spark, sf):
         from nilinker_spark.operators.extract import extract_mentions_df
 
-        docs = _docs(spark, sf)
-        webtext = webtext_from_documents(docs)
-        gazetteer = gazetteer_from_documents(docs)
-        return extract_mentions_df(spark, webtext, gazetteer)
+        return extract_mentions_df(spark, *_er_inputs(spark, sf))
 
     q["er_extract_mentions"] = er_extract_mentions
 
@@ -876,9 +864,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             stream_resolve,
         )
 
-        docs = _docs(spark, sf)
-        webtext = webtext_from_documents(docs)
-        gazetteer = gazetteer_from_documents(docs)
+        webtext, gazetteer = _er_inputs(spark, sf)
         handle: list = []
         resolved = resolve(
             spark, webtext, make_kb(seed=42), gazetteer=gazetteer, cache_out=handle
@@ -1028,9 +1014,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             windowed_mention_counts,
         )
 
-        docs = _docs(spark, sf)
-        webtext = webtext_from_documents(docs)
-        gazetteer = gazetteer_from_documents(docs)
+        webtext, gazetteer = _er_inputs(spark, sf)
         with _scratch("stream_wc_") as base:
             in_dir, out_dir, ck_dir = f"{base}/in", f"{base}/out", f"{base}/ck"
             webtext.write.mode("overwrite").parquet(in_dir)

@@ -39,6 +39,19 @@ def _pad_id(col: str) -> F.Column:
     return F.lpad(F.col(col).cast("string"), _NODE_PAD, "0")
 
 
+def top_k(df: DataFrame, by: str | list[str], order: list[F.Column], k: int) -> DataFrame:
+    """The ``k`` first rows of each ``by`` group in ``order``, numbered
+    1..k in a ``rank`` column — ``row_number()`` then ``rank <= k``, the
+    one top-k shape of the repo.  ``by=[]`` ranks the whole frame.
+
+    Over a partition key Spark pushes the rank limit below the window
+    sort (``WindowGroupLimit``: each task keeps k rows per group before
+    the exchange).  ``order`` must end in a unique tie-break for the
+    result to be deterministic."""
+    w = Window.partitionBy(by).orderBy(order)
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 # Ownership registry for frames these operators persist (hot-shingle dims,
 # shingle/band tables — multi-consumer intermediates that Spark will not
 # exchange-reuse, see ngram_jaccard_pairs).  persist() entries live in the
@@ -239,7 +252,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     k: int = 3,
     threshold: float = 0.05,
-    persist_shingles: bool = True,
     max_shingle_df: int | None = None,
     metrics_out: dict | None = None,
 ) -> DataFrame:
@@ -251,15 +263,12 @@ def ngram_jaccard_pairs(
     The shingle table feeds THREE subtrees (both join sides + the
     per-doc sizes) and Spark does not reuse the exchange across them
     (the per-side projections defeat canonicalization — verified on the
-    executed plan), so by default it is persisted: one corpus scan + one
-    shingle explosion instead of three.  At 100 TB the same decision
-    holds, with MEMORY_AND_DISK spilling the cold partitions; pass
-    ``persist_shingles=False`` to keep the operator allocation-free
-    (callers that persist/write the shingle table themselves).
+    executed plan), so it is persisted: one corpus scan + one shingle
+    explosion instead of three.  At 100 TB the same decision holds, with
+    MEMORY_AND_DISK spilling the cold partitions; release it with
+    :func:`release_caches`.
     """
-    sh = shingles(docs, k)
-    if persist_shingles:
-        sh = _persist(sh)
+    sh = _persist(shingles(docs, k))
     # cap AFTER the persist: the df-count and the anti-join then read the
     # persisted shingle table instead of re-scanning the corpus (measured
     # ~1.5x on the contract query when ordered the other way)
@@ -337,7 +346,6 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     n_hashes: int = 6,
     band_size: int = 2,
-    persist_bands: bool = True,
     max_shingle_df: int | None = None,
     metrics_out: dict | None = None,
 ) -> DataFrame:
@@ -349,8 +357,8 @@ def minhash_lsh_pairs(
     Output: distinct candidate (doc_a, doc_b).
 
     The banded-signature table feeds both join sides; like
-    :func:`ngram_jaccard_pairs` it is persisted by default so the
-    shingle→minhash chain (the expensive part) runs once, not twice.
+    :func:`ngram_jaccard_pairs` it is persisted so the shingle→minhash
+    chain (the expensive part) runs once, not twice.
     """
     # band keys straight from the wide signature columns: band b's key is
     # the '|'-joined minhashes of its hash slots in hash_id order — the
@@ -375,11 +383,11 @@ def minhash_lsh_pairs(
             for b in range(n_bands)
         ]
     )
-    banded = wide.select("doc_id", F.explode(bands_arr).alias("e")).select(
-        "doc_id", F.col("e.band").alias("band"), F.col("e.band_key").alias("band_key")
+    banded = _persist(
+        wide.select("doc_id", F.explode(bands_arr).alias("e")).select(
+            "doc_id", F.col("e.band").alias("band"), F.col("e.band_key").alias("band_key")
+        )
     )
-    if persist_bands:
-        banded = _persist(banded)
     a = banded.select(F.col("doc_id").alias("doc_a"), "band", "band_key")
     b = banded.select(F.col("doc_id").alias("doc_b"), "band", "band_key")
     return (
@@ -433,17 +441,25 @@ def embedding_neardup_pairs(
     bit-identical to the naive per-pair form (same folds over the same
     row values, same multiply/divide order).
     """
-    a = emb.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("ea"),
-        _norm("embedding", dim=dim).alias("na"),
+    a, b = (_pair_side(emb, s, dim) for s in "ab")
+    return _verified_pairs(a.join(b, F.col("id_a") < F.col("id_b")), threshold, dim)
+
+
+def _pair_side(emb: DataFrame, s: str, dim: int | None, *extra: str) -> DataFrame:
+    """Side ``s`` ("a" or "b") of an embedding self-join:
+    (id_<s>, e<s>, n<s>, *extra), the norm computed once per vector,
+    before the join."""
+    return emb.select(
+        F.col("vec_id").alias(f"id_{s}"),
+        F.col("embedding").alias(f"e{s}"),
+        _norm("embedding", dim=dim).alias(f"n{s}"),
+        *extra,
     )
-    b = emb.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"),
-        _norm("embedding", dim=dim).alias("nb"),
-    )
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
+
+
+def _verified_pairs(pairs: DataFrame, threshold: float, dim: int | None) -> DataFrame:
+    """(id_a, id_b, cos) of the joined :func:`_pair_side` pairs whose
+    4-dp cosine reaches ``threshold``."""
     return (
         pairs.withColumn(
             "cos", F.round(_dot("ea", "eb", dim=dim) / (F.col("na") * F.col("nb")), 4)
@@ -511,11 +527,15 @@ def ann_topk_bruteforce(
             _dot("embedding", "q_embedding", dim=dim) / (F.col("_ne") * F.col("_nq")), 4
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
+    return _rank_neighbors(scored, k)
+
+
+def _rank_neighbors(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, vec_id, cos, rank): the ``k`` highest-cosine vectors of
+    each query, ties to the lower vec_id — the tail every ANN path
+    shares, so their outputs compare row for row."""
+    return top_k(scored, "query_id", [F.desc("cos"), F.asc("vec_id")], k).select(
+        "query_id", "vec_id", "cos", "rank"
     )
 
 
@@ -597,12 +617,7 @@ def ann_topk_lsh(
     q_sig = queries.withColumn("sig", lsh_signature("q_embedding", planes, dim=dim))
     cands = emb_sig.join(F.broadcast(q_sig), "sig").filter(F.col("vec_id") != F.col("query_id"))
     scored = cands.withColumn("cos", F.round(_cosine("embedding", "q_embedding", dim=dim), 4))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _rank_neighbors(scored, k)
 
 
 def _gram_strings(k: int) -> F.Column:
@@ -727,6 +742,12 @@ def remove_stopwords(docs: DataFrame) -> DataFrame:
 _STOPWORDS = ["the", "a", "an", "of", "and", "to", "in", "is", "was", "for", "on", "that", "with", "as"]
 
 
+def _stopword_hits(toks: F.Column) -> F.Column:
+    """The tokens of ``toks`` that are stopwords (in order, repeats kept)."""
+    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
+    return F.filter(toks, lambda t: F.array_contains(stop_arr, t))
+
+
 def _quality_cols() -> dict[str, F.Column]:
     """The webtext quality metrics as named closed-form columns over a
     ``text`` column — the ONE definition text_quality, source_stats and
@@ -734,8 +755,7 @@ def _quality_cols() -> dict[str, F.Column]:
     one place)."""
     toks = tokens_col("text")
     n = F.size(toks)
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
+    n_stop = F.size(_stopword_hits(toks))
     alpha_chars = F.length(F.regexp_replace(F.col("text"), "[^a-z]", ""))
     return {
         "n_tokens": n,
@@ -808,8 +828,7 @@ def token_counts(docs: DataFrame) -> DataFrame:
 def lang_id(docs: DataFrame) -> DataFrame:
     """(doc_id, pred_lang, en_ratio) — stopword-hit-ratio language heuristic."""
     toks = tokens_col("text")
-    stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
-    ratio = F.round(F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t))) / F.size(toks), 4)
+    ratio = F.round(F.size(_stopword_hits(toks)) / F.size(toks), 4)
     return docs.select(
         "doc_id",
         F.when(ratio >= 0.05, F.lit("en")).otherwise(F.lit("other")).alias("pred_lang"),
@@ -845,27 +864,9 @@ def embedding_neardup_lsh(
     sig = emb.withColumn(
         "sig", lsh_signature("embedding", hyperplane_weights(n_planes, dim), dim=dim)
     )
-    a = sig.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("ea"),
-        _norm("embedding", dim=dim).alias("na"),
-        "sig",
-    )
-    b = sig.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"),
-        _norm("embedding", dim=dim).alias("nb"),
-        "sig",
-    )
-    return (
-        a.join(b, "sig")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos", F.round(_dot("ea", "eb", dim=dim) / (F.col("na") * F.col("nb")), 4)
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
+    a, b = (_pair_side(sig, s, dim, "sig") for s in "ab")
+    pairs = a.join(b, "sig").filter(F.col("id_a") < F.col("id_b"))
+    return _verified_pairs(pairs, threshold, dim)
 
 
 def dedup_clusters(
@@ -889,22 +890,30 @@ def dedup_clusters(
     all-pairs), CC is O(log n) rounds above the driver threshold and one
     collect below it — both paths parity-tested.
     """
-    from nilinker_spark.operators.clustering import connected_components
-
     pairs = minhash_lsh_pairs(
         docs, n_hashes, band_size, max_shingle_df=max_shingle_df, metrics_out=metrics_out
     )
-    pad = _pad_id  # 20-char zero-pad: numeric order for the full bigint range
-    edges = pairs.select(pad("doc_a").alias("src"), pad("doc_b").alias("dst"))
-    labels = connected_components(edges)
-    ids = docs.select(pad("doc_id").alias("node"), F.col("doc_id"))
+    return _survivors(docs, "doc_id", pairs, "doc_a", "doc_b")
+
+
+def _survivors(nodes: DataFrame, key: str, pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """(key, cluster_id, is_canonical): the connected components of the
+    id pairs ``(a, b)`` over every ``key`` of ``nodes``; a component's
+    numerically smallest member is its canonical survivor, a singleton
+    its own.  Ids are zero-padded (:func:`_pad_id`), so the
+    component-min label of clustering.connected_components orders
+    numerically over the full bigint range, as the DuckDB twins do."""
+    from nilinker_spark.operators.clustering import connected_components
+
+    labels = connected_components(pairs.select(_pad_id(a).alias("src"), _pad_id(b).alias("dst")))
     return (
-        ids.join(labels, "node", "left")
+        nodes.select(_pad_id(key).alias("node"), F.col(key))
+        .join(labels, "node", "left")
         .select(
-            "doc_id",
+            key,
             F.coalesce(F.col("label"), F.col("node")).cast("bigint").alias("cluster_id"),
         )
-        .withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
+        .withColumn("is_canonical", F.col(key) == F.col("cluster_id"))
     )
 
 
@@ -920,11 +929,8 @@ def _ivf_assign(emb: DataFrame, cents: DataFrame, dim: int | None = None) -> Dat
     scored = emb.join(F.broadcast(cents)).withColumn(
         "cos_c", F.round(_cosine("embedding", "c_embedding", dim=dim), 4)
     )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos_c"), F.asc("cell"))
-    return (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select("vec_id", "cell")
+    return top_k(scored, "vec_id", [F.desc("cos_c"), F.asc("cell")], 1).select(
+        "vec_id", "cell"
     )
 
 
@@ -932,7 +938,6 @@ def ivf_cells(
     emb: DataFrame,
     n_centroids: int = 16,
     lloyd_iters: int = 0,
-    emb_count: int | None = None,
     dim: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: (centroids, assignments).
@@ -958,11 +963,8 @@ def ivf_cells(
     the recall lift is measured in tests/test_corpus.py.  The PLAN —
     broadcast centroids → argmax cell → per-cell search — is identical
     trained or not, and the plan is what must survive 100 TB.
-
-    ``emb_count``: pass the (often already-known) table size to skip the
-    count job (VERDICT r3 "What's wrong" #3).
     """
-    n = emb.count() if emb_count is None else emb_count
+    n = emb.count()
     stride = max(1, (n + n_centroids - 1) // n_centroids)
     cents = (
         emb.filter(F.pmod(h60(F.col("vec_id").cast("string")), F.lit(stride)) == 0)
@@ -1014,22 +1016,14 @@ def ann_topk_ivf(
     q_scored = queries.join(F.broadcast(cents)).withColumn(
         "cos_c", F.round(_cosine("q_embedding", "c_embedding", dim=dim), 4)
     )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("cos_c"), F.asc("cell"))
-    probes = (
-        q_scored.withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= n_probe)
-        .select("query_id", "q_embedding", "cell")
+    probes = top_k(q_scored, "query_id", [F.desc("cos_c"), F.asc("cell")], n_probe).select(
+        "query_id", "q_embedding", "cell"
     )
     cand = emb.join(assign, "vec_id").join(
         F.broadcast(probes), "cell"
     ).filter(F.col("vec_id") != F.col("query_id"))
     scored = cand.withColumn("cos", F.round(_cosine("embedding", "q_embedding", dim=dim), 4))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _rank_neighbors(scored, k)
 
 
 def clean_corpus(
@@ -1072,21 +1066,8 @@ def embedding_neardup_clusters(
 
     Same zero-padded numeric component-min rule, same scale shape
     (signature equi-join feeds CC, never all-pairs)."""
-    from nilinker_spark.operators.clustering import connected_components
-
     pairs = embedding_neardup_lsh(emb, threshold, n_planes, dim)
-    pad = _pad_id  # 20-char zero-pad: numeric order for the full bigint range
-    edges = pairs.select(pad("id_a").alias("src"), pad("id_b").alias("dst"))
-    labels = connected_components(edges)
-    ids = emb.select(pad("vec_id").alias("node"), F.col("vec_id"))
-    return (
-        ids.join(labels, "node", "left")
-        .select(
-            "vec_id",
-            F.coalesce(F.col("label"), F.col("node")).cast("bigint").alias("cluster_id"),
-        )
-        .withColumn("is_canonical", F.col("vec_id") == F.col("cluster_id"))
-    )
+    return _survivors(emb, "vec_id", pairs, "id_a", "id_b")
 
 
 def decontaminate(

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from nilinker_spark.operators.corpus import top_k
 from nilinker_spark.oracle import MAX_BLOCK_FORMS, N_ANCHORS
 
 
@@ -88,11 +89,8 @@ def candidate_pairs(
     sb = salted.select("sub_key", F.col("norm").alias("norm_b"))
     sub_pairs = sa.join(sb, "sub_key").filter(F.col("norm_a") < F.col("norm_b"))
 
-    w = Window.partitionBy("block_key").orderBy("norm")
-    anchors = (
-        hot.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n_anchors)
-        .select("block_key", F.col("norm").alias("anchor"))
+    anchors = top_k(hot, "block_key", [F.col("norm")], n_anchors).select(
+        "block_key", F.col("norm").alias("anchor")
     )
     anchor_pairs = (
         anchors.join(hot.select("block_key", "norm"), "block_key")

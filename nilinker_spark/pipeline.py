@@ -409,6 +409,9 @@ class Pipeline:
         # explicit extraction gazetteer (same contract as resolve()'s
         # keyword arg); None derives it from the KB surface forms
         self.gazetteer = gazetteer
+        # one log per stage for the pipeline's lifetime: its manifest
+        # cache then carries from recovery to the stage loop and reads
+        self._logs: dict[str, SnapshotLog] = {}
 
     def _gazetteer(self) -> set[str]:
         if self.gazetteer is not None:
@@ -419,7 +422,10 @@ class Pipeline:
         return os.path.join(self.ckpt_dir, stage)
 
     def _log(self, stage: str) -> SnapshotLog:
-        return SnapshotLog(self._path(stage))
+        log = self._logs.get(stage)
+        if log is None:
+            log = self._logs[stage] = SnapshotLog(self._path(stage))
+        return log
 
     # --- batches -------------------------------------------------------------
     def run(self, webtext: DataFrame, stop_after: str | None = None) -> DataFrame | None:

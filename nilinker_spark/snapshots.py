@@ -320,7 +320,8 @@ class SnapshotLog:
         self.table_dir = table_dir.rstrip("/")
         self.log_dir = self.table_dir + _SNAP_SUFFIX
         # Published manifests are immutable (os.link CAS), so parsed
-        # manifests cache per instance keyed by version.  Without this,
+        # manifests cache per instance keyed by version, and commit()
+        # caches the one it publishes.  Without this,
         # latest_version and every commit's parent read
         # re-opened and re-parsed manifest JSON — a long-lived streaming
         # table committing one version per batch degraded quadratically
@@ -568,6 +569,7 @@ class SnapshotLog:
             ) from None
         finally:
             os.remove(tmp)
+        self._manifest_cache[version] = manifest
         return version
 
     def commit_append(

@@ -641,15 +641,11 @@ def read_obo_kb(spark: SparkSession, path: str, namespace: str | None = None):
         "is_synonym", F.lit(True)
     )
     # synonyms take precedence on collision: sort within alias, keep first
-    from pyspark.sql import Window
+    from nilinker_spark.operators.corpus import top_k
 
-    w = Window.partitionBy("alias").orderBy(F.desc("is_synonym"), F.asc("kb_id"))
-    aliases = (
-        names.unionByName(syns)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    aliases = top_k(
+        names.unionByName(syns), "alias", [F.desc("is_synonym"), F.asc("kb_id")], 1
+    ).drop("rank")
     edges = live.select(F.col("kb_id").alias("child_id"), F.explode("parents").alias("parent_id"))
     return concepts, aliases, edges
 

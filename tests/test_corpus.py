@@ -216,7 +216,12 @@ def test_hot_shingle_cap_bounds_boilerplate_bucket(spark):
     the shared-shingle join sees the O(n²) bucket; with the cap, the
     boilerplate shingle is dropped (and reported — no silent truncation)
     while genuinely-similar pairs survive via their other shingles."""
-    from nilinker_spark.operators.corpus import cap_shingle_df, ngram_jaccard_pairs, shingles
+    from nilinker_spark.operators.corpus import (
+        cap_shingle_df,
+        ngram_jaccard_pairs,
+        release_caches,
+        shingles,
+    )
 
     boiler = "copyright acme corp"
     rows = []
@@ -237,12 +242,11 @@ def test_hot_shingle_cap_bounds_boilerplate_bucket(spark):
     # bucket bound: no capped shingle has df > 10
     assert capped.groupBy("sh").count().filter("count > 10").count() == 0
 
-    uncapped_pairs = ngram_jaccard_pairs(docs, threshold=0.01, persist_shingles=False)
-    capped_pairs = ngram_jaccard_pairs(
-        docs, threshold=0.01, persist_shingles=False, max_shingle_df=10
-    )
+    uncapped_pairs = ngram_jaccard_pairs(docs, threshold=0.01)
+    capped_pairs = ngram_jaccard_pairs(docs, threshold=0.01, max_shingle_df=10)
     got_capped = {(r["doc_a"], r["doc_b"]) for r in capped_pairs.collect()}
     got_uncapped = {(r["doc_a"], r["doc_b"]) for r in uncapped_pairs.collect()}
+    release_caches()
     # uncapped: boilerplate connects everything; capped: only the real dup
     assert (0, 1) in got_capped
     assert len(got_capped) < len(got_uncapped)
@@ -251,16 +255,17 @@ def test_hot_shingle_cap_bounds_boilerplate_bucket(spark):
 
 def test_minhash_cap_drops_boilerplate_from_signatures(spark):
     """With the cap, LSH candidates come from informative shingles only."""
-    from nilinker_spark.operators.corpus import minhash_lsh_pairs
+    from nilinker_spark.operators.corpus import minhash_lsh_pairs, release_caches
 
     boiler = "copyright acme corp"
     rows = [(i, f"{boiler} unique{i}a unique{i}b unique{i}c unique{i}d") for i in range(12)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = minhash_lsh_pairs(docs, persist_bands=False, max_shingle_df=6)
+    capped = minhash_lsh_pairs(docs, max_shingle_df=6)
     # docs share ONLY boilerplate -> no candidates once capped
     assert capped.count() == 0
-    uncapped = minhash_lsh_pairs(docs, persist_bands=False)
+    uncapped = minhash_lsh_pairs(docs)
     assert uncapped.count() > 0
+    release_caches()
 
 
 def test_dedup_clusters_end_to_end(spark):

@@ -248,3 +248,21 @@ def test_trainprep_plan_shapes(spark, tmp_path_factory):
         assert not has_python_stage(ps)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def test_top_k_keeps_window_group_limit(spark):
+    """corpus.top_k over a partition key keeps Spark's rank-limit
+    pushdown: the executed plan limits each group to k rows below the
+    window (WindowGroupLimit), for k=1 as for k>1.  A global window
+    (by=[]) gets none — the plan the global top-k rows accept."""
+    from nilinker_spark.operators.corpus import top_k
+    from nilinker_spark.plans import explain_str
+
+    df = spark.range(200).select((F.col("id") % 7).alias("g"), "id")
+    for by, k, want in (("g", 1, True), ("g", 5, True), ([], 5, False)):
+        out = top_k(df, by, [F.desc("id")], k)
+        assert len(out.collect()) == (7 * k if by else k)
+        tree = explain_str(out).split("\n\n")[0]  # the node tree, not the details
+        assert "== Final Plan ==" in tree
+        final = tree.split("== Initial Plan ==")[0]
+        assert ("WindowGroupLimit" in final) == want, (by, k, final)

@@ -373,3 +373,36 @@ def test_empty_append_writes_no_file(spark, kb, webtext_rows, tmp_path):
                 k: heads[st]["lineage"][k] for k in ("rows", "checksum")
             }, st
     assert pipe.read_stage("mentions").count() == pipe.read_stage("resolved").count() == 2 * n_base
+
+
+def test_pipeline_reads_no_manifest_it_wrote(spark, kb, webtext_rows, tmp_path, monkeypatch):
+    """A Pipeline keeps one SnapshotLog per stage and every commit caches
+    the manifest it publishes: a second run_incremental on the same
+    Pipeline opens no manifest file twice, and none this process wrote —
+    recovery, the stage loop and the final read take them from memory."""
+    import collections
+    import re
+
+    from nilinker_spark import snapshots
+
+    pipe = Pipeline(spark, kb, str(tmp_path))
+    pipe.run(_df(spark, webtext_rows[:32])).count()
+    pipe.run_incremental(_df(spark, webtext_rows[32:48])).count()
+    opened = collections.Counter()
+
+    def spy(path, *args, **kwargs):
+        if re.search(r"__snaplog/v\d+\.json$", str(path)):
+            opened[os.path.normpath(str(path))] += 1
+        return open(path, *args, **kwargs)
+
+    monkeypatch.setattr(snapshots, "open", spy, raising=False)
+    res = pipe.run_incremental(_df(spark, webtext_rows[48:64]))
+    assert res.count() > 0
+    assert all(n == 1 for n in opened.values()), opened
+    # every manifest of this checkpoint was written by this process
+    written = {
+        os.path.normpath(os.path.join(str(tmp_path), f"{st}__snaplog", n))
+        for st in STAGES
+        for n in os.listdir(tmp_path / f"{st}__snaplog")
+    }
+    assert not set(opened) & written, sorted(opened)

@@ -3,7 +3,9 @@
 The ".explain and iterate" loop, made inspectable: for each headline
 query the formatted plan is recorded together with the properties that
 matter at 100 TB (pushed filters, read schemas, broadcast joins, python
-stages).  Regenerate after plan-affecting changes:
+stages).  The plans come from ``tools/plan_dump.plans`` (same session,
+same masking as the per-query dumps).  Regenerate after plan-affecting
+changes:
 
     python tools/explain_audit.py
 """
@@ -44,9 +46,6 @@ HEADLINE = [
 
 
 def main() -> None:
-    import __spark_entry__ as entrymod
-
-    from nilinker_spark.config import get_spark
     from nilinker_spark.plans import (
         explain_str,
         has_broadcast_join,
@@ -54,10 +53,9 @@ def main() -> None:
         pushed_filters,
         read_schema_columns,
     )
+    from plan_dump import mask, plans, session
 
-    spark = get_spark(master="local[4]", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
+    spark = session()
 
     out = [
         "# PLANS — physical-plan audit of the headline queries",
@@ -67,8 +65,7 @@ def main() -> None:
         "the human-readable audit trail.",
         "",
     ]
-    for name in HEADLINE:
-        df = qs[name](spark, SF_DIR)
+    for name, df, plan in plans(spark, SF_DIR, HEADLINE):
         out.append(f"## {name}")
         out.append("")
         out.append(
@@ -79,7 +76,7 @@ def main() -> None:
         out.append(f"- python stage: {has_python_stage(df)}")
         out.append("")
         out.append("```")
-        out.append(explain_str(df, "formatted").strip())
+        out.append(plan.strip())
         out.append("```")
         out.append("")
     # --- the distributed vocabulary middle, audited as ONE fused plan -----
@@ -121,7 +118,7 @@ def main() -> None:
     edges = fused_similarity_edges(pairs, pvs, ALPHA, TAU, n_forms=n_forms)
     import re as _re
 
-    plan = explain_str(edges, "formatted")
+    plan = mask(explain_str(edges, "formatted"))
     tree = plan.split("\n\n")[0]  # count in the plan TREE (details repeat each node)
 
     def n(op: str) -> int:
