@@ -6,9 +6,9 @@ the training-data corpus ops); ``oracle_sql()`` gives the DuckDB twin for
 every SQL-expressible one (non-SQL-expressible ops — the attention UDF
 and the iterative connected-components pipeline — are rows-only checks).
 
-All hashes cross the engines via md5 (``h60``: conv(substr(md5,1,15),16,10)
-== DuckDB ('0x'||substr(md5,1,15))::bigint), so value-hash comparison is
-exact, not approximate.
+All hashes cross the engines via md5 (``functions/hashing``: the Spark
+``h60`` conv(substr(md5,1,15),16,10) == DuckDB ('0x'||substr(md5,1,15))::bigint),
+so value-hash comparison is exact, not approximate.
 """
 
 from __future__ import annotations
@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nilinker_spark.fixtures.kb import make_kb
+from nilinker_spark.functions.hashing import H60_SQL as _H60
+from nilinker_spark.functions.hashing import h60
 from nilinker_spark.operators import corpus as C
 from nilinker_spark.pipeline import resolve
 from nilinker_spark.sources.webtext import (
@@ -29,8 +31,6 @@ from nilinker_spark.sources.webtext import (
     webtext_from_documents,
 )
 
-# DuckDB twin of corpus.h60
-_H60 = "cast(('0x' || substr(md5({x}), 1, 15)) as bigint)"
 
 # Hot-shingle document-frequency cap for the shingle-based dedup queries
 # (operators.corpus.cap_shingle_df): shingles in > this many docs are
@@ -638,26 +638,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # small, fall back to a secondary criterion (here: min vec_id)
         emb = load_table(spark, sf, "embeddings")
         top = C.ann_topk_bruteforce(emb, _queries_df(spark, sf), k=2, dim=64)
+        # k=2: the row after rank 1 is the runner-up
         w = Window.partitionBy("query_id").orderBy("rank")
         gapped = (
             top.withColumn("next_cos", F.lead("cos").over(w))
+            .withColumn("runner_id", F.lead("vec_id").over(w))
             .filter(F.col("rank") == 1)
             .withColumn("gap", F.round(F.col("cos") - F.coalesce("next_cos", F.lit(0.0)), 4))
         )
-        runner = top.filter(F.col("rank") == 2).select(
-            F.col("query_id"), F.col("vec_id").alias("runner_id")
-        )
-        return (
-            gapped.join(runner, "query_id", "left")
-            .select(
-                "query_id",
-                F.when(
-                    (F.col("gap") >= 0.1) | F.col("runner_id").isNull(), F.col("vec_id")
-                )
-                .otherwise(F.least("vec_id", "runner_id"))
-                .alias("best_id"),
-                "gap",
-            )
+        return gapped.select(
+            "query_id",
+            F.when((F.col("gap") >= 0.1) | F.col("runner_id").isNull(), F.col("vec_id"))
+            .otherwise(F.least("vec_id", "runner_id"))
+            .alias("best_id"),
+            "gap",
         )
 
     q["best_candidate_gap"] = best_candidate_gap
@@ -776,11 +770,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             raise RuntimeError("er_pairwise_f1: form vocabulary exceeds contract scale")
         gold_map = cluster_forms(sorted(r["norm"] for r in forms_rows), make_kb(seed=42))
         gold = spark.createDataFrame(sorted(gold_map.items()), "norm string, gold string")
-        # deterministic 70/30 split on the form key (cross-engine md5
-        # bucket — same idiom as the salting/h60 hashes)
-        bucket = F.pmod(
-            F.conv(F.substring(F.md5("norm"), 1, 15), 16, 10).cast("long"), F.lit(100)
-        )
+        # deterministic 70/30 split on the form key (cross-engine h60 bucket)
+        bucket = F.pmod(h60("norm"), F.lit(100))
         test_forms = clusters.filter(bucket >= 70).select("norm")
         blocked = block_keys_df(test_forms)
         pa = blocked.select("block_key", F.col("norm").alias("a"))

@@ -1,14 +1,17 @@
 """Round-6 measurement harness (guide §1): times battery queries with the
 same methodology as bench.py (fresh local[N] session, python-worker warm,
 untimed er_resolve warm pass, best-of-K `.count()`), but pointable at any
-SF dir (including /root/sfgen twins), restrictable to a query subset, and
-able to dump `.explain("formatted")` plans.
+SF dir (including the tools/gen_sfdata.py twins) and restrictable to a query
+subset.
+Plans come from tools/plan_dump.py.
 
 bench.py itself is FROZEN for driver measurement; this file exists so the
 optimization loop can isolate queries without touching it.
 
 Usage:
-  python bench_extra.py [--sf DIR] [--reps K] [--explain-dir DIR] [q ...]
+  python bench_extra.py [--sf DIR] [--reps K] [--cpus N] [q ...]
+
+``--cpus`` defaults to $SPARK_GRAFT_CPUS, else the host's core count.
 """
 
 from __future__ import annotations
@@ -42,8 +45,9 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--reps", type=int, default=2)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument("--explain-dir", default=None)
+    ap.add_argument(
+        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    )
     ap.add_argument("--no-warm", action="store_true")
     ap.add_argument("queries", nargs="*", default=None)
     args = ap.parse_args()
@@ -75,21 +79,6 @@ def main() -> None:
     if not args.no_warm:
         qs["er_resolve"](spark, "/root/testdata/sf0.001").count()
         spark.catalog.clearCache()
-
-    if args.explain_dir:
-        os.makedirs(args.explain_dir, exist_ok=True)
-        for name in names:
-            df = qs[name](spark, args.sf)
-            txt = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-                df._jdf.queryExecution(), "formatted"
-            )
-            with open(os.path.join(args.explain_dir, f"{name}.txt"), "w") as fh:
-                fh.write(txt)
-            spark.catalog.clearCache()
-            from nilinker_spark.operators.corpus import release_caches
-
-            release_caches()
-        print(f"plans -> {args.explain_dir}")
 
     timings: dict[str, float] = {}
     for name in names:

@@ -1,0 +1,33 @@
+"""The 60-bit md5 hash every deterministic id, salt and bucket is built on.
+
+``h60(x)`` = the first 15 hex digits of ``md5(x)`` read as an integer,
+which fits a signed 64-bit long in every engine.  It is written here once
+in each spelling the repo needs, and every site calls one of these:
+
+- :func:`h60` — the Spark column, ``conv(substr(md5(x),1,15),16,10)``;
+- :func:`h60_value` — the Python scalar over the utf-8 bytes of a str;
+- :data:`H60_SQL` — the DuckDB twin, ``('0x'||substr(md5(x),1,15))``
+  cast to bigint.
+
+The three agree bit for bit on the same text, which is what makes salted
+blocks, partition buckets, hyperplane constants and the oracle checks
+exact across the engines.
+"""
+
+from __future__ import annotations
+
+import hashlib
+
+from pyspark.sql import functions as F
+
+H60_SQL = "cast(('0x' || substr(md5({x}), 1, 15)) as bigint)"
+
+
+def h60(col) -> F.Column:
+    """Spark column: the 60-bit md5 hash of the string column ``col``."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def h60_value(text: str) -> int:
+    """Python twin of :func:`h60` for one string."""
+    return int(hashlib.md5(text.encode()).hexdigest()[:15], 16)

@@ -17,7 +17,9 @@ ONE Arrow UDF.  An earlier revision expressed resolution as broadcast
 equi-joins + a fallback UDF; that is semantically identical but costs
 ~6 extra tiny-stage jobs per run — measurable dead weight at any scale
 because this stage's input is always small (see module docstring).  The
-join formulation remains in ``resolve_tokens`` for tests/debugging.
+join formulation, ``resolve_tokens``, feeds
+``candidates.training_examples``; both resolve a token through the one
+worker-side ``_word_id``.
 """
 
 from __future__ import annotations
@@ -54,40 +56,56 @@ def _tokens_lr(df: DataFrame) -> DataFrame:
     )
 
 
-def resolve_tokens(spark: SparkSession, forms: DataFrame, kb: KBFixture) -> DataFrame:
-    """distinct (token) -> (token, word, word_id): exact broadcast join,
-    fuzzy Arrow-UDF fallback for the anti-join survivors.
+def _word_id(w2i: dict[str, int], vocab: list[str], fingerprint: str, pre: dict[str, int]):
+    """Worker-side token -> word id: the exact vocab hit, else the
+    pre-resolved ``pre`` map, else :func:`fuzzy_best_match` memoized in
+    this worker's :data:`_FUZZY_CACHE` under the KB ``fingerprint``."""
+    memo = _FUZZY_CACHE.setdefault(fingerprint, {})
 
-    Kept as the relational reference formulation (oracle-checkable); the
-    production path resolves inside :func:`phrase_vectors_df`'s UDF.
-    """
-    vocab_rows = [(w, i) for w, i in kb.word2id.items()]
-    vocab_df = spark.createDataFrame(vocab_rows, "word string, word_id int")
+    def wid(tok: str) -> int:
+        hit = w2i.get(tok)
+        if hit is None:
+            hit = pre.get(tok)
+        if hit is None:
+            hit = memo.get(tok)
+            if hit is None:
+                hit = memo[tok] = w2i[fuzzy_best_match(tok, vocab)]
+        return hit
 
+    return wid
+
+
+def _token_frames(spark: SparkSession, forms: DataFrame, kb: KBFixture):
+    """(distinct tokens of ``forms`` per the [t, t] rule, vocab(word,
+    word_id), OOV (token, word_id)): the OOV tokens are the anti-join
+    survivors, each fuzzy-resolved once by :func:`_word_id`."""
+    vocab = spark.createDataFrame(sorted(kb.word2id.items()), "word string, word_id long")
     tokens = (
         _tokens_lr(forms)
         .select(F.explode(F.array("tl", "tr")).alias("token"))
         .distinct()
     )
-    exact = tokens.join(F.broadcast(vocab_df), tokens.token == vocab_df.word, "inner").select(
-        "token", "word", "word_id"
+    oov = tokens.join(F.broadcast(vocab), F.col("token") == F.col("word"), "left_anti")
+    kb_b = spark.sparkContext.broadcast((dict(kb.word2id), sorted(kb.word2id)))
+    fp = kb.fingerprint
+
+    def run(batches):
+        wid = _word_id(*kb_b.value, fp, {})
+        for pdf in batches:
+            yield pdf.assign(word_id=pd.array([wid(t) for t in pdf["token"]], dtype="int64"))
+
+    return tokens, vocab, oov.mapInPandas(run, "token string, word_id long")
+
+
+def resolve_tokens(spark: SparkSession, forms: DataFrame, kb: KBFixture) -> DataFrame:
+    """distinct (token) -> (token, word_id): the exact broadcast join plus
+    the fuzzy-resolved OOV tokens — the relational formulation that
+    :func:`phrase_vectors_df` runs inside its UDF."""
+    tokens, vocab, oov = _token_frames(spark, forms, kb)
+    exact = tokens.join(F.broadcast(vocab), F.col("token") == F.col("word")).select(
+        "token", "word_id"
     )
-    oov = tokens.join(F.broadcast(vocab_df), tokens.token == vocab_df.word, "left_anti")
-
-    vocab_b = spark.sparkContext.broadcast(sorted(kb.word2id))
-    w2i_b = spark.sparkContext.broadcast(dict(kb.word2id))
-
-    @F.pandas_udf("word string, word_id int")
-    def fuzzy_resolve(s: pd.Series) -> pd.DataFrame:
-        vocab = vocab_b.value
-        w2i = w2i_b.value
-        words = s.map(lambda tok: fuzzy_best_match(tok, vocab))
-        return pd.DataFrame({"word": words, "word_id": words.map(w2i).astype("int32")})
-
-    fuzzy = oov.withColumn("r", fuzzy_resolve("token")).select(
-        "token", F.col("r.word").alias("word"), F.col("r.word_id").alias("word_id")
-    )
-    return exact.unionByName(fuzzy)
+    return exact.unionByName(oov)
 
 
 def prefuzz_map(spark: SparkSession, forms: DataFrame, kb: KBFixture) -> dict[str, int]:
@@ -105,34 +123,7 @@ def prefuzz_map(spark: SparkSession, forms: DataFrame, kb: KBFixture) -> dict[st
     once — and the resulting map broadcasts like the KB itself.  Results
     are identical by determinism of fuzzy_best_match (forced-path parity
     tests cover it)."""
-    vocab_rows = [(w,) for w in kb.word2id]
-    vocab_df = spark.createDataFrame(vocab_rows, "word string")
-    oov = (
-        _tokens_lr(forms)
-        .select(F.explode(F.array("tl", "tr")).alias("token"))
-        .distinct()
-        .join(F.broadcast(vocab_df), F.col("token") == F.col("word"), "left_anti")
-    )
-    vocab_b = spark.sparkContext.broadcast(sorted(kb.word2id))
-    w2i_b = spark.sparkContext.broadcast(dict(kb.word2id))
-    fp = kb.fingerprint
-
-    def run(batches):
-        vocab = vocab_b.value
-        w2i = w2i_b.value
-        memo = _FUZZY_CACHE.setdefault(fp, {})
-        for pdf in batches:
-            ids = []
-            for tok in pdf["token"]:
-                hit = memo.get(tok)
-                if hit is None:
-                    hit = w2i[fuzzy_best_match(tok, vocab)]
-                    memo[tok] = hit
-                ids.append(hit)
-            pdf = pdf.assign(word_id=pd.array(ids, dtype="int64"))
-            yield pdf
-
-    resolved = oov.mapInPandas(run, "token string, word_id long")
+    _tokens, _vocab, resolved = _token_frames(spark, forms, kb)
     # bounded collect: never materialize an unbounded token map on the
     # driver — past the cap return empty and let the per-worker memo
     # carry the fuzzy work (correct either way, parity-tested).  Arrow
@@ -182,27 +173,9 @@ def phrase_vectors_df(
         from nilinker_spark.functions.model import ModelWeights
 
         kbv = kb_b.value
-        w2i = kbv["word2id"]
-        vocab = kbv["vocab_sorted"]
         z = kbv["weights"]
         w = ModelWeights(z["W_a"], z["b_a"], z["W_c"], z["b_c"], z["word_embeds"], z["cand_embeds"])
-
-        memo = _FUZZY_CACHE.setdefault(kbv["fingerprint"], {})
-        pre = fuzzy_b.value
-
-        def wid(tok: str) -> int:
-            hit = w2i.get(tok)
-            if hit is not None:
-                return hit
-            hit = pre.get(tok)
-            if hit is not None:
-                return hit
-            hit = memo.get(tok)
-            if hit is None:
-                hit = w2i[fuzzy_best_match(tok, vocab)]
-                memo[tok] = hit
-            return hit
-
+        wid = _word_id(kbv["word2id"], kbv["vocab_sorted"], kbv["fingerprint"], fuzzy_b.value)
         for pdf in batches:
             norms = pdf["norm"]
             pv = form_vectors(norms, wid, kbv["wc_by_id"], w)

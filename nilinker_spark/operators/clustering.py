@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 # threshold (10^7-form vocabularies at 100 TB, where the edge table
 # genuinely exceeds driver memory) the distributed loop runs unchanged.
 CC_DRIVER_MAX_EDGES = 2_000_000
+# Round cap of the distributed star loop; it converges in O(log n) rounds.
+_MAX_ROUNDS = 50
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -86,7 +88,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 50,
     driver_max_edges: int | None = None,
     walls_out: dict | None = None,
 ) -> DataFrame:
@@ -182,7 +183,7 @@ def connected_components(
     # checkpoint followed by a separate agg job.
     cur = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
     cur_sig = _sig(cur)
-    for _ in range(max_iter):
+    for _ in range(_MAX_ROUNDS):
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
         nxt_sig = _sig(nxt)
         cur = nxt

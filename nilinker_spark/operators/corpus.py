@@ -9,9 +9,9 @@ counting, fingerprinting).
 Design rules:
 - everything is built-in ``pyspark.sql.functions`` — zero Python UDFs in
   these operators, so the whole path stays in whole-stage codegen;
-- every hash is ``conv(substr(md5(x),1,15),16,10)`` — a 60-bit integer
-  that DuckDB reproduces bit-for-bit (``('0x'||substr(md5(x),1,15))::bigint``),
-  which is what makes the oracle checks exact;
+- every hash is ``functions.hashing.h60`` — a 60-bit md5 integer that
+  DuckDB reproduces bit-for-bit (``hashing.H60_SQL``), which is what
+  makes the oracle checks exact;
 - pair-generating operators go through a bounded candidate stage
   (shingle buckets / LSH bands), never a blind crossJoin — the shape
   that survives 1000× scale-up.
@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from nilinker_spark.functions.hashing import h60, h60_value
 
 # ---------------------------------------------------------------------------
 # shared primitives
@@ -84,15 +86,6 @@ def release_caches() -> int:
             pass
         n += 1
     return n
-
-
-def h60(col, width: int = 15) -> F.Column:
-    """Up-to-60-bit integer hash reproducible in DuckDB (see module docstring).
-
-    ``width`` = hex chars (4 bits each); use a smaller width when the hash
-    is multiplied afterwards so the product stays inside int64 (ANSI mode
-    makes overflow an error, not a wrap)."""
-    return F.conv(F.substring(F.md5(col), 1, width), 16, 10).cast("long")
 
 
 def signed_round(col: str, scale: int) -> F.Column:
@@ -549,15 +542,8 @@ def hyperplane_weights(n_planes: int, dim: int) -> list[list[float]]:
     n_planes x dim md5 evaluations per vector.  Bit-identical to the
     in-expression construction it replaces (long→double rounds to
     nearest in both engines)."""
-    import hashlib
-
     return [
-        [
-            float(int(hashlib.md5(str(p * 1000 + d).encode()).hexdigest()[:15], 16))
-            / float(2**59)
-            - 1.0
-            for d in range(dim)
-        ]
+        [float(h60_value(str(p * 1000 + d))) / float(2**59) - 1.0 for d in range(dim)]
         for p in range(n_planes)
     ]
 

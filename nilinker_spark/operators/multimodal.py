@@ -1,11 +1,10 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 The Spark-side plumbing — schema, partitioning, Arrow batch shape, UDF
-signatures — is real and tested; the actual codec step is stubbed behind
-an import-try (this container ships no image/audio libraries): when PIL/
-soundfile are absent, ``decode`` produces a DETERMINISTIC FAKE feature
-vector derived from the payload bytes (seeded by md5), so every
-downstream operator (dedup, ANN, joins) exercises true end-to-end.
+signatures — is real and tested; the codec step is a stand-in: the
+encoder produces a DETERMINISTIC FAKE feature vector derived from the
+payload bytes (seeded by md5), and resize keeps every stride-th byte, so
+every downstream operator (dedup, ANN, joins) exercises true end-to-end.
 
 Schema convention:
     media(media_id long, kind string, payload binary,
@@ -22,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from nilinker_spark.functions.hashing import h60_value
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -55,39 +56,23 @@ def _fake_features(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     head = hashlib.md5(payload).hexdigest()
     vals = []
     for i in range(dim):
-        h = int(hashlib.md5(f"{head}#{i}".encode()).hexdigest()[:15], 16)
-        vals.append(2.0 * (h / float(1 << 60)) - 1.0)
+        vals.append(2.0 * (h60_value(f"{head}#{i}") / float(1 << 60)) - 1.0)
     v = np.array(vals, dtype=np.float64)
     n = float(np.sqrt((v * v).sum())) or 1.0
     return (v / n).astype(np.float32)
 
 
-def _real_image_decode(payload: bytes) -> np.ndarray:
-    """Real decode path — only taken when PIL is installed."""
-    try:
-        import io
-
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - not installed here
-        raise NotImplementedError("image decoding requires PIL (not in this container)") from exc
-    img = Image.open(io.BytesIO(payload)).convert("L").resize((4, 4))  # pragma: no cover
-    return np.asarray(img, dtype=np.float32).ravel() / 255.0  # pragma: no cover
-
-
-def extract_media_features(media: DataFrame, use_codec: bool = False) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """(media_id, kind, payload, meta) -> (media_id, kind, n_bytes, features).
 
-    mapInPandas over Arrow batches; the per-row decode is the only Python
-    loop, exactly as a real encoder would run.  ``use_codec=True`` takes
-    the PIL path (NotImplementedError without the library)."""
+    mapInPandas over Arrow batches; the per-row encode is the only Python
+    loop, exactly as a real encoder would run."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = []
             for payload in pdf["payload"]:
-                b = bytes(payload)
-                vec = _real_image_decode(b) if use_codec else _fake_features(b)
-                feats.append([float(x) for x in vec])
+                feats.append([float(x) for x in _fake_features(bytes(payload))])
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -125,9 +110,7 @@ def frame_sample(media: DataFrame, frame_bytes: int = 64, every_n: int = 4) -> D
     )
 
 
-def resize_media(
-    media: DataFrame, target_w: int = 4, target_h: int = 4, use_codec: bool = False
-) -> DataFrame:
+def resize_media(media: DataFrame, target_w: int = 4, target_h: int = 4) -> DataFrame:
     """Resize plumbing (the third op of the brief's decode / feature-
     extract / resize / frame-sample quartet): payload -> resized payload
     with the meta struct's dimensions updated.
@@ -136,8 +119,7 @@ def resize_media(
     stride-th byte, stride = max(1, (w*h) // (target_w*target_h)) from
     the meta dims — so output size tracks the area ratio like a real
     resample and an independent SQL engine can recompute the bytes
-    (media_resize contract row).  ``use_codec=True`` takes the PIL path
-    (NotImplementedError without the library, like the decode stub).
+    (media_resize contract row).
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -145,8 +127,6 @@ def resize_media(
             out_payload, out_meta = [], []
             for payload, meta in zip(pdf["payload"], pdf["meta"]):
                 b = bytes(payload)
-                if use_codec:
-                    _real_image_decode(b)  # raises NotImplementedError here
                 w = (meta.get("width") if isinstance(meta, dict) else meta["width"]) or 1
                 h = (meta.get("height") if isinstance(meta, dict) else meta["height"]) or 1
                 stride = max(1, (w * h) // (target_w * target_h))

@@ -12,7 +12,8 @@ this only via its fuzzy limit=10, /root/reference/src/REEL/candidates.py:
 truncated:
 
 - members split into ``ceil(n / max_block)`` sub-blocks by a
-  deterministic md5-derived salt (same hash as the oracle — never a
+  deterministic salt, ``h60(norm) mod n_salts`` (the oracle's
+  ``block_pairs`` salts with the Python ``h60_value`` — never a
   partitioner-dependent value, so resume/retry reproduce it);
 - the lexicographically-first ``n_anchors`` members are REPLICATED into
   every pair's reach by an anchor×members join, so any two sub-blocks
@@ -30,15 +31,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from nilinker_spark.functions.hashing import h60
 from nilinker_spark.operators.corpus import top_k
 from nilinker_spark.oracle import MAX_BLOCK_FORMS, N_ANCHORS
-
-
-def _salt60(col, n_salts) -> F.Column:
-    """Deterministic salt in [0, n_salts): md5-derived, identical to the
-    oracle's (functions share the formula via oracle.salt_of)."""
-    h = F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-    return F.pmod(h, n_salts).cast("int")
 
 
 def candidate_pairs(
@@ -82,7 +77,7 @@ def candidate_pairs(
 
     # --- hot blocks: salted sub-blocks + replicated anchors -----------------
     n_salts = F.ceil(F.col("members") / F.lit(max_block)).cast("int")
-    salted = hot.withColumn("salt", _salt60(F.col("norm"), n_salts)).withColumn(
+    salted = hot.withColumn("salt", F.pmod(h60(F.col("norm")), n_salts).cast("int")).withColumn(
         "sub_key", F.concat_ws("#", "block_key", "salt")
     )
     sa = salted.select("sub_key", F.col("norm").alias("norm_a"))

@@ -25,6 +25,7 @@ from typing import Callable
 import numpy as np
 
 from nilinker_spark.fixtures.kb import KBFixture
+from nilinker_spark.functions.hashing import h60_value
 from nilinker_spark.functions.model import ModelWeights, phrase_vectors
 from nilinker_spark.functions.normalize import norm_form, singularize, tokenize_entity
 from nilinker_spark.functions.similarity import fuzzy_best_match, jaro_winkler, levenshtein
@@ -39,12 +40,6 @@ TAU = 0.82
 MAX_BLOCK_FORMS = 64  # sub-block target size for salted hot blocks
 N_ANCHORS = 8  # replicated members keeping salted sub-blocks connectable
 PAD_CANDS = 16  # candidate block width fed to the attention (top ids)
-
-
-def salt_of(norm: str, n_salts: int) -> int:
-    """Deterministic md5-derived salt — the same formula as the Spark side
-    (pairs._salt60), so salted pair sets are identical everywhere."""
-    return int(hashlib.md5(norm.encode()).hexdigest()[:15], 16) % n_salts
 
 
 def mention_id(url: str, pos: int, surface: str) -> str:
@@ -280,7 +275,7 @@ def block_pairs(
             salt_rows.append((key, n, n_salts))
             subs: dict[int, list[str]] = {}
             for m in members:
-                subs.setdefault(salt_of(m, n_salts), []).append(m)
+                subs.setdefault(h60_value(m) % n_salts, []).append(m)
             for grp in subs.values():
                 for i in range(len(grp)):
                     for j in range(i + 1, len(grp)):

@@ -55,7 +55,6 @@ from nilinker_spark.functions.normalize import norm_form
 from nilinker_spark.operators import blocking, clustering, scoring
 from nilinker_spark.operators.extract import extract_mentions_df
 from nilinker_spark.operators.pairs import candidate_pairs
-from nilinker_spark.operators.skew import salted_count
 from nilinker_spark.oracle import ALPHA, MAX_BLOCK_FORMS, TAU
 from nilinker_spark.snapshots import SnapshotLog, list_data_files
 
@@ -215,9 +214,14 @@ def _resolved(b: _Batch) -> DataFrame:
 _STAGE_GRAPH = [
     ("mentions", lambda b: extract_mentions_df(b.spark, b.webtext, b.gazetteer), "append"),
     # per-form mention frequencies (≙ the IC term counts,
-    # information_content.py:17-27), aggregated with deterministic
-    # salting so the Zipf-head form never funnels into a single reducer
-    ("mention_metrics", lambda b: salted_count(b.mentions, "norm"), "overwrite"),
+    # information_content.py:17-27).  The count combines map-side
+    # (partial_count below the one exchange), so the Zipf-head form
+    # reaches its reducer as one partial row per map task
+    (
+        "mention_metrics",
+        lambda b: b.mentions.groupBy("norm").agg(F.count("*").alias("count")),
+        "overwrite",
+    ),
     ("phrase_vecs", _phrase_vecs, "append"),
     ("block_salt_metrics", lambda b: _candidates(b)[1], "overwrite"),
     ("pairs", lambda b: _candidates(b)[0], "overwrite"),

@@ -104,7 +104,6 @@ documented in README.md's Iceberg swap table.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import re
@@ -115,8 +114,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from nilinker_spark.functions.hashing import h60, h60_value
+
 _SNAP_SUFFIX = "__snaplog"
 _V_WIDTH = 12  # v000000000001.json — lexicographic == numeric order
+_APPEND_ATTEMPTS = 6  # commit_append: one try plus five conflict retries
 _REF_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9._-]*")
 
 # --- hidden partitioning (Iceberg partition transforms) ---------------------
@@ -168,10 +170,7 @@ def _transform_expr(field: dict, dtype: str):
     if t == "identity":
         return c
     if t == "bucket":
-        return F.pmod(
-            F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long"),
-            F.lit(field["n"]),
-        )
+        return F.pmod(h60(c.cast("string")), F.lit(field["n"]))
     if t == "truncate":
         if dtype in ("tinyint", "smallint", "int", "bigint"):
             return c - F.pmod(c, F.lit(field["n"]))
@@ -191,7 +190,7 @@ def _transform_value(field: dict, v) -> str | None:
     if t == "identity":
         return str(v)
     if t == "bucket":
-        return str(int(hashlib.md5(str(v).encode()).hexdigest()[:15], 16) % field["n"])
+        return str(h60_value(str(v)) % field["n"])
     if t == "truncate":
         if isinstance(v, int) and not isinstance(v, bool):
             return str(v - (v % field["n"]))
@@ -575,7 +574,6 @@ class SnapshotLog:
     def commit_append(
         self,
         new_files: list[str],
-        max_retries: int = 5,
         branch: str | None = None,
         _extra: dict | None = None,
     ) -> int:
@@ -591,7 +589,7 @@ class SnapshotLog:
         directory; every retry reuses them, so conflict resolution costs
         one manifest write, never a data rewrite."""
         last_err: SnapshotConflict | None = None
-        for _ in range(max_retries + 1):
+        for _ in range(_APPEND_ATTEMPTS):
             base_version = self.latest_version(branch=branch)
             fork: int | None | str = "__any__"
             if base_version is None and branch is not None:
@@ -615,8 +613,8 @@ class SnapshotLog:
             except SnapshotConflict as e:
                 last_err = e
         raise SnapshotConflict(
-            f"{self.table_dir}: append lost the commit race {max_retries + 1} "
-            f"times ({last_err}); raise max_retries or reduce writer fan-in"
+            f"{self.table_dir}: append lost the commit race {_APPEND_ATTEMPTS} "
+            f"times ({last_err}); reduce writer fan-in"
         )
 
     def _check_mapping(

@@ -21,6 +21,44 @@ from pyspark.sql import types as T
 ANNOTATIONS_SCHEMA = "doc_id string, mention string, kb_id string, ancestor_id string"
 
 
+def _annotations(rows: DataFrame, parents: DataFrame | None = None) -> DataFrame:
+    """(doc_id, mention, kb_id) rows -> the annotations shape.
+
+    One survivor per (doc, mention): its min kb_id, the deterministic
+    pick when a mention carries several ids.  ``ancestor_id`` is the
+    survivor's parent from ``parents(child_id, parent_id)`` — an inner
+    join, so ids without a single parent drop — else null."""
+    ann = rows.groupBy("doc_id", "mention").agg(F.min("kb_id").alias("kb_id"))
+    if parents is None:
+        return ann.withColumn("ancestor_id", F.lit(None).cast("string"))
+    return ann.join(F.broadcast(parents), ann.kb_id == parents.child_id, "inner").select(
+        "doc_id", "mention", "kb_id", F.col("parent_id").alias("ancestor_id")
+    )
+
+
+def _xml_annotations(spark: SparkSession, glob: str, rows_of) -> DataFrame:
+    """One XML file per document -> annotations.  ``rows_of(path, root)``
+    yields the (doc_id, mention, kb_id) rows of the file at ``path`` with
+    parsed root element ``root``; the whole-file read and the stdlib
+    parse run inside mapInPandas."""
+    files = spark.read.format("binaryFile").load(glob).select("path", "content")
+
+    def parse(batches):
+        import xml.etree.ElementTree as ET
+
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [
+                row
+                for p, content in zip(pdf["path"], pdf["content"])
+                for row in rows_of(p, ET.fromstring(bytes(content).decode("utf-8")))
+            ]
+            yield pd.DataFrame(rows, columns=["doc_id", "mention", "kb_id"])
+
+    return _annotations(files.mapInPandas(parse, "doc_id string, mention string, kb_id string"))
+
+
 # ---------------------------------------------------------------------------
 # JSON-lines corpus (≙ parse_PBDMS, /root/reference/src/evanil/annotations.py:56-149)
 # ---------------------------------------------------------------------------
@@ -53,19 +91,12 @@ def read_jsonl_corpus(spark: SparkSession, path: str, parents: DataFrame) -> Dat
     dim (mentions whose concept lacks a single parent are dropped,
     ≙ annotations.py:112-119), first-mention-wins dedup per doc."""
     docs = spark.read.schema(_JSONL_SCHEMA).json(path)
-    ann = (
-        docs.select(F.col("_id").alias("doc_id"), F.explode("mentions").alias("m"))
-        .select(
-            "doc_id",
-            F.col("m.mention").alias("mention"),
-            F.concat(F.lit("MESH:"), F.col("m.mesh_id")).alias("kb_id"),
-        )
-        .groupBy("doc_id", "mention")
-        .agg(F.min("kb_id").alias("kb_id"))
+    rows = docs.select(F.col("_id").alias("doc_id"), F.explode("mentions").alias("m")).select(
+        "doc_id",
+        F.col("m.mention").alias("mention"),
+        F.concat(F.lit("MESH:"), F.col("m.mesh_id")).alias("kb_id"),
     )
-    return ann.join(F.broadcast(parents), ann.kb_id == parents.child_id, "inner").select(
-        "doc_id", "mention", "kb_id", F.col("parent_id").alias("ancestor_id")
-    )
+    return _annotations(rows, parents)
 
 
 # ---------------------------------------------------------------------------
@@ -89,19 +120,14 @@ def read_pubtator_corpus(spark: SparkSession, path: str) -> DataFrame:
     parts = F.split(F.col("value"), "\t")
     kb_raw = F.try_element_at(parts, F.lit(6))
     kb_first = F.split(kb_raw, "[|+]")[0]
-    return (
-        ann.select(
-            F.try_element_at(parts, F.lit(1)).alias("doc_id"),
-            F.try_element_at(parts, F.lit(4)).alias("mention"),
-            F.when(kb_first.startswith("MESH:") | kb_first.startswith("OMIM:"), kb_first)
-            .otherwise(F.concat(F.lit("MESH:"), kb_first))
-            .alias("kb_id"),
-        )
-        .filter(F.col("mention").isNotNull() & F.col("kb_id").isNotNull())
-        .groupBy("doc_id", "mention")
-        .agg(F.min("kb_id").alias("kb_id"))
-        .withColumn("ancestor_id", F.lit(None).cast("string"))
+    rows = ann.select(
+        F.try_element_at(parts, F.lit(1)).alias("doc_id"),
+        F.try_element_at(parts, F.lit(4)).alias("mention"),
+        F.when(kb_first.startswith("MESH:") | kb_first.startswith("OMIM:"), kb_first)
+        .otherwise(F.concat(F.lit("MESH:"), kb_first))
+        .alias("kb_id"),
     )
+    return _annotations(rows.filter(F.col("mention").isNotNull() & F.col("kb_id").isNotNull()))
 
 
 # ---------------------------------------------------------------------------
@@ -114,34 +140,17 @@ def read_xml_corpus(spark: SparkSession, path: str) -> DataFrame:
 
     Whole-file read + stdlib XML parse inside mapInPandas (the one §2.1
     source where a real parser beats regexes)."""
-    files = spark.read.format("binaryFile").load(path + "/*.xml").select("path", "content")
+    return _xml_annotations(spark, path + "/*.xml", _knowtator_rows)
 
-    def parse(batches):
-        import os
-        import xml.etree.ElementTree as ET
 
-        import pandas as pd
+def _knowtator_rows(path: str, root):
+    import os
 
-        for pdf in batches:
-            doc_ids, mentions, kb_ids = [], [], []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                doc_id = os.path.basename(p).rsplit(".", 1)[0]
-                root = ET.fromstring(bytes(content).decode("utf-8"))
-                for a in root.iter("annotation"):
-                    cls = a.find("class")
-                    if cls is None:
-                        continue
-                    doc_ids.append(doc_id)
-                    mentions.append(cls.get("text") or "")
-                    kb_ids.append(cls.get("id") or "")
-            yield pd.DataFrame({"doc_id": doc_ids, "mention": mentions, "kb_id": kb_ids})
-
-    return (
-        files.mapInPandas(parse, "doc_id string, mention string, kb_id string")
-        .groupBy("doc_id", "mention")
-        .agg(F.min("kb_id").alias("kb_id"))
-        .withColumn("ancestor_id", F.lit(None).cast("string"))
-    )
+    doc_id = os.path.basename(path).rsplit(".", 1)[0]
+    for a in root.iter("annotation"):
+        cls = a.find("class")
+        if cls is not None:
+            yield doc_id, cls.get("text") or "", cls.get("id") or ""
 
 
 # ---------------------------------------------------------------------------
@@ -160,21 +169,14 @@ def read_gsc_corpus(spark: SparkSession, path: str) -> DataFrame:
         "doc_id", F.regexp_extract(F.input_file_name(), "([^/]+)$", 1)
     )
     halves = F.split(F.col("value"), "\\|", 2)
-    return (
-        lines.filter(F.length("value") > 0)
-        .select(
-            "doc_id",
-            F.trim(F.try_element_at(halves, F.lit(2))).alias("mention"),
-            F.trim(F.try_element_at(F.split(F.try_element_at(halves, F.lit(1)), "\t"), F.lit(2))).alias(
-                "kb_id"
-            ),
-        )
-        .filter(F.col("mention").isNotNull() & (F.length("kb_id") > 0))
-        # deterministic survivor when one (doc, mention) carries several ids
-        .groupBy("doc_id", "mention")
-        .agg(F.min("kb_id").alias("kb_id"))
-        .withColumn("ancestor_id", F.lit(None).cast("string"))
+    rows = lines.filter(F.length("value") > 0).select(
+        "doc_id",
+        F.trim(F.try_element_at(halves, F.lit(2))).alias("mention"),
+        F.trim(F.try_element_at(F.split(F.try_element_at(halves, F.lit(1)), "\t"), F.lit(2))).alias(
+            "kb_id"
+        ),
     )
+    return _annotations(rows.filter(F.col("mention").isNotNull() & (F.length("kb_id") > 0)))
 
 
 # ---------------------------------------------------------------------------
@@ -193,7 +195,7 @@ def read_phaedra_corpus(spark: SparkSession, path: str) -> DataFrame:
     )
     parts = F.split(F.col("value"), "\t")
     kb_ref = F.try_element_at(F.split(F.try_element_at(parts, F.lit(2)), " "), F.lit(3))
-    return (
+    rows = (
         lines.filter(F.try_element_at(parts, F.lit(1)).startswith("N"))
         .select(
             "doc_id",
@@ -201,14 +203,9 @@ def read_phaedra_corpus(spark: SparkSession, path: str) -> DataFrame:
             kb_ref.alias("kb_ref"),
         )
         .filter(F.col("kb_ref").startswith("MeSH"))
-        .select(
-            "doc_id",
-            "mention",
-            F.regexp_replace("kb_ref", "^MeSH:", "MESH_").alias("kb_id"),
-        )
-        .groupBy("doc_id", "mention")
-        .agg(F.min("kb_id").alias("kb_id"))
-        .withColumn("ancestor_id", F.lit(None).cast("string"))
+    )
+    return _annotations(
+        rows.select("doc_id", "mention", F.regexp_replace("kb_ref", "^MeSH:", "MESH_").alias("kb_id"))
     )
 
 
@@ -223,41 +220,21 @@ def read_chebi_patents_corpus(spark: SparkSession, path: str) -> DataFrame:
     ``WO``-prefixed, or comma-multivalued becomes the NIL id
     (annotations.py:207-215).  XML needs a real parser — mapInPandas,
     like the knowtator reader."""
-    files = (
-        spark.read.format("binaryFile")
-        .load(path + "/*/scrapbook.xml")
-        .select("path", "content")
-    )
+    return _xml_annotations(spark, path + "/*/scrapbook.xml", _chebi_patent_rows)
 
-    def parse(batches):
-        import os
-        import xml.etree.ElementTree as ET
 
-        import pandas as pd
+def _chebi_patent_rows(path: str, root):
+    import os
 
-        for pdf in batches:
-            doc_ids, mentions, kb_ids = [], [], []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                doc_id = os.path.basename(os.path.dirname(p))
-                root = ET.fromstring(bytes(content).decode("utf-8"))
-                for s in root.iter("snippet"):
-                    for ne in s.findall("ne"):
-                        if ne.text is None:
-                            continue
-                        cid = ne.get("chebi-id")
-                        if not cid or cid.startswith("WO") or "," in cid:
-                            cid = "NIL"
-                        doc_ids.append(doc_id)
-                        mentions.append(ne.text)
-                        kb_ids.append(cid)
-            yield pd.DataFrame({"doc_id": doc_ids, "mention": mentions, "kb_id": kb_ids})
-
-    return (
-        files.mapInPandas(parse, "doc_id string, mention string, kb_id string")
-        .groupBy("doc_id", "mention")
-        .agg(F.min("kb_id").alias("kb_id"))
-        .withColumn("ancestor_id", F.lit(None).cast("string"))
-    )
+    doc_id = os.path.basename(os.path.dirname(path))
+    for snippet in root.iter("snippet"):
+        for ne in snippet.findall("ne"):
+            if ne.text is None:
+                continue
+            cid = ne.get("chebi-id")
+            if not cid or cid.startswith("WO") or "," in cid:
+                cid = "NIL"
+            yield doc_id, ne.text, cid
 
 
 # ---------------------------------------------------------------------------

@@ -57,9 +57,7 @@ def load_table(
     """
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
-    # measurement escape hatch (A/B-ing the split itself); never set by
-    # bench.py or the entry contract
-    if not split or os.environ.get("SPARK_GRAFT_NO_SPLIT"):
+    if not split:
         return df
     try:
         if os.path.isfile(path):

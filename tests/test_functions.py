@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from nilinker_spark.functions.model import l2_normalize, phrase_vectors
 from nilinker_spark.functions.normalize import (
@@ -162,3 +163,26 @@ def test_fuzzy_cache_scoped_by_kb_fingerprint(spark):
     # and re-running kb1 is stable (memo correctness, not just isolation)
     pv1b = phrase_vectors_df(spark, forms, kb1).collect()[0]["pv"]
     assert pv1 == pv1b
+
+
+def test_h60_spark_column_equals_python_scalar(spark):
+    """The Spark ``h60`` column and the Python ``h60_value`` are one hash:
+    equal on random strings (empty and non-ASCII included) and on the
+    ``str(int)`` keys the snapshot bucket transform hashes, checked in
+    one Spark job."""
+    import random
+
+    from nilinker_spark.functions.hashing import h60, h60_value
+
+    rng = random.Random(7)
+    alphabet = "abcXYZ019 #|-_ éßøΩж中文🙂\t"
+    texts = ["", " ", "é", "中文", "🙂"] + [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 24))) for _ in range(300)
+    ]
+    texts += [str(rng.randint(-(2**63), 2**63 - 1)) for _ in range(100)] + ["0", "-1", "42"]
+    df = spark.createDataFrame([(t,) for t in texts], "x string")
+    got = {r["x"]: r["h"] for r in df.select("x", h60(F.col("x")).alias("h")).collect()}
+    assert len(got) == len(set(texts))
+    for t in texts:
+        assert got[t] == h60_value(t), t
+        assert 0 <= got[t] < 2**60

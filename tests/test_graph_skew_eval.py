@@ -1,4 +1,4 @@
-"""Graph ops, salting helpers, and evaluation metrics."""
+"""Graph ops and evaluation metrics."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from nilinker_spark.operators.evaluate import micro_prf, pairwise_f1, per_class_prf
 from nilinker_spark.operators.graph import bfs_depths, degrees, single_parent
-from nilinker_spark.operators.skew import salted_count
 
 
 @pytest.fixture(scope="module")
@@ -37,13 +36,6 @@ def test_single_parent(spark, kb_edges):
 def test_bfs_depths(spark, kb_edges):
     depths = {r["node"]: r["depth"] for r in bfs_depths(kb_edges, "root").collect()}
     assert depths == {"root": 0, "a": 1, "b": 1, "c": 2, "d": 2, "e": 2}
-
-
-def test_salted_count_matches_plain(spark):
-    df = spark.createDataFrame([(i % 3,) for i in range(1000)], "k int")
-    plain = {r["k"]: r["count"] for r in df.groupBy("k").count().collect()}
-    salted = {r["k"]: r["count"] for r in salted_count(df, "k", n_salt=8).collect()}
-    assert plain == salted
 
 
 def test_micro_and_per_class_prf(spark):

@@ -1,4 +1,4 @@
-"""Multimodal plumbing: schema, Arrow batch shape, determinism, stub gate."""
+"""Multimodal plumbing: schema, Arrow batch shape, determinism."""
 
 from __future__ import annotations
 
@@ -41,23 +41,6 @@ def test_features_deterministic_across_partitionings(spark, media):
     assert da == db
 
 
-def test_codec_path_gated(spark, media):
-    """The real decode path must raise NotImplementedError without PIL
-    (clearly-marked stub, per the container constraints)."""
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL unexpectedly installed")
-    except ImportError:
-        pass
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors.exceptions.captured import PythonException
-
-    with pytest.raises((PythonException, Py4JJavaError)) as exc:
-        extract_media_features(media, use_codec=True).collect()
-    assert "NotImplementedError" in str(exc.value) or "PIL" in str(exc.value)
-
-
 def test_frame_sampling(spark, media):
     frames = frame_sample(media, frame_bytes=64, every_n=4)
     pdf = frames.toPandas()
@@ -83,18 +66,3 @@ def test_resize_media_stride_and_meta(spark, media):
         assert r["meta"]["mime"] == s["meta"]["mime"]
         assert r["meta"]["duration_ms"] == s["meta"]["duration_ms"]
         assert r["kind"] == s["kind"]
-
-
-def test_resize_codec_path_gated(spark, media):
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL installed: the real path would run")
-    except ImportError:
-        pass
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors.exceptions.captured import PythonException
-
-    with pytest.raises((PythonException, Py4JJavaError)) as exc:
-        resize_media(media, use_codec=True).collect()
-    assert "NotImplementedError" in str(exc.value) or "PIL" in str(exc.value)

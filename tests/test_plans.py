@@ -266,3 +266,27 @@ def test_top_k_keeps_window_group_limit(spark):
         assert "== Final Plan ==" in tree
         final = tree.split("== Initial Plan ==")[0]
         assert ("WindowGroupLimit" in final) == want, (by, k, final)
+
+
+def test_mention_metrics_counts_in_one_exchange(spark):
+    """The pipeline's mention_metrics stage counts forms in one hash
+    exchange with the partial count below it: each map task combines its
+    rows of a hot form before the shuffle, so the Zipf head reaches its
+    reducer as one row per map task — the hot-key guard of the stage."""
+    from types import SimpleNamespace
+
+    from nilinker_spark.pipeline import _STAGE_GRAPH
+    from nilinker_spark.plans import explain_str
+
+    build = {name: fn for name, fn, _mode in _STAGE_GRAPH}["mention_metrics"]
+    hot = F.when(F.col("id") % 10 > 0, F.lit("hot")).otherwise(F.col("id").cast("string"))
+    mentions = spark.range(0, 1000, 1, 4).select(hot.alias("norm"))
+    out = build(SimpleNamespace(mentions=mentions))
+    assert out.schema.simpleString() == "struct<norm:string,count:bigint>"
+    counts = {r["norm"]: r["count"] for r in out.collect()}
+    assert counts["hot"] == 900 and len(counts) == 101
+    final = explain_str(out, "simple").split("== Initial Plan ==")[0]
+    exchanges = [i for i, ln in enumerate(final.splitlines()) if "Exchange hashpartitioning" in ln]
+    assert len(exchanges) == 1, final
+    below = "\n".join(final.splitlines()[exchanges[0] + 1 :])
+    assert "partial_count" in below, final
