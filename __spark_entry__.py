@@ -538,7 +538,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         edges = load_table(spark, sf, "orders").select(
             F.col("o_custkey").alias("src"), F.col("o_orderkey").alias("dst")
         )
-        return single_parent(edges)
+        return single_parent(edges).select(F.col("src").alias("child"), F.col("dst").alias("parent"))
 
     q["single_parent_predicate"] = single_parent_predicate
 

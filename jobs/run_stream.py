@@ -7,7 +7,7 @@
 Drains everything currently in --input (availableNow) and exits;
 re-running resumes from the streaming checkpoint (exactly-once file
 sink).  --first-seen additionally maintains the stateful cross-batch
-first-seen forms table.
+first-seen forms table, fed from the drained mentions in --output.
 """
 
 from __future__ import annotations
@@ -29,22 +29,21 @@ def main() -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     from nilinker_spark.fixtures.kb import make_kb
-    from nilinker_spark.functions.normalize import norm_form
     from nilinker_spark.streaming.extract_stream import (
         drain,
         read_webtext_stream,
         stream_mentions,
     )
 
-    kb = make_kb(seed=42)
-    gazetteer = {norm_form(s) for s, _, _ in kb.surface_forms}
     stream = read_webtext_stream(spark, args.input)
-    mentions = stream_mentions(spark, stream, gazetteer)
+    mentions = stream_mentions(spark, stream, make_kb(seed=42).gazetteer)
     drain(mentions, args.output, args.checkpoint)
     if args.first_seen:
         from nilinker_spark.streaming.stateful import first_seen_forms
 
-        drain(first_seen_forms(mentions), args.first_seen, args.checkpoint + "_firstseen")
+        # a file source over the drained table: each page is extracted once
+        drained = spark.readStream.schema(mentions.schema).parquet(args.output)
+        drain(first_seen_forms(drained), args.first_seen, args.checkpoint + "_firstseen")
     print(f"stream drained to {args.output}")
     spark.stop()
 

@@ -37,6 +37,11 @@ class KBFixture:
     # (surface, gold_kb_id, kind) where kind in {exact, typo, plural, nil}
 
     @property
+    def gazetteer(self) -> set[str]:
+        """The default extraction gazetteer: every surface form, normalized."""
+        return {norm_form(s) for s, _, _ in self.surface_forms}
+
+    @property
     def vocab_sorted(self) -> list[str]:
         return sorted(self.word2id)
 

@@ -12,6 +12,10 @@ in each spelling the repo needs, and every site calls one of these:
 The three agree bit for bit on the same text, which is what makes salted
 blocks, partition buckets, hyperplane constants and the oracle checks
 exact across the engines.
+
+:func:`frame_signature` is the Spark-only order-free content signature,
+``(count, bit_xor(xxhash64(cols)))`` in one job: the pipeline's batch id,
+its commit lineage and the connected-components convergence test.
 """
 
 from __future__ import annotations
@@ -31,3 +35,15 @@ def h60(col) -> F.Column:
 def h60_value(text: str) -> int:
     """Python twin of :func:`h60` for one string."""
     return int(hashlib.md5(text.encode()).hexdigest()[:15], 16)
+
+
+def frame_signature(df, *cols: str) -> tuple[int, int]:
+    """``(rows, checksum)`` of ``df`` in one job: the row count and the
+    bit_xor of ``xxhash64(*cols)`` over the rows (0 for none).  Row order
+    and partitioning do not change it; two different row multisets
+    collide with probability ~2^-64 at equal count."""
+    row = df.agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("sig"),
+    ).first()
+    return int(row["n"]), int(row["sig"])

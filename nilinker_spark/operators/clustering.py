@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nilinker_spark.functions.hashing import frame_signature
+
 # Below this edge count the component structure is driver-trivial: collect
 # the (src, dst) list and run union-find in-process instead of paying
 # O(rounds) scheduler latency on a vocabulary-sized frame (~1.9 s of pure
@@ -86,11 +88,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    driver_max_edges: int | None = None,
-    walls_out: dict | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, walls_out: dict | None = None) -> DataFrame:
     """edges(src, dst) -> labels(node, label) for every node in the graph.
 
     ``walls_out``: pass a dict to receive wall-clock seconds of the
@@ -109,7 +107,7 @@ def connected_components(
     Two physical strategies, identical results (parity-tested on random
     graphs):
 
-    - ``distinct edges <= driver_max_edges``: collect the DISTINCT edge
+    - ``distinct edges <= CC_DRIVER_MAX_EDGES``: collect the DISTINCT edge
       list via Arrow and run the oracle's min-representative union-find
       (``oracle.components``) on the driver — one Spark job instead of
       O(rounds) shuffles, which on vocabulary-sized graphs is pure
@@ -130,62 +128,46 @@ def connected_components(
     """
     import time
 
-    if driver_max_edges is None:
-        driver_max_edges = CC_DRIVER_MAX_EDGES
     spark = edges.sparkSession
-    if driver_max_edges > 0:
-        t0 = time.monotonic()
-        e2 = edges.select("src", "dst")
-        n_raw = edges.count()
-        if n_raw <= driver_max_edges:
-            head = e2.distinct().toPandas()
-        elif n_raw <= 4 * driver_max_edges:
-            head = e2.distinct().limit(driver_max_edges + 1).toPandas()
-        else:
-            head = None
+    t0 = time.monotonic()
+    e2 = edges.select("src", "dst")
+    n_raw = edges.count()
+    if n_raw <= CC_DRIVER_MAX_EDGES:
+        head = e2.distinct().toPandas()
+    elif n_raw <= 4 * CC_DRIVER_MAX_EDGES:
+        head = e2.distinct().limit(CC_DRIVER_MAX_EDGES + 1).toPandas()
+    else:
+        head = None
+    if walls_out is not None:
+        walls_out["cc_collect_s"] = time.monotonic() - t0
+    if head is not None and len(head) <= CC_DRIVER_MAX_EDGES:
+        import pandas as pd
+
+        from nilinker_spark.oracle import components
+
+        t1 = time.monotonic()
+        labels = components(
+            (), [(s, d) for s, d in zip(head["src"].values, head["dst"].values) if s != d]
+        )
+        pdf = pd.DataFrame(list(labels.items()), columns=["node", "label"], dtype=object)
+        # Arrow-path createDataFrame (config.get_spark enables it):
+        # the java-row conversion of a 500k-label list was the other
+        # half of the driver-CC floor
+        out = spark.createDataFrame(pdf, "node string, label string")
         if walls_out is not None:
-            walls_out["cc_collect_s"] = time.monotonic() - t0
-        if head is not None and len(head) <= driver_max_edges:
-            import pandas as pd
+            walls_out["cc_driver_s"] = time.monotonic() - t1
+        return out
 
-            from nilinker_spark.oracle import components
-
-            t1 = time.monotonic()
-            labels = components(
-                (), [(s, d) for s, d in zip(head["src"].values, head["dst"].values) if s != d]
-            )
-            pdf = pd.DataFrame(list(labels.items()), columns=["node", "label"], dtype=object)
-            # Arrow-path createDataFrame (config.get_spark enables it):
-            # the java-row conversion of a 500k-label list was the other
-            # half of the driver-CC floor
-            out = spark.createDataFrame(pdf, "node string, label string")
-            if walls_out is not None:
-                walls_out["cc_driver_s"] = time.monotonic() - t1
-            return out
-
-    if edges.isEmpty():
-        return spark.createDataFrame([], "node string, label string")
-
-    def _sig(df: DataFrame) -> tuple[int, int]:
-        # one-job convergence signature: (count, order-free checksum); a
-        # collision would need two distinct edge sets with equal xor-of-
-        # hashes at equal cardinality (~2^-64)
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("sig"),
-        ).first()
-        return int(row["n"]), int(row["sig"])
-
-    # lazy checkpoint + signature in ONE job per round: the _sig action is
+    # lazy checkpoint + signature in ONE job per round: the signature is
     # the first materialization, so it both truncates the lineage (plan
     # growth is the iterative-DataFrame failure mode) and returns the
     # convergence signature — half the scheduler round-trips of an eager
     # checkpoint followed by a separate agg job.
     cur = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
-    cur_sig = _sig(cur)
+    cur_sig = frame_signature(cur, "src", "dst")
     for _ in range(_MAX_ROUNDS):
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
-        nxt_sig = _sig(nxt)
+        nxt_sig = frame_signature(nxt, "src", "dst")
         cur = nxt
         if nxt_sig == cur_sig:
             break

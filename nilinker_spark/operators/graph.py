@@ -8,7 +8,8 @@
   /root/reference/src/analysis/ancestors.py:65-72) — iterative frontier
   joins with localCheckpoint per level, the standard DataFrame BFS.
 - ``single_parent``: nodes with exactly one parent (≙ the child_to_parent
-  predicate, /root/reference/src/utils/kbs.py:84-90).
+  predicate, /root/reference/src/utils/kbs.py:84-90) — also the corpora
+  readers' broadcastable single-parent dim over KB edges.
 """
 
 from __future__ import annotations
@@ -32,10 +33,13 @@ def degrees(edges: DataFrame) -> DataFrame:
 
 
 def single_parent(edges: DataFrame) -> DataFrame:
-    """child->parent pairs for children with exactly one parent edge."""
-    counts = edges.groupBy("src").agg(F.count("*").alias("n"))
-    only = counts.filter(F.col("n") == 1).select("src")
-    return edges.join(only, "src").select(F.col("src").alias("child"), F.col("dst").alias("parent"))
+    """The edges whose child has exactly one parent edge.  ``edges`` is
+    (child, parent) by position — ``(src, dst)`` graph edges or
+    ``(child_id, parent_id)`` KB edges — and the result keeps its names."""
+    child, parent = edges.columns[:2]
+    counts = edges.groupBy(child).agg(F.count("*").alias("n"))
+    only = counts.filter(F.col("n") == 1).select(child)
+    return edges.join(only, child).select(child, parent)
 
 
 def bfs_depths(edges: DataFrame, root: str, max_depth: int = 20) -> DataFrame:

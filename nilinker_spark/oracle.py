@@ -350,7 +350,7 @@ def run_oracle(
     Returns (mentions, form_clusters) where mentions is
     [(url, mention_id, surface, pos, norm_form, cluster_id)].
     """
-    gazetteer = {norm_form(s) for s, _, _ in kb.surface_forms}
+    gazetteer = kb.gazetteer
     mentions: list[tuple[str, str, str, int, str]] = []
     from nilinker_spark.functions.normalize import extract_text
 

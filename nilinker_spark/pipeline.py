@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from nilinker_spark import oracle
 from nilinker_spark.fixtures.kb import KBFixture
-from nilinker_spark.functions.normalize import norm_form
+from nilinker_spark.functions.hashing import frame_signature
 from nilinker_spark.operators import blocking, clustering, scoring
 from nilinker_spark.operators.extract import extract_mentions_df
 from nilinker_spark.operators.pairs import candidate_pairs
@@ -73,6 +73,8 @@ from nilinker_spark.snapshots import SnapshotLog, list_data_files
 # path runs unchanged.  Same decision rule as a broadcast-join
 # threshold: execute the provably-tiny side locally.
 DRIVER_VOCAB_MAX = 2000
+# compact() sizes its rewrite at about this many rows per part file
+_COMPACT_ROWS_PER_FILE = 1_000_000
 
 RESOLVED_COLS = ("url", "mention_id", "surface", "pos", "norm", "cluster_id")
 
@@ -340,7 +342,7 @@ def resolve(
     their plans on their own SparkSession.
     """
     if gazetteer is None:
-        gazetteer = {norm_form(s) for s, _, _ in kb.surface_forms}
+        gazetteer = kb.gazetteer
     walls = stage_walls_out
     b = _Batch(spark, kb, webtext, gazetteer, alpha, tau, max_block, walls)
     t0 = time.monotonic()
@@ -348,8 +350,9 @@ def resolve(
     if cache_out is not None:
         cache_out.append(b.mentions)
     # lazy checkpoint + count in ONE job (the count is the materializing
-    # action — same trick as connected_components._sig); the distinct-form
-    # table is vocabulary-bounded, so the middle is sized by its count
+    # action — same trick as connected_components' frame_signature); the
+    # distinct-form table is vocabulary-bounded, so the middle is sized by
+    # its count
     b.forms = b.mentions.select("norm").distinct().localCheckpoint(eager=False)
     b.n_forms = b.forms.count()
     on_driver = b.n_forms <= DRIVER_VOCAB_MAX
@@ -417,11 +420,6 @@ class Pipeline:
         # cache then carries from recovery to the stage loop and reads
         self._logs: dict[str, SnapshotLog] = {}
 
-    def _gazetteer(self) -> set[str]:
-        if self.gazetteer is not None:
-            return self.gazetteer
-        return {norm_form(s) for s, _, _ in self.kb.surface_forms}
-
     def _path(self, stage: str) -> str:
         return os.path.join(self.ckpt_dir, stage)
 
@@ -475,19 +473,15 @@ class Pipeline:
     ) -> DataFrame | None:
         if stop_after is not None and stop_after not in STAGES:
             raise ValueError(f"stop_after={stop_after!r} is not a stage: {STAGES}")
-        sig = webtext.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("url")), F.lit(0)).alias("sig"),
-        ).first()
-        batch = f"b{int(sig['n'])}_{int(sig['sig']) & 0xFFFFFFFFFFFFFFFF:016x}"
+        n, sig = frame_signature(webtext, "url")
+        batch = f"b{n}_{sig & 0xFFFFFFFFFFFFFFFF:016x}"
         committed = self._recover(batch)
         if append and not committed:
             raise RuntimeError("run() must complete before run_incremental()")
         if committed and (batch in committed or not append):
             return self.read_stage("resolved")
-        b = _Batch(
-            self.spark, self.kb, webtext, self._gazetteer(), self.alpha, self.tau, self.max_block
-        )
+        gaz = self.kb.gazetteer if self.gazetteer is None else self.gazetteer
+        b = _Batch(self.spark, self.kb, webtext, gaz, self.alpha, self.tau, self.max_block)
         for name, build, mode in _STAGE_GRAPH:
             log = self._log(name)
             head = _head(log)
@@ -539,8 +533,7 @@ class Pipeline:
         t0 = time.monotonic()
         new = log.write(df)
         out = self.spark.read.parquet(*[os.path.join(log.table_dir, f) for f in new])
-        stats = out.agg(F.count("*"), F.coalesce(F.bit_xor(F.xxhash64(*out.columns)), F.lit(0)))
-        rows, checksum = map(int, stats.first())
+        rows, checksum = frame_signature(out, *out.columns)
         if expect is not None and (rows, checksum) != expect:
             _delete(log.table_dir, new)
             raise RuntimeError(f"{operation} of {log.table_dir} changed content; aborted")
@@ -653,7 +646,7 @@ class Pipeline:
         return self._log(stage).read_changes(self.spark, from_version, to_version)
 
     # --- table maintenance ---------------------------------------------------
-    def compact(self, stage: str, target_rows_per_file: int = 1_000_000) -> int:
+    def compact(self, stage: str) -> int:
         """Rewrite a stage table's many small part files into few sized ones.
 
         The maintenance half of the Iceberg stand-in story: incremental
@@ -679,7 +672,7 @@ class Pipeline:
         log = self._log(stage)
         head = log.snapshot()
         lin = head["lineage"]
-        n_files = max(1, lin["rows"] // target_rows_per_file + 1)
+        n_files = max(1, lin["rows"] // _COMPACT_ROWS_PER_FILE + 1)
         head = self._commit(
             log,
             log.read(self.spark).repartition(n_files),

@@ -21,6 +21,16 @@ object-store conditional PUT):
    v{N} and the other gets :class:`SnapshotConflict` and must re-read
    and retry on top of the winner.
 
+A commit names its part files explicitly (the ones :meth:`write` just
+produced, or a committed version's) and derives everything else once:
+each file's footer is opened at most once, for its stats and schema, and
+not at all when the parent manifest already covers both (an append's
+carried-over files); a rollback opens the files it restores, for their
+schema.  A file the commit opens that is missing or has no readable
+footer fails it with ValueError before anything is published.  ``expect_latest`` is the one
+lost-update guard: the version the file list was derived from, which
+for a branch's first commit is the trunk head it forks from.
+
 Semantics by operation (stored in the manifest, enforced by physics):
 
 - ``append``  — prior versions stay readable (their files are still in
@@ -287,6 +297,54 @@ def _stat_bounds(st: dict | None, stat_keys: list[str]) -> tuple | None:
     return st["mins"][key], st["maxs"][key]
 
 
+def _footer(table_dir: str, name: str) -> tuple[dict, StructType]:
+    """One part file's stats ``{rows, bytes, mins, maxs}`` and Spark
+    schema, from a single parquet footer read.
+
+    min/max cover the top-level primitive columns whose row groups all
+    carry statistics (parquet writes them by default); values are
+    JSON-safe (bytes decoded, non-finite floats dropped).  A missing file
+    or one without a readable footer raises ValueError naming it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # arrow schema -> spark StructType via the same mapping spark's own
+    # Arrow interchange uses
+    import pyspark.sql.pandas.types as pst
+
+    path = os.path.join(table_dir, name)
+    try:
+        meta = pq.ParquetFile(path).metadata
+        size = os.path.getsize(path)
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(
+            f"{table_dir}: listed file {name} is missing or has no readable "
+            f"parquet footer ({e})"
+        ) from None
+    schema = pst.from_arrow_schema(meta.schema.to_arrow_schema())
+    mins: dict[str, object] = {}
+    maxs: dict[str, object] = {}
+    # an empty part file (a 0-row partition write) has no row group to
+    # bound: rows=0, no bounds
+    for ci in range(meta.num_columns if meta.num_row_groups else 0):
+        col_path = meta.row_group(0).column(ci).path_in_schema
+        if "." in col_path:
+            continue  # nested/list columns: no file-level bounds
+        lo = hi = None
+        for rg in range(meta.num_row_groups):
+            st = meta.row_group(rg).column(ci).statistics
+            if st is None or not st.has_min_max:
+                lo = hi = None
+                break
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        lo, hi = _json_safe(lo), _json_safe(hi)
+        if lo is not None and hi is not None:
+            mins[col_path] = lo
+            maxs[col_path] = hi
+    return {"rows": meta.num_rows, "bytes": size, "mins": mins, "maxs": maxs}, schema
+
+
 def list_data_files(table_dir: str) -> list[str]:
     """Sorted relative part-file paths currently in the table directory
     — recursive, so partitioned layouts (``_p_…=v/part-…``) list with
@@ -434,30 +492,34 @@ class SnapshotLog:
         return out
 
     # --- commit ------------------------------------------------------------
+    def _base_version(self, branch: str | None) -> int | None:
+        """The version a commit to ``branch`` builds on: the ref's head
+        (the trunk's by default), or for a branch with no commit yet the
+        trunk head it forks from — its parent, and what its lost-update
+        guard compares against."""
+        v = self.latest_version(branch=branch)
+        return self.latest_version() if v is None and branch is not None else v
+
     def commit(
         self,
         operation: str,
-        files: list[str] | None = None,
+        files: list[str],
         expect_latest: int | None | str = "__any__",
         *,
         branch: str | None = None,
         _meta: dict | None = None,
         _extra: dict | None = None,
-        _fork_expect: int | None | str = "__any__",
     ) -> int:
-        """Publish the given (or current) file set as the next version.
+        """Publish ``files`` (relative part-file paths) as the next version.
 
         Returns the committed version.  Raises :class:`SnapshotConflict`
         when a concurrent writer published the same version number first
         — the caller must re-derive its file set and retry (optimistic
         concurrency; the loser's data files are already in the
-        directory, so its retry commit is cheap).
-
-        ``files`` defaults to the directory's current part-file listing,
-        which is correct for the pipeline's single-flight writers (the
-        caller contract of run/run_incremental); an external writer
-        doing blind concurrent appends should pass its base listing +
-        its own files explicitly.
+        directory, so its retry commit is cheap).  A listed file whose
+        footer the commit reads (:meth:`_derive`) that is missing or has
+        no readable parquet footer raises ValueError naming it, before
+        anything is published.
 
         ``expect_latest`` closes the lost-update window for file lists
         DERIVED from a base version: between reading the base and
@@ -465,11 +527,13 @@ class SnapshotLog:
         version counter would still advance correctly, but this commit's
         manifest would silently omit the winner's files.  Pass the
         version the file list was derived from (None for "derived from
-        an empty log"): if the log's latest no longer matches, the
-        commit raises :class:`SnapshotConflict` instead of publishing a
-        regressive manifest.  The remaining check-to-link window is
-        covered by the ``os.link`` CAS itself, because the interloper
-        must take this commit's version number to get ahead of it.
+        an empty log"; for a branch's first commit, the trunk head it
+        forks from): if the ref's base (:meth:`_base_version`) no longer
+        matches, the commit raises :class:`SnapshotConflict` instead of
+        publishing a regressive manifest.  The remaining check-to-link
+        window is covered by the ``os.link`` CAS itself, because the
+        interloper must take this commit's version number to get ahead
+        of it.
 
         ``_meta`` is for the metadata-only commits (publish, evolve,
         set_partition_spec, merge): a manifest-shaped dict whose
@@ -477,38 +541,20 @@ class SnapshotLog:
         this version takes as they are, in place of deriving them from
         the files and the parent.
         """
-        if files is None:
-            files = list_data_files(self.table_dir)
         if branch is not None and not _REF_RE.fullmatch(branch):
             raise ValueError(f"branch name must match {_REF_RE.pattern!r}: {branch!r}")
         os.makedirs(self.log_dir, exist_ok=True)
         vs = self.versions()
-        # the guard compares against THIS REF's head (trunk by default);
         # version numbers allocate globally across refs, so the os.link
         # CAS below still serializes every writer on every ref
-        latest = self.latest_version(branch=branch)
+        latest = self._base_version(branch)
         if expect_latest != "__any__" and latest != expect_latest:
             raise SnapshotConflict(
                 f"{self.table_dir}: expected latest version {expect_latest} "
                 f"but found {latest}; re-derive the file list and retry"
             )
         version = 0 if not vs else vs[-1] + 1
-        # a branch's FIRST commit forks from the trunk head: that is its
-        # parent (and its metadata inheritance base).  _fork_expect is
-        # expect_latest's twin for this path: the caller derived its
-        # file list from a trunk head it read EARLIER — if the trunk
-        # moved since, recording the new head as parent would make
-        # publish()'s fast-forward check pass while the staged file list
-        # silently omits the trunk winner's files (the lost-update class
-        # expect_latest exists to close).
-        if latest is None and branch is not None:
-            latest = self.latest_version()
-            if _fork_expect != "__any__" and latest != _fork_expect:
-                raise SnapshotConflict(
-                    f"{self.table_dir}: branch {branch!r} staged from trunk "
-                    f"{_fork_expect} but trunk is now {latest}; re-derive "
-                    "and retry"
-                )
+        parent = self.snapshot(latest) if latest is not None else {}
         if _meta is None:
             # name-mapping metadata (evolve()): append/rollback carry the
             # parent's mapping forward (metadata describes the table, not
@@ -518,14 +564,11 @@ class SnapshotLog:
             # it survives EVERY operation (an overwrite is rewritten under
             # it, not freed from it) until set_partition_spec commits a
             # new one.
-            parent = self.snapshot(latest) if latest is not None else {}
             keep = ["partition_spec"]
             if operation in ("append", "rollback"):
                 keep += ["aliases", "tombstones"]
             _meta = {k: parent[k] for k in keep if k in parent}
-        schema_json = _meta.get("schema")
-        if schema_json is None:
-            schema_json = self._schema_json(operation, files, parent=latest)
+        schema_json, file_stats = self._derive(operation, files, parent, _meta.get("schema"))
         aliases = dict(_meta.get("aliases") or {})
         tombstones = list(_meta.get("tombstones") or [])
         pspec = list(_meta.get("partition_spec") or [])
@@ -537,13 +580,7 @@ class SnapshotLog:
             "schema": schema_json,
             "parent": latest,
             "ts": time.time(),
-            # Iceberg-manifest-style per-file stats (rows, bytes, and
-            # per-column min/max from the parquet footers): the north
-            # rule's per-partition lineage, and the substrate of
-            # metadata-level scan planning (prune()) — stats of files
-            # already recorded in the parent manifest are carried
-            # forward, so an append commit only reads the NEW footers
-            "file_stats": self._file_stats(files, parent=latest),
+            "file_stats": file_stats,
         }
         if aliases:
             manifest["aliases"] = {k: sorted(v) for k, v in sorted(aliases.items())}
@@ -590,25 +627,15 @@ class SnapshotLog:
         one manifest write, never a data rewrite."""
         last_err: SnapshotConflict | None = None
         for _ in range(_APPEND_ATTEMPTS):
-            base_version = self.latest_version(branch=branch)
-            fork: int | None | str = "__any__"
-            if base_version is None and branch is not None:
-                # first commit on the branch: fork from the trunk head —
-                # guarded by _fork_expect so a trunk append landing
-                # between this read and the commit retries with the union
-                fork = self.latest_version()
-                base = self.snapshot(fork)["files"] if fork is not None else []
-            else:
-                base = self.snapshot(base_version)["files"] if base_version is not None else []
-            merged = sorted(set(base) | set(new_files))
+            base_version = self._base_version(branch)
+            base = self.snapshot(base_version)["files"] if base_version is not None else []
             try:
                 return self.commit(
                     "append",
-                    merged,
+                    sorted(set(base) | set(new_files)),
                     expect_latest=base_version,
                     branch=branch,
                     _extra=_extra,
-                    _fork_expect=fork,
                 )
             except SnapshotConflict as e:
                 last_err = e
@@ -616,6 +643,50 @@ class SnapshotLog:
             f"{self.table_dir}: append lost the commit race {_APPEND_ATTEMPTS} "
             f"times ({last_err}); reduce writer fan-in"
         )
+
+    def _derive(
+        self, operation: str, files: list[str], parent: dict, schema_json: str | None
+    ) -> tuple[str | None, dict]:
+        """The new version's schema (StructType json) and per-file stats,
+        reading each part file's footer at most once — driver-side
+        pyarrow, no Spark job per commit.
+
+        Stats (Iceberg-manifest-style rows, bytes and per-column min/max:
+        the north rule's per-partition lineage and the substrate of
+        prune()/merge() planning) are reused for every file the parent
+        already records, so an append opens only its NEW footers.  A
+        given ``schema_json`` (a metadata-only commit's) is kept.  Else an
+        ``append`` inherits the parent's schema and EXTENDS it with fields
+        the new files introduce (additive evolution: a column added by an
+        append null-fills over pre-evolution files; a same-name field
+        keeps the parent's type).  Every other operation (overwrite /
+        compact / rollback) derives the schema from its own file set
+        alone — an overwrite may legitimately narrow the schema, and a
+        rollback must not keep a phantom column the rolled-back append
+        introduced — so a rollback reads the footers of the files it
+        restores."""
+        known = parent.get("file_stats") or {}
+        fields: list = []
+        schema_done = set(files)  # files whose fields need no footer read
+        if schema_json is None:
+            schema_done = set()
+            if operation == "append" and parent.get("schema"):
+                fields = list(StructType.fromJson(json.loads(parent["schema"])).fields)
+                schema_done = set(parent["files"])
+        names = {f.name for f in fields}
+        stats: dict[str, dict] = {}
+        for name in files:
+            st = known.get(name)
+            if st is None or name not in schema_done:
+                read, schema = _footer(self.table_dir, name)
+                st = st or read
+                if name not in schema_done:
+                    fields += [f for f in schema.fields if f.name not in names]
+                    names |= {f.name for f in schema.fields}
+            stats[name] = st
+        if schema_json is None and fields:
+            schema_json = StructType(fields).json()
+        return schema_json, stats
 
     def _check_mapping(
         self,
@@ -868,112 +939,6 @@ class SnapshotLog:
         for col, val in predicates.items():
             df = df.filter(F.col(col) == F.lit(val))
         return df
-
-    def _file_stats(self, files: list[str], parent: int | None) -> dict:
-        """{file: {rows, bytes, mins, maxs}} from parquet footers.
-
-        min/max cover the top-level primitive columns whose row groups
-        all carry statistics (parquet writes them by default); values
-        are JSON-safe (bytes decoded, non-finite floats dropped).
-        Driver-side footer reads only — no Spark job; files unchanged
-        since the parent manifest reuse the parent's entry."""
-        inherited = {}
-        if parent is not None:
-            try:
-                inherited = self.snapshot(parent).get("file_stats", {})
-            except FileNotFoundError:
-                inherited = {}
-        import pyarrow.parquet as pq
-
-        out: dict[str, dict] = {}
-        for name in files:
-            if name in inherited:
-                out[name] = inherited[name]
-                continue
-            path = os.path.join(self.table_dir, name)
-            if not os.path.exists(path):
-                continue
-            try:
-                meta = pq.ParquetFile(path).metadata
-            except Exception:
-                continue  # a torn in-flight file: stats are best-effort
-            mins: dict[str, object] = {}
-            maxs: dict[str, object] = {}
-            if meta.num_row_groups == 0:
-                # an empty part file (a 0-row partition write): rows=0,
-                # no bounds — row_group(0) would raise
-                out[name] = {"rows": 0, "bytes": os.path.getsize(path), "mins": {}, "maxs": {}}
-                continue
-            for ci in range(meta.num_columns):
-                col_path = meta.row_group(0).column(ci).path_in_schema
-                if "." in col_path:
-                    continue  # nested/list columns: no file-level bounds
-                lo = hi = None
-                ok = True
-                for rg in range(meta.num_row_groups):
-                    st = meta.row_group(rg).column(ci).statistics
-                    if st is None or not st.has_min_max:
-                        ok = False
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                if ok and lo is not None:
-                    lo, hi = _json_safe(lo), _json_safe(hi)
-                    if lo is not None and hi is not None:
-                        mins[col_path] = lo
-                        maxs[col_path] = hi
-            out[name] = {
-                "rows": meta.num_rows,
-                "bytes": os.path.getsize(path),
-                "mins": mins,
-                "maxs": maxs,
-            }
-        return out
-
-    def _schema_json(self, operation: str, files: list[str], parent: int | None) -> str | None:
-        """The version's schema (StructType json), from parquet footers —
-        driver-side pyarrow reads, no Spark job per commit.
-
-        ``append`` inherits the parent's schema and EXTENDS it with
-        fields the new files introduce (additive evolution: a column
-        added by an append null-fills over pre-evolution files; a
-        same-name field keeps the parent's type).  Every other operation
-        (overwrite / compact / rollback) derives the schema from its own
-        file set alone — an overwrite may legitimately narrow the
-        schema, and a rollback must not keep a phantom column the rolled
-        -back append introduced."""
-        import pyarrow.parquet as pq
-
-        # arrow schema -> spark StructType via the same mapping spark's
-        # own Arrow interchange uses
-        import pyspark.sql.pandas.types as pst
-
-        fields: list = []
-        names: set[str] = set()
-        to_read = files
-        if operation == "append" and parent is not None:
-            pm = self.snapshot(parent)
-            if pm.get("schema"):
-                base = StructType.fromJson(json.loads(pm["schema"]))
-                fields = list(base.fields)
-                names = {f.name for f in fields}
-                parent_files = set(pm["files"])
-                to_read = [f for f in files if f not in parent_files]
-        for name in to_read:
-            path = os.path.join(self.table_dir, name)
-            if not os.path.exists(path):
-                continue
-            try:
-                sp = pst.from_arrow_schema(pq.read_schema(path))
-            except Exception:
-                continue  # torn in-flight file: schema is best-effort
-            for f in sp.fields:
-                if f.name not in names:
-                    fields.append(f)
-                    names.add(f.name)
-        if not fields:
-            return None
-        return StructType(fields).json()
 
     # --- read --------------------------------------------------------------
     def read(

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nilinker_spark.operators.graph import single_parent
+
 ANNOTATIONS_SCHEMA = "doc_id string, mention string, kb_id string, ancestor_id string"
 
 
@@ -330,7 +332,7 @@ def medmentions_umls_to_hp(
     has exactly one direct ancestor; output carries the ancestor as the
     EvaNIL gold (annotations.py:285-295).  Two broadcast joins — the
     mapping and the single-parent dim are KB-sized."""
-    sp = single_parent_dim(edges)
+    sp = single_parent(edges)
     return (
         ann.select("doc_id", "mention", F.col("kb_id").alias("umls_id"))
         .join(F.broadcast(umls_to_hp), "umls_id")
@@ -378,16 +380,6 @@ def read_ctd_tsv_kb(spark: SparkSession, path: str) -> tuple[DataFrame, DataFram
         .filter(F.length("parent_id") > 0)
     )
     return concepts, aliases, edges
-
-
-def single_parent_dim(edges: DataFrame) -> DataFrame:
-    """child->parent for children with exactly one parent (broadcastable
-    dim used by read_jsonl_corpus; ≙ kbs.py:84-90)."""
-    counts = edges.groupBy("child_id").agg(F.count("*").alias("n"))
-    return (
-        edges.join(counts.filter(F.col("n") == 1).select("child_id"), "child_id")
-        .select("child_id", "parent_id")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -79,17 +79,16 @@ def load_table(
 def webtext_from_documents(
     docs: DataFrame,
     replicate: int = 1,
-    partitions: int | None = None,
     vocab_variants: int = 1,
 ) -> DataFrame:
     """documents(doc_id, text, lang, source, n_chars) -> webtext shape.
 
     ``replicate`` > 1 tiles the corpus with distinct urls (bench scaling
     knob); text content is unchanged so per-url extraction stays pure.
-    ``partitions`` re-splits the result — the testdata ships as a single
-    parquet file, which would otherwise serialize the whole extraction
-    stage into one task (a 100 TB table arrives pre-split; this knob
-    stands in for that).
+    The result is re-split into one partition per core — the testdata
+    ships as a single parquet file, which would otherwise serialize the
+    whole extraction stage into one task (a 100 TB table arrives
+    pre-split; this stands in for that).
 
     ``vocab_variants`` = V > 1 derives a DETERMINISTIC per-replicate
     vocabulary expansion from the driver text: every token of replicate r
@@ -111,17 +110,16 @@ def webtext_from_documents(
         )
     else:
         base = docs.withColumn("rep", F.lit(0))
-    if partitions is None:
-        # one task slot per core for the python extraction stage.  The
-        # r2-r5 default was cores/2 on the theory that the JVM feeder
-        # thread and its python worker are both runnable and cores/2
-        # tasks already saturate; measured this round, the feeder thread
-        # is far from a full core: at 8 cores, 8 partitions halve the
-        # extraction wall vs 4 (2.56M docs: 23.8 -> 11.9 s; 16 partitions
-        # gain nothing more), and at 2 cores, 2 partitions beat 1 by
-        # 1.8x.  Per-core throughput is then flat across levels
-        # (~25k docs/s/core at 2 and at 8 cores).
-        partitions = docs.sparkSession.sparkContext.defaultParallelism
+    # one task slot per core for the python extraction stage.  The
+    # r2-r5 default was cores/2 on the theory that the JVM feeder
+    # thread and its python worker are both runnable and cores/2
+    # tasks already saturate; measured this round, the feeder thread
+    # is far from a full core: at 8 cores, 8 partitions halve the
+    # extraction wall vs 4 (2.56M docs: 23.8 -> 11.9 s; 16 partitions
+    # gain nothing more), and at 2 cores, 2 partitions beat 1 by
+    # 1.8x.  Per-core throughput is then flat across levels
+    # (~25k docs/s/core at 2 and at 8 cores).
+    partitions = docs.sparkSession.sparkContext.defaultParallelism
     if partitions > 1:
         base = base.repartition(partitions)
     text_col = F.col("text")

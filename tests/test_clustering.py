@@ -2,7 +2,15 @@
 
 from __future__ import annotations
 
+from nilinker_spark.operators import clustering as CL
 from nilinker_spark.operators.clustering import assign_clusters, connected_components
+
+
+def _cc(monkeypatch, df, driver_max_edges):
+    """connected_components with the driver-path threshold set (0 forces
+    the distributed star loop)."""
+    monkeypatch.setattr(CL, "CC_DRIVER_MAX_EDGES", driver_max_edges)
+    return connected_components(df)
 
 
 def _labels(spark, edges):
@@ -65,7 +73,7 @@ def test_cc_matches_union_find_random(spark):
     assert lab == want
 
 
-def test_cc_driver_vs_distributed_paths(spark):
+def test_cc_driver_vs_distributed_paths(spark, monkeypatch):
     """Forced-path parity: the driver-side union-find fast path and the
     distributed alternating-star loop must label random graphs identically."""
     import numpy as np
@@ -80,28 +88,28 @@ def test_cc_driver_vs_distributed_paths(spark):
         df = spark.createDataFrame(edges, "src string, dst string")
         fast = {
             (r["node"], r["label"])
-            for r in connected_components(df, driver_max_edges=10**6).collect()
+            for r in _cc(monkeypatch, df, 10**6).collect()
         }
         dist = {
             (r["node"], r["label"])
-            for r in connected_components(df, driver_max_edges=0).collect()
+            for r in _cc(monkeypatch, df, 0).collect()
         }
         assert fast == dist, f"trial {trial}: paths disagree"
 
 
-def test_cc_self_loops_only(spark):
+def test_cc_self_loops_only(spark, monkeypatch):
     """Self-loop-only nodes get NO label on either path (the caller's
     coalesce makes them singletons)."""
     df = spark.createDataFrame([("a", "a"), ("b", "b")], "src string, dst string")
-    assert connected_components(df, driver_max_edges=10**6).count() == 0
-    assert connected_components(df, driver_max_edges=0).count() == 0
+    assert _cc(monkeypatch, df, 10**6).count() == 0
+    assert _cc(monkeypatch, df, 0).count() == 0
 
 
-def test_cc_probe_overflow_falls_through(spark):
+def test_cc_probe_overflow_falls_through(spark, monkeypatch):
     """More edges than the driver threshold -> distributed path, same labels."""
     edges = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(30)]
     df = spark.createDataFrame(edges, "src string, dst string")
-    lab = {r["node"]: r["label"] for r in connected_components(df, driver_max_edges=5).collect()}
+    lab = {r["node"]: r["label"] for r in _cc(monkeypatch, df, 5).collect()}
     assert set(lab.values()) == {"n00"} and len(lab) == 31
 
 
@@ -135,7 +143,7 @@ def test_union_find_deep_chains_no_recursion():
     assert {x: uf.find(x) for x in list(uf.parent)} == want
 
 
-def test_cc_driver_path_deep_chain(spark):
+def test_cc_driver_path_deep_chain(spark, monkeypatch):
     """The driver fast path labels a 5,000-node chain collected in
     descending edge order as one component, min node as the label.  One
     input partition, one shuffle partition and the single-level
@@ -157,7 +165,7 @@ def test_cc_driver_path_deep_chain(spark):
     for k, v in confs.items():
         spark.conf.set(k, v)
     try:
-        out = connected_components(df, driver_max_edges=10**6).collect()
+        out = _cc(monkeypatch, df, 10**6).collect()
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)

@@ -28,7 +28,7 @@ def test_degrees(spark, kb_edges):
 
 
 def test_single_parent(spark, kb_edges):
-    sp = {r["child"]: r["parent"] for r in single_parent(kb_edges).collect()}
+    sp = {r["src"]: r["dst"] for r in single_parent(kb_edges).collect()}
     # d has two parents -> excluded (≙ kbs.py:84-90)
     assert sp == {"a": "root", "b": "root", "c": "a", "e": "b"}
 

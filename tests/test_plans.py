@@ -290,3 +290,24 @@ def test_mention_metrics_counts_in_one_exchange(spark):
     assert len(exchanges) == 1, final
     below = "\n".join(final.splitlines()[exchanges[0] + 1 :])
     assert "partial_count" in below, final
+
+
+def test_plan_dump_masks_run_dependent_ids():
+    """tools/plan_dump.mask (no Spark): an RDD id counts every RDD the
+    session built before, so an unchanged LogicalRDD plan would diff
+    whenever earlier work built a different number of RDDs."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "plan_dump.py")
+    spec = importlib.util.spec_from_file_location("plan_dump", path)
+    plan_dump = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(plan_dump)
+    line = (
+        "Arguments: [norm#1234, pv#77L], MapPartitionsRDD[1425] at localCheckpoint at "
+        "NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(0)"
+    )
+    assert plan_dump.mask(line) == (
+        "Arguments: [norm#N, pv#N], MapPartitionsRDD[N] at localCheckpoint at "
+        "NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(0)"
+    )

@@ -35,9 +35,9 @@ def test_commit_read_roundtrip_and_history(spark, tmp_path):
     assert log.latest_version() is None
 
     _write(spark, d, [(1, "a"), (2, "b")])
-    assert log.commit("overwrite") == 0
+    assert log.commit("overwrite", list_data_files(d)) == 0
     _write(spark, d, [(3, "c")], mode="append")
-    assert log.commit("append") == 1
+    assert log.commit("append", list_data_files(d)) == 1
 
     assert sorted(r.id for r in log.read(spark).collect()) == [1, 2, 3]
     assert sorted(r.id for r in log.read(spark, 0).collect()) == [1, 2]
@@ -52,11 +52,11 @@ def test_snapshot_isolation_under_concurrent_append(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
+    v0 = log.commit("overwrite", list_data_files(d))
 
     pinned = log.read(spark, v0)  # resolved to v0's files at plan time
     _write(spark, d, [(2, "b")], mode="append")
-    log.commit("append")
+    log.commit("append", list_data_files(d))
 
     assert [r.id for r in pinned.collect()] == [1]
     assert sorted(r.id for r in log.read(spark).collect()) == [1, 2]
@@ -89,7 +89,7 @@ def test_concurrent_writers_cas(spark, tmp_path):
         finally:
             os.remove(tmp)
     # the losing writer retries against the fresh latest and succeeds
-    assert w2.commit("append") == 1
+    assert w2.commit("append", list_data_files(d)) == 1
     # no stale temp manifests leak into the log dir
     assert not [n for n in os.listdir(w2.log_dir) if n.startswith(".tmp")]
 
@@ -98,9 +98,9 @@ def test_expired_version_raises_not_misreads(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     _write(spark, d, [(9, "z")])  # overwrite replaces the part files
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
 
     assert [r.id for r in log.read(spark).collect()] == [9]
     with pytest.raises(SnapshotExpired):
@@ -116,9 +116,9 @@ def test_schema_evolution_add_column(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
+    v0 = log.commit("overwrite", list_data_files(d))
     _write(spark, d, [(2, "b", 7.5)], mode="append", schema="id long, val string, score double")
-    v1 = log.commit("append")
+    v1 = log.commit("append", list_data_files(d))
 
     old = log.read(spark, v0)
     assert old.columns == ["id", "val"]
@@ -234,7 +234,7 @@ def test_file_stats_and_metadata_row_count(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a"), (2, "b")])
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     m0 = log.snapshot(0)
     assert set(m0["file_stats"]) == set(m0["files"])
     st = m0["file_stats"][m0["files"][0]]
@@ -244,7 +244,7 @@ def test_file_stats_and_metadata_row_count(spark, tmp_path):
     assert sum(s["rows"] for s in m0["file_stats"].values()) == 2
 
     _write(spark, d, [(3, "c")], mode="append")
-    log.commit("append")
+    log.commit("append", list_data_files(d))
     m1 = log.snapshot(1)
     for f in m0["files"]:
         assert m1["file_stats"][f] == m0["file_stats"][f], "parent stats not inherited"
@@ -261,7 +261,7 @@ def test_prune_skips_files_and_matches_full_filter(spark, tmp_path):
     df = spark.range(0, 1000).selectExpr("id", "concat('v', id) as val")
     df.repartitionByRange(4, "id").write.mode("overwrite").parquet(d)
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     n_files = len(log.snapshot()["files"])
     assert n_files == 4
 
@@ -284,7 +284,7 @@ def test_commit_append_resolves_conflicts(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
+    v0 = log.commit("overwrite", list_data_files(d))
     files_v0 = log.snapshot()["files"]
 
     # an interloper appends and commits while our derived list is stale
@@ -314,7 +314,7 @@ def test_commit_append_threaded_race(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     base = set(log.snapshot()["files"])
     batch1 = _stage(spark, log, [(2, "b")])
     batch2 = _stage(spark, log, [(3, "c")])
@@ -348,11 +348,11 @@ def test_read_changes_incremental_scan(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
+    v0 = log.commit("overwrite", list_data_files(d))
     _write(spark, d, [(2, "b")], mode="append")
-    v1 = log.commit("append")
+    v1 = log.commit("append", list_data_files(d))
     _write(spark, d, [(3, "c")], mode="append")
-    v2 = log.commit("append")
+    v2 = log.commit("append", list_data_files(d))
 
     assert sorted(r.id for r in log.read_changes(spark, v0).collect()) == [2, 3]
     assert [r.id for r in log.read_changes(spark, v1, v2).collect()] == [3]
@@ -362,7 +362,7 @@ def test_read_changes_incremental_scan(spark, tmp_path):
         log.read_changes(spark, v2, v0)
 
     _write(spark, d, [(9, "z")])  # overwrite rewrites history
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     with pytest.raises(ValueError):
         log.read_changes(spark, v0)
     # a range that stops before the overwrite plans fine, but Spark's
@@ -380,7 +380,7 @@ def test_evolve_rename_reads_every_vintage(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
+    v0 = log.commit("overwrite", list_data_files(d))
     files_v0 = log.snapshot(v0)["files"]
 
     v1 = log.evolve(renames={"val": "label"})
@@ -388,7 +388,7 @@ def test_evolve_rename_reads_every_vintage(spark, tmp_path):
     assert log.read(spark, v1).columns == ["id", "label"]
 
     _write(spark, d, [(2, "b")], mode="append", schema="id long, label string")
-    v2 = log.commit("append")
+    v2 = log.commit("append", list_data_files(d))
     got = {r.id: r.label for r in log.read(spark, v2).collect()}
     assert got == {1: "a", 2: "b"}
     # pre-rename version still reads with its own schema
@@ -405,13 +405,13 @@ def test_evolve_rename_chain_and_name_reuse_guards(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     log.evolve(renames={"val": "v_mid"})
     _write(spark, d, [(2, "b")], mode="append", schema="id long, v_mid string")
-    log.commit("append")
+    log.commit("append", list_data_files(d))
     log.evolve(renames={"v_mid": "v_new"})
     _write(spark, d, [(3, "c")], mode="append", schema="id long, v_new string")
-    log.commit("append")
+    log.commit("append", list_data_files(d))
 
     m = log.snapshot()
     assert m["aliases"] == {"v_new": ["v_mid", "val"]}
@@ -423,7 +423,7 @@ def test_evolve_rename_chain_and_name_reuse_guards(spark, tmp_path):
     latest = log.latest_version()
     _write(spark, d, [(9, "z")], mode="append", schema="id long, val string")
     with pytest.raises(ValueError, match="ambiguous"):
-        log.commit("append")
+        log.commit("append", list_data_files(d))
     assert log.latest_version() == latest
     # renaming another column ONTO an aliased name refuses too
     with pytest.raises(ValueError, match="ambiguous"):
@@ -437,7 +437,7 @@ def test_evolve_drop_tombstones_block_resurrection(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
+    v0 = log.commit("overwrite", list_data_files(d))
     v1 = log.evolve(drops=["val"])
 
     assert log.read(spark, v1).columns == ["id"]
@@ -446,7 +446,7 @@ def test_evolve_drop_tombstones_block_resurrection(spark, tmp_path):
 
     _write(spark, d, [(2, "a2")], mode="append", schema="id long, val string")
     with pytest.raises(ValueError, match="tombstone"):
-        log.commit("append")
+        log.commit("append", list_data_files(d))
     with pytest.raises(ValueError, match="ambiguous"):
         log.evolve(renames={"id": "val"})
 
@@ -455,7 +455,7 @@ def test_evolve_validation_errors(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     with pytest.raises(ValueError, match="nothing to do"):
         log.evolve()
     with pytest.raises(ValueError, match="no such column"):
@@ -481,9 +481,9 @@ def test_evolve_prune_uses_physical_footer_stats(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a"), (2, "b")])
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     _write(spark, d, [(10, "x"), (11, "y")], mode="append")
-    log.commit("append")
+    log.commit("append", list_data_files(d))
     log.evolve(renames={"id": "doc_id"})
 
     pruned = log.prune(spark, "doc_id", lo=10)
@@ -500,7 +500,7 @@ def test_rollback_commit_remaps_physical_schema(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
+    v0 = log.commit("overwrite", list_data_files(d))
     restored = log.snapshot(v0)["files"]
     log.evolve(renames={"val": "label"})
 
@@ -518,7 +518,7 @@ def test_evolve_type_promotion(spark, tmp_path):
         "overwrite"
     ).parquet(d)
     log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
+    v0 = log.commit("overwrite", list_data_files(d))
     files_v0 = log.snapshot(v0)["files"]
 
     v1 = log.evolve(promotes={"id": "long", "score": "double"})
@@ -526,7 +526,7 @@ def test_evolve_type_promotion(spark, tmp_path):
     spark.createDataFrame([(2**40, 2.5)], "id long, score double").coalesce(1).write.mode(
         "append"
     ).parquet(d)
-    log.commit("append")
+    log.commit("append", list_data_files(d))
 
     got = log.read(spark)
     assert got.schema.simpleString() == "struct<id:bigint,score:double>"
@@ -548,12 +548,12 @@ def test_evolve_promote_and_rename_same_column(spark, tmp_path):
         "overwrite"
     ).parquet(d)
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     log.evolve(renames={"n": "count"}, promotes={"n": "long"})
     spark.createDataFrame([(2, 2**40)], "id long, count long").coalesce(1).write.mode(
         "append"
     ).parquet(d)
-    log.commit("append")
+    log.commit("append", list_data_files(d))
 
     got = log.read(spark)
     assert got.schema.simpleString() == "struct<id:bigint,count:bigint>"
@@ -583,7 +583,7 @@ def test_partitioned_write_hides_layout_and_prunes(spark, tmp_path):
     )
     rows = [(i, "en" if i % 3 else "de", i * 10) for i in range(40)]
     new = log.write(_pdf(spark, rows), mode="overwrite")
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     assert log.snapshot()["files"] == new  # write returns exactly the files it wrote
 
     # hidden: the table schema carries ONLY source columns
@@ -645,7 +645,7 @@ def test_partition_evolution_mixed_vintages(spark, tmp_path):
     log = SnapshotLog(d)
     log.set_partition_spec([{"column": "lang", "transform": "identity"}])
     log.write(_pdf(spark, [(i, "en" if i % 2 else "de", i) for i in range(10)]))
-    v1 = log.commit("append")
+    v1 = log.commit("append", list_data_files(d))
     files_v1 = set(log.snapshot(v1)["files"])
 
     v2 = log.set_partition_spec(
@@ -656,7 +656,7 @@ def test_partition_evolution_mixed_vintages(spark, tmp_path):
     )
     assert set(log.snapshot(v2)["files"]) == files_v1  # zero data files touched
     log.write(_pdf(spark, [(i, "en" if i % 2 else "de", i) for i in range(10, 20)]))
-    log.commit("append")
+    log.commit("append", list_data_files(d))
 
     got = log.prune_partition(spark, {"lang": "en", "id": 15})
     assert [(r.id, r.n) for r in got.collect()] == [(15, 15)]
@@ -689,7 +689,7 @@ def test_partition_null_values_skip_equality(spark, tmp_path):
     log.write(
         spark.createDataFrame([(1, "en", 1), (2, None, 2), (3, "de", 3)], "id long, lang string, n long")
     )
-    log.commit("append")
+    log.commit("append", list_data_files(d))
     got = log.prune_partition(spark, {"lang": "en"})
     assert [(r.id, r.lang) for r in got.collect()] == [(1, "en")]
     assert all("__HIVE_DEFAULT_PARTITION__" not in f for f in got.inputFiles())
@@ -715,14 +715,14 @@ def test_partitioned_vacuum_and_time_travel(spark, tmp_path):
     log = SnapshotLog(d)
     log.set_partition_spec([{"column": "lang", "transform": "identity"}])
     log.write(_pdf(spark, [(1, "en", 1)]))
-    v1 = log.commit("append")
+    v1 = log.commit("append", list_data_files(d))
     log.write(_pdf(spark, [(2, "de", 2)]))
-    v2 = log.commit("append")
+    v2 = log.commit("append", list_data_files(d))
     assert {r.id for r in log.read(spark, v1).collect()} == {1}
     assert {r.id for r in log.read(spark, v2).collect()} == {1, 2}
     # overwrite drops the old files from their subdirectories
     log.write(_pdf(spark, [(3, "fr", 3)]), mode="overwrite")
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     assert list_data_files(d) == log.snapshot()["files"]
     assert {r.id for r in log.read(spark).collect()} == {3}
 
@@ -738,7 +738,7 @@ def test_wap_stage_audit_publish(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
+    v0 = log.commit("overwrite", list_data_files(d))
 
     staged = _stage(spark, log, [(2, "b")])
     v_stage = log.commit_append(staged, branch="audit")
@@ -766,7 +766,7 @@ def test_wap_publish_refuses_non_fast_forward(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
 
     log.commit_append(_stage(spark, log, [(2, "b")]), branch="audit")
 
@@ -785,7 +785,7 @@ def test_wap_multi_commit_branch_and_vacuum_retention(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
+    v0 = log.commit("overwrite", list_data_files(d))
 
     for new_id in (2, 3):
         log.commit_append(_stage(spark, log, [(new_id, "x")]), branch="wap")
@@ -802,9 +802,9 @@ def test_branch_name_validation_and_missing(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     with pytest.raises(ValueError, match="branch name"):
-        log.commit("append", branch="bad/name")
+        log.commit("append", list_data_files(d), branch="bad/name")
     with pytest.raises(FileNotFoundError, match="no branch"):
         log.publish("nope")
     with pytest.raises(FileNotFoundError, match="no branch"):
@@ -828,7 +828,7 @@ def test_merge_upsert_rewrites_only_touched_files(spark, tmp_path):
         "id long, val string",
     ).repartitionByRange(2, "id").write.mode("overwrite").parquet(d)
     log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
+    v0 = log.commit("overwrite", list_data_files(d))
     files_v0 = log.snapshot(v0)["files"]
 
     source = spark.createDataFrame([(3, "UP"), (999, "NEW")], "id long, val string")
@@ -856,7 +856,7 @@ def test_merge_validation(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     with pytest.raises(ValueError, match="duplicate keys"):
         log.merge(spark, spark.createDataFrame([(1, "x"), (1, "y")], "id long, val string"), on="id")
     with pytest.raises(ValueError, match="source columns"):
@@ -875,7 +875,7 @@ def test_merge_on_branch_then_publish(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a"), (2, "b")])
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     staged = _stage(spark, log, [(1, "a"), (2, "UP")])
     log.commit("overwrite", files=staged, branch="wap")
     assert {r.id: r.val for r in log.read(spark).collect()} == {1: "a", 2: "b"}
@@ -961,7 +961,7 @@ def test_listing_excludes_spark_temporary_staging(spark, tmp_path):
     files = list_data_files(d)
     assert files and all("_temporary" not in f for f in files)
     log = SnapshotLog(d)
-    log.commit("overwrite")  # default listing: must not reference the torn file
+    log.commit("overwrite", list_data_files(d))  # the listing must not reference the torn file
     assert [r.id for r in log.read(spark).collect()] == [1]
 
 
@@ -973,11 +973,12 @@ def test_branch_fork_race_raises(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    v0 = log.commit("overwrite")
+    v0 = log.commit("overwrite", list_data_files(d))
     _write(spark, d, [(2, "b")], mode="append")
-    log.commit("append")  # the interloper: trunk is now v1
-    with pytest.raises(SnapshotConflict, match="staged from trunk"):
-        log.commit("append", branch="audit", expect_latest=None, _fork_expect=v0)
+    log.commit("append", list_data_files(d))  # the interloper: trunk is now v1
+    # the first branch commit is guarded by the trunk head it forks from
+    with pytest.raises(SnapshotConflict, match="expected latest version 0 but found 1"):
+        log.commit("append", list_data_files(d), branch="audit", expect_latest=v0)
     # commit_append's retry loop resolves the same race transparently
     log.commit_append(_stage(spark, log, [(3, "c")]), branch="audit")
     assert sorted(r.id for r in log.read(spark, branch="audit").collect()) == [1, 2, 3]
@@ -999,7 +1000,7 @@ def test_merge_keeps_partition_tuples_and_date_keys(spark, tmp_path):
         "id long, lang string, day string",
     ).withColumn("day", F.col("day").cast("date"))
     log.write(df)
-    log.commit("append")
+    log.commit("append", list_data_files(d))
 
     import datetime
 
@@ -1072,7 +1073,7 @@ def test_prune_partition_conservative_on_unprovable_value_types(spark, tmp_path)
     log.set_partition_spec([{"column": "val", "transform": "identity"}])
     df = spark.createDataFrame([(1, 1e-07), (2, 0.5)], "id long, val double")
     log.write(df, mode="overwrite")
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     out = log.prune_partition(spark, {"val": 1e-07})
     assert [r.id for r in out.collect()] == [1]
     # booleans render 'true' (Spark) vs 'True' (Python): also conservative
@@ -1083,7 +1084,7 @@ def test_prune_partition_conservative_on_unprovable_value_types(spark, tmp_path)
         spark.createDataFrame([(1, True), (2, False)], "id long, flag boolean"),
         mode="overwrite",
     )
-    log2.commit("overwrite")
+    log2.commit("overwrite", list_data_files(d2))
     assert [r.id for r in log2.prune_partition(spark, {"flag": True}).collect()] == [1]
 
 
@@ -1121,7 +1122,7 @@ def test_merge_rejects_null_keys(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     src = spark.createDataFrame([(None, "x"), (2, "y")], "id long, val string")
     with pytest.raises(ValueError, match="must be non-null"):
         log.merge(spark, src, on="id")
@@ -1134,8 +1135,121 @@ def test_manifest_cache_serves_immutable_manifests(spark, tmp_path):
     d = str(tmp_path / "t")
     _write(spark, d, [(1, "a")])
     log = SnapshotLog(d)
-    log.commit("overwrite")
+    log.commit("overwrite", list_data_files(d))
     m1 = log.snapshot(0)
     assert log.snapshot(0) is m1  # cache hit: same parsed object
     # a second instance (fresh cache) sees the same content
     assert SnapshotLog(d).snapshot(0) == m1
+
+
+# --- one derivation per commit ------------------------------------------------
+
+
+def _footer_spy(monkeypatch, table_dir):
+    """Relative paths of every parquet footer opened from now on — both
+    ``pq.ParquetFile`` and the ``pq.read_schema`` path construct one."""
+    import pyarrow.parquet as pq
+    import pyarrow.parquet.core as pqc
+
+    opened: list[str] = []
+
+    class Spy(pqc.ParquetFile):
+        def __init__(self, source, *args, **kwargs):
+            path = isinstance(source, (str, os.PathLike))
+            opened.append(os.path.relpath(source, table_dir) if path else repr(source))
+            super().__init__(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", Spy)
+    monkeypatch.setattr(pqc, "ParquetFile", Spy)
+    return opened
+
+
+def test_commit_opens_each_new_footer_once(spark, tmp_path, monkeypatch):
+    """An overwrite of three new files and an append of one open each
+    new file's footer exactly once (stats and schema from one read); a
+    rollback reads each restored file once, for its schema."""
+    d = str(tmp_path / "t")
+    log = SnapshotLog(d)
+    rows = spark.createDataFrame([(i, f"v{i}") for i in range(9)], "id long, val string")
+    new = log.write(rows.repartition(3), mode="overwrite")
+    assert len(new) == 3
+    appended = _stage(spark, log, [(9, "z")])
+
+    opened = _footer_spy(monkeypatch, d)
+    v0 = log.commit("overwrite", new)
+    assert sorted(opened) == new
+    opened.clear()
+    v1 = log.commit_append(appended)
+    assert opened == appended
+    opened.clear()
+    log.commit("rollback", new, expect_latest=v1)
+    assert sorted(opened) == new
+    assert log.snapshot(v0)["files"] == new
+
+
+def _pyarrow_view(table_dir, files):
+    """Per-file stats and the field list computed independently: pyarrow
+    reads the rows and takes min/max over them, not footer statistics."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    stats, fields = {}, []
+    for f in files:
+        path = os.path.join(table_dir, f)
+        t = pq.read_table(path)
+        mm = {c: pc.min_max(t[c]).as_py() for c in t.column_names}
+        stats[f] = {
+            "rows": t.num_rows,
+            "bytes": os.path.getsize(path),
+            "mins": {c: v["min"] for c, v in mm.items()},
+            "maxs": {c: v["max"] for c, v in mm.items()},
+        }
+        have = {x.name for x in fields}
+        fields += [x for x in from_arrow_schema(t.schema).fields if x.name not in have]
+    return stats, fields
+
+
+def test_published_schema_and_stats_match_pyarrow(spark, tmp_path):
+    """The manifest's ``schema`` and ``file_stats`` equal what pyarrow
+    computes from the files themselves, for an overwrite, an append that
+    adds a column (the parent's fields first) and a rollback (its own
+    files' fields only: no phantom column)."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    d = str(tmp_path / "t")
+    log = SnapshotLog(d)
+    base = spark.createDataFrame([(1, "a"), (2, "b"), (5, "e")], "id long, val string")
+    v0 = log.commit("overwrite", log.write(base.repartition(2), mode="overwrite"))
+    v1 = log.commit_append(_stage(spark, log, [(3, "c", 7.5)], "id long, val string, score double"))
+    files_v0 = log.snapshot(v0)["files"]
+    v2 = log.commit("rollback", files_v0, expect_latest=v1)
+
+    fresh = SnapshotLog(d)  # the published JSON, not the writer's cache
+    for v in (v0, v1, v2):
+        m = fresh.snapshot(v)
+        stats, fields = _pyarrow_view(d, m["files"])
+        assert m["file_stats"] == stats, v
+        assert m["schema"] == StructType(fields).json(), v
+    names = [[f.name for f in StructType.fromJson(json.loads(fresh.snapshot(v)["schema"]))]
+             for v in (v0, v1, v2)]
+    assert names == [["id", "val"], ["id", "val", "score"], ["id", "val"]]
+
+
+def test_commit_of_unreadable_file_raises_and_publishes_nothing(spark, tmp_path):
+    """A listed file that is missing, or has no parquet footer, fails
+    the commit with ValueError naming it: no version is published and no
+    temp manifest is left behind."""
+    d = str(tmp_path / "t")
+    _write(spark, d, [(1, "a")])
+    log = SnapshotLog(d)
+    v0 = log.commit("overwrite", list_data_files(d))
+    with open(os.path.join(d, "part-torn.parquet"), "wb") as fh:
+        fh.write(b"torn")
+    for bad in ("part-missing.parquet", "part-torn.parquet"):
+        with pytest.raises(ValueError, match=bad):
+            log.commit("append", log.snapshot(v0)["files"] + [bad], expect_latest=v0)
+        assert SnapshotLog(d).latest_version() == v0
+        assert not [n for n in os.listdir(log.log_dir) if n.startswith(".tmp-")]

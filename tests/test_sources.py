@@ -5,12 +5,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from nilinker_spark.operators.graph import single_parent
 from nilinker_spark.sources.corpora import (
     read_ctd_tsv_kb,
     read_jsonl_corpus,
     read_pubtator_corpus,
     read_xml_corpus,
-    single_parent_dim,
     write_corpus_fixtures,
 )
 
@@ -36,7 +36,7 @@ def test_ctd_tsv_kb(spark, fixtures):
 
 def test_single_parent_dim(spark, fixtures):
     _, _, edges = read_ctd_tsv_kb(spark, fixtures["tsv"])
-    sp = single_parent_dim(edges)
+    sp = single_parent(edges)
     # children with >1 parent are excluded
     multi_children = {r["child_id"] for r in edges.groupBy("child_id").count().filter(F.col("count") > 1).collect()}
     got = {r["child_id"] for r in sp.collect()}
@@ -46,7 +46,7 @@ def test_single_parent_dim(spark, fixtures):
 
 def test_jsonl_corpus(spark, fixtures):
     _, _, edges = read_ctd_tsv_kb(spark, fixtures["tsv"])
-    parents = single_parent_dim(edges)
+    parents = single_parent(edges)
     ann = read_jsonl_corpus(spark, fixtures["jsonl"], parents)
     rows = ann.collect()
     assert len(rows) > 0

@@ -62,8 +62,13 @@ def test_stream_equals_batch(spark, kb, gazetteer, webtext_path, tmp_path_factor
 def test_run_stream_job_first_seen(spark, kb, gazetteer, tmp_path_factory):
     """jobs/run_stream.py end to end in its own process: the mentions it
     drains equal the batch extraction of the same input, the first-seen
-    table holds one row per distinct norm, and a rerun on the same
-    checkpoint adds no row to either output."""
+    table holds one row per distinct norm and is fed from the drained
+    mentions (its source log lists files under --output, never --input:
+    each page is extracted once), and a rerun on the same checkpoint
+    adds no row to either output."""
+    import json
+    from urllib.parse import urlparse
+
     from nilinker_spark.fixtures.webtext import write_webtext_parquet
 
     base = tmp_path_factory.mktemp("run_stream_job")
@@ -92,6 +97,18 @@ def test_run_stream_job_first_seen(spark, kb, gazetteer, tmp_path_factory):
     n_forms = forms.count()
     assert n_forms == forms.select("norm").distinct().count()
     assert n_forms == batch.select("norm").distinct().count()
+    source_log = os.path.join(ckpt + "_firstseen", "sources", "0")
+    listed = [
+        json.loads(line)["path"]
+        for n in os.listdir(source_log)
+        if not n.startswith(".")  # Hadoop's .crc checksum files
+        for line in open(os.path.join(source_log, n))
+        if line.startswith("{")
+    ]
+    out_dir = os.path.realpath(out) + os.sep
+    assert listed and all(
+        os.path.realpath(urlparse(p).path).startswith(out_dir) for p in listed
+    )
 
     mentions, forms = run_job()
     assert mentions.count() == n_mentions

@@ -4,9 +4,10 @@
 
 One file per ``queries()`` entry (or per named query), ``<out_dir>/<name>.txt``,
 holding that entry's ``explain("formatted")`` text.  Expression ids, plan
-ids and the random part of scratch-directory names change from run to run
-and are masked, so two dumps of the same code compare equal and a code
-change that should not move any plan is checked with
+ids, RDD ids and the random part of scratch-directory names change from
+run to run, or with the work the session did before, and are masked, so
+two dumps of the same code compare equal and a code change that should
+not move any plan is checked with
 
     diff -r <dump_before> <dump_after>
 
@@ -30,6 +31,8 @@ _MASKS = [
     # attribute / expression ids: doc_id#12L -> doc_id#N
     (re.compile(r"#\d+L?\b"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    # RDD ids count every RDD the session built before: MapPartitionsRDD[1425]
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     # higher-order-function variables are numbered per session: x_291
     (re.compile(r"(lambda [A-Za-z]+)_\d+"), r"\1_N"),
     # scratch directories of the rows whose result lives on disk
