@@ -15,7 +15,9 @@ exact across the engines.
 
 :func:`frame_signature` is the Spark-only order-free content signature,
 ``(count, bit_xor(xxhash64(cols)))`` in one job: the pipeline's batch id,
-its commit lineage and the connected-components convergence test.
+its compaction check and the connected-components convergence test.
+:func:`signature_aggs` are its two aggregates, which a pipeline commit
+observes during its write.
 """
 
 from __future__ import annotations
@@ -37,13 +39,19 @@ def h60_value(text: str) -> int:
     return int(hashlib.md5(text.encode()).hexdigest()[:15], 16)
 
 
+def signature_aggs(*cols: str) -> tuple[F.Column, F.Column]:
+    """The two aggregates of :func:`frame_signature`, named ``rows`` and
+    ``checksum``: for ``df.agg`` or a ``df.observe`` during a write."""
+    return (
+        F.count("*").alias("rows"),
+        F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("checksum"),
+    )
+
+
 def frame_signature(df, *cols: str) -> tuple[int, int]:
     """``(rows, checksum)`` of ``df`` in one job: the row count and the
     bit_xor of ``xxhash64(*cols)`` over the rows (0 for none).  Row order
     and partitioning do not change it; two different row multisets
     collide with probability ~2^-64 at equal count."""
-    row = df.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("sig"),
-    ).first()
-    return int(row["n"]), int(row["sig"])
+    row = df.agg(*signature_aggs(*cols)).first()
+    return int(row["rows"]), int(row["checksum"])

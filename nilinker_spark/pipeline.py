@@ -24,7 +24,11 @@ Pipeline commits the same tables:
   append lists the head's files plus the new ones (an append of no rows
   keeps no file);
 - every manifest carries the batch id (an order-free checksum of the
-  batch's urls) and the stage's lineage: rows, checksum, wall_ms;
+  batch's urls) and the stage's lineage: rows, checksum, wall_ms.  The
+  rows and checksum are observed during the stage's write, so a commit
+  re-reads nothing (compact() alone re-reads, to verify its rewrite);
+- S1 runs in one Python-worker task per ``_DOCS_PER_EXTRACT_TASK`` of
+  the batch's documents, so a small delta extracts in one task;
 - a stage is done for a batch when its head manifest carries that batch
   id and is readable, so a relaunch skips it;
 - a batch is committed when its ``resolved`` manifest is published;
@@ -40,18 +44,19 @@ and the substrate of the north rule's mid-pipeline resume.
 
 from __future__ import annotations
 
+import math
 import os
 import time
 from contextlib import contextmanager
 from typing import NamedTuple
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from nilinker_spark import oracle
 from nilinker_spark.fixtures.kb import KBFixture
-from nilinker_spark.functions.hashing import frame_signature
+from nilinker_spark.functions.hashing import frame_signature, signature_aggs
 from nilinker_spark.operators import blocking, clustering, scoring
 from nilinker_spark.operators.extract import extract_mentions_df
 from nilinker_spark.operators.pairs import candidate_pairs
@@ -75,6 +80,12 @@ from nilinker_spark.snapshots import SnapshotLog, list_data_files
 DRIVER_VOCAB_MAX = 2000
 # compact() sizes its rewrite at about this many rows per part file
 _COMPACT_ROWS_PER_FILE = 1_000_000
+# A checkpointed batch extracts (S1) in ceil(docs / this) tasks, never
+# more than its webtext's partitions: each Python-worker task pays ~2.5 MB
+# of io before its first row, and one task of up to this many documents
+# wrote the mentions no slower than one per core (local[4]: 250/500 docs
+# won in each of 3 windows, min of 3; 750 and 1,000 lost in 2 of 3)
+_DOCS_PER_EXTRACT_TASK = 500
 
 RESOLVED_COLS = ("url", "mention_id", "surface", "pos", "norm", "cluster_id")
 
@@ -481,6 +492,10 @@ class Pipeline:
         if committed and (batch in committed or not append):
             return self.read_stage("resolved")
         gaz = self.kb.gazetteer if self.gazetteer is None else self.gazetteer
+        # S1 in ceil(n / _DOCS_PER_EXTRACT_TASK) tasks; coalesce adds no
+        # shuffle and never raises a partition count, so a batch of at
+        # least partitions x that many docs keeps one task per partition
+        webtext = webtext.coalesce(max(1, math.ceil(n / _DOCS_PER_EXTRACT_TASK)))
         b = _Batch(self.spark, self.kb, webtext, gaz, self.alpha, self.tau, self.max_block)
         for name, build, mode in _STAGE_GRAPH:
             log = self._log(name)
@@ -525,18 +540,26 @@ class Pipeline:
         commit is published); an append of no rows deletes its new files
         and commits the head's file list.  The manifest's lineage (rows,
         order-free checksum, wall_ms) covers the whole table: an append
-        combines the
-        head's with its new files' (bit_xor is associative), so only the
-        new files are re-read.  With ``expect`` the new files must hold
-        exactly that (rows, checksum), or they are deleted unpublished.
+        combines the head's with its new rows' (bit_xor is associative).
+        The new rows' (rows, checksum) are observed during the write, in
+        its result stage (no exchange lies between the observation and
+        the file writer, so a retried task is counted once); nothing is
+        re-read.  With ``expect`` the new files are re-read instead and
+        must hold exactly that (rows, checksum), or they are deleted
+        unpublished.
         """
         t0 = time.monotonic()
-        new = log.write(df)
-        out = self.spark.read.parquet(*[os.path.join(log.table_dir, f) for f in new])
-        rows, checksum = frame_signature(out, *out.columns)
-        if expect is not None and (rows, checksum) != expect:
-            _delete(log.table_dir, new)
-            raise RuntimeError(f"{operation} of {log.table_dir} changed content; aborted")
+        if expect is None:
+            obs = Observation()
+            new = log.write(df.observe(obs, *signature_aggs(*df.columns)))
+            rows, checksum = obs.get["rows"], obs.get["checksum"]
+        else:
+            new = log.write(df)
+            out = self.spark.read.parquet(*[os.path.join(log.table_dir, f) for f in new])
+            rows, checksum = frame_signature(out, *out.columns)
+            if (rows, checksum) != expect:
+                _delete(log.table_dir, new)
+                raise RuntimeError(f"{operation} of {log.table_dir} changed content; aborted")
         old = head["files"] if head is not None else []
         if mode == "append" and head is not None:
             if rows == 0:

@@ -220,6 +220,24 @@ def test_compact_recovers_midswap_crash(spark, kb, webtext_df, tmp_path_factory,
     shutil.rmtree(ck)
 
 
+def test_compact_aborts_rewrite_with_other_content(spark, kb, webtext_rows, tmp_path, monkeypatch):
+    """compact() re-reads its rewrite and compares it with the head's
+    lineage: a rewrite that lost rows is deleted unpublished, and the
+    table keeps its head and files."""
+    pipe = Pipeline(spark, kb, str(tmp_path))
+    pipe.run(_df(spark, webtext_rows[:40])).count()
+    src = str(tmp_path / "mentions")
+    head = SnapshotLog(src).snapshot()
+    real_read = SnapshotLog.read
+    monkeypatch.setattr(SnapshotLog, "read", lambda log, *a, **k: real_read(log, *a, **k).limit(1))
+    with pytest.raises(RuntimeError, match="changed content"):
+        pipe.compact("mentions")
+    monkeypatch.undo()
+    assert SnapshotLog(src).snapshot() == head
+    assert list_data_files(src) == head["files"]
+    assert pipe.read_stage("mentions").count() == head["lineage"]["rows"] > 1
+
+
 def test_incremental_crash_then_different_batch(
     spark, kb, webtext_rows, scratch_full, tmp_path_factory, crash_commit
 ):
@@ -406,3 +424,68 @@ def test_pipeline_reads_no_manifest_it_wrote(spark, kb, webtext_rows, tmp_path, 
         for n in os.listdir(tmp_path / f"{st}__snaplog")
     }
     assert not set(opened) & written, sorted(opened)
+
+
+def test_small_batch_extracts_in_one_task(spark, kb, webtext_rows, tmp_path, monkeypatch):
+    """S1 runs in ceil(docs / _DOCS_PER_EXTRACT_TASK) tasks, never more
+    than the webtext's partitions: a delta of a few pages adds exactly one
+    mentions part file, and a batch of at least partitions x that many
+    docs still writes one per partition."""
+    from nilinker_spark import pipeline
+
+    parts = spark.sparkContext.defaultParallelism
+    base = _df(spark, webtext_rows[: 10 * parts])
+    delta = _df(spark, webtext_rows[10 * parts : 10 * parts + 8])
+    assert base.rdd.getNumPartitions() == delta.rdd.getNumPartitions() == parts > 1
+    pipe = Pipeline(spark, kb, str(tmp_path))
+    log = SnapshotLog(str(tmp_path / "mentions"))
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "_DOCS_PER_EXTRACT_TASK", 10)
+        pipe.run(base).count()
+    committed = log.snapshot()["files"]
+    assert len(committed) == parts
+    pipe.run_incremental(delta).count()
+    head = SnapshotLog(str(tmp_path / "mentions")).snapshot()["files"]
+    assert len(set(head) - set(committed)) == 1 and set(committed) <= set(head)
+
+
+def test_observed_lineage_equals_committed_files(spark, kb, webtext_rows, tmp_path, monkeypatch):
+    """Each commit's lineage (rows, checksum) is observed during its
+    write: after a run and two deltas (the second adds no new form, so
+    phrase_vecs appends 0 rows) every stage head's lineage equals the
+    frame_signature of the committed table, and _commit re-reads written
+    files only on compact()'s verified path."""
+    from pyspark.sql import DataFrameReader
+
+    from nilinker_spark.functions.hashing import frame_signature
+
+    inside, reads = [False], [0]
+    real_commit, real_parquet = Pipeline._commit, DataFrameReader.parquet
+
+    def commit(self, *args, **kwargs):
+        inside[0] = True
+        try:
+            return real_commit(self, *args, **kwargs)
+        finally:
+            inside[0] = False
+
+    def parquet(self, *paths, **kwargs):
+        reads[0] += inside[0]
+        return real_parquet(self, *paths, **kwargs)
+
+    monkeypatch.setattr(Pipeline, "_commit", commit)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    pipe = Pipeline(spark, kb, str(tmp_path))
+    pipe.run(_df(spark, webtext_rows[:32])).count()
+    pipe.run_incremental(_df(spark, webtext_rows[32:48])).count()
+    vecs = SnapshotLog(str(tmp_path / "phrase_vecs")).snapshot()
+    same_forms = [(url + "?copy", *rest) for url, *rest in webtext_rows[:16]]
+    pipe.run_incremental(_df(spark, same_forms)).count()
+    assert SnapshotLog(str(tmp_path / "phrase_vecs")).snapshot()["files"] == vecs["files"]
+    assert reads == [0]
+    for stage in STAGES:
+        table = pipe.read_stage(stage)
+        lin = SnapshotLog(str(tmp_path / stage)).snapshot()["lineage"]
+        assert (lin["rows"], lin["checksum"]) == frame_signature(table, *table.columns), stage
+    pipe.compact("mentions")
+    assert reads == [1]

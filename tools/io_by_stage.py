@@ -1,4 +1,4 @@
-"""Bytes each stage of a checkpointed delta batch reads and writes, by process kind.
+"""Bytes, Spark jobs and tasks of each stage of a checkpointed delta batch.
 
     python tools/io_by_stage.py [--deltas 3] [--seed 1] [--cores N]
 
@@ -10,8 +10,11 @@ During the deltas every ``SnapshotLog.commit`` takes a reading of
 a local-mode job runs in: this Python driver, the JVM, and the Python
 daemon and workers the JVM forks (reaped workers count in the daemon).
 The bytes between two consecutive commits are charged to the stage table
-the second one commits.  It prints one table per delta, MB per stage and
-kind, and their median over the deltas.
+the second one commits.  So are the Spark jobs run between them, and the
+tasks of their stages (``sc.statusTracker()``; each commit starts a new
+job group, and a stage that several jobs share counts once, in the first
+of them).  It prints one table per delta, MB per stage and kind plus jobs
+and tasks, and their median over the deltas.
 
 The driver's own ``/proc`` walk for a reading is measured before the
 deltas and subtracted from each driver figure.
@@ -25,6 +28,7 @@ import shutil
 import statistics
 import sys
 import tempfile
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [os.path.join(ROOT, "perfbench"), ROOT]
@@ -79,10 +83,16 @@ def probe_cost() -> int:
 
 
 class CommitReadings:
-    """While active, each SnapshotLog.commit appends (table, reading)."""
+    """While active, each SnapshotLog.commit appends (table, reading) and
+    puts the jobs that follow it in a new job group, ``<tag>-<k>`` for
+    the stretch that ends at mark k."""
 
-    def __init__(self):
+    def __init__(self, sc, tag: str):
+        self.sc, self.tag = sc, tag
         self.marks: list[tuple[str, dict[str, int]]] = []
+
+    def group(self, k: int | None = None) -> str:
+        return f"io_by_stage-{self.tag}-{len(self.marks) if k is None else k}"
 
     def __enter__(self):
         self.real = real = SnapshotLog.commit
@@ -93,35 +103,73 @@ class CommitReadings:
                 return real(log, *args, **kwargs)
             finally:
                 marks.append((os.path.basename(log.table_dir), reading()))
+                self.sc.setJobGroup(self.group(), "io_by_stage")
 
         SnapshotLog.commit = commit
         self.marks.append(("start", reading()))
+        self.sc.setJobGroup(self.group(), "io_by_stage")
         return self
 
     def __exit__(self, *exc):
         SnapshotLog.commit = self.real
         self.marks.append(("(after the last commit)", reading()))
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
         return False
 
+    def job_counts(self) -> list[tuple[int, int]]:
+        """(jobs, tasks) of each stretch between two marks, once the status
+        store has seen every job end (its listener runs behind the driver)."""
+        st = self.sc.statusTracker()
+        groups = [self.group(k) for k in range(1, len(self.marks))]
+        while True:
+            jobs = [sorted(st.getJobIdsForGroup(g)) for g in groups]
+            infos = [st.getJobInfo(j) for ids in jobs for j in ids]
+            if all(i is not None and i.status != "RUNNING" for i in infos):
+                break
+            time.sleep(0.1)
+        seen: set[int] = set()
+        out = []
+        for ids in jobs:
+            tasks = 0
+            for j in ids:
+                for stage in set(st.getJobInfo(j).stageIds) - seen:
+                    seen.add(stage)
+                    info = st.getStageInfo(stage)
+                    tasks += info.numCompletedTasks if info is not None else 0
+            out.append((len(ids), tasks))
+        return out
 
-def per_stage(marks, probe: int) -> list[tuple[str, dict[str, float]]]:
+
+def per_stage(marks, probe: int, counts) -> list[tuple[str, dict[str, float]]]:
     rows = []
-    for (_, a), (table, b) in zip(marks, marks[1:]):
+    for (_, a), (table, b), (jobs, tasks) in zip(marks, marks[1:], counts):
         d = {k: b[k] - a[k] for k in KINDS}
         d["driver"] = max(0, d["driver"] - probe)
-        rows.append((table, {k: v / MB for k, v in d.items()}))
+        row = {k: v / MB for k, v in d.items()}
+        row.update(jobs=jobs, tasks=tasks)
+        rows.append((table, row))
     return rows
 
 
 def show(title: str, rows) -> None:
     print(f"\n{title}")
-    print(f"{'stage':<26}" + "".join(f"{k:>16}" for k in KINDS) + f"{'total':>10}")
-    sums = dict.fromkeys(KINDS, 0.0)
-    for table, mb in rows:
-        for k in KINDS:
-            sums[k] += mb[k]
-        print(f"{table:<26}" + "".join(f"{mb[k]:>16.2f}" for k in KINDS) + f"{sum(mb.values()):>10.2f}")
-    print(f"{'all':<26}" + "".join(f"{sums[k]:>16.2f}" for k in KINDS) + f"{sum(sums.values()):>10.2f}")
+    print(
+        f"{'stage':<26}" + "".join(f"{k:>16}" for k in KINDS) + f"{'total':>10}{'jobs':>7}{'tasks':>7}"
+    )
+
+    def line(table: str, row: dict) -> None:
+        print(
+            f"{table:<26}"
+            + "".join(f"{row[k]:>16.2f}" for k in KINDS)
+            + f"{sum(row[k] for k in KINDS):>10.2f}{row['jobs']:>7g}{row['tasks']:>7g}"
+        )
+
+    sums = dict.fromkeys((*KINDS, "jobs", "tasks"), 0.0)
+    for table, row in rows:
+        for k in sums:
+            sums[k] += row[k]
+        line(table, row)
+    line("all", sums)
 
 
 def main() -> None:
@@ -154,15 +202,15 @@ def main() -> None:
         for i in range(args.deltas):
             wt = webtext(f"delta{i}", n_delta, n_base + i * n_delta)[1].localCheckpoint(eager=True)
             spark.catalog.clearCache()
-            with CommitReadings() as cr:
+            with CommitReadings(spark.sparkContext, f"delta{i}") as cr:
                 pipe.run_incremental(wt)
-            tables.append(per_stage(cr.marks, probe))
-            show(f"delta {i + 1}: MB read + written", tables[-1])
+            tables.append(per_stage(cr.marks, probe, cr.job_counts()))
+            show(f"delta {i + 1}: MB read + written, Spark jobs and tasks", tables[-1])
         med = [
-            (table, {k: statistics.median(t[j][1][k] for t in tables) for k in KINDS})
-            for j, (table, _) in enumerate(tables[0])
+            (table, {k: statistics.median(t[j][1][k] for t in tables) for k in row})
+            for j, (table, row) in enumerate(tables[0])
         ]
-        show(f"median of {args.deltas} deltas: MB read + written", med)
+        show(f"median of {args.deltas} deltas: MB read + written, Spark jobs and tasks", med)
         spark.stop()
     finally:
         shutil.rmtree(work, ignore_errors=True)
