@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from nilinker_spark.fixtures.kb import make_kb
 from nilinker_spark.functions.hashing import H60_SQL as _H60
 from nilinker_spark.functions.hashing import h60
+from nilinker_spark.functions.rounding import mean_4dp, round_double
 from nilinker_spark.operators import corpus as C
 from nilinker_spark.pipeline import resolve
 from nilinker_spark.sources.webtext import (
@@ -119,7 +120,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         mx = tf.agg(F.max("freq").alias("max_freq"))
         return tf.crossJoin(F.broadcast(mx)).select(
             "token",
-            F.round(-F.log((F.col("freq") + 1) / (F.col("max_freq") + 1)) + 2, 6).alias("ic"),
+            round_double(-F.log((F.col("freq") + 1) / (F.col("max_freq") + 1)) + 2, 6).alias("ic"),
         )
 
     q["information_content"] = information_content
@@ -401,24 +402,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.date_trunc("hour", "ts").cast("string").alias("hour"),
                 "event_type",
             )
-            # value is exact 2-dp money: average in EXACT integer cents,
-            # then fix to 4 dp by INTEGER division — no float round at
-            # all.  round(avg(double),4) diverged two ways at sf0.1:
-            # partial-agg order ulps on the float sum, and (after making
-            # the sum exact) the .xxxx5 quotients themselves — Spark
-            # rounds the shortest-decimal repr (HALF_UP -> up) while
-            # DuckDB rounds the binary value (just below .5 -> down).
-            # cents*100 div n floors identically in both engines
-            # (values are non-negative; floor == trunc).
-            .agg(
-                F.count("*").alias("n"),
-                (
-                    F.expr(
-                        "(sum(cast(round(value * 100) as bigint)) * 100) div count(*)"
-                    )
-                    / 10000.0
-                ).alias("avg_value"),
-            )
+            # value is exact 2-dp money: a 4-dp fixed-point mean in
+            # integer cents (round(avg(double),4) diverged at sf0.1)
+            .agg(F.count("*").alias("n"), mean_4dp("value", 2).alias("avg_value"))
         )
 
     q["windowed_agg"] = windowed_agg
@@ -473,7 +459,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         total = docs.count()
         n_classes = counts.count()
         return counts.select(
-            "lang", F.round(F.lit(total) / (F.lit(n_classes) * F.col("n")), 6).alias("weight")
+            "lang", round_double(F.lit(total) / (F.lit(n_classes) * F.col("n")), 6).alias("weight")
         )
 
     q["class_weights"] = class_weights
@@ -566,17 +552,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .groupBy("l_returnflag", "l_linestatus")
             .agg(
                 F.sum("l_quantity").alias("sum_qty"),
-                F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-                F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-                # integer-valued quantities: 4-dp fixed-point average by
-                # integer division (round(avg(double),4) is never
-                # hash-safe cross-engine — CLAUDE.md, found at sf0.1)
-                (
-                    F.expr(
-                        "(sum(cast(round(l_quantity) as bigint)) * 10000) div count(*)"
-                    )
-                    / 10000.0
-                ).alias("avg_qty"),
+                round_double(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
+                round_double(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
+                # integer-valued quantities: a 4-dp fixed-point mean
+                # (CLAUDE.md, found at sf0.1)
+                mean_4dp("l_quantity", 0).alias("avg_qty"),
                 F.count("*").alias("count_order"),
             )
         )
@@ -600,7 +580,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .join(F.broadcast(c), o.o_custkey == F.col("c_custkey"))
             .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
             .agg(
-                F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
+                round_double(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
                     "revenue"
                 )
             )
@@ -626,7 +606,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             orders.join(cust, orders.o_custkey == cust.c_custkey)
             .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
             .groupBy("n_name")
-            .agg(F.round(F.sum("o_totalprice"), 2).alias("revenue"))
+            .agg(round_double(F.sum("o_totalprice"), 2).alias("revenue"))
         )
         return C.top_k(joined, [], [F.desc("revenue"), F.asc("n_name")], 5)
 
@@ -644,7 +624,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             top.withColumn("next_cos", F.lead("cos").over(w))
             .withColumn("runner_id", F.lead("vec_id").over(w))
             .filter(F.col("rank") == 1)
-            .withColumn("gap", F.round(F.col("cos") - F.coalesce("next_cos", F.lit(0.0)), 4))
+            .withColumn("gap", round_double(F.col("cos") - F.coalesce("next_cos", F.lit(0.0)), 4))
         )
         return gapped.select(
             "query_id",
@@ -660,7 +640,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ≙ secondConstraint (ppr_for_ned_all.java:258-311): per endpoint
         # keep only the max contribution from each source, then sum
         li = load_table(spark, sf, "lineitem")
-        cents = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long")
+        cents = round_double(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long")
         per_src = li.groupBy("l_partkey", "l_suppkey").agg(F.max(cents).alias("max_contrib_cents"))
         return per_src.groupBy("l_partkey").agg(
             F.sum("max_contrib_cents").alias("total_cents"), F.count("*").alias("n_sources")
@@ -836,9 +816,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "kind",
             "n_bytes",
             "dim",
-            # a tiny negative component that rounds to zero at 4 dp must
-            # keep its sign, as DuckDB's round does (3 rows at sf0.1)
-            C.signed_round("v", 4).alias("val"),
+            # a tiny negative component rounds to -0.0, as in DuckDB
+            # (3 rows at sf0.1)
+            round_double(F.col("v").cast("double"), 4).alias("val"),
         )
 
     q["media_features"] = media_features

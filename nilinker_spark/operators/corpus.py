@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nilinker_spark.functions.hashing import h60, h60_value
+from nilinker_spark.functions.rounding import mean_4dp, round_double
 
 # ---------------------------------------------------------------------------
 # shared primitives
@@ -86,21 +87,6 @@ def release_caches() -> int:
             pass
         n += 1
     return n
-
-
-def signed_round(col: str, scale: int) -> F.Column:
-    """ROUND that keeps the IEEE sign of zero, as DuckDB's does.
-
-    Spark's ROUND (BigDecimal HALF_UP) turns -0.0 into 0.0, so a tiny
-    negative value that rounds to zero hashes differently across the
-    engines.  ``-round(-v)`` equals ``round(v)`` for every nonzero result
-    (HALF_UP is symmetric) and yields -0.0 where DuckDB does.  The branch
-    tests the sign BIT — Spark renders it as a leading '-' — because
-    ``v < 0`` is false for an exact -0.0."""
-    v = F.col(col).cast("double")
-    return F.when(v.cast("string").startswith("-"), -F.round(-v, scale)).otherwise(
-        F.round(v, scale)
-    )
 
 
 def tokens_col(text_col: str = "text", min_len: int = 1) -> F.Column:
@@ -279,7 +265,7 @@ def ngram_jaccard_pairs(
     return (
         inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "na"), "doc_a")
         .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "nb"), "doc_b")
-        .withColumn("jaccard", F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4))
+        .withColumn("jaccard", round_double(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -455,7 +441,7 @@ def _verified_pairs(pairs: DataFrame, threshold: float, dim: int | None) -> Data
     4-dp cosine reaches ``threshold``."""
     return (
         pairs.withColumn(
-            "cos", F.round(_dot("ea", "eb", dim=dim) / (F.col("na") * F.col("nb")), 4)
+            "cos", round_double(_dot("ea", "eb", dim=dim) / (F.col("na") * F.col("nb")), 4)
         )
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
@@ -516,7 +502,7 @@ def ann_topk_bruteforce(
     joined = emb_n.join(F.broadcast(q_n), F.col("vec_id") != F.col("query_id"))
     scored = joined.withColumn(
         "cos",
-        F.round(
+        round_double(
             _dot("embedding", "q_embedding", dim=dim) / (F.col("_ne") * F.col("_nq")), 4
         ),
     )
@@ -602,7 +588,7 @@ def ann_topk_lsh(
     emb_sig = emb.withColumn("sig", lsh_signature("embedding", planes, dim=dim))
     q_sig = queries.withColumn("sig", lsh_signature("q_embedding", planes, dim=dim))
     cands = emb_sig.join(F.broadcast(q_sig), "sig").filter(F.col("vec_id") != F.col("query_id"))
-    scored = cands.withColumn("cos", F.round(_cosine("embedding", "q_embedding", dim=dim), 4))
+    scored = cands.withColumn("cos", round_double(_cosine("embedding", "q_embedding", dim=dim), 4))
     return _rank_neighbors(scored, k)
 
 
@@ -644,8 +630,8 @@ def repetition_metrics(docs: DataFrame) -> DataFrame:
     return (
         gc.groupBy("doc_id")
         .agg(
-            F.round(F.max(two) / F.sum(two), 4).alias("top_bigram_frac"),
-            F.round(
+            round_double(F.max(two) / F.sum(two), 4).alias("top_bigram_frac"),
+            round_double(
                 F.lit(1.0) - F.count(three) / F.sum(three), 4
             ).alias("dup_trigram_frac"),
         )
@@ -745,10 +731,10 @@ def _quality_cols() -> dict[str, F.Column]:
     alpha_chars = F.length(F.regexp_replace(F.col("text"), "[^a-z]", ""))
     return {
         "n_tokens": n,
-        "avg_token_len": F.round((F.length("text") - n + 1) / n, 4),
-        "stopword_ratio": F.round(n_stop / n, 4),
-        "alpha_ratio": F.round(alpha_chars / F.length("text"), 4),
-        "quality": F.round(
+        "avg_token_len": round_double((F.length("text") - n + 1) / n, 4),
+        "stopword_ratio": round_double(n_stop / n, 4),
+        "alpha_ratio": round_double(alpha_chars / F.length("text"), 4),
+        "quality": round_double(
             F.least(n / F.lit(100.0), F.lit(1.0)) * 0.5
             + (1 - n_stop / n) * 0.2
             + (alpha_chars / F.length("text")) * 0.3,
@@ -789,10 +775,7 @@ def source_stats(docs: DataFrame, min_mean_quality: float = 0.6) -> DataFrame:
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("n_tokens").cast("long").alias("total_tokens"),
-            (
-                F.expr("sum(cast(round(quality * 10000) as bigint)) div count(*)")
-                / 10000.0
-            ).alias("mean_quality"),
+            mean_4dp("quality", 4).alias("mean_quality"),
         )
         .withColumn("keep", F.col("mean_quality") >= min_mean_quality)
     )
@@ -814,7 +797,7 @@ def token_counts(docs: DataFrame) -> DataFrame:
 def lang_id(docs: DataFrame) -> DataFrame:
     """(doc_id, pred_lang, en_ratio) — stopword-hit-ratio language heuristic."""
     toks = tokens_col("text")
-    ratio = F.round(F.size(_stopword_hits(toks)) / F.size(toks), 4)
+    ratio = round_double(F.size(_stopword_hits(toks)) / F.size(toks), 4)
     return docs.select(
         "doc_id",
         F.when(ratio >= 0.05, F.lit("en")).otherwise(F.lit("other")).alias("pred_lang"),
@@ -913,7 +896,7 @@ def _ivf_assign(emb: DataFrame, cents: DataFrame, dim: int | None = None) -> Dat
     ORDER differs between Spark's sequential fold and DuckDB's
     list_dot_product — rounding absorbs the ulps, like the ANN twins)."""
     scored = emb.join(F.broadcast(cents)).withColumn(
-        "cos_c", F.round(_cosine("embedding", "c_embedding", dim=dim), 4)
+        "cos_c", round_double(_cosine("embedding", "c_embedding", dim=dim), 4)
     )
     return top_k(scored, "vec_id", [F.desc("cos_c"), F.asc("cell")], 1).select(
         "vec_id", "cell"
@@ -969,7 +952,7 @@ def ivf_cells(
             # (ADVICE r4: 6 dp was a weaker ulp-absorber than the repo's
             # determinism rule) — also what makes the trained quantizer
             # SQL-twin-reproducible (ann_topk_ivf_trained contract row)
-            F.round(F.avg(F.col("v").cast("double")), 4).alias("m")
+            round_double(F.avg(F.col("v").cast("double")), 4).alias("m")
         )
         cents = means.groupBy("cell").agg(
             F.transform(
@@ -1000,7 +983,7 @@ def ann_topk_ivf(
     """
     cents, assign = ivf_cells(emb, n_centroids, lloyd_iters=lloyd_iters, dim=dim)
     q_scored = queries.join(F.broadcast(cents)).withColumn(
-        "cos_c", F.round(_cosine("q_embedding", "c_embedding", dim=dim), 4)
+        "cos_c", round_double(_cosine("q_embedding", "c_embedding", dim=dim), 4)
     )
     probes = top_k(q_scored, "query_id", [F.desc("cos_c"), F.asc("cell")], n_probe).select(
         "query_id", "q_embedding", "cell"
@@ -1008,7 +991,7 @@ def ann_topk_ivf(
     cand = emb.join(assign, "vec_id").join(
         F.broadcast(probes), "cell"
     ).filter(F.col("vec_id") != F.col("query_id"))
-    scored = cand.withColumn("cos", F.round(_cosine("embedding", "q_embedding", dim=dim), 4))
+    scored = cand.withColumn("cos", round_double(_cosine("embedding", "q_embedding", dim=dim), 4))
     return _rank_neighbors(scored, k)
 
 

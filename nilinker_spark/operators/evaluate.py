@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nilinker_spark.functions.rounding import round_double
+
 
 def micro_prf(judgments: DataFrame, pred: str = "pred", gold: str = "gold") -> DataFrame:
     """One-row (tp, fp, fn, precision, recall, f1) micro-averaged over all
@@ -28,9 +30,9 @@ def micro_prf(judgments: DataFrame, pred: str = "pred", gold: str = "gold") -> D
         "tp",
         "fp",
         "fn",
-        F.round(F.col("tp") / (F.col("tp") + F.col("fp")), 6).alias("precision"),
-        F.round(F.col("tp") / (F.col("tp") + F.col("fn")), 6).alias("recall"),
-        F.round(
+        round_double(F.col("tp") / (F.col("tp") + F.col("fp")), 6).alias("precision"),
+        round_double(F.col("tp") / (F.col("tp") + F.col("fn")), 6).alias("recall"),
+        round_double(
             2 * F.col("tp") / (2 * F.col("tp") + F.col("fp") + F.col("fn")), 6
         ).alias("f1"),
     )
@@ -68,9 +70,9 @@ def per_class_prf(judgments: DataFrame, pred: str = "pred", gold: str = "gold") 
         "tp",
         "fp",
         "fn",
-        F.round(p, 6).alias("precision"),
-        F.round(r, 6).alias("recall"),
-        F.round(F.when(p + r > 0, 2 * p * r / (p + r)).otherwise(0.0), 6).alias("f1"),
+        round_double(p, 6).alias("precision"),
+        round_double(r, 6).alias("recall"),
+        round_double(F.when(p + r > 0, 2 * p * r / (p + r)).otherwise(0.0), 6).alias("f1"),
     )
 
 
@@ -97,7 +99,7 @@ def pairwise_f1(pred_clusters: DataFrame, gold_pairs: DataFrame) -> DataFrame:
     r = F.when(F.col("tp") + F.col("fn") > 0, F.col("tp") / (F.col("tp") + F.col("fn"))).otherwise(F.lit(1.0))
     return agg.select(
         "tp", "fp", "fn",
-        F.round(p, 6).alias("precision"),
-        F.round(r, 6).alias("recall"),
-        F.round(F.when(p + r > 0, 2 * p * r / (p + r)).otherwise(0.0), 6).alias("f1"),
+        round_double(p, 6).alias("precision"),
+        round_double(r, 6).alias("recall"),
+        round_double(F.when(p + r > 0, 2 * p * r / (p + r)).otherwise(0.0), 6).alias("f1"),
     )

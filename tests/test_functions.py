@@ -186,3 +186,53 @@ def test_h60_spark_column_equals_python_scalar(spark):
     for t in texts:
         assert got[t] == h60_value(t), t
         assert 0 <= got[t] < 2**60
+
+
+def test_every_double_round_is_round_double():
+    """The cross-engine rounding rule lives in functions/rounding.py only:
+    no ``F.round``/``F.bround`` call and no SQL ``round(`` inside an
+    ``F.expr``/``selectExpr`` string anywhere else in the engine or the
+    entry point.  ``oracle_sql()`` holds the DuckDB twins and is exempt.
+    Spark-free: a scan of the source."""
+    import ast
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [os.path.join(root, "__spark_entry__.py")] + [
+        os.path.join(d, f)
+        for d, _, names in os.walk(os.path.join(root, "nilinker_spark"))
+        for f in names
+        if f.endswith(".py")
+    ]
+    sql_round = re.compile(r"\bround\s*\(", re.IGNORECASE)
+    bad = []
+    for path in files:
+        if path.endswith(os.path.join("functions", "rounding.py")):
+            continue
+        tree = ast.parse(open(path).read())
+        exempt = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name == "oracle_sql"
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or id(node) in exempt:
+                continue
+            f = node.func
+            if not isinstance(f, ast.Attribute):
+                continue
+            is_f = isinstance(f.value, ast.Name) and f.value.id == "F"
+            if is_f and f.attr in ("round", "bround"):
+                bad.append(f"{os.path.relpath(path, root)}:{node.lineno} F.{f.attr}")
+            elif (is_f and f.attr == "expr") or f.attr == "selectExpr":
+                text = " ".join(
+                    n.value
+                    for a in node.args
+                    for n in ast.walk(a)
+                    if isinstance(n, ast.Constant) and isinstance(n.value, str)
+                )
+                if sql_round.search(text):
+                    bad.append(f"{os.path.relpath(path, root)}:{node.lineno} SQL round")
+    assert not bad, bad

@@ -153,20 +153,76 @@ def test_minhash_band_keys_match_longform(spark, gram_docs):
     assert new.exceptAll(old).count() == 0 and old.exceptAll(new).count() == 0
 
 
-def test_signed_round_matches_duckdb_negative_zero(spark):
-    """r6: Spark ROUND drops the sign of negative zero; the
-    media_features val expression (corpus.signed_round) must keep it
-    (DuckDB parity) while matching plain round everywhere else — an exact
-    -0.0 input included, which a `v < 0` branch test would miss."""
-    import duckdb
+def _round_inputs():
+    """Doubles where rounding rules part: for each scale, the exact-half
+    products ``(k + 0.5) / 10^d`` of both signs and their ``nextafter``
+    neighbours, plus normals and the named traps."""
+    import numpy as np
 
-    vals = [-0.00004, -0.0, 0.0, 0.00004, -2.00005, 2.00005, -0.5, 0.12344999]
-    df = spark.createDataFrame([(v,) for v in vals], "v double")
-    got = [str(r["val"]) for r in df.select(C.signed_round("v", 4).alias("val")).collect()]
-    # bound as a parameter: a '-0.0' SQL literal parses as a decimal zero
-    # and reaches round() without its sign
-    want = [str(duckdb.execute("select round(?::double, 4)", [v]).fetchone()[0]) for v in vals]
-    assert got == want
+    rng = np.random.default_rng(13)
+    vals = [rng.standard_normal(2000) * 10.0 ** rng.integers(-6, 4, 2000)]
+    for d in (0, 2, 4, 6):
+        k = np.concatenate([np.arange(2000), rng.integers(0, 10**7, 4000)])
+        half = (k + 0.5) / 10.0**d
+        half = np.concatenate([half, -half])
+        vals += [half, np.nextafter(half, np.inf), np.nextafter(half, -np.inf)]
+    special = [
+        0.48624999999999996, 0.0, -0.0, -1e-9, 0.49999999999999994e-4,
+        0.49999999999999994, -0.5, np.inf, -np.inf, np.nan,
+    ]
+    return np.concatenate(vals + [np.array(special)]), special
+
+
+def test_signed_round_matches_duckdb_negative_zero(spark):
+    """functions.rounding.round_double is DuckDB's round(DOUBLE, d) bit
+    for bit: value and sign of zero, on >= 10^5 doubles at d = 0, 2, 4
+    and 6 (exact halves, their neighbours, -0.0, tiny negatives, inf and
+    NaN).  Plain F.round rounds the decimal expansion HALF_UP and drops
+    the sign of -0.0, so it must disagree somewhere on the same inputs."""
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    from nilinker_spark.functions.rounding import round_double
+
+    vals, special = _round_inputs()
+    assert len(vals) >= 10**5
+    scales = (0, 2, 4, 6)
+    df = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(vals)), "v": vals}))
+    got = (
+        df.select(
+            "i",
+            *[round_double("v", d).alias(f"r{d}") for d in scales],
+            F.round("v", 4).alias("plain4"),
+        )
+        .toPandas()
+        .sort_values("i")
+    )
+
+    con = duckdb.connect()
+
+    def duck(d):
+        # bound as parameters: a '-0.0' SQL literal parses as a decimal
+        # zero and reaches round() without its sign.  A list parameter
+        # turns NaN into NULL, so the named traps are bound one by one.
+        bulk = con.execute(
+            f"select round(unnest(?::double[]), {d})", [vals[: -len(special)].tolist()]
+        ).fetchall()
+        one = [
+            con.execute(f"select round(?::double, {d})", [float(v)]).fetchone()
+            for v in special
+        ]
+        return np.array([r[0] for r in bulk + one], dtype=np.float64)
+
+    def mismatches(a, b):
+        same = ((a == b) & (np.signbit(a) == np.signbit(b))) | (np.isnan(a) & np.isnan(b))
+        return np.flatnonzero(~same)
+
+    want = {d: duck(d) for d in scales}
+    for d in scales:
+        bad = mismatches(got[f"r{d}"].to_numpy(), want[d])
+        assert len(bad) == 0, (d, [(vals[i], got[f"r{d}"].iat[i], want[d][i]) for i in bad[:5]])
+    assert len(mismatches(got["plain4"].to_numpy(), want[4])) > 0
 
 
 def test_extraction_partitions_follow_parallelism(spark):

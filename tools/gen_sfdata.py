@@ -3,7 +3,8 @@ larger scale factor, for LOCAL performance measurement only.
 
 The driver's round-end bench may run at sf1.0 (BENCH_r05.json records
 "sf": 1.0) but only sf{0.001,0.01,0.1} ship under /root/testdata (and are
-read-only).  This writes /root/sfgen/sf<SF>/ with the same schemas,
+read-only).  ``python tools/gen_sfdata.py [SF] [--seed N] [--out DIR]``
+writes DIR (default /root/sfgen/sf<SF>/, seed 42) with the same schemas,
 single-file single-row-group parquet (matching the shipped layout — that
 layout is load-bearing: one row group means one scan task), and
 distributions measured from sf0.1:
@@ -22,9 +23,9 @@ NEVER used by bench.py or any contract query — measurement harness only.
 
 from __future__ import annotations
 
+import argparse
 import os
 import random
-import sys
 
 import numpy as np
 import pyarrow as pa
@@ -93,11 +94,11 @@ def gen_events(e: int, users: int, rng: random.Random) -> pa.Table:
     )
 
 
-def main() -> None:
-    sf = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
-    out = f"/root/sfgen/sf{sf:g}"
+def write_tables(sf: float, seed: int, out: str) -> dict[str, int]:
+    """Write documents, embeddings and events at scale factor ``sf`` from
+    ``seed`` into ``out``; returns the row count of each table."""
     os.makedirs(out, exist_ok=True)
-    rng = random.Random(42)
+    rng = random.Random(seed)
     n_docs = int(50_000 * sf)
     # embeddings scale x4 per sf decade (measured 0.01 -> 0.1)
     n_emb = {1.0: 8000, 0.1: 2000, 0.01: 500}.get(sf, max(500, int(8000 * sf)))
@@ -105,9 +106,20 @@ def main() -> None:
     n_users = int(15_000 * sf)
     # one row group per file, like the shipped testdata (load-bearing)
     pq.write_table(gen_documents(n_docs, rng), f"{out}/documents.parquet", row_group_size=max(n_docs, 1))
-    pq.write_table(gen_embeddings(n_emb, 42), f"{out}/embeddings.parquet", row_group_size=max(n_emb, 1))
+    pq.write_table(gen_embeddings(n_emb, seed), f"{out}/embeddings.parquet", row_group_size=max(n_emb, 1))
     pq.write_table(gen_events(n_events, n_users, rng), f"{out}/events.parquet", row_group_size=max(n_events, 1))
-    print(f"wrote {out}: documents={n_docs} embeddings={n_emb} events={n_events}")
+    return {"documents": n_docs, "embeddings": n_emb, "events": n_events}
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("sf", nargs="?", type=float, default=1.0)
+    ap.add_argument("--seed", type=int, default=42)
+    ap.add_argument("--out", default=None, help="output directory (default /root/sfgen/sf<SF>)")
+    args = ap.parse_args()
+    out = args.out or f"/root/sfgen/sf{args.sf:g}"
+    rows = write_tables(args.sf, args.seed, out)
+    print(f"wrote {out}: " + " ".join(f"{t}={n}" for t, n in rows.items()))
 
 
 if __name__ == "__main__":
