@@ -720,27 +720,28 @@ def _stopword_hits(toks: F.Column) -> F.Column:
     return F.filter(toks, lambda t: F.array_contains(stop_arr, t))
 
 
-def _quality_cols() -> dict[str, F.Column]:
+def _quality_cols(rounded: bool = True) -> dict[str, F.Column]:
     """The webtext quality metrics as named closed-form columns over a
     ``text`` column — the ONE definition text_quality, source_stats and
     importance_resample all project (repo rule: shared semantics live in
-    one place)."""
+    one place).  The ratios are rounded to 4 dp; ``rounded=False`` gives
+    them unrounded, for a caller that rounds after an evaluation barrier
+    (round_double references its input several times)."""
     toks = tokens_col("text")
     n = F.size(toks)
     n_stop = F.size(_stopword_hits(toks))
     alpha_chars = F.length(F.regexp_replace(F.col("text"), "[^a-z]", ""))
-    return {
-        "n_tokens": n,
-        "avg_token_len": round_double((F.length("text") - n + 1) / n, 4),
-        "stopword_ratio": round_double(n_stop / n, 4),
-        "alpha_ratio": round_double(alpha_chars / F.length("text"), 4),
-        "quality": round_double(
-            F.least(n / F.lit(100.0), F.lit(1.0)) * 0.5
-            + (1 - n_stop / n) * 0.2
-            + (alpha_chars / F.length("text")) * 0.3,
-            4,
-        ),
+    ratios = {
+        "avg_token_len": (F.length("text") - n + 1) / n,
+        "stopword_ratio": n_stop / n,
+        "alpha_ratio": alpha_chars / F.length("text"),
+        "quality": F.least(n / F.lit(100.0), F.lit(1.0)) * 0.5
+        + (1 - n_stop / n) * 0.2
+        + (alpha_chars / F.length("text")) * 0.3,
     }
+    if rounded:
+        ratios = {k: round_double(v, 4) for k, v in ratios.items()}
+    return {"n_tokens": n, **ratios}
 
 
 def text_quality(docs: DataFrame) -> DataFrame:
@@ -1109,10 +1110,13 @@ def importance_resample(
     # projection, and the stopword HOF lambda keeps it all off codegen
     # (measured 4x the per-row cost; plan in plans/r06).  A predicate on
     # a generated column cannot be pushed through the Generate, so the
-    # tree is evaluated exactly once per row.  Same rows out, bit-exact.
+    # tree is evaluated exactly once per row.  The rounding goes above
+    # the barrier: a Generate eliminates no common subexpression, and
+    # round_double inside it evaluated the tree ~6 times (4x the wall
+    # over 100k pages).  Same rows out, bit-exact.
     q = docs.select(
-        "doc_id", F.explode(F.array(_quality_cols()["quality"])).alias("quality")
-    )
+        "doc_id", F.explode(F.array(_quality_cols(rounded=False)["quality"])).alias("raw")
+    ).select("doc_id", round_double("raw", 4).alias("quality"))
     bucket = None
     rate = None
     for name, lo, bp in buckets:
