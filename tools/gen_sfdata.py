@@ -3,8 +3,7 @@ larger scale factor, for LOCAL performance measurement only.
 
 The driver's round-end bench may run at sf1.0 (BENCH_r05.json records
 "sf": 1.0) but only sf{0.001,0.01,0.1} ship under /root/testdata (and are
-read-only).  ``python tools/gen_sfdata.py [SF] [--seed N] [--out DIR]``
-writes DIR (default /root/sfgen/sf<SF>/, seed 42) with the same schemas,
+read-only).  This writes /root/sfgen/sf<SF>/ with the same schemas,
 single-file single-row-group parquet (matching the shipped layout — that
 layout is load-bearing: one row group means one scan task), and
 distributions measured from sf0.1:
@@ -17,6 +16,9 @@ distributions measured from sf0.1:
 
 Row counts per sf decade (measured 0.01 -> 0.1): documents x10,
 events x10, embeddings x4, users x10.
+
+``python tools/gen_sfdata.py [SF] [--seed N] [--out DIR]``: ``--out``
+replaces that directory and ``--seed`` the default seed 42.
 
 NEVER used by bench.py or any contract query — measurement harness only.
 """
@@ -115,7 +117,7 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("sf", nargs="?", type=float, default=1.0)
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--out", default=None, help="output directory (default /root/sfgen/sf<SF>)")
+    ap.add_argument("--out", default=None)
     args = ap.parse_args()
     out = args.out or f"/root/sfgen/sf{args.sf:g}"
     rows = write_tables(args.sf, args.seed, out)

@@ -1,8 +1,8 @@
 """Run the Spark-vs-DuckDB oracle gate over many generated input sets.
 
-    python tools/oracle_sweep.py [--gen-seeds 1-10] [--perf-seeds 1-10]
-        [--perf-docs 5000] [--template-share 0.25]
-        [--tpch /root/testdata/sf0.01] [--out DIR] [query ...]
+    python tools/oracle_sweep.py --tpch SF001_DIR [--gen-seeds 1-10]
+        [--perf-seeds 1-10] [--perf-docs 5000] [--template-share 0.25]
+        [--out DIR] [query ...]
 
 Each input set is one directory under ``--out`` (default
 ``<tmp>/oracle_sweep``), outside the repo:
@@ -12,8 +12,8 @@ Each input set is one directory under ``--out`` (default
 - ``perf<seed>``: the same tables, with ``documents`` replaced by
   ``perfbench/gen.documents(seed, --perf-docs, template_share=...)``, pages
   with near-duplicate boilerplate templates;
-- in both, the TPC-H tables (region ... lineitem) are symlinks to the
-  shipped ``--tpch`` directory.
+- in both, the TPC-H tables (region ... lineitem) are symlinks into
+  ``--tpch``, the shipped sf0.01 test data directory.
 
 ``tools/check_oracle.py`` runs on each set, restricted to the named
 queries (all of ``queries()`` when none is named).  One line is printed
@@ -88,7 +88,7 @@ def main() -> int:
     ap.add_argument("--perf-seeds", default="1-10")
     ap.add_argument("--perf-docs", type=int, default=5000)
     ap.add_argument("--template-share", type=float, default=0.25)
-    ap.add_argument("--tpch", default="/root/testdata/sf0.01")
+    ap.add_argument("--tpch", required=True, help="shipped sf0.01 test data directory")
     ap.add_argument("--out", default=os.path.join(tempfile.gettempdir(), "oracle_sweep"))
     args = ap.parse_args()
 
