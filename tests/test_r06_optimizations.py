@@ -156,7 +156,8 @@ def test_minhash_band_keys_match_longform(spark, gram_docs):
 def _round_inputs():
     """Doubles where rounding rules part: for each scale, the exact-half
     products ``(k + 0.5) / 10^d`` of both signs and their ``nextafter``
-    neighbours, plus normals and the named traps."""
+    neighbours, plus normals and the named traps.  ±1e307 overflow to inf
+    once scaled at d >= 2, where DuckDB returns the input unchanged."""
     import numpy as np
 
     rng = np.random.default_rng(13)
@@ -168,7 +169,8 @@ def _round_inputs():
         vals += [half, np.nextafter(half, np.inf), np.nextafter(half, -np.inf)]
     special = [
         0.48624999999999996, 0.0, -0.0, -1e-9, 0.49999999999999994e-4,
-        0.49999999999999994, -0.5, np.inf, -np.inf, np.nan,
+        0.49999999999999994, -0.5, np.inf, -np.inf, np.nan, 1e307, -1e307,
+        -0.00004, 0.00004, -2.00005, 2.00005, 0.12344999,
     ]
     return np.concatenate(vals + [np.array(special)]), special
 
@@ -176,8 +178,8 @@ def _round_inputs():
 def test_signed_round_matches_duckdb_negative_zero(spark):
     """functions.rounding.round_double is DuckDB's round(DOUBLE, d) bit
     for bit: value and sign of zero, on >= 10^5 doubles at d = 0, 2, 4
-    and 6 (exact halves, their neighbours, -0.0, tiny negatives, inf and
-    NaN).  Plain F.round rounds the decimal expansion HALF_UP and drops
+    and 6 (exact halves, their neighbours, -0.0, tiny negatives, inf, NaN
+    and finite doubles whose scaled value overflows).  Plain F.round rounds the decimal expansion HALF_UP and drops
     the sign of -0.0, so it must disagree somewhere on the same inputs."""
     import duckdb
     import numpy as np

@@ -1,8 +1,7 @@
 """Run the Spark-vs-DuckDB oracle gate over many generated input sets.
 
     python tools/oracle_sweep.py --tpch SF001_DIR [--gen-seeds 1-10]
-        [--perf-seeds 1-10] [--perf-docs 5000] [--template-share 0.25]
-        [--out DIR] [query ...]
+        [--perf-seeds 1-10] [--out DIR] [query ...]
 
 Each input set is one directory under ``--out`` (default
 ``<tmp>/oracle_sweep``), outside the repo:
@@ -10,15 +9,16 @@ Each input set is one directory under ``--out`` (default
 - ``gen<seed>``: ``tools/gen_sfdata.py`` documents, embeddings and events
   at sf0.01 size from that seed;
 - ``perf<seed>``: the same tables, with ``documents`` replaced by
-  ``perfbench/gen.documents(seed, --perf-docs, template_share=...)``, pages
-  with near-duplicate boilerplate templates;
+  ``perfbench/gen.documents(seed, PERF_DOCS, template_share=TEMPLATE_SHARE)``
+  (5,000 pages, a quarter of them near-duplicate boilerplate templates);
 - in both, the TPC-H tables (region ... lineitem) are symlinks into
   ``--tpch``, the shipped sf0.01 test data directory.
 
 ``tools/check_oracle.py`` runs on each set, restricted to the named
-queries (all of ``queries()`` when none is named).  One line is printed
-per (set, query); the exit status is non-zero when any query fails on
-any set.  Seed ranges are ``a-b`` or comma lists.
+queries (all of ``queries()`` when none is named); its output, one line
+per query, follows a header line naming the set.  The exit status is
+non-zero when any query fails on any set.  Seed ranges are ``a-b`` or
+comma lists.
 """
 
 from __future__ import annotations
@@ -39,6 +39,8 @@ import gen_sfdata  # noqa: E402
 
 TPCH = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"]
 SF = 0.01
+PERF_DOCS = 5000
+TEMPLATE_SHARE = 0.25
 
 
 def seeds(spec: str) -> list[int]:
@@ -49,12 +51,12 @@ def seeds(spec: str) -> list[int]:
     return out
 
 
-def write_set(out: str, seed: int, tpch: str, perf_docs: int, share: float) -> None:
-    """One input set in ``out``; ``perf_docs`` > 0 swaps in perfbench documents."""
+def write_set(out: str, seed: int, tpch: str, perf: bool) -> None:
+    """One input set in ``out``; ``perf`` swaps in perfbench documents."""
     gen_sfdata.write_tables(SF, seed, out)
-    if perf_docs:
-        docs = gen.documents(seed, perf_docs, template_share=share)
-        pq.write_table(docs, f"{out}/documents.parquet", row_group_size=max(perf_docs, 1))
+    if perf:
+        docs = gen.documents(seed, PERF_DOCS, template_share=TEMPLATE_SHARE)
+        pq.write_table(docs, f"{out}/documents.parquet", row_group_size=PERF_DOCS)
     for t in TPCH:
         link = f"{out}/{t}.parquet"
         if os.path.lexists(link):
@@ -63,22 +65,10 @@ def write_set(out: str, seed: int, tpch: str, perf_docs: int, share: float) -> N
 
 
 def check(name: str, sf_dir: str, queries: list[str]) -> bool:
-    """Run check_oracle.py on one set; print one line per query."""
-    proc = subprocess.run(
-        [sys.executable, os.path.join(ROOT, "tools", "check_oracle.py"), sf_dir, *queries],
-        cwd=ROOT,
-        capture_output=True,
-        text=True,
-    )
-    lines = proc.stdout.splitlines()
-    for line in lines:
-        if line.startswith(("OK  ", "FAIL", "rows ")):
-            print(f"{name:8s} {line}", flush=True)
-        elif line.startswith(" ") and line.strip():
-            print(f"{name:8s}   {line.strip()}", flush=True)
-    if proc.returncode and not any(line.startswith("FAIL") for line in lines):
-        print(f"{name:8s} FAIL  check_oracle exited {proc.returncode}: {proc.stderr[-500:]}", flush=True)
-    return proc.returncode == 0
+    """Run check_oracle.py on one set, its output passed straight through."""
+    print(f"== {name} ({sf_dir})", flush=True)
+    cmd = [sys.executable, os.path.join(ROOT, "tools", "check_oracle.py"), sf_dir, *queries]
+    return subprocess.run(cmd, cwd=ROOT).returncode == 0
 
 
 def main() -> int:
@@ -86,18 +76,16 @@ def main() -> int:
     ap.add_argument("queries", nargs="*")
     ap.add_argument("--gen-seeds", default="1-10")
     ap.add_argument("--perf-seeds", default="1-10")
-    ap.add_argument("--perf-docs", type=int, default=5000)
-    ap.add_argument("--template-share", type=float, default=0.25)
     ap.add_argument("--tpch", required=True, help="shipped sf0.01 test data directory")
     ap.add_argument("--out", default=os.path.join(tempfile.gettempdir(), "oracle_sweep"))
     args = ap.parse_args()
 
-    sets = [(f"gen{s}", s, 0) for s in seeds(args.gen_seeds)]
-    sets += [(f"perf{s}", s, args.perf_docs) for s in seeds(args.perf_seeds)]
+    sets = [(f"gen{s}", s, False) for s in seeds(args.gen_seeds)]
+    sets += [(f"perf{s}", s, True) for s in seeds(args.perf_seeds)]
     failed = []
-    for name, seed, perf_docs in sets:
+    for name, seed, perf in sets:
         sf_dir = os.path.join(args.out, name)
-        write_set(sf_dir, seed, args.tpch, perf_docs, args.template_share)
+        write_set(sf_dir, seed, args.tpch, perf)
         if not check(name, sf_dir, args.queries):
             failed.append(name)
     print(f"\n{len(sets) - len(failed)}/{len(sets)} sets OK" + (f"; failed: {', '.join(failed)}" if failed else ""))
