@@ -9,9 +9,13 @@ topology change.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, TimestampType
 
 # Arrow batch size for the scoring UDFs: large enough to amortize the
 # JVM<->Python crossing, small enough that a batch of pairs x embedding
@@ -59,3 +63,27 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, schema: StructType | str, rows) -> DataFrame:
+    """The frame of driver ``rows`` (tuples in column order) under
+    ``schema``, a StructType or a DDL string — the one way driver rows
+    enter Spark.
+
+    The rows reach the JVM as one Arrow table and plan as a
+    LocalTableScan; no rows make a zero-partition frame.
+    createDataFrame(list), or of an empty pandas frame, would instead
+    parallelize them through Python-worker tasks: a 2,000-row frame's
+    count() at local[4] on a 4-core VM took 0.80 s and 12.0 MB of io that
+    way, 0.22 s and 1.6 MB this way (min of 3).  A naive timestamp is local time, as
+    createDataFrame(list) reads it."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    arrays = []
+    for col, field, af in zip(cols, schema.fields, arrow):
+        if isinstance(field.dataType, TimestampType):
+            col = [v if v is None or v.tzinfo else v.astimezone(dt.timezone.utc) for v in col]
+        arrays.append(pa.array(col, af.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)

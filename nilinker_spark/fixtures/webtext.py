@@ -59,7 +59,8 @@ def make_webtext(
 
 def write_webtext_parquet(spark, kb: KBFixture, path: str, seed: int = 42, n_rows: int = 2000) -> None:
     """Materialize the fixture as parquet (Iceberg stand-in in this sandbox)."""
+    from nilinker_spark.config import local_frame
     from nilinker_spark.sources.webtext import WEBTEXT_SCHEMA
 
     rows = make_webtext(kb, seed=seed, n_rows=n_rows)
-    spark.createDataFrame(rows, WEBTEXT_SCHEMA).write.mode("overwrite").parquet(path)
+    local_frame(spark, WEBTEXT_SCHEMA, rows).write.mode("overwrite").parquet(path)

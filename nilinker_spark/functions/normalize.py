@@ -18,11 +18,16 @@ dependency (see SURVEY.md §2.7):
   tokens participate in scoring.
 - ``singularize``   ≙ the plural-strip cache probe
   (/root/reference/src/REEL/candidates.py:39-41).
+- ``singularize_col`` its Spark column twin, for the block keys and the
+  scalar_normalize contract row.
 """
 
 from __future__ import annotations
 
 import re
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 _TAG_RE = re.compile(rb"<[^>]*>")
 _WS_RE = re.compile(r"\s+")
@@ -58,6 +63,14 @@ def singularize(token: str) -> str:
     if len(token) > 3 and token.endswith("s") and not token.endswith("ss"):
         return token[:-1]
     return token
+
+
+def singularize_col(token: Column) -> Column:
+    """:func:`singularize` as a Spark column expression."""
+    return F.when(
+        (F.length(token) > 3) & token.endswith("s") & ~token.endswith("ss"),
+        token.substr(F.lit(1), F.length(token) - 1),
+    ).otherwise(token)
 
 
 def tokenize_entity(entity: str) -> tuple[str, str]:

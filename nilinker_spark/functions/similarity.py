@@ -118,6 +118,39 @@ def fuzzy_best_match(word: str, vocab: list[str]) -> str:
     return best_word
 
 
+# per-process fuzzy-resolution memo, keyed by KB vocab fingerprint:
+# {kb_fingerprint: {token: word_id}}.  fuzzy_best_match is a pure function
+# of (token, vocab), so entries are valid for exactly one vocab — scoping
+# by fingerprint keeps two pipelines with different KBs in one long-lived
+# worker from poisoning each other.
+_FUZZY_CACHE: dict[str, dict[str, int]] = {}
+
+
+def word_id_resolver(
+    w2i: dict[str, int], vocab: list[str], fingerprint: str, pre: dict[str, int] | None = None
+):
+    """token -> word id, the one word-id rule of the driver and the Spark
+    workers: the exact vocab hit, else the pre-resolved ``pre`` map, else
+    :func:`fuzzy_best_match` over the sorted ``vocab``, memoized in this
+    process's :data:`_FUZZY_CACHE` under the KB ``fingerprint``.  A UDF
+    must call this module-level function inside its task (so the memo is
+    the worker module's own dict), never capture the memo itself."""
+    memo = _FUZZY_CACHE.setdefault(fingerprint, {})
+    pre = pre or {}
+
+    def wid(tok: str) -> int:
+        hit = w2i.get(tok)
+        if hit is None:
+            hit = pre.get(tok)
+        if hit is None:
+            hit = memo.get(tok)
+            if hit is None:
+                hit = memo[tok] = w2i[fuzzy_best_match(tok, vocab)]
+        return hit
+
+    return wid
+
+
 def jaro_winkler_batch(a_list, b_list, p: float = 0.1, max_prefix: int = 4):
     """Vectorized Jaro-Winkler over two string sequences -> float64 ndarray.
 

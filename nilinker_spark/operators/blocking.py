@@ -19,7 +19,7 @@ equi-joins + a fallback UDF; that is semantically identical but costs
 because this stage's input is always small (see module docstring).  The
 join formulation, ``resolve_tokens``, feeds
 ``candidates.training_examples``; both resolve a token through the one
-worker-side ``_word_id``.
+``functions.similarity.word_id_resolver``, as the driver paths do.
 """
 
 from __future__ import annotations
@@ -29,16 +29,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nilinker_spark.config import local_frame
 from nilinker_spark.fixtures.kb import KBFixture
-from nilinker_spark.functions.similarity import fuzzy_best_match
+from nilinker_spark.functions.normalize import singularize_col
+from nilinker_spark.functions.similarity import word_id_resolver
 from nilinker_spark.oracle import form_vectors, wc_by_id
-
-# per-worker-process fuzzy-resolution memo, keyed by KB vocab fingerprint:
-# {kb_fingerprint: {token: word_id}}.  fuzzy_best_match is a pure function
-# of (token, vocab), so entries are valid for exactly one vocab — scoping
-# by fingerprint keeps two pipelines with different KBs in one long-lived
-# worker from poisoning each other.
-_FUZZY_CACHE: dict[str, dict[str, int]] = {}
 
 # prefuzz_map collects the resolved OOV-token map to the driver for
 # broadcast; above this many distinct OOV tokens (~100 MB of (token, id)
@@ -56,30 +51,12 @@ def _tokens_lr(df: DataFrame) -> DataFrame:
     )
 
 
-def _word_id(w2i: dict[str, int], vocab: list[str], fingerprint: str, pre: dict[str, int]):
-    """Worker-side token -> word id: the exact vocab hit, else the
-    pre-resolved ``pre`` map, else :func:`fuzzy_best_match` memoized in
-    this worker's :data:`_FUZZY_CACHE` under the KB ``fingerprint``."""
-    memo = _FUZZY_CACHE.setdefault(fingerprint, {})
-
-    def wid(tok: str) -> int:
-        hit = w2i.get(tok)
-        if hit is None:
-            hit = pre.get(tok)
-        if hit is None:
-            hit = memo.get(tok)
-            if hit is None:
-                hit = memo[tok] = w2i[fuzzy_best_match(tok, vocab)]
-        return hit
-
-    return wid
-
-
 def _token_frames(spark: SparkSession, forms: DataFrame, kb: KBFixture):
     """(distinct tokens of ``forms`` per the [t, t] rule, vocab(word,
     word_id), OOV (token, word_id)): the OOV tokens are the anti-join
-    survivors, each fuzzy-resolved once by :func:`_word_id`."""
-    vocab = spark.createDataFrame(sorted(kb.word2id.items()), "word string, word_id long")
+    survivors, each fuzzy-resolved once by
+    :func:`~nilinker_spark.functions.similarity.word_id_resolver`."""
+    vocab = local_frame(spark, "word string, word_id long", sorted(kb.word2id.items()))
     tokens = (
         _tokens_lr(forms)
         .select(F.explode(F.array("tl", "tr")).alias("token"))
@@ -90,7 +67,7 @@ def _token_frames(spark: SparkSession, forms: DataFrame, kb: KBFixture):
     fp = kb.fingerprint
 
     def run(batches):
-        wid = _word_id(*kb_b.value, fp, {})
+        wid = word_id_resolver(*kb_b.value, fp)
         for pdf in batches:
             yield pdf.assign(word_id=pd.array([wid(t) for t in pdf["token"]], dtype="int64"))
 
@@ -175,7 +152,9 @@ def phrase_vectors_df(
         kbv = kb_b.value
         z = kbv["weights"]
         w = ModelWeights(z["W_a"], z["b_a"], z["W_c"], z["b_c"], z["word_embeds"], z["cand_embeds"])
-        wid = _word_id(kbv["word2id"], kbv["vocab_sorted"], kbv["fingerprint"], fuzzy_b.value)
+        wid = word_id_resolver(
+            kbv["word2id"], kbv["vocab_sorted"], kbv["fingerprint"], fuzzy_b.value
+        )
         for pdf in batches:
             norms = pdf["norm"]
             pv = form_vectors(norms, wid, kbv["wc_by_id"], w)
@@ -195,12 +174,5 @@ def block_keys_df(forms: DataFrame) -> DataFrame:
     singular form (plural variants block with their singulars,
     ≙ /root/reference/src/REEL/candidates.py:39-41)."""
     toks = F.filter(F.split(F.col("norm"), " "), lambda t: F.length(t) >= 3)
-    singular = F.transform(
-        toks,
-        lambda t: F.when(
-            (F.length(t) > 3) & t.endswith("s") & ~t.endswith("ss"),
-            t.substr(F.lit(1), F.length(t) - 1),
-        ).otherwise(t),
-    )
-    keys = F.array_distinct(F.concat(toks, singular))
+    keys = F.array_distinct(F.concat(toks, F.transform(toks, singularize_col)))
     return forms.select("norm", F.explode(keys).alias("block_key"))

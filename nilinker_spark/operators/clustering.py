@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nilinker_spark.config import local_frame
 from nilinker_spark.functions.hashing import frame_signature
 
 # Below this edge count the component structure is driver-trivial: collect
@@ -141,19 +142,15 @@ def connected_components(edges: DataFrame, walls_out: dict | None = None) -> Dat
     if walls_out is not None:
         walls_out["cc_collect_s"] = time.monotonic() - t0
     if head is not None and len(head) <= CC_DRIVER_MAX_EDGES:
-        import pandas as pd
-
         from nilinker_spark.oracle import components
 
         t1 = time.monotonic()
         labels = components(
             (), [(s, d) for s, d in zip(head["src"].values, head["dst"].values) if s != d]
         )
-        pdf = pd.DataFrame(list(labels.items()), columns=["node", "label"], dtype=object)
-        # Arrow-path createDataFrame (config.get_spark enables it):
-        # the java-row conversion of a 500k-label list was the other
-        # half of the driver-CC floor
-        out = spark.createDataFrame(pdf, "node string, label string")
+        # an Arrow local frame: the java-row conversion of a 500k-label
+        # list was the other half of the driver-CC floor
+        out = local_frame(spark, "node string, label string", labels.items())
         if walls_out is not None:
             walls_out["cc_driver_s"] = time.monotonic() - t1
         return out

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nilinker_spark.config import local_frame
+
 
 def degrees(edges: DataFrame) -> DataFrame:
     """edges(src, dst) -> (node, out_degree, in_degree)."""
@@ -47,7 +49,7 @@ def bfs_depths(edges: DataFrame, root: str, max_depth: int = 20) -> DataFrame:
     src->dst edges upward-agnostically (treat edges as directed src->dst
     reversed: we walk dst->src so 'depth below the root')."""
     spark = edges.sparkSession
-    visited = spark.createDataFrame([(root, 0)], "node string, depth int").localCheckpoint(eager=True)
+    visited = local_frame(spark, "node string, depth int", [(root, 0)]).localCheckpoint(eager=True)
     frontier = visited
     for d in range(1, max_depth + 1):
         nxt = (

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nilinker_spark.config import local_frame
 from nilinker_spark.functions.hashing import h60_value
 
 MEDIA_SCHEMA = T.StructType(
@@ -157,4 +158,4 @@ def make_media_fixture(spark, n: int = 50, seed: int = 42) -> DataFrame:
         payload = bytes(rng.integers(0, 256, size=size, dtype=np.uint8))
         meta = ("application/octet-stream", int(rng.integers(4, 64)), int(rng.integers(4, 64)), int(rng.integers(0, 10_000)))
         rows.append((i, kind, payload, meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, MEDIA_SCHEMA, rows)

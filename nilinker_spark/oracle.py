@@ -28,7 +28,7 @@ from nilinker_spark.fixtures.kb import KBFixture
 from nilinker_spark.functions.hashing import h60_value
 from nilinker_spark.functions.model import ModelWeights, phrase_vectors
 from nilinker_spark.functions.normalize import norm_form, singularize, tokenize_entity
-from nilinker_spark.functions.similarity import fuzzy_best_match, jaro_winkler, levenshtein
+from nilinker_spark.functions.similarity import jaro_winkler, levenshtein, word_id_resolver
 
 MAX_MENTION_TOKENS = 4
 ALPHA = 0.6  # cosine weight in the blended score
@@ -145,19 +145,6 @@ def block_keys(nf: str) -> list[str]:
     return sorted(keys)
 
 
-def resolve_word_id(token: str, kb: KBFixture, _cache: dict | None = None) -> int:
-    """Vocab id with deterministic fuzzy OOV fallback."""
-    if token in kb.word2id:
-        return kb.word2id[token]
-    if _cache is not None and token in _cache:
-        return _cache[token]
-    best = fuzzy_best_match(token, kb.vocab_sorted)
-    wid = kb.word2id[best]
-    if _cache is not None:
-        _cache[token] = wid
-    return wid
-
-
 def wc_by_id(kb: KBFixture) -> dict[int, list[int]]:
     """word id -> its first PAD_CANDS WC candidate ids."""
     return {kb.word2id[w]: cands[:PAD_CANDS] for w, cands in kb.wc.items()}
@@ -170,8 +157,9 @@ def form_vectors(
 
     The one implementation behind the Spark UDF
     (blocking.phrase_vectors_df, per Arrow batch) and every driver path:
-    ``word_id`` maps a token to its vocab id (exact hit, else the fuzzy
-    OOV fallback, :func:`resolve_word_id`), ``wc`` is :func:`wc_by_id`.
+    ``word_id`` maps a token to its vocab id (a
+    :func:`~nilinker_spark.functions.similarity.word_id_resolver`), ``wc``
+    is :func:`wc_by_id`.
     phrase_vectors is row-independent, so a form's vector does not
     depend on which batch it is computed in."""
     n = len(norms)
@@ -192,9 +180,8 @@ def form_vectors(
 
 def kb_form_vectors(norms: list[str], kb: KBFixture) -> dict[str, np.ndarray]:
     """{form: phrase vector} computed in-process, straight from the KB."""
-    cache: dict[str, int] = {}
-    pv = form_vectors(norms, lambda t: resolve_word_id(t, kb, cache), wc_by_id(kb), kb.weights)
-    return dict(zip(norms, pv))
+    wid = word_id_resolver(kb.word2id, kb.vocab_sorted, kb.fingerprint)
+    return dict(zip(norms, form_vectors(norms, wid, wc_by_id(kb), kb.weights)))
 
 
 def blended_score(
@@ -307,6 +294,21 @@ def components(forms, edges: list[tuple[str, str]]) -> dict[str, str]:
     return {f: uf.find(f) for f in sorted(uf.parent)}
 
 
+def middle(
+    pvs: dict[str, np.ndarray],
+    alpha: float = ALPHA,
+    tau: float = TAU,
+    max_block: int = MAX_BLOCK_FORMS,
+) -> tuple[list[tuple[str, str]], list[tuple[str, int, int]], list[tuple[str, str]], dict[str, str]]:
+    """S3-S6 over the vectors ``pvs`` ({form: phrase vector}):
+    (candidate pairs, salt rows, edges, clusters) — :func:`block_pairs`,
+    :func:`score_edges` and :func:`components`, composed in this one
+    place for the driver middle and every reference."""
+    pairs, salt_rows = block_pairs(pvs, max_block)
+    edges = score_edges(pairs, pvs, alpha, tau)
+    return pairs, salt_rows, edges, components(pvs, edges)
+
+
 def similarity_edge_list(
     forms: list[str],
     kb: KBFixture,
@@ -320,9 +322,7 @@ def similarity_edge_list(
     hand-off point where the oracle's Python scoring ends and an
     INDEPENDENT engine (DuckDB's recursive CTE in the er_resolve contract
     query, or :class:`UnionFind` below) derives the components."""
-    forms = sorted(set(forms))
-    pairs, _salt_rows = block_pairs(forms, max_block)
-    return score_edges(pairs, kb_form_vectors(forms, kb), alpha, tau)
+    return middle(kb_form_vectors(sorted(set(forms)), kb), alpha, tau, max_block)[2]
 
 
 def cluster_forms(
@@ -338,8 +338,7 @@ def cluster_forms(
     the same distinct-surface memoization the pipeline uses (≙ the
     reference's kb_cache, REEL/pre_process.py:250-307, done relationally).
     """
-    edges = similarity_edge_list(forms, kb, alpha=alpha, tau=tau, max_block=max_block)
-    return components(forms, edges)
+    return middle(kb_form_vectors(sorted(set(forms)), kb), alpha, tau, max_block)[3]
 
 
 def run_oracle(

@@ -48,13 +48,12 @@ import math
 import os
 import time
 from contextlib import contextmanager
-from typing import NamedTuple
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from nilinker_spark import oracle
+from nilinker_spark.config import local_frame
 from nilinker_spark.fixtures.kb import KBFixture
 from nilinker_spark.functions.hashing import frame_signature, signature_aggs
 from nilinker_spark.operators import blocking, clustering, scoring
@@ -69,9 +68,9 @@ from nilinker_spark.snapshots import SnapshotLog, list_data_files
 # form count they are pure scheduler latency as distributed jobs (~3.6 s
 # at 2 cores, measured), and every Python-worker task among them reads
 # ~2.5 MB before its UDF gets control.  So they run on the driver through
-# the SAME shared pure functions the oracle uses (oracle.form_vectors,
-# block_pairs, score_edges, components) and reach Spark as Arrow-backed
-# local frames — results identical by construction and by forced-path
+# the SAME shared pure functions the oracle uses (oracle.kb_form_vectors,
+# oracle.middle) and reach Spark as Arrow-backed local frames
+# (config.local_frame) — results identical by construction and by forced-path
 # parity tests.  The form count is the committed phrase_vecs rows plus
 # the batch's new forms (a bounded collect finds them).  Above the
 # threshold (real corpora: 10^6-10^7 forms at 100 TB) the distributed
@@ -104,54 +103,36 @@ class _Batch:
             setattr(self, name, None)
 
 
-# Arrow schemas of the stage tables the driver middle builds: those of
-# the distributed builds (nullability aside, which parquet drops anyway)
+# schemas of the stage tables the driver middle builds: those of the
+# distributed builds (nullability aside, which parquet drops anyway)
 _LOCAL_SCHEMAS = {
-    "phrase_vecs": pa.schema([("norm", pa.string()), ("pv", pa.list_(pa.float32()))]),
-    "block_salt_metrics": pa.schema(
-        [("block_key", pa.string()), ("members", pa.int64()), ("n_salts", pa.int32())]
-    ),
-    "pairs": pa.schema([("norm_a", pa.string()), ("norm_b", pa.string())]),
-    "edges": pa.schema([("src", pa.string()), ("dst", pa.string())]),
-    "clusters": pa.schema([("norm", pa.string()), ("cluster_id", pa.string())]),
+    "phrase_vecs": "norm string, pv array<float>",
+    "block_salt_metrics": "block_key string, members long, n_salts int",
+    "pairs": "norm_a string, norm_b string",
+    "edges": "src string, dst string",
+    "clusters": "norm string, cluster_id string",
 }
 
 
-def _local_frame(spark: SparkSession, stage: str, rows) -> DataFrame:
-    """Stage table ``stage`` from driver rows, as an Arrow-backed local
-    frame: the Arrow table goes to the JVM directly (no rows at all make
-    a zero-partition frame).  createDataFrame(list) would instead
-    parallelize the rows through Python-worker tasks."""
-    schema = _LOCAL_SCHEMAS[stage]
-    cols = list(zip(*rows)) or [()] * len(schema)
-    arrays = [pa.array(col, f.type) for col, f in zip(cols, schema)]
-    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=schema))
+def _local_frame(b: _Batch, stage: str, rows) -> DataFrame:
+    return local_frame(b.spark, _LOCAL_SCHEMAS[stage], rows)
 
 
 def _on_driver(b: _Batch) -> bool:
     return b.n_forms <= DRIVER_VOCAB_MAX
 
 
-class _Middle(NamedTuple):
-    pairs: list[tuple[str, str]]
-    salt_rows: list[tuple[str, int, int]]
-    edges: list[tuple[str, str]]
-    clusters: dict[str, str]
-
-
-def _driver_middle(b: _Batch) -> _Middle:
-    """S3-S6 on the driver, once per batch, from the oracle's helpers.
-    The vectors are the phrase_vecs table's, or resolve()'s forms
-    vectorized here."""
+def _driver_middle(b: _Batch):
+    """S3-S6 on the driver (:func:`oracle.middle`), once per batch.  The
+    vectors are the phrase_vecs table's, or resolve()'s forms vectorized
+    here."""
     if b.middle is None:
         if b.phrase_vecs is None:
             pvs = oracle.kb_form_vectors(sorted(b.forms.toPandas()["norm"]), b.kb)
         else:
             pdf = b.phrase_vecs.toPandas()
             pvs = dict(zip(pdf["norm"], pdf["pv"]))
-        pairs, salt_rows = oracle.block_pairs(pvs, b.max_block)
-        edges = oracle.score_edges(pairs, pvs, b.alpha, b.tau)
-        b.middle = _Middle(pairs, salt_rows, edges, oracle.components(pvs, edges))
+        b.middle = oracle.middle(pvs, b.alpha, b.tau, b.max_block)
     return b.middle
 
 
@@ -173,7 +154,7 @@ def _phrase_vecs(b: _Batch) -> DataFrame:
             new = forms.limit(room + 1).toPandas()["norm"]
             if len(new) <= room:
                 pvs = oracle.kb_form_vectors(sorted(new), b.kb)
-                return _local_frame(b.spark, "phrase_vecs", pvs.items())
+                return _local_frame(b, "phrase_vecs", pvs.items())
         forms = forms.localCheckpoint(eager=True)
     # distinct OOV tokens fuzzy-resolve once cluster-wide: the per-worker
     # memo cannot de-duplicate across workers (at 10^5 forms the
@@ -189,10 +170,10 @@ def _candidates(b: _Batch) -> tuple[DataFrame, DataFrame]:
     """S3 (pairs, block_salt_metrics), built once for both tables."""
     if b.candidates is None:
         if _on_driver(b):
-            m = _driver_middle(b)
+            pairs, salt_rows, _edges, _clusters = _driver_middle(b)
             b.candidates = (
-                _local_frame(b.spark, "pairs", m.pairs),
-                _local_frame(b.spark, "block_salt_metrics", m.salt_rows),
+                _local_frame(b, "pairs", pairs),
+                _local_frame(b, "block_salt_metrics", salt_rows),
             )
         else:
             blocked = blocking.block_keys_df(b.phrase_vecs.select("norm"))
@@ -202,7 +183,7 @@ def _candidates(b: _Batch) -> tuple[DataFrame, DataFrame]:
 
 def _edges(b: _Batch) -> DataFrame:
     if _on_driver(b):
-        return _local_frame(b.spark, "edges", _driver_middle(b).edges)
+        return _local_frame(b, "edges", _driver_middle(b)[2])
     # S4+S5 fused with the exact embedding-score prefilter: only the
     # plausible pair fraction pays string features / the Arrow JW
     # crossing; edges equal oracle.score_edges over the same vectors
@@ -211,7 +192,7 @@ def _edges(b: _Batch) -> DataFrame:
 
 def _clusters(b: _Batch) -> DataFrame:
     if _on_driver(b):
-        return _local_frame(b.spark, "clusters", _driver_middle(b).clusters.items())
+        return _local_frame(b, "clusters", _driver_middle(b)[3].items())
     labels = clustering.connected_components(b.edges, walls_out=b.walls)
     return clustering.assign_clusters(b.phrase_vecs.select("norm"), labels, n_forms=b.n_forms)
 
@@ -640,8 +621,10 @@ class Pipeline:
                     stage = f"compact:{name}" if m["operation"] == "compact" else name
                     lin = m["lineage"]
                     rows.append((m["ts"], stage, lin["rows"], lin["checksum"], lin["wall_ms"]))
-        return self.spark.createDataFrame(
-            [r[1:] for r in sorted(rows)], "stage string, rows long, checksum long, wall_ms long"
+        return local_frame(
+            self.spark,
+            "stage string, rows long, checksum long, wall_ms long",
+            [r[1:] for r in sorted(rows)],
         )
 
     def read_stage(self, stage: str, version: int | None = None) -> DataFrame:

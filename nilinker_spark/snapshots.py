@@ -124,6 +124,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from nilinker_spark.config import local_frame
 from nilinker_spark.functions.hashing import h60, h60_value
 
 _SNAP_SUFFIX = "__snaplog"
@@ -976,7 +977,7 @@ class SnapshotLog:
         )
         if not files:
             # zero selected files: empty frame with the version's schema
-            return spark.createDataFrame([], schema if schema is not None else StructType([]))
+            return local_frame(spark, schema if schema is not None else StructType([]), [])
         paths = [os.path.join(self.table_dir, f) for f in files]
         aliases = manifest.get("aliases") or {}
         if schema is not None and aliases:

@@ -188,6 +188,20 @@ def test_h60_spark_column_equals_python_scalar(spark):
         assert 0 <= got[t] < 2**60
 
 
+def _engine_sources() -> tuple[str, list[str]]:
+    """(repo root, every .py file of the engine and the entry point)."""
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [os.path.join(root, "__spark_entry__.py")] + [
+        os.path.join(d, f)
+        for d, _, names in os.walk(os.path.join(root, "nilinker_spark"))
+        for f in names
+        if f.endswith(".py")
+    ]
+    return root, files
+
+
 def test_every_double_round_is_round_double():
     """The cross-engine rounding rule lives in functions/rounding.py only:
     no ``F.round``/``F.bround`` call and no SQL ``round(`` inside an
@@ -198,13 +212,7 @@ def test_every_double_round_is_round_double():
     import os
     import re
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = [os.path.join(root, "__spark_entry__.py")] + [
-        os.path.join(d, f)
-        for d, _, names in os.walk(os.path.join(root, "nilinker_spark"))
-        for f in names
-        if f.endswith(".py")
-    ]
+    root, files = _engine_sources()
     sql_round = re.compile(r"\bround\s*\(", re.IGNORECASE)
     bad = []
     for path in files:
@@ -236,3 +244,94 @@ def test_every_double_round_is_round_double():
                 if sql_round.search(text):
                     bad.append(f"{os.path.relpath(path, root)}:{node.lineno} SQL round")
     assert not bad, bad
+
+
+def test_every_driver_frame_is_local_frame():
+    """Driver rows enter Spark through ``config.local_frame`` only: no
+    ``createDataFrame(`` call anywhere else in the engine or the entry
+    point (a list or an empty pandas frame would parallelize through
+    Python-worker tasks).  Spark-free: a scan of the source."""
+    import ast
+    import os
+
+    root, files = _engine_sources()
+    bad = []
+    for path in files:
+        tree = ast.parse(open(path).read())
+        exempt = set()
+        if path.endswith(os.path.join("nilinker_spark", "config.py")):
+            exempt = {
+                id(n)
+                for fn in ast.walk(tree)
+                if isinstance(fn, ast.FunctionDef) and fn.name == "local_frame"
+                for n in ast.walk(fn)
+            }
+        bad += [
+            f"{os.path.relpath(path, root)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+            and id(node) not in exempt
+        ]
+    assert not bad, bad
+
+
+def test_singularize_col_equals_singularize(spark):
+    """The Spark plural rule is :func:`singularize`, token for token."""
+    from nilinker_spark.functions.normalize import singularize_col
+
+    toks = ["cells", "glass", "abs", "bus", "buss", "s", "", "nodes", "ss"]
+    df = spark.range(1).select(F.explode(F.array(*map(F.lit, toks))).alias("t"))
+    got = {r["t"]: r["s"] for r in df.select("t", singularize_col(F.col("t")).alias("s")).collect()}
+    assert got == {t: singularize(t) for t in toks}
+
+
+def test_word_id_memo_lives_per_worker(tmp_path):
+    """The fuzzy OOV memo is the worker module's own dict, not a copy
+    pickled into each task: after phrase_vectors_df over OOV forms, a
+    later task in the same Python worker (``local[1]``, reused worker)
+    reads the memo filled.  A fresh process, since its session differs
+    from the shared test session."""
+    import os
+    import subprocess
+    import sys
+
+    root, _files = _engine_sources()
+    script = """
+import pandas as pd
+from pyspark.sql import functions as F
+from nilinker_spark.config import get_spark
+from nilinker_spark.fixtures.kb import make_kb
+from nilinker_spark.operators.blocking import phrase_vectors_df
+
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+kb = make_kb(seed=42)
+fp = kb.fingerprint
+forms = spark.range(20).select(F.concat(F.lit("zzq"), F.col("id"), F.lit("x")).alias("norm"))
+phrase_vectors_df(spark, forms, kb).collect()
+
+
+def probe(batches):
+    from nilinker_spark.functions import similarity
+
+    for _ in batches:
+        pass
+    yield pd.DataFrame({"n": [len(similarity._FUZZY_CACHE.get(fp, {}))]})
+
+
+print("MEMO", spark.range(1, numPartitions=1).mapInPandas(probe, "n long").first()["n"])
+"""
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join([root, os.environ.get("PYTHONPATH", "")]),
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    memo = [line for line in proc.stdout.splitlines() if line.startswith("MEMO ")]
+    # 20 single-token forms: 20 distinct OOV tokens, each memoized once
+    assert memo == ["MEMO 20"], proc.stdout[-2000:]
