@@ -29,6 +29,16 @@ Pipeline commits the same tables:
   re-reads nothing (compact() alone re-reads, to verify its rewrite);
 - S1 runs in one Python-worker task per ``_DOCS_PER_EXTRACT_TASK`` of
   the batch's documents, so a small delta extracts in one task;
+- an incremental batch pays for what it touches.  S2 looks for new forms
+  among the mentions it appended only (the ``mentions`` files added
+  since the version the last committed ``resolved`` records), and keeps
+  the ``phrase_vecs`` head when there is none.  S3-S6 record a digest
+  of the phrase_vecs file list and the parameters they were built from;
+  a head built from the current ones is committed again by reference
+  (no job, no part file).  ``resolved`` records the mentions version and clusters
+  files it joined, and appends the new mentions' rows while the
+  clusters files are the same and the recorded mentions files are all
+  still listed (a compaction rewrites them); otherwise it is rewritten;
 - a stage is done for a batch when its head manifest carries that batch
   id and is readable, so a relaunch skips it;
 - a batch is committed when its ``resolved`` manifest is published;
@@ -55,7 +65,7 @@ from pyspark.sql import functions as F
 from nilinker_spark import oracle
 from nilinker_spark.config import local_frame
 from nilinker_spark.fixtures.kb import KBFixture
-from nilinker_spark.functions.hashing import frame_signature, signature_aggs
+from nilinker_spark.functions.hashing import frame_signature, h60_value, signature_aggs
 from nilinker_spark.operators import blocking, clustering, scoring
 from nilinker_spark.operators.extract import extract_mentions_df
 from nilinker_spark.operators.pairs import candidate_pairs
@@ -93,12 +103,16 @@ class _Batch:
     """One batch's inputs and the stage outputs built so far — what the
     stage build functions read.  ``forms``/``n_forms`` size the middle;
     ``middle`` holds the driver middle's results; ``walls`` receives
-    resolve()'s stage walls."""
+    resolve()'s stage walls.  A checkpointed batch also keeps each
+    stage's head manifest (``heads``) and, when it appends, the
+    ``mentions`` files it added (``added``; None when not known) and
+    their rows (``new_mentions``)."""
 
     def __init__(self, spark, kb, webtext, gazetteer, alpha, tau, max_block, walls=None):
         self.spark, self.kb, self.webtext, self.gazetteer = spark, kb, webtext, gazetteer
         self.alpha, self.tau, self.max_block, self.walls = alpha, tau, max_block, walls
         self.forms = self.n_forms = self.candidates = self.middle = None
+        self.heads, self.since, self.added, self.new_mentions = {}, None, None, None
         for name in STAGES:
             setattr(self, name, None)
 
@@ -136,26 +150,36 @@ def _driver_middle(b: _Batch):
     return b.middle
 
 
-def _phrase_vecs(b: _Batch) -> DataFrame:
+def _phrase_vecs(b: _Batch) -> DataFrame | None:
     # resolve() sets the form table; a checkpointed batch vectorizes the
-    # forms of its mentions that no committed vector covers yet (during an
-    # append ``b.phrase_vecs`` is the committed table, ``b.n_forms`` its
-    # rows).  If they keep the form count within DRIVER_VOCAB_MAX they
+    # forms of its mentions that no committed vector covers yet.  During
+    # an append ``b.phrase_vecs`` is the committed table, ``b.n_forms``
+    # its rows, and only the mentions the batch added can bring a new
+    # form: every committed mention's form is committed (a rollback
+    # restores both tables).  No new form returns None, so the head is
+    # kept.  If they keep the form count within DRIVER_VOCAB_MAX they
     # are vectorized on the driver; a bounded collect finds them.
     # Otherwise they are checkpointed: prefuzz and the vectors read them,
     # and the read-append cycle on phrase_vecs breaks.
     forms = b.forms
     if forms is None:
-        forms = b.mentions.select("norm").distinct()
-        if b.phrase_vecs is not None:
+        appending = b.phrase_vecs is not None
+        if appending and b.added == []:
+            return None
+        forms = (b.mentions if b.added is None else b.new_mentions).select("norm").distinct()
+        if appending:
             forms = forms.join(b.phrase_vecs.select("norm"), "norm", "left_anti")
         room = DRIVER_VOCAB_MAX - (b.n_forms or 0)
         if room >= 0:
             new = forms.limit(room + 1).toPandas()["norm"]
+            if appending and new.empty:
+                return None
             if len(new) <= room:
                 pvs = oracle.kb_form_vectors(sorted(new), b.kb)
                 return _local_frame(b, "phrase_vecs", pvs.items())
         forms = forms.localCheckpoint(eager=True)
+        if appending and room < 0 and forms.isEmpty():
+            return None
     # distinct OOV tokens fuzzy-resolve once cluster-wide: the per-worker
     # memo cannot de-duplicate across workers (at 10^5 forms the
     # duplicated fuzzy scans made pvs wall flat from 2 to 8 cores)
@@ -197,14 +221,55 @@ def _clusters(b: _Batch) -> DataFrame:
     return clustering.assign_clusters(b.phrase_vecs.select("norm"), labels, n_forms=b.n_forms)
 
 
-def _resolved(b: _Batch) -> DataFrame:
+def _resolved(b: _Batch) -> DataFrame | None:
+    # during an append ``b.resolved`` is the committed table, joined with
+    # these same clusters: only the mentions the batch added join them
+    # (None when it added none, so the head is kept)
+    mentions = b.mentions
+    if b.resolved is not None:
+        if not b.added:
+            return None
+        mentions = b.new_mentions
     clusters = scoring._maybe_broadcast(b.clusters, b.n_forms)
-    return b.mentions.join(clusters, "norm").select(*RESOLVED_COLS)
+    return mentions.join(clusters, "norm").select(*RESOLVED_COLS)
+
+
+def _resolved_mode(b: _Batch, head: dict) -> str:
+    """``resolved`` appends while its head was joined with the clusters
+    table the batch committed (same files) and the mentions added since
+    are known; otherwise it is rewritten whole."""
+    joined = head.get("inputs", {}).get("clusters") == b.heads["clusters"]["files"]
+    return "append" if joined and b.added is not None else "overwrite"
+
+
+# S3-S6: their tables depend only on the phrase_vecs table and the
+# (alpha, tau, max_block) of the Pipeline, on either middle
+_MIDDLE = ("block_salt_metrics", "pairs", "edges", "clusters")
+
+
+def _inputs(b: _Batch, name: str) -> dict | None:
+    """What a checkpointed stage table is built from, recorded in its
+    manifest: a middle table's phrase_vecs file list (part files are
+    immutable and uniquely named; as an md5-60 digest, so the manifest
+    does not grow with the list) and parameters; for ``resolved`` the
+    ``mentions`` version and the ``clusters`` files it joined."""
+    if name in _MIDDLE:
+        return {
+            "phrase_vecs": h60_value("\n".join(b.heads["phrase_vecs"]["files"])),
+            "params": [b.alpha, b.tau, b.max_block],
+        }
+    if name == "resolved":
+        return {
+            "mentions": b.heads["mentions"]["version"],
+            "clusters": b.heads["clusters"]["files"],
+        }
+    return None
 
 
 # (name, build, mode): the S1-S7 stage graph, in order.  ``mode`` is how a
-# checkpointed incremental batch commits the stage; a first run() writes
-# every stage as an overwrite.
+# checkpointed incremental batch commits the stage (a function of the
+# batch and the stage's head where that decides it); a first run() writes
+# every stage as an overwrite.  A build that returns None keeps the head.
 _STAGE_GRAPH = [
     ("mentions", lambda b: extract_mentions_df(b.spark, b.webtext, b.gazetteer), "append"),
     # per-form mention frequencies (≙ the IC term counts,
@@ -221,7 +286,7 @@ _STAGE_GRAPH = [
     ("pairs", lambda b: _candidates(b)[0], "overwrite"),
     ("edges", _edges, "overwrite"),
     ("clusters", _clusters, "overwrite"),
-    ("resolved", _resolved, "overwrite"),
+    ("resolved", _resolved, _resolved_mode),
 ]
 STAGES = [name for name, _build, _mode in _STAGE_GRAPH]
 
@@ -443,11 +508,14 @@ class Pipeline:
         stage graph as :meth:`run`, with the append stages appending:
 
         - ``mentions`` grows by exactly the new documents' mentions;
-        - ``phrase_vecs`` grows by exactly the forms absent from the
-          committed table (left_anti) — only new forms cross the Arrow
-          scoring UDF;
-        - the vocabulary-sized tail (pairs → … → resolved) is recomputed
-          over the full form set — corpus-free work — so the final
+        - ``phrase_vecs`` grows by exactly the forms of those mentions
+          absent from the committed table (left_anti) — only new forms
+          cross the Arrow scoring UDF;
+        - with no new form, the vocabulary-sized middle (pairs → edges →
+          clusters, and block_salt_metrics) keeps its committed files by
+          reference and ``resolved`` appends the new mentions' rows;
+        - with new forms, the middle is recomputed over the full form set
+          — corpus-free work — and ``resolved`` is rewritten, so the final
           clusters are IDENTICAL to a from-scratch run on the full corpus
           (new edges may legitimately re-cluster old forms; tested).
 
@@ -478,19 +546,28 @@ class Pipeline:
         # least partitions x that many docs keeps one task per partition
         webtext = webtext.coalesce(max(1, math.ceil(n / _DOCS_PER_EXTRACT_TASK)))
         b = _Batch(self.spark, self.kb, webtext, gaz, self.alpha, self.tau, self.max_block)
+        if append:
+            # the mentions version the last committed batch resolved: the
+            # mentions files added since are this batch's
+            b.since = _head(self._log("resolved")).get("inputs", {}).get("mentions")
         for name, build, mode in _STAGE_GRAPH:
             log = self._log(name)
             head = _head(log)
-            done = (
-                head is not None
-                and head.get("batch") == batch
-                and all(os.path.exists(os.path.join(log.table_dir, f)) for f in head["files"])
+            intact = head is not None and all(
+                os.path.exists(os.path.join(log.table_dir, f)) for f in head["files"]
             )
-            if not done:
+            if not (intact and head.get("batch") == batch):
                 mode = mode if append else "overwrite"
+                if callable(mode):
+                    mode = mode(b, head)
                 if mode == "append":
                     self._load(b, name, log, head)  # the table appended to
-                head = self._commit(log, build(b), mode, batch, head)
+                # a head built from what this stage reads now is kept by
+                # reference: no job, no part file, no footer read
+                inputs = _inputs(b, name)
+                kept = intact and inputs is not None and head.get("inputs") == inputs
+                df = None if kept else build(b)
+                head = self._commit(log, df, mode, batch, head, inputs=inputs)
             self._load(b, name, log, head)
             if name == stop_after:
                 return None
@@ -498,20 +575,26 @@ class Pipeline:
 
     def _load(self, b: _Batch, name: str, log: SnapshotLog, head: dict) -> None:
         setattr(b, name, log.read(self.spark))
+        b.heads[name] = head
         if name == "phrase_vecs":
             # from the manifest: sizes the middle (driver or distributed)
             # and powers the conditional broadcast hints
             b.n_forms = head["lineage"]["rows"]
+        if name == "mentions" and b.since is not None:
+            b.added = log.added_since(b.since, head["version"])
+            if b.added:
+                b.new_mentions = log.read(self.spark, head["version"], files=b.added)
 
     def _commit(
         self,
         log: SnapshotLog,
-        df: DataFrame,
+        df: DataFrame | None,
         mode: str,
         batch: str,
         head: dict | None,
         operation: str | None = None,
         expect: tuple[int, int] | None = None,
+        inputs: dict | None = None,
     ) -> dict:
         """Write ``df`` as new part files beside the committed ones and
         publish them; returns the new head manifest.
@@ -519,18 +602,22 @@ class Pipeline:
         An append lists the head's files plus the new ones, an overwrite
         only the new ones (the files it supersedes are deleted once the
         commit is published); an append of no rows deletes its new files
-        and commits the head's file list.  The manifest's lineage (rows,
-        order-free checksum, wall_ms) covers the whole table: an append
-        combines the head's with its new rows' (bit_xor is associative).
-        The new rows' (rows, checksum) are observed during the write, in
-        its result stage (no exchange lies between the observation and
-        the file writer, so a retried task is counted once); nothing is
-        re-read.  With ``expect`` the new files are re-read instead and
-        must hold exactly that (rows, checksum), or they are deleted
-        unpublished.
+        and commits the head's file list.  ``df=None`` commits the head's
+        file list as an append of nothing, with no write.  The manifest's
+        lineage (rows, order-free checksum, wall_ms) covers the whole
+        table: an append combines the head's with its new rows' (bit_xor
+        is associative).  The new rows' (rows, checksum) are observed
+        during the write, in its result stage (no exchange lies between
+        the observation and the file writer, so a retried task is counted
+        once); nothing is re-read.  With ``expect`` the new files are
+        re-read instead and must hold exactly that (rows, checksum), or
+        they are deleted unpublished.  ``inputs`` (what the table was
+        built from) is recorded in the manifest.
         """
         t0 = time.monotonic()
-        if expect is None:
+        if df is None:
+            mode, new, rows, checksum = "append", [], 0, 0
+        elif expect is None:
             obs = Observation()
             new = log.write(df.observe(obs, *signature_aggs(*df.columns)))
             rows, checksum = obs.get["rows"], obs.get["checksum"]
@@ -561,6 +648,7 @@ class Pipeline:
                     "checksum": checksum,
                     "wall_ms": int((time.monotonic() - t0) * 1000),
                 },
+                **({"inputs": inputs} if inputs else {}),
             },
         )
         if mode == "overwrite":
@@ -632,9 +720,11 @@ class Pipeline:
 
         ``version=None`` reads the LATEST COMMITTED version — a concurrent
         append can never tear the read.  An explicit ``version``
-        time-travels an append table (``mentions``, ``phrase_vecs``) to
-        any state before later appends; versions an overwrite/compact
-        replaced raise ``SnapshotExpired`` (snapshots.py module docs)."""
+        time-travels a table to any state before later appends
+        (``mentions``, ``phrase_vecs``, and ``resolved`` or a middle table
+        across the batches that kept their files); versions an
+        overwrite/compact replaced raise ``SnapshotExpired``
+        (snapshots.py module docs)."""
         return self._log(stage).read(self.spark, version)
 
     def stage_history(self, stage: str) -> list[dict]:
@@ -648,7 +738,9 @@ class Pipeline:
         rows ``run_incremental`` batches added after ``from_version`` —
         what a downstream index/serving updater reads per batch instead
         of rescanning the table (raises if the range is not
-        append-only; snapshots.read_changes)."""
+        append-only; snapshots.read_changes).  ``resolved`` is append-only
+        across batches that do not re-cluster, so there it is the
+        resolved rows of those batches' new mentions."""
         return self._log(stage).read_changes(self.spark, from_version, to_version)
 
     # --- table maintenance ---------------------------------------------------
@@ -687,5 +779,6 @@ class Pipeline:
             head,
             operation="compact",
             expect=(lin["rows"], lin["checksum"]),
+            inputs=head.get("inputs"),  # the same rows, built from the same inputs
         )
         return len(head["files"])

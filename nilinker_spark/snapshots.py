@@ -35,7 +35,8 @@ Semantics by operation (stored in the manifest, enforced by physics):
 
 - ``append``  — prior versions stay readable (their files are still in
   the directory); this is the time-travel path for the pipeline's
-  append tables (``mentions``, ``phrase_vecs``).
+  append tables (``mentions``, ``phrase_vecs``, and ``resolved`` across
+  batches that do not re-cluster).
 - ``overwrite`` / ``compact`` — the writer deletes the replaced part
   files (Spark's overwrite does so itself; the pipeline's stage writes
   and compaction do so after publishing), so prior versions EXPIRE:
@@ -947,9 +948,10 @@ class SnapshotLog:
         spark: SparkSession,
         version: int | None = None,
         branch: str | None = None,
+        files: list[str] | None = None,
     ) -> DataFrame:
         """DataFrame of exactly the version's (or branch head's) files,
-        with its schema.
+        with its schema; ``files`` reads only those of them.
 
         Missing files (replaced by a later overwrite/compact) raise
         :class:`SnapshotExpired` — an expired version never silently
@@ -962,7 +964,17 @@ class SnapshotLog:
             if version is None:
                 raise FileNotFoundError(f"no branch {branch!r} at {self.log_dir}")
         m = self.snapshot(version)
-        return self._read_files(spark, m, m["files"])
+        return self._read_files(spark, m, m["files"] if files is None else files)
+
+    def added_since(self, since: int, version: int | None = None) -> list[str] | None:
+        """The files ``version`` (default latest) lists that version
+        ``since`` does not: what appends added between them, rollbacks
+        in between included.  None when ``version`` no longer lists every
+        file of ``since`` (a compaction or an overwrite rewrote them), so
+        there is no such set of added files.  Planned from manifests."""
+        base = set(self.snapshot(since)["files"])
+        files = self.snapshot(version)["files"]
+        return [f for f in files if f not in base] if base <= set(files) else None
 
     def _read_files(self, spark: SparkSession, manifest: dict, files: list[str]) -> DataFrame:
         missing = [f for f in files if not os.path.exists(os.path.join(self.table_dir, f))]
@@ -1064,9 +1076,7 @@ class SnapshotLog:
                     "is not append-only, so its delta is not a set of added "
                     "rows — read the versions directly instead"
                 )
-        base = set(self.snapshot(from_version)["files"])
-        new_files = [f for f in m_to["files"] if f not in base]
-        return self._read_files(spark, m_to, sorted(new_files))
+        return self._read_files(spark, m_to, sorted(self.added_since(from_version, to_v)))
 
     def prune(
         self,

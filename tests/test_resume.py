@@ -7,9 +7,11 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
 import pytest
 
+from nilinker_spark.functions.hashing import h60_value
 from nilinker_spark.pipeline import STAGES, Pipeline
 from nilinker_spark.snapshots import SnapshotLog, list_data_files
 from nilinker_spark.sources.webtext import WEBTEXT_SCHEMA
@@ -324,11 +326,16 @@ def test_crash_at_every_commit_point(spark, kb, webtext_rows, tmp_path_factory, 
     """SnapshotLog.commit raises at each commit point of run() and of
     run_incremental() in turn, right after publishing; plus once for an
     overwrite stage and once for an append stage whose files are written
-    but never committed.  Every relaunch gives output identical to an
-    uninterrupted run, with one lineage row per stage of each batch and
-    no unreferenced data file left behind."""
+    but never committed.  A delta with no new form (the by-reference
+    middle and the ``resolved`` append) is crashed at each commit point
+    both after and in place of publishing.  Every relaunch gives output
+    identical to an uninterrupted run, with one lineage row per stage of
+    each batch and no unreferenced data file left behind."""
     df_base = _df(spark, webtext_rows[:48])
-    df_delta = _df(spark, webtext_rows[48:72])
+    deltas = {
+        "inc": _df(spark, webtext_rows[48:72]),
+        "same": _df(spark, [(url + "?copy", *rest) for url, *rest in webtext_rows[:48]]),
+    }
     key = ["url", "mention_id"]
 
     def out(res):
@@ -341,26 +348,37 @@ def test_crash_at_every_commit_point(spark, kb, webtext_rows, tmp_path_factory, 
 
     root = tmp_path_factory.mktemp("ck_crash")
     base_ck = str(root / "base")
-    ref_run = out(Pipeline(spark, kb, base_ck).run(df_base))
-    shutil.copytree(base_ck, str(root / "inc_ref"))
-    ref_inc = out(Pipeline(spark, kb, str(root / "inc_ref")).run_incremental(df_delta))
-    assert len(ref_inc) > len(ref_run)
+    ref = {"run": out(Pipeline(spark, kb, base_ck).run(df_base))}
+    for call, df in deltas.items():
+        shutil.copytree(base_ck, str(root / f"{call}_ref"))
+        ref[call] = out(Pipeline(spark, kb, str(root / f"{call}_ref")).run_incremental(df))
+        assert len(ref[call]) > len(ref["run"])
+    # the no-new-form delta really keeps the middle and appends resolved
+    def head(ck, stage):
+        return SnapshotLog(os.path.join(ck, stage)).snapshot()
+
+    same_ck = str(root / "same_ref")
+    assert head(same_ck, "clusters")["files"] == head(base_ck, "clusters")["files"]
+    assert head(same_ck, "resolved")["operation"] == "append"
+
+    def batch(pipe, call):
+        return pipe.run(df_base) if call == "run" else pipe.run_incremental(deltas[call])
 
     points = [("run", k, None, True) for k in range(1, len(STAGES) + 1)]
     points += [("inc", k, None, True) for k in range(1, len(STAGES) + 1)]
     points += [("run", 1, "pairs", False), ("inc", 1, "phrase_vecs", False)]
+    points += [("same", k, None, p) for k in range(1, len(STAGES) + 1) for p in (True, False)]
     for i, (call, n, table, publish) in enumerate(points):
         ck = str(root / f"p{i}")
-        if call == "inc":
+        if call != "run":
             shutil.copytree(base_ck, ck)
         with crash_commit(n=n, table=table, publish=publish), pytest.raises(
             RuntimeError, match="simulated"
         ):
-            pipe = Pipeline(spark, kb, ck)
-            pipe.run(df_base) if call == "run" else pipe.run_incremental(df_delta)
+            batch(Pipeline(spark, kb, ck), call)
         pipe = Pipeline(spark, kb, ck)
-        got = out(pipe.run(df_base) if call == "run" else pipe.run_incremental(df_delta))
-        assert got.equals(ref_run if call == "run" else ref_inc), (call, n, table, publish)
+        got = out(batch(pipe, call))
+        assert got.equals(ref[call]), (call, n, table, publish)
         per_stage = pipe.lineage().toPandas().groupby("stage").size()
         assert (per_stage == (1 if call == "run" else 2)).all(), (call, n, per_stage.to_dict())
         check_clean(ck)
@@ -489,3 +507,138 @@ def test_observed_lineage_equals_committed_files(spark, kb, webtext_rows, tmp_pa
         assert (lin["rows"], lin["checksum"]) == frame_signature(table, *table.columns), stage
     pipe.compact("mentions")
     assert reads == [1]
+
+
+def _copies(rows, tag):
+    """The same pages under new urls: new mentions, no new form."""
+    return [(url + tag, *rest) for url, *rest in rows]
+
+
+def _assert_equals_resolve(spark, kb, got, rows, **kw):
+    """``got`` (a resolved frame) equals resolve() over ``rows``, with no
+    duplicated (url, mention_id)."""
+    from nilinker_spark.pipeline import resolve
+
+    got = got.toPandas()
+    want = resolve(spark, _df(spark, rows), kb, **kw).toPandas()
+    spark.catalog.clearCache()
+    assert not got.duplicated(["url", "mention_id"]).any()
+    assert _sorted(got).equals(_sorted(want))
+
+
+MIDDLE = ["block_salt_metrics", "pairs", "edges", "clusters"]
+
+
+@pytest.mark.parametrize("vocab_max", [None, 0])
+def test_no_new_form_delta_keeps_middle_by_reference(
+    spark, kb, webtext_rows, tmp_path, monkeypatch, vocab_max
+):
+    """A delta with no new form commits the phrase_vecs and four middle
+    heads' file lists again, with no Spark job between the phrase_vecs
+    and clusters commits; resolved gains exactly one part file, holding
+    the delta's mentions joined with the clusters.  A Pipeline reopened
+    on the same checkpoint with another alpha recomputes the middle and
+    rewrites resolved.  ``vocab_max=0`` forces the distributed middle."""
+    from nilinker_spark import pipeline as P
+    from nilinker_spark.pipeline import RESOLVED_COLS
+
+    if vocab_max is not None:
+        monkeypatch.setattr(P, "DRIVER_VOCAB_MAX", vocab_max)
+    sc = spark.sparkContext
+    rows = webtext_rows[:40]
+    pipe = Pipeline(spark, kb, str(tmp_path))
+    pipe.run(_df(spark, rows)).count()
+
+    def heads():
+        return {st: SnapshotLog(str(tmp_path / st)).snapshot() for st in STAGES}
+
+    before = heads()
+    # each commit starts a new job group named after the committed table
+    real = SnapshotLog.commit
+
+    def commit(log, *args, **kwargs):
+        try:
+            return real(log, *args, **kwargs)
+        finally:
+            sc.setJobGroup(f"after-{os.path.basename(log.table_dir)}", "test")
+
+    delta = _copies(rows, "?copy")
+    with monkeypatch.context() as m:
+        m.setattr(SnapshotLog, "commit", commit)
+        got = pipe.run_incremental(_df(spark, delta))
+    sc.setJobGroup("after-run", "test")
+    spark.range(1).count()
+    st = sc.statusTracker()
+    while not st.getJobIdsForGroup("after-run"):  # the listener runs behind
+        time.sleep(0.05)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    for stage in ["phrase_vecs"] + MIDDLE[:-1]:
+        assert st.getJobIdsForGroup(f"after-{stage}") == [], stage
+    assert st.getJobIdsForGroup("after-clusters"), "the resolved append ran no job"
+
+    after = heads()
+    for stage in ["phrase_vecs"] + MIDDLE:
+        assert after[stage]["files"] == before[stage]["files"], stage
+        assert after[stage]["batch"] != before[stage]["batch"], stage
+    new = set(after["resolved"]["files"]) - set(before["resolved"]["files"])
+    assert len(new) == 1 and set(before["resolved"]["files"]) < set(after["resolved"]["files"])
+    changes = pipe.read_stage_changes("resolved", before["resolved"]["version"]).toPandas()
+    mentions = pipe.read_stage_changes("mentions", before["mentions"]["version"])
+    want = mentions.join(pipe.read_stage("clusters"), "norm").select(*RESOLVED_COLS).toPandas()
+    assert len(changes) > 0 and _sorted(changes).equals(_sorted(want))
+    _assert_equals_resolve(spark, kb, got, rows + delta)
+
+    # another alpha: nothing of the middle is kept
+    delta2 = _copies(rows, "?copy2")
+    got = Pipeline(spark, kb, str(tmp_path), alpha=0.3).run_incremental(_df(spark, delta2))
+    _assert_equals_resolve(spark, kb, got, rows + delta + delta2, alpha=0.3)
+    again = heads()
+    for stage in MIDDLE + ["resolved"]:
+        assert not set(again[stage]["files"]) & set(after[stage]["files"]), stage
+    assert again["resolved"]["operation"] == "overwrite"
+
+
+def test_crashed_new_form_batch_is_not_reused(
+    spark, kb, webtext_rows, tmp_path, crash_commit
+):
+    """Batch A brings new forms and crashes right after publishing its
+    clusters commit; batch B, with no new form, rolls A back and must
+    recompute the middle from its own phrase_vecs, not keep A's."""
+    base, rows_a = webtext_rows[:40], webtext_rows[40:80]
+    pipe = Pipeline(spark, kb, str(tmp_path))
+    pipe.run(_df(spark, base)).count()
+    forms = pipe.read_stage("phrase_vecs").count()
+    with crash_commit(table="clusters"), pytest.raises(RuntimeError, match="simulated"):
+        pipe.run_incremental(_df(spark, rows_a))
+    crashed = {st: SnapshotLog(str(tmp_path / st)).snapshot() for st in MIDDLE}
+    assert pipe.read_stage("phrase_vecs").count() > forms, "A brought no new form"
+
+    rows_b = _copies(base, "?b")
+    got = pipe.run_incremental(_df(spark, rows_b))
+    _assert_equals_resolve(spark, kb, got, base + rows_b)
+    assert pipe.read_stage("phrase_vecs").count() == forms
+    for st in MIDDLE:
+        head = SnapshotLog(str(tmp_path / st)).snapshot()
+        assert not set(head["files"]) & set(crashed[st]["files"]), st
+        vecs = SnapshotLog(str(tmp_path / "phrase_vecs")).snapshot()
+        assert head["inputs"]["phrase_vecs"] == h60_value("\n".join(vecs["files"])), st
+
+
+@pytest.mark.parametrize(
+    "stage, op", [("mentions", "overwrite"), ("resolved", "append"), ("phrase_vecs", "overwrite")]
+)
+def test_compaction_between_deltas(spark, kb, webtext_rows, tmp_path, stage, op):
+    """compact() between two deltas with no new form: the next delta's
+    resolved equals resolve() with no duplicated row.  A compacted
+    mentions table no longer lists the files resolved recorded, and a
+    compacted phrase_vecs gives the middle new inputs, so resolved is
+    rewritten; a compacted resolved keeps appending."""
+    rows = webtext_rows[:40]
+    d1, d2 = _copies(rows, "?d1"), _copies(rows, "?d2")
+    pipe = Pipeline(spark, kb, str(tmp_path))
+    pipe.run(_df(spark, rows)).count()
+    pipe.run_incremental(_df(spark, d1)).count()
+    pipe.compact(stage)
+    got = pipe.run_incremental(_df(spark, d2))
+    _assert_equals_resolve(spark, kb, got, rows + d1 + d2)
+    assert SnapshotLog(str(tmp_path / "resolved")).snapshot()["operation"] == op

@@ -1,6 +1,6 @@
 """Bytes, Spark jobs and tasks of each stage of a checkpointed delta batch.
 
-    python tools/io_by_stage.py [--deltas 3] [--seed 1] [--cores N]
+    python tools/io_by_stage.py [--deltas 3] [--seed 1] [--cores N] [--base-mult M]
 
 Builds the ``er_incremental`` benchmark input (perfbench/gen.py: a base
 corpus of 500 English documents per core and deltas of 1/8 of it), runs
@@ -14,10 +14,15 @@ the second one commits.  So are the Spark jobs run between them, and the
 tasks of their stages (``sc.statusTracker()``; each commit starts a new
 job group, and a stage that several jobs share counts once, in the first
 of them).  It prints one table per delta, MB per stage and kind plus jobs
-and tasks, and their median over the deltas.
+and tasks and the wall time between the two commits, and their median
+over the deltas.
 
 The driver's own ``/proc`` walk for a reading is measured before the
 deltas and subtracted from each driver figure.
+
+``--base-mult M`` makes the base M times larger and keeps the delta
+size, so runs at 1, 4 and 16 show which stages' per-delta cost follows
+the corpus and which the delta.
 """
 
 from __future__ import annotations
@@ -59,10 +64,11 @@ def _io(pid: int) -> int:
     return int(fields["rchar"]) + int(fields["wchar"])
 
 
-def reading() -> dict[str, int]:
-    """rchar + wchar per process kind.  The driver is read first, so the
-    walk over /proc below lands in its next reading."""
-    out = {"driver": _io(os.getpid()), "jvm": 0, "python_workers": 0}
+def reading() -> dict[str, float]:
+    """rchar + wchar per process kind, and the monotonic clock (``s``).
+    The driver is read first, so the walk over /proc below lands in its
+    next reading."""
+    out = {"s": time.monotonic(), "driver": _io(os.getpid()), "jvm": 0, "python_workers": 0}
     for pid in procstat.tree_pids()[1:]:
         try:
             with open(f"/proc/{pid}/comm") as fh:
@@ -146,7 +152,7 @@ def per_stage(marks, probe: int, counts) -> list[tuple[str, dict[str, float]]]:
         d = {k: b[k] - a[k] for k in KINDS}
         d["driver"] = max(0, d["driver"] - probe)
         row = {k: v / MB for k, v in d.items()}
-        row.update(jobs=jobs, tasks=tasks)
+        row.update(wall_s=b["s"] - a["s"], jobs=jobs, tasks=tasks)
         rows.append((table, row))
     return rows
 
@@ -154,17 +160,17 @@ def per_stage(marks, probe: int, counts) -> list[tuple[str, dict[str, float]]]:
 def show(title: str, rows) -> None:
     print(f"\n{title}")
     print(
-        f"{'stage':<26}" + "".join(f"{k:>16}" for k in KINDS) + f"{'total':>10}{'jobs':>7}{'tasks':>7}"
+        f"{'stage':<26}" + "".join(f"{k:>16}" for k in KINDS) + f"{'total':>10}{'wall_s':>8}{'jobs':>7}{'tasks':>7}"
     )
 
     def line(table: str, row: dict) -> None:
         print(
             f"{table:<26}"
             + "".join(f"{row[k]:>16.2f}" for k in KINDS)
-            + f"{sum(row[k] for k in KINDS):>10.2f}{row['jobs']:>7g}{row['tasks']:>7g}"
+            + f"{sum(row[k] for k in KINDS):>10.2f}{row['wall_s']:>8.2f}{row['jobs']:>7g}{row['tasks']:>7g}"
         )
 
-    sums = dict.fromkeys((*KINDS, "jobs", "tasks"), 0.0)
+    sums = dict.fromkeys((*KINDS, "wall_s", "jobs", "tasks"), 0.0)
     for table, row in rows:
         for k in sums:
             sums[k] += row[k]
@@ -177,13 +183,14 @@ def main() -> None:
     ap.add_argument("--deltas", type=int, default=3)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--cores", type=int, default=os.cpu_count() or 4)
+    ap.add_argument("--base-mult", type=int, default=1)
     args = ap.parse_args()
 
     work = tempfile.mkdtemp(prefix="io_by_stage_")
     try:
         spark = start_spark(args.cores, work)
-        n_base = 500 * args.cores
-        n_delta = n_base // 8
+        n_delta = 500 * args.cores // 8
+        n_base = 500 * args.cores * args.base_mult
 
         def webtext(name: str, n: int, first: int):
             path = os.path.join(work, name, "documents.parquet")
