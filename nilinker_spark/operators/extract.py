@@ -14,6 +14,8 @@ Scale notes:
   KB ≪ data, the same asymmetry the reference exploits with its
   in-memory WC dict (/root/reference/src/utils/utils.py:28-107).
 - mapInPandas = Arrow record batches; no row-at-a-time Python UDFs.
+  A batch small enough to scan on the driver (``mention_rows``; the
+  Pipeline picks it by document count) runs the same scan there.
 """
 
 from __future__ import annotations
@@ -25,17 +27,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nilinker_spark.functions.normalize import extract_text, norm_form
-from nilinker_spark.oracle import extract_mentions
+from nilinker_spark.oracle import extract_mentions, gazetteer_index
 
 MENTIONS_SCHEMA = "url string, mention_id string, surface string, pos int, norm string"
 
-# per-worker-process token → (norm_form, word_count) memo.  norm_form is a
-# pure function of the token alone (no KB), so the memo can never go stale;
-# the token vocabulary is Zipf-bounded, so it stays vocabulary-sized while
-# saving a Python regex per corpus token (the extraction hot loop's largest
-# cost — memo+probe gates measured 1.8x on the scan).  Size-guarded so
-# adversarial high-entropy corpora cannot grow it without bound in a
-# long-lived worker.
+# per-process (a worker's or the driver's) token → (norm_form, word_count)
+# memo.  norm_form is a pure function of the token alone (no KB), so the
+# memo can never go stale; the token vocabulary is Zipf-bounded, so it
+# stays vocabulary-sized while saving a Python regex per corpus token (the
+# extraction hot loop's largest cost — memo+probe gates measured 1.8x on
+# the scan).  Size-guarded so adversarial high-entropy corpora cannot grow
+# it without bound in a long-lived process.
 _NORM_CACHE: dict[str, tuple[str, int]] = {}
 _NORM_CACHE_MAX = 2_000_000
 
@@ -60,41 +62,60 @@ def extract_mentions_df(spark: SparkSession, webtext: DataFrame, gazetteer: set[
     return _scan_mentions(spark, webtext, gazetteer)
 
 
+def mention_rows(webtext: DataFrame, gazetteer: set[str]) -> list[tuple]:
+    """S1 on the driver: the mention rows (``MENTIONS_SCHEMA`` order) of
+    webtext's English pages, the rows extract_mentions_df gives.
+
+    The pages' (url, html) reach the driver as one Arrow collect, which
+    starts no Python worker, and go through the same scan as the
+    mapInPandas path — for a batch small enough to hold its html here."""
+    pages = webtext.filter(F.col("lang") == "en").select("url", "html").toArrow()
+    urls = pages["url"].to_pylist()
+    gset = set(gazetteer)
+    idx, *cols = _scan_pages(urls, pages["html"].to_pylist(), gset, gazetteer_index(gset))
+    return list(zip([urls[i] for i in idx], *cols))
+
+
+def _scan_pages(urls, htmls, gset: set[str], gidx) -> tuple[list, list, list, list, list]:
+    """The S1 scan of one run of pages, on a worker or the driver:
+    (page index, mention_id, surface, pos, norm) columns, one entry per
+    mention.  It reads and fills the process's ``_NORM_CACHE`` (a
+    module-level function, so a worker runs it against its own module's
+    memo, not a pickled copy), first shrinking the memo past its size
+    guard."""
+    if len(_NORM_CACHE) > _NORM_CACHE_MAX:
+        _evict_norm_cache()
+    pages, mids, surfaces, poss, norms = [], [], [], [], []
+    for i, (url, html) in enumerate(zip(urls, htmls)):
+        text = extract_text(bytes(html))
+        for mid, surface, pos in extract_mentions(url, text, gset, _NORM_CACHE, gidx):
+            pages.append(i)
+            mids.append(mid)
+            surfaces.append(surface)
+            poss.append(pos)
+            norms.append(norm_form(surface))
+    return pages, mids, surfaces, poss, norms
+
+
 def _scan_mentions(
     spark: SparkSession, webtext: DataFrame, gazetteer: set[str], carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """The S1 scan, batch or streaming: mentions of English pages, plus
     the page columns named in ``carry`` on every mention row.
 
-    The loop records each mention's page index; url and the carried
-    columns are gathered by that index once per Arrow batch, so carrying
-    a column adds no work per mention and the batch path projects only
-    (url, html) into the Python worker."""
+    ``_scan_pages`` records each mention's page index; url and the
+    carried columns are gathered by that index once per Arrow batch, so
+    carrying a column adds no work per mention and the batch path
+    projects only (url, html) into the Python worker."""
     gz = spark.sparkContext.broadcast(sorted(gazetteer))
     page_cols = ["url", *carry]
     carried = "".join(f", {c} {webtext.schema[c].dataType.simpleString()}" for c in carry)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # the worker module's memo: a closure's globals are pickled by
-        # value, so naming _NORM_CACHE directly would give every task a
-        # fresh copy that _evict_norm_cache never shrinks
-        from nilinker_spark.operators.extract import _NORM_CACHE as memo
-        from nilinker_spark.oracle import gazetteer_index
-
         gset = set(gz.value)
         gidx = gazetteer_index(gset)
         for pdf in batches:
-            pages, mids, surfaces, poss, norms = [], [], [], [], []
-            if len(memo) > _NORM_CACHE_MAX:
-                _evict_norm_cache()
-            for i, (url, html) in enumerate(zip(pdf["url"], pdf["html"])):
-                text = extract_text(bytes(html))
-                for mid, surface, pos in extract_mentions(url, text, gset, memo, gidx):
-                    pages.append(i)
-                    mids.append(mid)
-                    surfaces.append(surface)
-                    poss.append(pos)
-                    norms.append(norm_form(surface))
+            pages, mids, surfaces, poss, norms = _scan_pages(pdf["url"], pdf["html"], gset, gidx)
             page = {c: pdf[c].to_numpy()[pages] for c in page_cols}
             yield pd.DataFrame(
                 {

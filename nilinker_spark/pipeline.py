@@ -27,8 +27,14 @@ Pipeline commits the same tables:
   batch's urls) and the stage's lineage: rows, checksum, wall_ms.  The
   rows and checksum are observed during the stage's write, so a commit
   re-reads nothing (compact() alone re-reads, to verify its rewrite);
-- S1 runs in one Python-worker task per ``_DOCS_PER_EXTRACT_TASK`` of
-  the batch's documents, so a small delta extracts in one task;
+- S1 of a batch of at most ``_DOCS_PER_EXTRACT_TASK`` documents runs on
+  the driver: the English pages' (url, html) arrive as one Arrow collect
+  and go through the scan the Python workers run, so a small delta starts
+  no Python worker.  A larger batch extracts in one Python-worker task
+  per ``_DOCS_PER_EXTRACT_TASK`` documents.  The driver's forms then
+  give S2's new-form test as a set difference;
+- a frame built on the driver (S1's mentions, the driver middle's
+  tables) is committed as one part file;
 - an incremental batch pays for what it touches.  S2 looks for new forms
   among the mentions it appended only (the ``mentions`` files added
   since the version the last committed ``resolved`` records), and keeps
@@ -67,7 +73,7 @@ from nilinker_spark.config import local_frame
 from nilinker_spark.fixtures.kb import KBFixture
 from nilinker_spark.functions.hashing import frame_signature, h60_value, signature_aggs
 from nilinker_spark.operators import blocking, clustering, scoring
-from nilinker_spark.operators.extract import extract_mentions_df
+from nilinker_spark.operators.extract import MENTIONS_SCHEMA, extract_mentions_df, mention_rows
 from nilinker_spark.operators.pairs import candidate_pairs
 from nilinker_spark.oracle import ALPHA, MAX_BLOCK_FORMS, TAU
 from nilinker_spark.snapshots import SnapshotLog, list_data_files
@@ -93,7 +99,11 @@ _COMPACT_ROWS_PER_FILE = 1_000_000
 # more than its webtext's partitions: each Python-worker task pays ~2.5 MB
 # of io before its first row, and one task of up to this many documents
 # wrote the mentions no slower than one per core (local[4]: 250/500 docs
-# won in each of 3 windows, min of 3; 750 and 1,000 lost in 2 of 3)
+# won in each of 3 windows, min of 3; 750 and 1,000 lost in 2 of 3).
+# A batch that fits one task runs S1 on the driver instead, which matched
+# or beat that one task in io and wall at 250 to 4,000 docs, and the two
+# tasks of 501 and 1,000 docs too: this bounds the html the driver holds
+# (at most this many pages) rather than marking a crossover
 _DOCS_PER_EXTRACT_TASK = 500
 
 RESOLVED_COLS = ("url", "mention_id", "surface", "pos", "norm", "cluster_id")
@@ -106,20 +116,24 @@ class _Batch:
     resolve()'s stage walls.  A checkpointed batch also keeps each
     stage's head manifest (``heads``) and, when it appends, the
     ``mentions`` files it added (``added``; None when not known) and
-    their rows (``new_mentions``)."""
+    their rows (``new_mentions``).  ``docs`` is a checkpointed batch's
+    document count (None in resolve()); ``mention_forms`` the distinct
+    forms of the mentions S1 found on the driver (None otherwise)."""
 
-    def __init__(self, spark, kb, webtext, gazetteer, alpha, tau, max_block, walls=None):
+    def __init__(self, spark, kb, webtext, gazetteer, alpha, tau, max_block, walls=None, docs=None):
         self.spark, self.kb, self.webtext, self.gazetteer = spark, kb, webtext, gazetteer
         self.alpha, self.tau, self.max_block, self.walls = alpha, tau, max_block, walls
+        self.docs, self.mention_forms = docs, None
         self.forms = self.n_forms = self.candidates = self.middle = None
         self.heads, self.since, self.added, self.new_mentions = {}, None, None, None
         for name in STAGES:
             setattr(self, name, None)
 
 
-# schemas of the stage tables the driver middle builds: those of the
+# schemas of the stage tables built on the driver: those of the
 # distributed builds (nullability aside, which parquet drops anyway)
 _LOCAL_SCHEMAS = {
+    "mentions": MENTIONS_SCHEMA,
     "phrase_vecs": "norm string, pv array<float>",
     "block_salt_metrics": "block_key string, members long, n_salts int",
     "pairs": "norm_a string, norm_b string",
@@ -129,7 +143,22 @@ _LOCAL_SCHEMAS = {
 
 
 def _local_frame(b: _Batch, stage: str, rows) -> DataFrame:
-    return local_frame(b.spark, _LOCAL_SCHEMAS[stage], rows)
+    # a LocalTableScan is split into defaultParallelism slices; a
+    # checkpointed batch commits it as one part file (resolve()'s plan
+    # keeps the slices)
+    df = local_frame(b.spark, _LOCAL_SCHEMAS[stage], rows)
+    return df if b.docs is None else df.coalesce(1)
+
+
+def _mentions(b: _Batch) -> DataFrame:
+    # S1 on the driver for a checkpointed batch that fits one extraction
+    # task (see _DOCS_PER_EXTRACT_TASK); resolve() and larger batches scan
+    # in Python workers
+    if b.docs is None or b.docs > _DOCS_PER_EXTRACT_TASK:
+        return extract_mentions_df(b.spark, b.webtext, b.gazetteer)
+    rows = mention_rows(b.webtext, b.gazetteer)
+    b.mention_forms = {norm for *_, norm in rows}
+    return _local_frame(b, "mentions", rows)
 
 
 def _on_driver(b: _Batch) -> bool:
@@ -158,7 +187,8 @@ def _phrase_vecs(b: _Batch) -> DataFrame | None:
     # form: every committed mention's form is committed (a rollback
     # restores both tables).  No new form returns None, so the head is
     # kept.  If they keep the form count within DRIVER_VOCAB_MAX they
-    # are vectorized on the driver; a bounded collect finds them.
+    # are vectorized on the driver: when S1 ran there its forms are in
+    # hand, less the committed ones; else a bounded collect finds them.
     # Otherwise they are checkpointed: prefuzz and the vectors read them,
     # and the read-append cycle on phrase_vecs breaks.
     forms = b.forms
@@ -171,8 +201,13 @@ def _phrase_vecs(b: _Batch) -> DataFrame | None:
             forms = forms.join(b.phrase_vecs.select("norm"), "norm", "left_anti")
         room = DRIVER_VOCAB_MAX - (b.n_forms or 0)
         if room >= 0:
-            new = forms.limit(room + 1).toPandas()["norm"]
-            if appending and new.empty:
+            if b.mention_forms is None:
+                new = set(forms.limit(room + 1).toPandas()["norm"])
+            else:
+                new = b.mention_forms
+                if appending:
+                    new = new - set(b.phrase_vecs.select("norm").toArrow()["norm"].to_pylist())
+            if appending and not new:
                 return None
             if len(new) <= room:
                 pvs = oracle.kb_form_vectors(sorted(new), b.kb)
@@ -271,7 +306,7 @@ def _inputs(b: _Batch, name: str) -> dict | None:
 # batch and the stage's head where that decides it); a first run() writes
 # every stage as an overwrite.  A build that returns None keeps the head.
 _STAGE_GRAPH = [
-    ("mentions", lambda b: extract_mentions_df(b.spark, b.webtext, b.gazetteer), "append"),
+    ("mentions", _mentions, "append"),
     # per-form mention frequencies (≙ the IC term counts,
     # information_content.py:17-27).  The count combines map-side
     # (partial_count below the one exchange), so the Zipf-head form
@@ -541,11 +576,12 @@ class Pipeline:
         if committed and (batch in committed or not append):
             return self.read_stage("resolved")
         gaz = self.kb.gazetteer if self.gazetteer is None else self.gazetteer
-        # S1 in ceil(n / _DOCS_PER_EXTRACT_TASK) tasks; coalesce adds no
-        # shuffle and never raises a partition count, so a batch of at
-        # least partitions x that many docs keeps one task per partition
+        # S1 on the driver or in ceil(n / _DOCS_PER_EXTRACT_TASK) tasks;
+        # coalesce adds no shuffle and never raises a partition count, so
+        # a batch of at least partitions x that many docs keeps one task
+        # per partition
         webtext = webtext.coalesce(max(1, math.ceil(n / _DOCS_PER_EXTRACT_TASK)))
-        b = _Batch(self.spark, self.kb, webtext, gaz, self.alpha, self.tau, self.max_block)
+        b = _Batch(self.spark, self.kb, webtext, gaz, self.alpha, self.tau, self.max_block, docs=n)
         if append:
             # the mentions version the last committed batch resolved: the
             # mentions files added since are this batch's

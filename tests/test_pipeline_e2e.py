@@ -545,3 +545,29 @@ def test_pipeline_driver_middle_runs_no_python_udf(
     assert resolve(spark, base, kb, metrics_out=metrics).count() == n_base
     metrics["block_salt_metrics"].count()
     spark.catalog.clearCache()
+
+
+def test_small_batches_start_no_python_worker(
+    spark, kb, webtext_rows, webtext_frame, monkeypatch, tmp_path
+):
+    """A Pipeline batch of at most _DOCS_PER_EXTRACT_TASK documents runs
+    S1 on the driver: run() on such a base and run_incremental() on a
+    small delta build no mapInPandas scan and parallelize no driver rows,
+    so with the middle on the driver too no Python-worker task starts."""
+    import pyspark
+
+    from nilinker_spark import pipeline as P
+
+    base = webtext_frame(webtext_rows[:200]).localCheckpoint(eager=True)
+    delta = webtext_frame(webtext_rows[200:216]).localCheckpoint(eager=True)
+    assert base.count() <= P._DOCS_PER_EXTRACT_TASK
+
+    def forbidden(*_a, **_k):
+        raise AssertionError("a small batch reached a Python-worker stage")
+
+    # the session's DataFrame class, which defines mapInPandas
+    monkeypatch.setattr(type(base), "mapInPandas", forbidden)
+    monkeypatch.setattr(pyspark.SparkContext, "parallelize", forbidden)
+    pipe = Pipeline(spark, kb, str(tmp_path / "ck"))
+    n_base = pipe.run(base).count()
+    assert pipe.run_incremental(delta).count() > n_base

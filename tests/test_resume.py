@@ -322,7 +322,10 @@ def test_wal_tail_stage_recovery(
     _assert_same_clusters(pipe2.run_incremental(df_a).toPandas(), scratch_full)
 
 
-def test_crash_at_every_commit_point(spark, kb, webtext_rows, tmp_path_factory, crash_commit):
+@pytest.mark.parametrize("s1", ["driver", "worker"])
+def test_crash_at_every_commit_point(
+    spark, kb, webtext_rows, tmp_path_factory, crash_commit, monkeypatch, s1
+):
     """SnapshotLog.commit raises at each commit point of run() and of
     run_incremental() in turn, right after publishing; plus once for an
     overwrite stage and once for an append stage whose files are written
@@ -330,7 +333,13 @@ def test_crash_at_every_commit_point(spark, kb, webtext_rows, tmp_path_factory, 
     middle and the ``resolved`` append) is crashed at each commit point
     both after and in place of publishing.  Every relaunch gives output
     identical to an uninterrupted run, with one lineage row per stage of
-    each batch and no unreferenced data file left behind."""
+    each batch and no unreferenced data file left behind.  The batches
+    fit one extraction task, so S1 runs on the driver; ``s1="worker"``
+    lowers the limit so that it runs in Python workers."""
+    from nilinker_spark import pipeline as P
+
+    if s1 == "worker":
+        monkeypatch.setattr(P, "_DOCS_PER_EXTRACT_TASK", 1)
     df_base = _df(spark, webtext_rows[:48])
     deltas = {
         "inc": _df(spark, webtext_rows[48:72]),
@@ -446,9 +455,10 @@ def test_pipeline_reads_no_manifest_it_wrote(spark, kb, webtext_rows, tmp_path, 
 
 def test_small_batch_extracts_in_one_task(spark, kb, webtext_rows, tmp_path, monkeypatch):
     """S1 runs in ceil(docs / _DOCS_PER_EXTRACT_TASK) tasks, never more
-    than the webtext's partitions: a delta of a few pages adds exactly one
-    mentions part file, and a batch of at least partitions x that many
-    docs still writes one per partition."""
+    than the webtext's partitions: a batch of at least partitions x that
+    many docs writes one mentions part file per partition.  A delta of a
+    few pages fits one task, so S1 runs on the driver, and it adds
+    exactly one mentions part file."""
     from nilinker_spark import pipeline
 
     parts = spark.sparkContext.defaultParallelism
@@ -465,6 +475,72 @@ def test_small_batch_extracts_in_one_task(spark, kb, webtext_rows, tmp_path, mon
     pipe.run_incremental(delta).count()
     head = SnapshotLog(str(tmp_path / "mentions")).snapshot()["files"]
     assert len(set(head) - set(committed)) == 1 and set(committed) <= set(head)
+
+
+@pytest.mark.parametrize("docs", [16, 17])
+def test_s1_driver_and_worker_paths_agree(spark, kb, webtext_rows, tmp_path, monkeypatch, docs):
+    """A delta of ``docs`` pages goes through S1 on the driver, with
+    _DOCS_PER_EXTRACT_TASK at ``docs``, and in Python workers, with it at
+    ``docs - 1``: the batches right at the limit and one past it.  From
+    the same checkpoint both commit the same mentions rows, one new
+    mentions part file (the delta is one partition), the same batch id,
+    and every stage head with the same lineage (rows, checksum) — the
+    delta brings new forms, so S2's set difference on the driver meets
+    its anti-join."""
+    from nilinker_spark import pipeline as P
+
+    base_ck = tmp_path / "base"
+    Pipeline(spark, kb, str(base_ck)).run(_df(spark, webtext_rows[:40])).count()
+    base_mentions = SnapshotLog(str(base_ck / "mentions")).snapshot()["files"]
+    base_forms = SnapshotLog(str(base_ck / "phrase_vecs")).snapshot()["lineage"]["rows"]
+    delta = _df(spark, webtext_rows[40 : 40 + docs]).repartition(1)
+    scans = []
+    frame = type(delta)  # the session's DataFrame class, which defines mapInPandas
+    real_driver, real_worker = P.mention_rows, frame.mapInPandas
+    monkeypatch.setattr(P, "mention_rows", lambda *a: scans.append("driver") or real_driver(*a))
+    monkeypatch.setattr(
+        frame, "mapInPandas", lambda *a, **k: scans.append("worker") or real_worker(*a, **k)
+    )
+    got = {}
+    for path, limit in (("driver", docs), ("worker", docs - 1)):
+        ck = tmp_path / path
+        shutil.copytree(base_ck, ck)
+        monkeypatch.setattr(P, "_DOCS_PER_EXTRACT_TASK", limit)
+        scans.clear()
+        resolved = Pipeline(spark, kb, str(ck)).run_incremental(delta).toPandas()
+        assert scans == [path]
+        heads = {st: SnapshotLog(str(ck / st)).snapshot() for st in STAGES}
+        mentions = heads["mentions"]["files"]
+        assert len(set(mentions) - set(base_mentions)) == 1 and set(base_mentions) < set(mentions)
+        assert heads["phrase_vecs"]["lineage"]["rows"] > base_forms, "the delta brought no new form"
+        got[path] = (
+            _sorted(Pipeline(spark, kb, str(ck)).read_stage("mentions").toPandas()),
+            _sorted(resolved),
+            {st: (h["batch"], h["lineage"]["rows"], h["lineage"]["checksum"]) for st, h in heads.items()},
+        )
+    (m_d, r_d, h_d), (m_w, r_w, h_w) = got["driver"], got["worker"]
+    assert m_d.equals(m_w) and r_d.equals(r_w)
+    assert h_d == h_w
+
+
+def test_driver_built_tables_commit_one_file(spark, kb, webtext_rows, tmp_path):
+    """A frame built on the driver is committed as one part file: after
+    run() the mentions, phrase_vecs and four middle heads list one file
+    each; a delta with new forms appends one file to mentions and to
+    phrase_vecs and rewrites each middle table as one.  ``max_block=2``
+    makes salting fire, so block_salt_metrics has rows."""
+    built = ["mentions", "phrase_vecs"] + MIDDLE
+
+    def n_files():
+        return {st: len(SnapshotLog(str(tmp_path / st)).snapshot()["files"]) for st in built}
+
+    pipe = Pipeline(spark, kb, str(tmp_path), max_block=2)
+    pipe.run(_df(spark, webtext_rows[:40])).count()
+    forms = pipe.read_stage("phrase_vecs").count()
+    assert n_files() == dict.fromkeys(built, 1)
+    pipe.run_incremental(_df(spark, webtext_rows[40:80])).count()
+    assert pipe.read_stage("phrase_vecs").count() > forms, "the delta brought no new form"
+    assert n_files() == {**dict.fromkeys(built, 1), "mentions": 2, "phrase_vecs": 2}
 
 
 def test_observed_lineage_equals_committed_files(spark, kb, webtext_rows, tmp_path, monkeypatch):

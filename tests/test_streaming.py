@@ -253,8 +253,9 @@ def test_stream_sessionize_matches_batch_session_windows(spark, tmp_path_factory
 
 
 def test_streaming_scan_shares_zipf_head_eviction():
-    """VERDICT r4 #7: the streaming scan is the batch scan, which evicts
-    through the SHARED Zipf-head-preserving helper
+    """VERDICT r4 #7: the streaming scan is the batch scan, whose shared
+    per-page body (``_scan_pages``, the driver S1's too) evicts through
+    the SHARED Zipf-head-preserving helper
     (operators.extract._evict_norm_cache, behavior proven in
     test_properties), never clear() — a clear() re-paid the
     normalization regex for every head token in long-lived streaming
@@ -265,7 +266,8 @@ def test_streaming_scan_shares_zipf_head_eviction():
     from nilinker_spark.streaming import extract_stream as S
 
     assert "_scan_mentions(" in inspect.getsource(S.stream_mentions)
-    src = inspect.getsource(E._scan_mentions)
+    assert "_scan_pages(" in inspect.getsource(E._scan_mentions)
+    src = inspect.getsource(E._scan_pages)
     assert "_evict_norm_cache" in src
     assert "_NORM_CACHE.clear()" not in src and ".clear()" not in src
 

@@ -1,6 +1,7 @@
 """Bytes, Spark jobs and tasks of each stage of a checkpointed delta batch.
 
     python tools/io_by_stage.py [--deltas 3] [--seed 1] [--cores N] [--base-mult M]
+                                [--delta-docs N]
 
 Builds the ``er_incremental`` benchmark input (perfbench/gen.py: a base
 corpus of 500 English documents per core and deltas of 1/8 of it), runs
@@ -22,7 +23,10 @@ deltas and subtracted from each driver figure.
 
 ``--base-mult M`` makes the base M times larger and keeps the delta
 size, so runs at 1, 4 and 16 show which stages' per-delta cost follows
-the corpus and which the delta.
+the corpus and which the delta.  ``--delta-docs N`` sets the delta size
+(default 1/8 of the unmultiplied base, as ``er_incremental``), e.g. to
+put the deltas on either side of the document count below which S1
+runs on the driver.
 """
 
 from __future__ import annotations
@@ -184,12 +188,13 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--cores", type=int, default=os.cpu_count() or 4)
     ap.add_argument("--base-mult", type=int, default=1)
+    ap.add_argument("--delta-docs", type=int, default=None)
     args = ap.parse_args()
 
     work = tempfile.mkdtemp(prefix="io_by_stage_")
     try:
         spark = start_spark(args.cores, work)
-        n_delta = 500 * args.cores // 8
+        n_delta = args.delta_docs or 500 * args.cores // 8
         n_base = 500 * args.cores * args.base_mult
 
         def webtext(name: str, n: int, first: int):
