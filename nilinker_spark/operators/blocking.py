@@ -132,8 +132,8 @@ def phrase_vectors_df(
        (≙ /root/reference/src/NILINKER/nilinker.py:80-153, vectorized
        instead of the reference's batch-size-1 eager loop at :196).
 
-    The KB dicts + weight matrices ride one sc.broadcast; the UDF touches
-    no Spark state.
+    The KB dicts + the ``ModelWeights`` ride one sc.broadcast; the UDF
+    touches no Spark state.
     """
     fuzzy_b = spark.sparkContext.broadcast(fuzzy_map or {})
     kb_b = spark.sparkContext.broadcast(
@@ -141,23 +141,19 @@ def phrase_vectors_df(
             "vocab_sorted": sorted(kb.word2id),
             "word2id": dict(kb.word2id),
             "wc_by_id": wc_by_id(kb),
-            "weights": kb.weights.to_npz_dict(),
+            "weights": kb.weights,
             "fingerprint": kb.fingerprint,
         }
     )
 
     def run(batches):
-        from nilinker_spark.functions.model import ModelWeights
-
         kbv = kb_b.value
-        z = kbv["weights"]
-        w = ModelWeights(z["W_a"], z["b_a"], z["W_c"], z["b_c"], z["word_embeds"], z["cand_embeds"])
         wid = word_id_resolver(
             kbv["word2id"], kbv["vocab_sorted"], kbv["fingerprint"], fuzzy_b.value
         )
         for pdf in batches:
             norms = pdf["norm"]
-            pv = form_vectors(norms, wid, kbv["wc_by_id"], w)
+            pv = form_vectors(norms, wid, kbv["wc_by_id"], kbv["weights"])
             yield pd.DataFrame({"norm": norms, "pv": list(pv)})
 
     schema = T.StructType(

@@ -98,7 +98,7 @@ def candidates_ir(
     )
 
 
-def filter_top_pred(preds: DataFrame, k: int = 1) -> DataFrame:
+def filter_top_pred(preds: DataFrame) -> DataFrame:
     """preds(query_id, ranked array<string>, true_id, gold_id) ->
     (query_id, answer, is_correct): drop the held-out true concept from
     the ranking, take the first remaining, judge vs the gold (direct

@@ -135,7 +135,7 @@ def _scan_mentions(
     )
 
 
-def extract_text_df(spark: SparkSession, webtext: DataFrame) -> DataFrame:
+def extract_text_df(webtext: DataFrame) -> DataFrame:
     """(url, extracted_text) — the byte-identical-extraction parity surface."""
 
     def ex(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

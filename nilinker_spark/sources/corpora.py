@@ -20,8 +20,6 @@ from pyspark.sql import types as T
 
 from nilinker_spark.operators.graph import single_parent
 
-ANNOTATIONS_SCHEMA = "doc_id string, mention string, kb_id string, ancestor_id string"
-
 
 def _annotations(rows: DataFrame, parents: DataFrame | None = None) -> DataFrame:
     """(doc_id, mention, kb_id) rows -> the annotations shape.
@@ -35,6 +33,29 @@ def _annotations(rows: DataFrame, parents: DataFrame | None = None) -> DataFrame
         return ann.withColumn("ancestor_id", F.lit(None).cast("string"))
     return ann.join(F.broadcast(parents), ann.kb_id == parents.child_id, "inner").select(
         "doc_id", "mention", "kb_id", F.col("parent_id").alias("ancestor_id")
+    )
+
+
+def _kb_aliases(names: DataFrame, syns: DataFrame) -> DataFrame:
+    """Concept names + synonyms, each ``(alias, kb_id)`` ->
+    ``(alias, kb_id, is_synonym)``, one row per (alias, kb_id).  When a
+    pair is both a concept name and a synonym the name row survives:
+    min(False) < min(True), under any partitioning (dropDuplicates is
+    not)."""
+    return (
+        names.withColumn("is_synonym", F.lit(False))
+        .unionByName(syns.withColumn("is_synonym", F.lit(True)))
+        .groupBy("alias", "kb_id")
+        .agg(F.min("is_synonym").alias("is_synonym"))
+    )
+
+
+def _obo_stanzas(spark: SparkSession, path: str) -> DataFrame:
+    """One row per ``[Term]`` stanza (column ``s``) of an OBO file: a
+    wholetext read split on the stanza header."""
+    raw = spark.read.text(path, wholetext=True)
+    return raw.select(F.explode(F.split("value", r"\[Term\]")).alias("s")).filter(
+        F.col("s").contains("id:")
     )
 
 
@@ -284,17 +305,8 @@ def read_chebi_3star_kb(
         names.select(F.concat(F.lit("CHEBI:"), F.col("cid")).alias("kb_id"), "alias")
         .join(F.broadcast(terms), "kb_id")
         .select("alias", "kb_id")
-        .withColumn("is_synonym", F.lit(True))
     )
-    aliases = (
-        concepts.select(F.col("name").alias("alias"), "kb_id", F.lit(False).alias("is_synonym"))
-        .unionByName(syns)
-        # min(False) < min(True): when the same (alias, kb_id) is both a
-        # concept name and a synonym, the concept-name row survives —
-        # deterministic under any partitioning (dropDuplicates is not)
-        .groupBy("alias", "kb_id")
-        .agg(F.min("is_synonym").alias("is_synonym"))
-    )
+    aliases = _kb_aliases(concepts.select(F.col("name").alias("alias"), "kb_id"), syns)
     return concepts, aliases, edges
 
 
@@ -308,12 +320,8 @@ def read_chebi_3star_kb(
 def read_obo_umls_xrefs(spark: SparkSession, path: str) -> DataFrame:
     """(umls_id, kb_id) from ``xref: UMLS:...`` lines of an OBO file —
     the mapping the reference builds while loading HP (kbs.py:105-113)."""
-    raw = spark.read.text(path, wholetext=True)
-    stanzas = raw.select(F.explode(F.split("value", r"\[Term\]")).alias("s")).filter(
-        F.col("s").contains("id:")
-    )
     return (
-        stanzas.select(
+        _obo_stanzas(spark, path).select(
             F.regexp_extract("s", r"(?m)^id: (\S+)", 1).alias("kb_id"),
             F.expr(r"regexp_extract_all(s, '(?m)^xref: UMLS:(\\S+)', 1)").alias("umls"),
         )
@@ -360,20 +368,12 @@ def read_ctd_tsv_kb(spark: SparkSession, path: str) -> tuple[DataFrame, DataFram
         "name", "kb_id", "alt", "parents", "tree", "x0", "x1", "synonyms"
     )
     concepts = raw.select("kb_id", "name").withColumn("is_root", F.lit(False))
-    names = raw.select(F.col("name").alias("alias"), "kb_id", F.lit(False).alias("is_synonym"))
     syns = (
         raw.filter(F.col("synonyms").isNotNull())
         .select(F.explode(F.split("synonyms", "\\|")).alias("alias"), "kb_id")
         .filter(F.length("alias") > 0)
-        .withColumn("is_synonym", F.lit(True))
     )
-    # min(False) < min(True): concept-name row survives a (alias, kb_id)
-    # collision deterministically (same rule as read_chebi_3star_kb)
-    aliases = (
-        names.unionByName(syns)
-        .groupBy("alias", "kb_id")
-        .agg(F.min("is_synonym").alias("is_synonym"))
-    )
+    aliases = _kb_aliases(raw.select(F.col("name").alias("alias"), "kb_id"), syns)
     edges = (
         raw.filter(F.col("parents").isNotNull())
         .select(F.col("kb_id").alias("child_id"), F.explode(F.split("parents", "\\|")).alias("parent_id"))
@@ -387,7 +387,7 @@ def read_ctd_tsv_kb(spark: SparkSession, path: str) -> tuple[DataFrame, DataFram
 # ---------------------------------------------------------------------------
 
 
-def write_corpus_fixtures(spark: SparkSession, base: str, seed: int = 42, n_docs: int = 40) -> dict:
+def write_corpus_fixtures(base: str, seed: int = 42, n_docs: int = 40) -> dict:
     """Write one fixture file/dir per format; returns paths + expected counts."""
     import json
     import os
@@ -587,11 +587,7 @@ def read_obo_kb(spark: SparkSession, path: str, namespace: str | None = None):
     (kbs.py:56-63), OMIM xrefs excluded (kbs.py:65-71), synonyms override
     names on alias collision (≙ {**name_to_id, **synonym_to_id},
     word_concept.py:40) via a precedence dedup."""
-    raw = spark.read.text(path, wholetext=True)
-    stanzas = raw.select(F.explode(F.split("value", r"\[Term\]")).alias("s")).filter(
-        F.col("s").contains("id:")
-    )
-    term = stanzas.select(
+    term = _obo_stanzas(spark, path).select(
         F.regexp_extract("s", r"(?m)^id: (\S+)", 1).alias("kb_id"),
         F.regexp_extract("s", r"(?m)^name: (.+)$", 1).alias("name"),
         F.regexp_extract("s", r"(?m)^namespace: (\S+)", 1).alias("ns"),

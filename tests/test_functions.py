@@ -277,6 +277,64 @@ def test_every_driver_frame_is_local_frame():
     assert not bad, bad
 
 
+# Every definition of the engine that only tests call, with the reason it
+# stays.  The last group is the EvaNIL corpus/KB readers and the npz
+# round trip: the webtext pipeline never calls them, and they stay only
+# as long as the tier-1 tests that cover them do.
+_TEST_ONLY_KEPT = {
+    "run_oracle": "the single-process reference the e2e parity tests compare against",
+    "similarity_edge_list": "the unblocked edge reference the blocking recall test compares against",
+    "minhash_signatures": "the reference the wide band keys are checked against",
+    "extract_text_df": "the only check of byte-identical extracted text per url",
+    "Pipeline.lineage": "observability API: per-stage lineage read from the manifests",
+    "Pipeline.stage_history": "observability API: a stage's snapshot history",
+    "Pipeline.read_stage_changes": "observability API: the incremental scan of a stage",
+    "write_webtext_parquet": "writes a webtext table for driving the pipeline by hand",
+    "make_media_fixture": "the media fixture; moved under tests/ it would be the same code",
+    **dict.fromkeys(
+        [
+            "ModelWeights.to_npz_dict",
+            "ModelWeights.from_npz",
+            "training_examples",
+            "candidates_ir",
+            "read_jsonl_corpus",
+            "read_pubtator_corpus",
+            "read_xml_corpus",
+            "read_gsc_corpus",
+            "read_phaedra_corpus",
+            "read_chebi_patents_corpus",
+            "read_chebi_3star_kb",
+            "read_obo_umls_xrefs",
+            "medmentions_umls_to_hp",
+            "read_ctd_tsv_kb",
+            "write_corpus_fixtures",
+            "write_pubtator",
+            "read_obo_kb",
+            "write_obo_fixture",
+        ],
+        "covered by tier-1 tests that stay; it goes when they do",
+    ),
+}
+
+
+def test_test_only_definitions_are_declared():
+    """``tools/test_only_defs.py`` over the engine lists exactly the
+    definitions of ``_TEST_ONLY_KEPT``: a new definition that only tests
+    call fails here until it is deleted or given its reason, and a kept
+    one that gains a caller (or goes) must leave the list.  Spark-free."""
+    import importlib.util
+    import os
+
+    root, _files = _engine_sources()
+    spec = importlib.util.spec_from_file_location(
+        "test_only_defs", os.path.join(root, "tools", "test_only_defs.py")
+    )
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    found = sorted(q for _p, _l, q in tool.test_only_defs(os.path.join(root, "nilinker_spark")))
+    assert found == sorted(_TEST_ONLY_KEPT)
+
+
 def test_singularize_col_equals_singularize(spark):
     """The Spark plural rule is :func:`singularize`, token for token."""
     from nilinker_spark.functions.normalize import singularize_col

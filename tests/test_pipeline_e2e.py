@@ -32,8 +32,8 @@ def pipeline_resolved(spark, kb, webtext_df, tmp_path_factory):
     return resolved.toPandas()
 
 
-def test_extracted_text_byte_identical(spark, webtext_df, webtext_rows):
-    got = {r["url"]: r["extracted_text"] for r in extract_text_df(spark, webtext_df).collect()}
+def test_extracted_text_byte_identical(webtext_df, webtext_rows):
+    got = {r["url"]: r["extracted_text"] for r in extract_text_df(webtext_df).collect()}
     for url, _ts, html, _text, _lang in webtext_rows:
         assert got[url] == extract_text(html), f"extraction mismatch for {url}"
 

@@ -16,9 +16,9 @@ from nilinker_spark.sources.corpora import (
 
 
 @pytest.fixture(scope="module")
-def fixtures(spark, tmp_path_factory):
+def fixtures(tmp_path_factory):
     base = str(tmp_path_factory.mktemp("corpora"))
-    return write_corpus_fixtures(spark, base)
+    return write_corpus_fixtures(base)
 
 
 def test_ctd_tsv_kb(spark, fixtures):
